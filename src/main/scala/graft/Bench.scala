@@ -1,5 +1,6 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.util.control.NonFatal
 object Bench {
 
   /** JSON string literal with quotes/backslashes escaped and control
@@ -29,383 +30,6 @@ object Bench {
       (if (root ne e) s" <- ${root.getClass.getSimpleName}" else "")
     s"$cls: $rootMsg"
   }
-
-  /** Host-contention marker (VERDICT r5 item 5): a FIXED amount of pure
-    * single-threaded CPU work (an LCG fold — no allocation, no syscalls,
-    * not eliminable), timed. ~1 s on an uncontended host of this class;
-    * CPU steal / noisy neighbors inflate it proportionally, so a bench
-    * run that landed in the host's documented ±15-40% slow band is
-    * machine-identifiable from the published artifact alone instead of
-    * needing cross-round adjudication. The value is published as
-    * `spin_ms` in both the stdout JSON tail and bench_full.json.
-    */
-  private[graft] def spinMarkerMs(iters: Long = 600000000L): Double = {
-    var x = 0x9E3779B97F4A7C15L
-    var i = 0L
-    val t0 = System.nanoTime()
-    while (i < iters) {
-      x = x * 6364136223846793005L + 1442695040888963407L
-      i += 1
-    }
-    val ms = (System.nanoTime() - t0) / 1e6
-    // publish the fold so the JIT cannot dead-code the loop
-    if (x == 42L) System.err.println("spin collision")
-    ms
-  }
-
-  /** Memory-bandwidth marker (r11): time a fixed number of sequential
-    * passes over a fixed array that dwarfs the last-level cache, published
-    * as `membw_ms` beside `spin_ms`. Motivation, measured on the r11 host
-    * change: totals ran 15–30% HIGHER at ~10% FASTER spin — the host's
-    * bottleneck had moved off the CPU onto the memory system, and the
-    * artifact carried no signal to show it (spin normalization actually
-    * over-corrected the wrong way). Shuffle-heavy Spark work is bandwidth-
-    * bound far more than it is ALU-bound, so a run on a bandwidth-starved
-    * host is identifiable only with this second marker. Measured quiet on
-    * the r11 host: ~160–175 ms (passes × 256 MB = 1 GB traversed ≈ 6 GB/s
-    * single-threaded — weak, and exactly the deficit the totals showed);
-    * concurrent 16-thread load inflated it to ~335 ms. Contention or a
-    * slower memory system inflates it proportionally. Not folded into
-    * `value_normalized` — two correlated markers with unknown weights
-    * would manufacture precision; the raw pair is what adjudication needs.
-    */
-  private[graft] def membwMarkerMs(passes: Int = 4,
-      words: Int = 32 << 20): Double = {
-    val a = new Array[Long](words) // 32 M longs = 256 MB >> any LLC
-    var i = 0
-    while (i < words) { a(i) = i.toLong; i += 1 }
-    var s = 0L
-    val t0 = System.nanoTime()
-    var p = 0
-    while (p < passes) {
-      var j = 0
-      while (j < words) { s += a(j); j += 1 }
-      p += 1
-    }
-    val ms = (System.nanoTime() - t0) / 1e6
-    // publish the fold so the JIT cannot dead-code the traversal
-    if (s == 42L) System.err.println("membw collision")
-    ms
-  }
-
-  /** Saturated (multi-thread) memory-bandwidth marker (VERDICT r11 item
-    * 5): the same fixed traversal as [[membwMarkerMs]] run on a FIXED 16
-    * threads at once over one shared 256 MB array, each thread starting
-    * at its own stride offset and wrapping, so the concurrent streams
-    * stay ~16 MB apart and cannot serve each other from the LLC.
-    * Published as `membw_mt_ms` beside `membw_ms`: the single-stream
-    * figure spots a weak memory SYSTEM per stream, but Spark's 32
-    * concurrent tasks stress AGGREGATE bandwidth — measured r11, 16
-    * threads of load inflated the single-thread marker ~2×, i.e. hosts
-    * can be weak-single-stream but healthy-aggregate or vice versa, and
-    * only the pair separates them. Thread count is fixed (not
-    * availableProcessors) so the marker's work is host-invariant like
-    * the other two. Aggregate GB/s ≈ 16 × 0.25 GB / (membw_mt_ms/1000).
-    */
-  private[graft] def membwMtMarkerMs(threads: Int = 16, passes: Int = 1,
-      words: Int = 32 << 20): Double = {
-    val a = new Array[Long](words)
-    var i = 0
-    while (i < words) { a(i) = i.toLong; i += 1 }
-    val sum = new java.util.concurrent.atomic.AtomicLong
-    val gate = new java.util.concurrent.CountDownLatch(1)
-    val ts = (0 until threads).map { t =>
-      val th = new Thread { override def run(): Unit = {
-        val off = (words.toLong * t / threads).toInt
-        gate.await()
-        var s = 0L
-        var p = 0
-        while (p < passes) {
-          var j = off
-          while (j < words) { s += a(j); j += 1 }
-          j = 0
-          while (j < off) { s += a(j); j += 1 }
-          p += 1
-        }
-        sum.addAndGet(s)
-      } }
-      th.setDaemon(true)
-      th.start()
-      th
-    }
-    val t0 = System.nanoTime()
-    gate.countDown()
-    ts.foreach(_.join())
-    val ms = (System.nanoTime() - t0) / 1e6
-    // publish the fold so the JIT cannot dead-code the traversals
-    if (sum.get == 42L) System.err.println("membw_mt collision")
-    ms
-  }
-
-  /** Filesystem-metadata latency marker (VERDICT r12 item 2): time a
-    * fixed batch of create + 4 KB write + close + delete operations in a
-    * fresh subdirectory of the JVM's temp dir — the same filesystem
-    * Spark's default local dirs (shuffle files, localCheckpoint blocks)
-    * live on. Published as `fsmeta_ms` beside the CPU/bandwidth markers.
-    * Motivation: the r12 root-cause of the sf10-class cell swings was a
-    * cold shuffle-FILE-CREATION storm — 15/32 task threads parked in
-    * `FileOutputStream.open0` at 84% CPU idle, i.e. filesystem JOURNAL
-    * latency, which none of the three existing markers can see (they
-    * never touch a file). A cell recorded during such a window is now
-    * identifiable from the artifact alone: quiet creates run ~10–20 µs
-    * (batch of 256 ≈ 3–8 ms), a journaling storm inflates them ~10×.
-    * Best-of-2 in main like the other markers. The files are tiny and
-    * deleted before return; a filesystem error degrades to -1 rather
-    * than failing the bench.
-    */
-  private[graft] def fsmetaMarkerMs(files: Int = 256, bytes: Int = 4096): Double =
-    try {
-      val dir = java.nio.file.Files.createTempDirectory("graft_fsmeta")
-      val payload = new Array[Byte](bytes)
-      val t0 = System.nanoTime()
-      var i = 0
-      while (i < files) {
-        val p = dir.resolve(s"f$i")
-        val out = java.nio.file.Files.newOutputStream(p)
-        try out.write(payload) finally out.close()
-        i += 1
-      }
-      i = 0
-      while (i < files) {
-        java.nio.file.Files.delete(dir.resolve(s"f$i"))
-        i += 1
-      }
-      val ms = (System.nanoTime() - t0) / 1e6
-      java.nio.file.Files.delete(dir)
-      ms
-    } catch { case scala.util.control.NonFatal(e) =>
-      System.err.println(s"[bench] fsmeta marker failed: $e")
-      -1.0
-    }
-
-  /** Page-cache warm of the input dir: sequentially read every byte of
-    * every regular file under `dir` once, returning the elapsed ms (late
-    * r13). Two honest purposes, neither of which is "explain the
-    * session-cold first run": (1) hygiene — the committed reference was
-    * recorded on a warm cache, so removing the input-cache component
-    * (cheap: the sf0.1 dir is 17 MB, ≲0.5 s even fully cold) keeps
-    * pass-1 cells strictly comparable to the reference's; (2) audit —
-    * `warm_ms` in bench_full.json RECORDS whether the input was cold
-    * (tens of ms warm vs hundreds cold per GB), so a future adjudication
-    * can rule input cache in or out by artifact alone. It deliberately
-    * does NOT claim to remove the first-run-of-session inflation
-    * (trigger-validation #2's 1.259 with quiet markers): at 17 MB the
-    * input-cache share of that is small; the rest is session-cold FS
-    * state and window, which stays the second pass's job. Returns 0.0
-    * without reading when the dir is missing or its total size exceeds
-    * `capBytes` (never stream tens of GB through the page cache at
-    * scale; the cap is far above every driver-config dir and far below
-    * every scale dir). Degrades to -1 on IO error rather than failing
-    * the bench.
-    */
-  private[graft] def warmInputMs(dir: String, capBytes: Long = 4L << 30): Double =
-    try {
-      val root = java.nio.file.Paths.get(dir)
-      if (!java.nio.file.Files.isDirectory(root)) 0.0
-      else {
-        val stream = java.nio.file.Files.walk(root)
-        val files =
-          try {
-            import scala.jdk.CollectionConverters._
-            stream.iterator().asScala
-              .filter(p => java.nio.file.Files.isRegularFile(p)).toVector
-          } finally stream.close()
-        val totalBytes = files.iterator.map(java.nio.file.Files.size).sum
-        if (totalBytes > capBytes) 0.0
-        else {
-          val buf = new Array[Byte](1 << 20)
-          var sink = 0L // data-dependent use defeats dead-code elimination
-          val t0 = System.nanoTime()
-          files.foreach { p =>
-            val in = java.nio.file.Files.newInputStream(p)
-            try {
-              var n = in.read(buf)
-              while (n >= 0) {
-                if (n > 0) sink += buf(0) + buf(n - 1)
-                n = in.read(buf)
-              }
-            } finally in.close()
-          }
-          val ms = (System.nanoTime() - t0) / 1e6
-          if (sink == Long.MinValue) System.err.print("")
-          ms
-        }
-      }
-    } catch { case scala.util.control.NonFatal(e) =>
-      System.err.println(s"[bench] input warm failed: $e")
-      -1.0
-    }
-
-  /** Per-query adaptive-retry priors (VERDICT r11 item 2): the fixed 4 s
-    * retry floor stopped discriminating once the paired dedup family's
-    * HEALTHY steady state crossed it (3.9–5.9 s at sf0.1) — every driver
-    * run re-timed 2–4 fine queries and BASELINE.md had to adjudicate
-    * "nretried 2–4" as the expected artifact shape. The threshold is now
-    * per-query: `max(floor, 2 × prior(q))`, where `prior(q)` is the
-    * query's recorded best cell from (a) `target/bench_full.json` — the
-    * same-workspace history, freshest — and/or (b) the committed
-    * reference resource `graft/bench-prior.json`; when both carry a
-    * query the SMALLER prior wins (robust to one poisoned record). A
-    * prior applies only when its `sf` basename matches the current
-    * run's (an sf0.001 smoke must not inherit sf0.1 cells), and is
-    * scaled UP by `max(membw_now/membw_rec, membw_mt_now/membw_mt_rec)`
-    * when the current host's bandwidth markers are weaker than the
-    * recording host's (the r10→r11 host flip inflated shuffle cells
-    * 2.5–4× at healthy CPU; and per ADVICE r12, hosts can run
-    * shuffle-heavy cells ~10× slower at IDENTICAL single-stream membw —
-    * the r12 host pair differed only in the AGGREGATE marker, so a
-    * single-stream-only scale would leave thresholds at 2× a fast
-    * host's cells on a weak-aggregate host and re-open the false-retry
-    * class). The mt term is skipped when either side lacks the marker
-    * (pre-r12 prior files). No recorded prior ⇒ the floor alone, the
-    * old behavior. An EXPLICIT SPARK_GRAFT_RETRY_SEC disables priors
-    * entirely: the experimenter's A/B threshold applies verbatim
-    * (forcing retries for debugging needs exactly that). Calling with
-    * both `now` markers at 0 returns the RAW recorded cells (the
-    * inflation statistic and reprocessing paths need unscaled priors).
-    */
-  private[graft] def parsePriors(json: String, sfBase: String,
-      membwNow: Double, membwMtNow: Double): Map[String, Double] =
-    try {
-      val root = new com.fasterxml.jackson.databind.ObjectMapper().readTree(json)
-      val sf = Option(root.get("sf")).map(_.asText("")).getOrElse("")
-      if (sf.split('/').last != sfBase) Map.empty
-      else {
-        val ref = Option(root.get("membw_ms")).map(_.asDouble(0.0)).getOrElse(0.0)
-        val refMt =
-          Option(root.get("membw_mt_ms")).map(_.asDouble(0.0)).getOrElse(0.0)
-        val s1 = if (ref > 0.0 && membwNow > ref) membwNow / ref else 1.0
-        val s2 =
-          if (refMt > 0.0 && membwMtNow > refMt) membwMtNow / refMt else 1.0
-        val scale = math.max(s1, s2)
-        val qs = root.get("queries")
-        if (qs == null) Map.empty
-        else {
-          val b = Map.newBuilder[String, Double]
-          val it = qs.fields()
-          while (it.hasNext) {
-            val e = it.next()
-            val v = e.getValue.asDouble(-1.0)
-            if (v > 0.0) b += e.getKey -> v * scale
-          }
-          b.result()
-        }
-      }
-    } catch { case scala.util.control.NonFatal(_) => Map.empty }
-
-  /** The committed quiet-reference prior resource, verbatim (None when
-    * missing/unreadable). The contended-window machinery reads its
-    * markers and raw cells from THIS file only — `target/bench_full.json`
-    * also feeds retry priors but records whatever window the last local
-    * run happened to land in, so it must never define "quiet".
-    */
-  private[graft] def resourcePriorJson(): Option[String] =
-    try {
-      val in = getClass.getResourceAsStream("/graft/bench-prior.json")
-      if (in == null) None
-      else try Some(new String(in.readAllBytes(), "UTF-8")) finally in.close()
-    } catch { case scala.util.control.NonFatal(_) => None }
-
-  /** A top-level numeric field of a prior file, gated on the same sf
-    * basename as the cells (a marker recorded at sf0.1 says nothing
-    * about a run at another scale's protocol). 0.0 when absent.
-    */
-  private[graft] def parsePriorMarker(json: String, sfBase: String,
-      field: String): Double =
-    try {
-      val root = new com.fasterxml.jackson.databind.ObjectMapper().readTree(json)
-      val sf = Option(root.get("sf")).map(_.asText("")).getOrElse("")
-      if (sf.split('/').last != sfBase) 0.0
-      else Option(root.get(field)).map(_.asDouble(0.0)).getOrElse(0.0)
-    } catch { case scala.util.control.NonFatal(_) => 0.0 }
-
-  /** The merged prior map for a run: workspace history ∧ committed
-    * reference, per-query min (doc at [[parsePriors]]).
-    */
-  private[graft] def loadPriors(sfDir: String, membwNow: Double,
-      membwMtNow: Double): Map[String, Double] = {
-    val sfBase = sfDir.split('/').filter(_.nonEmpty).lastOption.getOrElse(sfDir)
-    val hist =
-      try {
-        val p = java.nio.file.Paths.get("target/bench_full.json")
-        if (java.nio.file.Files.exists(p))
-          parsePriors(new String(java.nio.file.Files.readAllBytes(p), "UTF-8"),
-            sfBase, membwNow, membwMtNow)
-        else Map.empty[String, Double]
-      } catch { case scala.util.control.NonFatal(_) => Map.empty[String, Double] }
-    val res = resourcePriorJson()
-      .map(parsePriors(_, sfBase, membwNow, membwMtNow))
-      .getOrElse(Map.empty[String, Double])
-    (hist.keySet ++ res.keySet).iterator.map { k =>
-      k -> math.min(hist.getOrElse(k, Double.MaxValue),
-        res.getOrElse(k, Double.MaxValue))
-    }.toMap
-  }
-
-  /** Median inflation of a run's cells over the committed quiet
-    * reference's RAW cells — the marker-independent contention statistic
-    * the r12 adjudication used by hand (VERDICT r12: "median 1.31×
-    * inflation vs the committed quiet priors ... hitting untouched
-    * queries as hard as dedup"). Published as `prior_inflation_med`;
-    * 0.0 when the prior covers none of the run's queries. A median
-    * deliberately understates skewed contention (half the surface is
-    * sub-second scan-bound cells that barely inflate) — it is an
-    * adjudication SIGNAL beside the markers, not a normalizer: the r12
-    * contended pair measured 101.5 s and 120.6 s at IDENTICAL start
-    * markers, so no start-of-run statistic can recover the quiet value;
-    * recovery is the second measurement pass's job.
-    */
-  private[graft] def inflationMedian(cells: Map[String, Double],
-      rawPriors: Map[String, Double]): Double = {
-    val ratios = cells.iterator.collect {
-      case (q, v) if v > 0.0 && rawPriors.getOrElse(q, 0.0) > 0.0 =>
-        v / rawPriors(q)
-    }.toArray.sorted
-    if (ratios.isEmpty) 0.0
-    else {
-      val n = ratios.length
-      if (n % 2 == 1) ratios(n / 2) else (ratios(n / 2 - 1) + ratios(n / 2)) / 2.0
-    }
-  }
-
-  /** A membw_mt reading counts as contended when it sits more than 10%
-    * above the committed quiet reference's recorded marker. The margin is
-    * measured, not guessed: the r12 host's quiet band was 43–47 ms
-    * (reference 45.0 — ×1.04 worst case inside the band) and both
-    * documented contended windows read 52.8–53.0 (×1.17+) — 1.10 splits
-    * the bands with ~6% clearance on each side. A missing reference
-    * (no committed prior for this sf, e.g. every scale-probe dir)
-    * disables the classification rather than guessing a host class.
-    */
-  private[graft] val ContendedFactor = 1.10
-  private[graft] def isContended(mtNow: Double, mtRef: Double): Boolean =
-    mtRef > 0.0 && mtNow > mtRef * ContendedFactor
-
-  /** Cell-level second-pass trigger (r13, found live): a window can read
-    * QUIET on all four markers and still run every cell inflated — the
-    * r13 session pair measured 84.9 s and 95.4 s against the committed
-    * 70.2 s reference with membw_mt 42.9–46.8 (in band), fsmeta 15.2 (in
-    * band), and pass-1 inflation medians of 1.167 and 1.219 — ambient
-    * slowdown below all four probes' sampling, exactly the shape the
-    * markers structurally cannot see (they measure µs–ms bursts; the
-    * cells integrate seconds). The inflation median over the committed
-    * reference's raw cells DOES see it, so it triggers the same defense:
-    * one more full measurement pass, min-merged — re-measurement, not
-    * modeling, and min over more executions of deterministic work stays
-    * an honest estimator. The margin is measured, not guessed: quiet
-    * same-host runs sit at 1.00–1.01, the marker-quiet inflated pair at
-    * 1.167+, the r12 contended windows at 1.31+ — 1.15 splits the bands
-    * with ~14% clearance below and ~1.5% above (conservative toward
-    * firing; a spurious extra pass costs ~80 s and cannot corrupt the
-    * result). No prior coverage (scale dirs) ⇒ median 0.0 ⇒ never fires.
-    * A stale prior after a cell-moving binary change can fire this
-    * permanently — the cost is one extra pass per run until the
-    * prescribed refit (tools/refit_prior.py), and the published value
-    * stays honest throughout.
-    */
-  private[graft] val InflationFactor = 1.15
-  private[graft] def isInflated(inflMed: Double): Boolean =
-    inflMed > InflationFactor
 
   /** Deny-filter for the one benign ERROR stack that kept polluting the
     * driver artifact's 2000-char stdout tail (VERDICT r11 item 3,
@@ -481,23 +105,11 @@ object Bench {
       cfg.getLoggers.values.forEach(_.addFilter(f))
       ctx.updateLoggers()
       true
-    } catch { case scala.util.control.NonFatal(e) =>
+    } catch { case NonFatal(e) =>
       System.err.println(s"[bench] late-accum filter not installed: $e")
       false
     }
 
-  /** Spin-normalized total (VERDICT r6 item 4): `value × (1000/spin_ms)`,
-    * scaling the measured wall total by how far the host's single-thread
-    * CPU marker sat from its uncontended ~1 s reference — so cross-round
-    * adjudication can compare totals without eyeballing `spin_ms`. LIMITS
-    * (also documented in BASELINE.md): the spin measures CPU steal only,
-    * not I/O or memory-bandwidth contention, and assumes slowdown scales
-    * linearly with steal — treat the normalized value as a first-order
-    * correction, not a clean-host measurement. A non-positive spin (clock
-    * trouble) falls back to the raw value rather than dividing by it.
-    */
-  private[graft] def normalizedTotal(value: Double, spinMs: Double): Double =
-    if (spinMs > 0.0) value * (1000.0 / spinMs) else value
 
   private def fmt(v: Double): String =
     "%.3f".formatLocal(java.util.Locale.ROOT, v)
@@ -512,24 +124,9 @@ object Bench {
   private def fmt2(v: Double): String =
     "%.2f".formatLocal(java.util.Locale.ROOT, v)
 
-  /** Band-relative total (VERDICT r13 item 1 / r14 item 5): measured total
-    * over the committed quiet reference's `total_s` for the same sf — the
-    * honest cross-round figure. Unlike the spin-normalized value (which
-    * corrected the WRONG direction under bandwidth contention — BASELINE
-    * r13's forced-contention A/B), this makes no host model: >1 means
-    * slower than the committed quiet band, however caused. 0.0 when the
-    * reference doesn't cover this sf (scale dirs) — consistent with every
-    * other reference-gated field. `value_normalized` is demoted to
-    * bench_full.json for continuity.
-    */
-  private[graft] def bandRatio(total: Double, refTotal: Double): Double =
-    if (refTotal > 0.0) total / refTotal else 0.0
-
   /** Data-sized AQE starting partition count: one shuffle partition per
     * ~32 MB of on-disk source bytes, floored at the core count, capped at
-    * 32× cores (rationale at the use site in [[main]]). Shared with the
-    * decade probes (r9 review: the recipe had been copy-pasted four
-    * times — a change to the divisor or cap must land everywhere at once).
+    * 32× cores (rationale at [[Session.build]], its one caller in main).
     */
   private[graft] def dataSizedInitParts(sfDir: String, cpus: Long): Long = {
     val dirBytes =
@@ -539,118 +136,105 @@ object Bench {
         try s.filter(java.nio.file.Files.isRegularFile(_))
           .mapToLong(java.nio.file.Files.size(_)).sum()
         finally s.close()
-      } catch { case scala.util.control.NonFatal(_) => 0L }
+      } catch { case NonFatal(_) => 0L }
     math.min(math.max(dirBytes / (32L << 20), cpus), cpus * 32)
   }
 
   /** Ultra-compact whole-run record (VERDICT r7 item 6): total, query
-    * count, retry count, spin + membw + membw_mt + fsmeta markers, the
-    * END-of-run membw_mt re-read, the pass count, the contended flag,
-    * and the normalized total — ~260 chars (BenchJsonSpec bounds it at
-    * 300), no per-query entries. Printed FIRST so the driver's 2 KB
-    * stdout tail always captures one machine-readable line even when the
-    * per-query line plus sbt's trailing "[success]" fills the rest of
-    * the window (`BENCH_r{3..7}.json` all recorded `"parsed": null`).
-    * Both lines together must stay under the window —
+    * count and sf, no per-query entries. Printed FIRST so a reader of the
+    * last 2 KB of stdout always captures one machine-readable line even when
+    * the per-query line plus sbt's trailing "[success]" fills the rest of
+    * the window. Both lines together must stay under the window —
     * [[perQueryBudget]] keeps the long line's share down.
     */
-  private[graft] def compactLine(total: Double, nq: Int, nretried: Int,
-      spinMs: Double, membwMs: Double, membwMtMs: Double,
-      membwMtEndMs: Double, fsmetaMs: Double, passes: Int,
-      contended: Boolean, bandRatioV: Double, sf: String): String =
+  private[graft] def compactLine(total: Double, nq: Int, sf: String): String =
     s"""{"metric":"total","value":${fmt(total)},"unit":"sec","nq":$nq,""" +
-      s""""nretried":$nretried,"spin_ms":${fmt(spinMs)},""" +
-      s""""membw_ms":${fmt(membwMs)},"membw_mt_ms":${fmt(membwMtMs)},""" +
-      s""""membw_mt_end_ms":${fmt(membwMtEndMs)},""" +
-      s""""fsmeta_ms":${fmt(fsmetaMs)},"passes":$passes,""" +
-      s""""contended":$contended,""" +
-      s""""band_ratio":${fmt(bandRatioV)},""" +
       // sfDir is environment input — escape it, or a quote/backslash in
       // the path breaks the very line that must always stay parseable
       s""""sf":${jsonString(sf)}}"""
 
-  /** Character budget for the per-query stdout line: compact line (~260
-    * post-contended, bounded 300 by spec) + this + sbt's "[success] Total
-    * time ..." tail (~40) must fit the driver's 2000-char window with
-    * margin.
+  /** Character budget for the per-query stdout line: compact line (~85,
+    * bounded 140 by spec) + this + sbt's "[success] Total time ..." tail
+    * (~40) must fit a 2000-char stdout tail window with margin.
     */
-  private[graft] val perQueryBudget = 1500
+  private[graft] val perQueryBudget = 1660
 
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // time the contention marker FIRST (after a short JIT warm pass), while
-    // nothing else in this JVM competes with it
-    spinMarkerMs(1000000L)
-    val spinMs = spinMarkerMs()
-    membwMarkerMs(passes = 1, words = 1 << 20) // JIT warm on a 8 MB array
-    val membwMs = membwMarkerMs()
-    membwMtMarkerMs(threads = 4, passes = 1, words = 1 << 20) // JIT warm
-    // best-of-2: the first full-size call still carries ~25 ms of
-    // tiered-JIT + fresh-allocation page-in residue (measured; the
-    // single-thread markers amortize theirs over 4 passes)
-    val membwMtMs = math.min(membwMtMarkerMs(), membwMtMarkerMs())
-    fsmetaMarkerMs(files = 16) // page the FS code paths, same discipline
-    val fsmetaMs = math.min(fsmetaMarkerMs(), fsmetaMarkerMs())
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // Shuffle sizing that survives a scale-up (r5): a FIXED partition count
-    // equal to the core count is right at sf0.1 (one wave, no scheduling
-    // overhead) but becomes the bottleneck two decades up — at sf100 a
-    // 600 M-row lineitem shuffle split 32 ways is ~19 M rows (~2 GB) per
-    // partition, past what a task's share of execution memory can sort or
-    // hash-aggregate without spilling (measured: TPC-H Q18's 150 M-group
-    // aggregation ×112 per decade instead of ~linear). The fix is sized to
-    // the DATA, not a bigger constant: AQE's starting partition count
-    // derives from the input directory's on-disk bytes (one shuffle
-    // partition per ~32 MB of source parquet, floored at the core count,
-    // capped at 32× cores) and AQE coalesces small partitions back to the
-    // advisory size at runtime. sf0.1 (~100 MB) keeps exactly the
-    // core-count waves; sf100 (~16 GB) starts shuffles ~500-way so each
-    // sort bucket fits a task's share of execution memory. (A fixed bigger
-    // constant was measured statistically identical to cores at sf0.1 in
-    // back-to-back full-surface runs — AQE coalescing absorbs the extra
-    // initial partitions — but sizing to the data keeps the small-SF
-    // driver config bit-identical to the recorded baseline posture while
-    // still scaling the start count two decades up.) On a real cluster
-    // the same derivation holds with executor count in place of cores.
-    val initParts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_INIT",
-      dataSizedInitParts(sfDir, cpus.toLong).toString)
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", initParts)
-      // AQE coalesce target 64 MB -> 32 MB (r6, measured at sf100): rows
-      // in post-aggregate shuffles are far smaller than scan rows, so a
-      // byte-sized advisory overpacks GROUPS per task — Q18's 150 M-group
-      // first aggregate ran 111 s at 64 MB, 53 s at 32 MB, 274 s at
-      // 256 MB (best-of-2, clean-host spin). 16 MB measured 59 s (past
-      // the optimum), and the sf0.1 full surface is unchanged within the
-      // host band at 32 MB.
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_ADVISORY", "33554432"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-    // ad-hoc conf overrides for A/B experiments through the SAME
-    // measurement protocol (e.g. SPARK_GRAFT_CONF=
-    // "spark.sql.adaptive.advisoryPartitionSizeInBytes=268435456;k2=v2")
-    sys.env.get("SPARK_GRAFT_CONF").foreach {
-      _.split(";").map(_.trim).filter(_.contains("=")).foreach { kv =>
-        val Array(k, v) = kv.split("=", 2)
-        builder.config(k, v)
+  /** The budgeted per-query stdout line: broken (-1) cells first so they
+    * are never budgeted out, then the slowest first, as many as fit
+    * [[perQueryBudget]].
+    */
+  private[graft] def detailLine(total: Double, cells: Seq[(String, Double)],
+      sf: String): String = {
+    val prefix = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","nq":${cells.size},"queries":{"""
+    val suffix = s"""},"sf":${jsonString(sf)}}"""
+    var used = prefix.length + suffix.length
+    val shown = scala.collection.mutable.ArrayBuffer.empty[String]
+    cells.sortBy { case (_, v) => (v >= 0, -v) }.foreach { case (k, v) =>
+      val entry = "\"" + k + "\":" + fmt2(v)
+      if (used + entry.length + 1 <= perQueryBudget) { shown += entry; used += entry.length + 1 }
+    }
+    prefix + shown.mkString(",") + suffix
+  }
+
+  type Query = (SparkSession, String) => DataFrame
+
+  /** Best-of-2 cell per query, in the given order. One execution is a
+    * noop write, which forces FULL execution of every output column
+    * (`.count()` let Catalyst prune unreferenced projections, so map-only
+    * queries measured little more than scan+count — VERDICT r1 §wrong.6).
+    * Two runs because single runs swing ±40% on a virtualized host; the
+    * minimum of repeated runs of deterministic work is the standard
+    * low-noise estimator. A run that throws a NonFatal error is logged,
+    * its head recorded in the returned failures, and skipped; a query
+    * whose runs all failed gets -1, which never masquerades as a fast
+    * timing. Fatal errors (OOM, interrupt, linkage) propagate and end
+    * the run.
+    */
+  private[graft] def measure(spark: SparkSession, sfDir: String,
+      selected: Seq[(String, Query)]): (Seq[(String, Double)], Seq[(String, String)]) = {
+    val failures = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
+    def timeOnce(name: String, fn: Query): Option[Double] = {
+      val t0 = System.nanoTime()
+      try {
+        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+        Some((System.nanoTime() - t0) / 1e9)
+      } catch { case NonFatal(e) =>
+        System.err.println(s"[bench] $name failed: ${e.getMessage}")
+        failures += name -> errorHead(e)
+        None
       }
     }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cells = selected.map { case (name, fn) =>
+      val ok = (1 to 2).flatMap(_ => timeOnce(name, fn))
+      // release this query's localCheckpoint blocks: the ContextCleaner
+      // frees them only after the driver-side RDD references are GC'd,
+      // and accumulated blocks from earlier queries otherwise build heap
+      // pressure that pathologically slows later buffer-heavy aggregates
+      // (measured: q_percentile 4s early in the run, 22s late)
+      System.gc()
+      name -> (if (ok.isEmpty) -1.0 else ok.min)
+    }
+    (cells, failures.toSeq)
+  }
+
+  /** Times every declared query (or `SPARK_GRAFT_ONLY`'s comma-separated
+    * names, in the given order) against `SPARK_GRAFT_SF_DIR` on
+    * `local[SPARK_GRAFT_CPUS]`, and prints two JSON lines on stdout; full
+    * detail goes to target/bench_full.json. Host noise is not adjudicated
+    * here: `python3 layerbench/run.py` does that with host-invariant
+    * counters.
+    */
+  def main(args: Array[String]): Unit = {
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = Session.build(sfDir, cpus)
     // benign late-accumulator ERROR stacks must not eat the stdout tail
     // (VERDICT r11 item 3; doc at [[installLateAccumFilter]])
     val lateAccumSuppressed = new java.util.concurrent.atomic.AtomicLong
     installLateAccumFilter(lateAccumSuppressed)
     // Warm the session before timing: parquet footers/IO cache + the
     // scan codepaths, so the first measured query doesn't absorb one-time
-    // session startup. The measured queries themselves run once, cold.
+    // session startup. The measured queries themselves run cold.
     // Per-table scale dirs (tools/sfcut.sh, ScaleGen subsets) hold only
     // the tables a measurement needs — probe existence first, or Spark's
     // FileStreamSink WARN logs a full stack trace per missing table
@@ -668,13 +252,13 @@ object Bench {
         try {
           val p = new org.apache.hadoop.fs.Path(sfDir, s"$t.parquet")
           p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-        } catch { case scala.util.control.NonFatal(e) =>
+        } catch { case NonFatal(e) =>
           System.err.println(s"[bench] warm-up probe $t: $e")
           true // unprobeable -> let load try
         }
       if (probed)
         try graft.sources.Tables.load(spark, sfDir, t).count()
-        catch { case scala.util.control.NonFatal(e) =>
+        catch { case NonFatal(e) =>
           System.err.println(s"[bench] warm-up skip $t: ${errorHead(e)}") }
     }
     // warm the execution machinery itself (Janino/codegen, window exec,
@@ -717,212 +301,48 @@ object Bench {
         tiny.select(col("id"), col("k")).as[(Long, Long)]
           .flatMap(t => Seq(t, t)).count()
       }
-    } catch { case scala.util.control.NonFatal(e) =>
+    } catch { case NonFatal(e) =>
       System.err.println(s"[bench] codegen warm-up skipped: ${errorHead(e)}") }
-    // Optional comma-separated query-name filter for profiling single
-    // queries (e.g. SPARK_GRAFT_ONLY=q_dedup_clusters,q_text_tfidf).
-    // Queries run in the GIVEN order (r12 item 2: the sf10 storm probes
-    // need order-ALTERNATED sibling pairs, and registry order always ran
-    // the same query into the session-cold FS storm — a bias that only
-    // ever inflated the measured sibling ratio).
+    // Optional comma-separated query-name filter, for re-measuring single
+    // cells (e.g. SPARK_GRAFT_ONLY=q_dedup_clusters,q_text_tfidf); the
+    // queries run in the GIVEN order
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-    val selected: Seq[(String, (SparkSession, String) =>
-        org.apache.spark.sql.DataFrame)] = only match {
+    val selected: Seq[(String, Query)] = only match {
       case Some(names) => names.flatMap(n => SparkEntry.queries.get(n).map(n -> _))
       case None        => SparkEntry.queries.toSeq
     }
-    // Best-of-N per query (default 2): single runs swing ±40% on a
-    // virtualized host (GC pauses, CPU steal, Janino compiles the warmup
-    // can't reach); the minimum of repeated runs of deterministic work is
-    // the standard low-noise estimator. SPARK_GRAFT_RUNS=1 for profiling.
-    val runs = sys.env.getOrElse("SPARK_GRAFT_RUNS", "2").toInt.max(1)
-    // Floor for the adaptive extra run (ADVICE r3: was hard-coded, and
-    // the retries were invisible in the published JSON — both auditable
-    // now). Per-query recorded priors lift it query-by-query (VERDICT
-    // r11 item 2, doc at [[parsePriors]]); an explicit env value
-    // suppresses the priors — it IS the experimenter's threshold.
-    val retryEnv = sys.env.get("SPARK_GRAFT_RETRY_SEC")
-    val retrySec = retryEnv.map(_.toDouble).getOrElse(4.0)
-    val priors: Map[String, Double] =
-      if (retryEnv.isDefined) Map.empty
-      else loadPriors(sfDir, membwMs, membwMtMs)
-    def retryThreshold(name: String): Double =
-      priors.get(name).map(p => math.max(retrySec, p * 2.0)).getOrElse(retrySec)
-    val retriedNames = scala.collection.mutable.ArrayBuffer.empty[String]
-    // per-failed-run exception heads (name -> class + first cause line),
-    // published in bench_full.json so a transient that best-of-N absorbs
-    // still leaves an auditable name in the artifact
-    val failures = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-    // one measured execution: noop write forces FULL execution of every
-    // output column — .count() let Catalyst prune unreferenced
-    // projections, so map-only queries measured little more than
-    // scan+count (VERDICT r1 §wrong.6). NaN marks a crash: it must never
-    // masquerade as a fast timing.
-    def timeOnce(name: String,
-        fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      val t0 = System.nanoTime()
-      try {
-        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] $name failed: ${e.getMessage}")
-        failures += name -> errorHead(e)
-        Double.NaN
-      }
-    }
-    // Committed quiet reference for THIS sf (also consumed by the
-    // contended-window defense below): absent for every scale dir, which
-    // deliberately disables classification, the second pass, and the
-    // input warm there.
-    val sfBase = sfDir.split('/').filter(_.nonEmpty).lastOption.getOrElse(sfDir)
-    val resJson = resourcePriorJson()
-    val mtRef = resJson.map(parsePriorMarker(_, sfBase, "membw_mt_ms")).getOrElse(0.0)
-    val bandRef = resJson.map(parsePriorMarker(_, sfBase, "total_s")).getOrElse(0.0)
-    val rawPriors = resJson.map(parsePriors(_, sfBase, 0.0, 0.0))
-      .getOrElse(Map.empty[String, Double])
-    // ---- Input warm (doc at [[warmInputMs]]) --------------------------
-    // Gated exactly like the classification machinery: only when the
-    // committed reference covers this sf — scale probes measure the
-    // session-cold path DELIBERATELY under the slot protocol and must
-    // never be warmed. SPARK_GRAFT_WARM=0 disables for cold-path
-    // experiments; the duration is published in bench_full.json.
-    val warmMs =
-      if (rawPriors.isEmpty || sys.env.getOrElse("SPARK_GRAFT_WARM", "1") == "0") 0.0
-      else warmInputMs(sfDir)
-    val pass1 = selected.map { case (name, fn) =>
-      val times = (1 to runs).map(_ => timeOnce(name, fn))
-      // release this query's localCheckpoint blocks: the ContextCleaner
-      // frees them only after the driver-side RDD references are GC'd,
-      // and accumulated blocks from earlier queries otherwise build heap
-      // pressure that pathologically slows later buffer-heavy aggregates
-      // (measured: q_percentile 4s early in the run, 22s late)
-      System.gc()
-      val ok = times.filterNot(_.isNaN)
-      // Host contention can poison ALL scheduled runs of one query (the
-      // driver's r2 record: q_dedup_minhash best-of-2 = 16.0s vs 1.6s
-      // reproduced): when the best-of-N is still suspiciously slow, take
-      // one extra measurement in the hope of a quieter window. min() of
-      // more runs of deterministic work is still an honest estimator.
-      val retried =
-        if (ok.nonEmpty && ok.min > retryThreshold(name) && runs > 1) {
-          retriedNames += name
-          val t = timeOnce(name, fn)
-          if (t.isNaN) ok else ok :+ t
-        } else ok
-      name -> (if (retried.isEmpty) -1.0 else retried.min) // -1 marks a broken query
-    }
-    // ---- Contended-window defense (VERDICT r12 item 1) ----------------
-    // The 2× gate reads this run's total, but r12's gate-facing artifact
-    // recorded 120.6 s in a window its own membw_mt marker classified as
-    // contended while the same binary's quiet floor was 73.3 s — and no
-    // start-of-run statistic can normalize that away (the two documented
-    // contended runs measured 101.5 and 120.6 s at IDENTICAL markers:
-    // contention varies WITHIN a run, below the marker's sampling). So
-    // the defense is re-measurement, not modeling: re-read the aggregate-
-    // bandwidth marker after the suite, and when either reading sits
-    // above the committed quiet reference ([[isContended]]), run ONE full
-    // second pass (single execution per query, same GC discipline) and
-    // min-merge — deterministic work, so min over more executions remains
-    // an honest estimator, and r12's measured windows alternated
-    // quiet/contended/quiet within a session, so the second pass lands on
-    // the band whenever the window clears. The final flag is conservative:
-    // `contended` stays true unless SOME pass was bracketed by two quiet
-    // readings. Scale probes are untouched (their sf has no committed
-    // reference ⇒ mtRef 0 ⇒ classification and second pass disabled).
-    // Since r13's live pair the trigger is marker OR cell-level
-    // ([[isInflated]]): a window can be quiet on all four markers and
-    // still run every cell ~1.2× — the pass-1 inflation median sees it.
-    val membwMtMidMs = math.min(membwMtMarkerMs(), membwMtMarkerMs())
-    val secondPassEnabled = runs > 1 &&
-      sys.env.getOrElse("SPARK_GRAFT_SECOND_PASS", "1") != "0"
-    // cell-level trigger (doc at [[isInflated]]): pass-1 cells vs the
-    // committed reference's raw cells — catches the marker-quiet ambient
-    // slowdown the four µs-scale probes structurally cannot see
-    val inflMedP1 = inflationMedian(pass1.toMap, rawPriors)
-    val markerFired =
-      isContended(membwMtMs, mtRef) || isContended(membwMtMidMs, mtRef)
-    val inflationFired = isInflated(inflMedP1)
-    val doSecondPass = secondPassEnabled && (markerFired || inflationFired)
-    val pass2Trigger =
-      if (!doSecondPass) ""
-      else if (markerFired) "membw_mt" else "inflation"
-    val (results, membwMtEndMs, passes) =
-      if (!doSecondPass) (pass1, membwMtMidMs, 1)
-      else {
-        System.err.println(s"[bench] $pass2Trigger trigger (membw_mt " +
-          s"start=${fmt(membwMtMs)} mid=${fmt(membwMtMidMs)} vs quiet " +
-          s"ref ${fmt(mtRef)} x$ContendedFactor; pass-1 inflation med " +
-          s"${fmt(inflMedP1)} vs x$InflationFactor) - running a second " +
-          "measurement pass")
-        val p1 = pass1.toMap
-        val merged = selected.map { case (name, fn) =>
-          val t = timeOnce(name, fn)
-          System.gc()
-          val candidates =
-            Seq(p1.getOrElse(name, -1.0), if (t.isNaN) -1.0 else t)
-              .filter(_ >= 0.0)
-          name -> (if (candidates.isEmpty) -1.0 else candidates.min)
-        }
-        (merged, math.min(membwMtMarkerMs(), membwMtMarkerMs()), 2)
-      }
-    val pass1Quiet = mtRef > 0.0 &&
-      !isContended(membwMtMs, mtRef) && !isContended(membwMtMidMs, mtRef)
-    val pass2Quiet = passes == 2 &&
-      !isContended(membwMtMidMs, mtRef) && !isContended(membwMtEndMs, mtRef)
-    val contended = mtRef > 0.0 && !(pass1Quiet || pass2Quiet)
-    val cellsByName = results.toMap
-    val inflationMed = inflationMedian(cellsByName, rawPriors)
-    val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
+    val (results, failures) = measure(spark, sfDir, selected)
+    val total = results.map(_._2).sum
     // Full per-query detail — too long for the driver's 2000-char stdout
     // tail window (the r2 one-liner with all 89 queries at full precision
-    // was truncated mid-line and failed to parse) — goes to a file.
+    // was truncated mid-line and failed to parse) — goes to a file, with
+    // every failed run's exception head so a transient that best-of-2
+    // absorbs still leaves an auditable name in the artifact
     val fullJson = results.map { case (k, v) => "\"" + k + "\":" + fmt(v) }
       .mkString("{", ",", "}")
-    val retriedJson = retriedNames.map("\"" + _ + "\"").mkString("[", ",", "]")
     val failuresJson = failures.map { case (n, h) =>
       s"""{"q":${jsonString(n)},"error":${jsonString(h)}}"""
     }.mkString("[", ",", "]")
-    // effective per-query thresholds for the RETRIED names (audit trail:
-    // a retry that fired must be explainable from the artifact alone —
-    // floor or 2× which prior)
-    val thresholdsJson = retriedNames.map { n =>
-      "\"" + n + "\":" + fmt(retryThreshold(n))
-    }.mkString("{", ",", "}")
     try java.nio.file.Files.write(
       java.nio.file.Paths.get("target/bench_full.json"),
-      s"""{"metric":"total","value":${fmt(total)},"band_ratio":${fmt(bandRatio(total, bandRef))},"value_normalized":${fmt(normalizedTotal(total, spinMs))},"unit":"sec","queries":$fullJson,"retried":$retriedJson,"retry_threshold_sec":$retrySec,"retry_priors_n":${priors.size},"retry_thresholds":$thresholdsJson,"failures":$failuresJson,"spin_ms":${fmt(spinMs)},"membw_ms":${fmt(membwMs)},"membw_mt_ms":${fmt(membwMtMs)},"membw_mt_mid_ms":${fmt(membwMtMidMs)},"membw_mt_end_ms":${fmt(membwMtEndMs)},"fsmeta_ms":${fmt(fsmetaMs)},"warm_ms":${fmt(warmMs)},"passes":$passes,"pass2_trigger":${jsonString(pass2Trigger)},"contended":$contended,"prior_inflation_med":${fmt(inflationMed)},"pass1_inflation_med":${fmt(inflMedP1)},"sf":${jsonString(sfDir)}}"""
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","nq":${results.size},"queries":$fullJson,"failures":$failuresJson,"sf":${jsonString(sfDir)}}"""
         .getBytes("UTF-8"))
-    catch { case e: Throwable => System.err.println(s"[bench] full dump: $e") }
-    // TWO stdout JSON lines, both inside the driver's 2 KB tail window:
-    // first the ultra-compact whole-run record (always parseable — r7
-    // item 6: every BENCH_r{3..7}.json landed `"parsed": null` because
-    // the single budgeted line plus sbt's prefix chatter overflowed the
-    // window), then the per-query detail line, budgeted so compact +
-    // detail + sbt's trailing "[success] Total time ..." still fit.
-    println(compactLine(total, results.size, retriedNames.size, spinMs,
-      membwMs, membwMtMs, membwMtEndMs, fsmetaMs, passes, contended,
-      bandRatio(total, bandRef), sfDir))
-    val ordered = results.sortBy { case (_, v) => (v >= 0, -v) }
-    // stdout carries the retry COUNT (full names are in bench_full.json) so
-    // the published total's measurement protocol is auditable per run
-    val prefix = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","nq":${results.size},"nretried":${retriedNames.size},"queries":{"""
-    // spin_ms + the spin-normalized total ride the suffix so they survive
-    // the driver's tail window even when per-query entries fill the budget
-    val suffix = s"""},"spin_ms":${fmt(spinMs)},"membw_ms":${fmt(membwMs)},"membw_mt_ms":${fmt(membwMtMs)},"membw_mt_end_ms":${fmt(membwMtEndMs)},"fsmeta_ms":${fmt(fsmetaMs)},"passes":$passes,"contended":$contended,"prior_inflation_med":${fmt(inflationMed)},"band_ratio":${fmt(bandRatio(total, bandRef))},"sf":${jsonString(sfDir)}}"""
-    var used = prefix.length + suffix.length
-    val shown = scala.collection.mutable.ArrayBuffer.empty[String]
-    ordered.foreach { case (k, v) =>
-      val entry = "\"" + k + "\":" + fmt2(v)
-      if (used + entry.length + 1 <= perQueryBudget) { shown += entry; used += entry.length + 1 }
-    }
+    catch { case NonFatal(e) => System.err.println(s"[bench] full dump: $e") }
     // one auditable line instead of N 12-line stacks (stderr — it must
     // never displace the two stdout JSON lines it exists to protect)
     if (lateAccumSuppressed.get > 0)
       System.err.println(s"[bench] suppressed ${lateAccumSuppressed.get} " +
         "late-accumulator ERROR logs (benign: completion events of " +
         "finished jobs' tasks draining after the inter-query GC)")
-    println(prefix + shown.mkString(",") + suffix)
+    // TWO stdout JSON lines, both inside a 2 KB stdout tail window:
+    // first the ultra-compact whole-run record (always parseable — r7
+    // item 6: every BENCH_r{3..7}.json landed `"parsed": null` because
+    // the single budgeted line plus sbt's prefix chatter overflowed the
+    // window), then the per-query detail line, budgeted so compact +
+    // detail + sbt's trailing "[success] Total time ..." still fit.
+    println(compactLine(total, results.size, sfDir))
+    println(detailLine(total, results, sfDir))
     spark.stop()
   }
 }

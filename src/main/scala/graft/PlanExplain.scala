@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dump `.explain("formatted")` for a comma-separated list of declared
   * queries (measurement tooling for the optimization rounds — guide §1.1:
   * capture the plan shape before and after every change). Usage:
@@ -11,8 +9,8 @@ import org.apache.spark.sql.SparkSession
   *   SPARK_GRAFT_PLAN_DIR=plans/r14 \
   *   sbt "runMain graft.PlanExplain"
   *
-  * Writes <dir>/<query>_<suffix>.txt. Same session config as Bench (minus
-  * the timing machinery) so the dumped plans match what the bench runs.
+  * Writes <dir>/<query>_<suffix>.txt. The session is Bench's
+  * ([[Session.build]]), so the dumped plans match what the bench runs.
   * NOTE: iterative operators (Dedup.clusters, Percentiles.exact) execute
   * their driver-synced jobs at BUILD time; their dumped plan is the final
   * returned query, starting from checkpointed RDD scans — same caveat as
@@ -21,26 +19,14 @@ import org.apache.spark.sql.SparkSession
 object PlanExplain {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     val names = sys.env.getOrElse("SPARK_GRAFT_PLAN_QUERIES", "")
       .split(",").map(_.trim).filter(_.nonEmpty).toSeq
     val suffix = sys.env.getOrElse("SPARK_GRAFT_PLAN_SUFFIX", "before")
     val dir = java.nio.file.Paths.get(
       sys.env.getOrElse("SPARK_GRAFT_PLAN_DIR", "plans/r14"))
     java.nio.file.Files.createDirectories(dir)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_ADVISORY", "33554432"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.build(sfDir, cpus)
     names.foreach { n =>
       SparkEntry.queries.get(n) match {
         case None => System.err.println(s"[planexplain] unknown query: $n")

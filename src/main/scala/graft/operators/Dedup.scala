@@ -223,19 +223,21 @@ object Dedup {
     // sides and the sizes projection read it; consumers explode
     // ROW-LOCALLY from the checkpoint, so the gram-occurrence shuffle
     // that dominated the sf100 cell (the r10 shape's lead()-window
-    // needed every gram row shuffled by id BEFORE the checkpoint;
-    // TruthFrameDiskProbe measured ~21.5 GB of sort spill that was
-    // exactly that exchange) is gone, and `sizes` is a plain size(g)
-    // projection — the per-doc count aggregate and its shuffle with it.
+    // needed every gram row shuffled by id BEFORE the checkpoint: the
+    // ~21.5 GB of sort spill in BASELINE.md r11 "Truth-frame
+    // checkpoint-vs-recompute A/B" was exactly that exchange) is gone,
+    // and `sizes` is a plain size(g) projection — the per-doc count
+    // aggregate and its shuffle with it.
     // EAGER since r12: a lazy checkpoint here is NOT materialized once —
     // AQE submits the join's a-side and b-side map stages together, they
     // RACE to compute the lazy checkpoint's partitions, and each runs
     // the full gram kernel for blocks the other also computes (the
     // losing store is discarded — the `Block rdd_N already exists`
-    // warnings every truth construct logged). TruthArrProbe,
-    // order-controlled A/B at sf10: eager 9.5 s warm-min vs lazy
-    // 11.6 s, and 13.3 vs 58.2 s in a cold-FS window (the race doubles
-    // exactly the file-create-storm-prone work this host class hates).
+    // warnings every truth construct logged). BASELINE.md r12 "Eager
+    // gram-array checkpoint", order-controlled A/B at sf10: eager 9.5 s
+    // warm-min vs lazy 11.6 s, and 13.3 vs 58.2 s in a cold-FS window
+    // (the race doubles exactly the file-create-storm-prone work this
+    // host class hates).
     // The price is one dedicated driver round-trip per truth construct
     // (~tens of ms; JobBudgetSpec ceilings re-recorded deliberately).
     // The `materialize = false` arm recomputes the gram subplan per
@@ -839,8 +841,7 @@ object Dedup {
     * the sort it replaces).
     */
   def clustersExactFirst(docs: DataFrame, threshold: Double = 0.5,
-      broadcastCap: Long = 1L << 17,
-      driverCap: Long = 1L << 20): DataFrame = {
+      broadcastCap: Long = 1L << 17): DataFrame = {
     val nonDegenerate = docs.select(col("id"), col("text"))
       .filter(trim(coalesce(col("text"), lit(""))) =!= "")
     // Eager checkpoint: [[clusters]] materializes its edge graph in its
@@ -854,12 +855,8 @@ object Dedup {
       // LAZY: materialized by [[clusters]]' edge census ([[minhashPairs]]
       // scans it inside that plan) — no dedicated job
       .localCheckpoint(false)
-    // `driverCap` passes through to [[clusters]]' route choice so probes
-    // (CefProbe) can A/B the CC routes on the REAL operator instead of a
-    // drift-prone inlined copy of this body
     val repLabels = clusters(minhashPairs(
-        groups.select(col("rep").as("id"), col("text")), threshold),
-        driverCap = driverCap)
+        groups.select(col("rep").as("id"), col("text")), threshold))
       .select(col("id").as("rep_id"), col("cluster").as("rep_cluster"))
     // Checkpointed BEFORE the census count (r7 ADVICE): `labeled` feeds
     // the gate's count() AND the expansion join — separate query

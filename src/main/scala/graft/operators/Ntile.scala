@@ -78,12 +78,10 @@ import org.apache.spark.sql.functions._
   */
 object Ntile {
 
-  /** The boundary machinery's sketch knobs and rank rule, exposed so the
-    * measurement probes (MegaTieProbe2/3/4) exercise the REAL derivation
-    * instead of a drift-prone inlined copy (r7 ADVICE: if the rank rule
-    * changes, an inlined probe silently measures a stale shape — the same
-    * hazard CefProbe avoids via clustersExactFirst's driverCap
-    * passthrough). [[distributedPath]] consumes exactly these.
+  /** The boundary machinery's sketch knobs and rank rule;
+    * [[distributedPath]] consumes exactly these. Their forced
+    * tie-bisection measurements are in BASELINE.md r7 "Forced
+    * tie-bisection measured at the scale it exists for".
     */
   private[graft] val boundaryDelta = 0.002
   private[graft] val boundaryAccuracy = 2000

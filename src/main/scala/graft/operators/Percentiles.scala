@@ -80,25 +80,6 @@ import org.apache.spark.sql.functions._
   */
 object Percentiles {
 
-  /** Opt-in pass-timing trace (-Dgraft.percentiles.trace=true): prints
-    * each EAGER pass's wall time to stderr so scale probes can attribute
-    * cost (sketch vs probe vs subset vs per-round bisection) without
-    * duplicating the operator (VERDICT r8 item 7). Zero overhead when
-    * off; the returned plan's lazy pass-4 cost is the caller's total
-    * minus the traced passes.
-    */
-  private def traceEnabled: Boolean =
-    java.lang.Boolean.getBoolean("graft.percentiles.trace")
-  private def traced[A](what: String)(body: => A): A =
-    if (!traceEnabled) body
-    else {
-      val t0 = System.nanoTime()
-      val r = body
-      System.err.println(
-        f"[percentiles-trace] $what: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      r
-    }
-
   /** TRUE iff a value's true-rank interval [lt+1, le] intersects
     * [target − tol, target + tol] — the GK/KLL sketch guarantee expressed
     * over exact rank counts (lt = values strictly below, le = values at
@@ -258,17 +239,15 @@ object Percentiles {
       min(col("v")).as("vmin"), max(col("v")).as("vmax"),
       percentile_approx(col("v"), array(pcts.map(lit): _*), lit(accuracy))
         .as("qs")) ++ extra.toSeq.flatMap(_.sketchAggs)
-    val br = traced("pass1 sketch agg") {
-      base.groupBy(col("g")).agg(sketchAggCols.head, sketchAggCols.tail: _*)
-        // LAZY checkpoint of the (one-row-per-group) sketch result: it
-        // feeds the probe action AND the returned plan — without
-        // truncation the expensive sketch aggregation would re-execute
-        // once per consumer. Lazy (not eager) so the census count() below
-        // materializes it — ONE driver-blocking job where eager+count was
-        // two (r9 VERDICT item 1: at toy SF the suite floor is job
-        // round-trips, not data; same fusion as [[Vectors]]' census)
-        .localCheckpoint(false)
-    }
+    val br = base.groupBy(col("g")).agg(sketchAggCols.head, sketchAggCols.tail: _*)
+      // LAZY checkpoint of the (one-row-per-group) sketch result: it
+      // feeds the probe action AND the returned plan — without
+      // truncation the expensive sketch aggregation would re-execute
+      // once per consumer. Lazy (not eager) so the census count() below
+      // materializes it — ONE driver-blocking job where eager+count was
+      // two (r9 VERDICT item 1: at toy SF the suite floor is job
+      // round-trips, not data; same fusion as [[Vectors]]' census)
+      .localCheckpoint(false)
     // census-gated broadcast for every internal join below (see the
     // broadcastCells scaladoc): one cheap count over the checkpointed
     // sketch frame decides whether the O(groups × T)-cell boundary frames
@@ -276,7 +255,7 @@ object Percentiles {
     // 2T+4 slightly and matches the widest long frame (st0/state at ~8
     // columns × T rows per group), so one gate covers all five sites.
     // This count is ALSO the job that materializes br's lazy checkpoint.
-    val nGroups = traced("pass1 materialize+census") { br.count() }
+    val nGroups = br.count()
     val cellsPerGroup = 8L * math.max(1, targets.size)
     def gated(d: DataFrame): DataFrame =
       if (nGroups * cellsPerGroup <= broadcastCells) broadcast(d) else d
@@ -323,7 +302,8 @@ object Percentiles {
     // expressions makes every aggregate update re-walk the array (and
     // drags the full qs array through the aggregate input row) — measured
     // 17.0 vs 9.1 s (≈ the join's own floor) over a 20 M-row group at
-    // T=9 (MegaTieProbe4, r7)
+    // T=9 (BASELINE.md r7 "Forced tie-bisection measured at the scale it
+    // exists for")
     val probeProj = Seq(col("g"), col("v")) ++ targets.indices.flatMap { i =>
       Seq(loEx(i).as(s"__plo$i"), hiEx(i).as(s"__phi$i"))
     } ++ (if (atTargets) targets.indices.map { i =>
@@ -359,17 +339,15 @@ object Percentiles {
     // this the loop's first round would materialize the full T·cnt-row
     // subset only to apply the same lo >= hi rule one pass later — measured
     // 258 s → 11 s on a 20 M-row constant group ([[Ntile.exact]]'s forced-
-    // bisection probe, MegaTieProbe2, r7)
+    // bisection measurement, BASELINE.md r7 "Forced tie-bisection")
     val collapsed = col("lo") >= col("hi")
-    var state = traced("pass2 exact-rank probe") {
-      st0.join(probed, Seq("g", "t"))
-        .withColumn("done", collapsed)
-        .withColumn("el_lo", when(collapsed, col("lo")).cast("double"))
-        .withColumn("el_hi", when(collapsed, col("lo")).cast("double"))
-        // lazy for the same reason as br: the firstProbe aggregate below
-        // is the job that materializes it (one round-trip, not two)
-        .localCheckpoint(false)
-    }
+    var state = st0.join(probed, Seq("g", "t"))
+      .withColumn("done", collapsed)
+      .withColumn("el_lo", when(collapsed, col("lo")).cast("double"))
+      .withColumn("el_hi", when(collapsed, col("lo")).cast("double"))
+      // lazy for the same reason as br: the firstProbe aggregate below
+      // is the job that materializes it (one round-trip, not two)
+      .localCheckpoint(false)
     // a bracket that failed to enclose its target ranks fails LOUDLY here
     // rather than interpolating a wrong value downstream. ONE aggregate
     // job over the checkpointed (groups × T)-row state serves the
@@ -389,13 +367,11 @@ object Percentiles {
     // NPE, where the pre-fusion limit(1).isEmpty probes passed vacuously —
     // count() returns 0 on empty input and the machinery falls through to
     // an empty result as before
-    val firstProbe = traced("pass2 materialize+probe") {
-      state.agg(
-          count(when(enclosureViolated, 1)).as("viol"),
-          count(when(active(state), 1)).as("act"),
-          count(when(!col("done"), 1)).as("pend"))
-        .head()
-    }
+    val firstProbe = state.agg(
+        count(when(enclosureViolated, 1)).as("viol"),
+        count(when(active(state), 1)).as("act"),
+        count(when(!col("done"), 1)).as("pend"))
+      .head()
     require(firstProbe.getLong(0) == 0L,
       "percentile bracket missed its target rank (sketch accuracy too low)")
     var anyActive = firstProbe.getLong(1) > 0L
@@ -430,13 +406,11 @@ object Percentiles {
         // bracket into T partitions, re-serializing every round through T
         // tasks (the same concentration defect the r7 review removed from
         // [[Ntile]]'s tied slice)
-        subset = traced("subset materialize") {
-          base.join(gated(st0.select(col("g"), col("t"),
-              col("lo").as("lo0"), col("hi").as("hi0"))), "g")
-            .filter(col("v").between(col("lo0"), col("hi0")))
-            .select(col("g"), col("t"), col("v"))
-            .localCheckpoint(true)
-        }
+        subset = base.join(gated(st0.select(col("g"), col("t"),
+            col("lo").as("lo0"), col("hi").as("hi0"))), "g")
+          .filter(col("v").between(col("lo0"), col("hi0")))
+          .select(col("g"), col("t"), col("v"))
+          .localCheckpoint(true)
       }
       val act = state.where(active(state))
         .select(col("g"), col("t"), col("lo"), col("hi"),
@@ -479,16 +453,12 @@ object Percentiles {
             .as("el_lo"),
           coalesce(col("el_hi"), when(col("lo") >= col("hi"), col("lo")))
             .as("el_hi"))
-      state = traced(s"bisection round $rounds") {
-        state.where(!active(state))
-          .unionByName(refined)
-          .localCheckpoint(true)
-      }
+      state = state.where(!active(state))
+        .unionByName(refined)
+        .localCheckpoint(true)
       anyActive = !state.where(active(state)).limit(1).isEmpty
       rounds += 1
     }
-    if (traceEnabled)
-      System.err.println(s"[percentiles-trace] bisection rounds: $rounds")
 
     // -- pass 4: collect surviving brackets (≤ cap each), look up exact
     //    ranks, interpolate; bisection-resolved targets skip the collect

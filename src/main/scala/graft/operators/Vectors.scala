@@ -253,7 +253,7 @@ object Vectors {
     * members expand by pure array ops — drop the self row, slice the
     * first k (r8; the prior shape windowed the member-level expansion,
     * measured as the dominant stage at sf1000: 74 s over a 620 M-row
-    * shuffle, KnnProbe). Top k+1 per rep suffices because a member's
+    * shuffle — BASELINE.md r8 "kNN shuffle-byte A/B"). Top k+1 per rep suffices because a member's
     * candidate list differs from its rep's only by deleting AT MOST one
     * row — itself: own ids live in its own group, cross ids in other
     * groups, so self appears at most once, and the k survivors of a
@@ -264,7 +264,7 @@ object Vectors {
     * fix — shrinking the groupBy shuffle key if byte volume dominates —
     * was measured NOT to matter and is not taken: the groups aggregate
     * partial-aggregates map-side to ~distinct-vector volume and costs
-    * 1.3–1.9 s of the sf100/sf1000 runtimes (KnnProbe r8 attribution).
+    * 1.3–1.9 s of the sf100/sf1000 runtimes (same BASELINE.md section).
     *
     * PER-GROUP STATE IS BOUNDED (VERDICT r5 item 1): the only per-group
     * array anywhere is [[graft.functions.BottomIds]]' k+1-smallest-ids

@@ -88,10 +88,10 @@ object TextQueries {
     // ONE gram-kernel pass shared by the truth frame and the real
     // pipeline's minhash signatures (r14 — doc at
     // Dedup.exactJaccardWindowPairsArr); eager for the same AQE-race
-    // reason as the operator default (TruthArrProbe). The kernel input —
-    // and ONLY it — is spreadSmall'd: the checkpoint is the corpus' one
-    // kernel pass, while docsL's other consumers are id-joins that would
-    // pay the extra exchange for nothing (measured r14: spreading docsL
+    // reason as the operator default (BASELINE.md r12 "Eager gram-array
+    // checkpoint"). The kernel input — and ONLY it — is spreadSmall'd:
+    // the checkpoint is the corpus' one kernel pass, while docsL's other
+    // consumers are id-joins that would pay the extra exchange for nothing (measured r14: spreading docsL
     // itself put q_dedup_pipeline from 4.5 to ~6.5 s)
     val gramArr = Dedup.gramHashSets(Tables.spreadSmall(s, d, "documents")
         .select(col("doc_id").as("id"), col("text")))

@@ -18,9 +18,10 @@ object Tables {
     * `spark.read.parquet` call pays a driver-blocking schema-merge job
     * over the file footers plus a file listing; at 111 registered queries
     * × 1–10 tables each that was ~200 of the sf0.001 suite's 781 jobs
-    * (JobCountProbe, r10 — the single largest floor payer). The cached
-    * value is just the analyzed read plan (a LogicalRelation — immutable,
-    * reusable across queries); no DATA is cached, so Catalyst still
+    * (BASELINE.md r10 "The fixed-cost floor attacked with a job census" —
+    * the single largest floor payer). The cached value is just the
+    * analyzed read plan (a LogicalRelation — immutable, reusable across
+    * queries); no DATA is cached, so Catalyst still
     * prunes columns and pushes filters per consumer exactly as before
     * (PlanSpec's ReadSchema/PushedFilters pins are unchanged).
     *

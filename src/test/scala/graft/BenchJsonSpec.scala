@@ -1,12 +1,11 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
-
-/** Forced-failure test of Bench's failure emitter (VERDICT r4 item 3):
-  * a bench run that dies must leave a named, JSON-safe exception head in
-  * bench_full.json, even when best-of-N absorbs the failure.
+/** Bench's artifact emitters and measurement loop (VERDICT r4 item 3): a
+  * bench run that dies must leave a named, JSON-safe exception head in
+  * bench_full.json, even when best-of-2 absorbs the failure, and both
+  * stdout JSON lines must fit a 2000-char stdout tail window.
   */
-class BenchJsonSpec extends AnyFunSuite {
+class BenchJsonSpec extends SparkSpec {
 
   test("errorHead names the exception and the root cause's first line") {
     // the r4 shape: a SparkException wrapping a DAGScheduler failure whose
@@ -45,103 +44,53 @@ class BenchJsonSpec extends AnyFunSuite {
     assert(Bench.errorHead(huge).length < 300)
   }
 
-  test("spin-normalized total scales by host contention and guards a bad spin") {
-    // spin at the uncontended 1 s reference: identity
-    assert(Bench.normalizedTotal(80.0, 1000.0) == 80.0)
-    // a 1.5x-contended host (spin 1500 ms) normalizes DOWN toward what a
-    // clean host would have measured; a fast host normalizes UP
-    assert(math.abs(Bench.normalizedTotal(90.0, 1500.0) - 60.0) < 1e-9)
-    assert(math.abs(Bench.normalizedTotal(60.0, 750.0) - 80.0) < 1e-9)
-    // degenerate spin (clock trouble) must not divide by zero
-    assert(Bench.normalizedTotal(80.0, 0.0) == 80.0)
-    assert(Bench.normalizedTotal(80.0, -5.0) == 80.0)
-  }
-
-  test("band-relative total gates on a positive committed reference") {
-    // VERDICT r13 item 1 / r14 item 5: total over the committed quiet
-    // reference's total_s — no host model, >1 = slower than the quiet
-    // band however caused. Missing reference (scale dirs) -> 0.0, like
-    // every other reference-gated field; never divides by zero.
-    assert(math.abs(Bench.bandRatio(73.3, 70.213) - 1.0440) < 1e-4)
-    assert(Bench.bandRatio(66.5, 0.0) == 0.0)
-    assert(Bench.bandRatio(66.5, -1.0) == 0.0)
-  }
-
   test("compact stdout line is short, parseable-shaped, and fits the tail window with the detail line") {
     // VERDICT r7 item 6: every BENCH_r{3..7}.json recorded "parsed": null
     // because the single budgeted line overflowed the driver's 2 KB tail.
-    // The compact line must carry the graded fields in ~260 chars (the
-    // assertion bounds it at 300 post-contended), and compact + budgeted
-    // detail + sbt's trailing "[success]" must fit. The r13 fields make
-    // the window adjudication mechanical (VERDICT r12 item 1): the END
-    // re-read of the aggregate-bandwidth marker, the storm marker, the
-    // pass count, and the contended flag all ride the always-parseable
-    // line.
-    val line = Bench.compactLine(73.299, 111, 2, 757.4, 63.1, 171.9,
-      165.2, 6.4, 2, contended = true, 1.044, "/root/testdata/sf0.1")
-    assert(line.length < 300, s"compact line too long: ${line.length}")
+    // The compact line carries the graded fields in ~85 chars (bounded at
+    // 140 here), and compact + budgeted detail + sbt's trailing
+    // "[success]" must fit.
+    val line = Bench.compactLine(73.299, 111, "/data/sf0.1")
+    assert(line.length < 140, s"compact line too long: ${line.length}")
     assert(line.startsWith("{\"metric\":\"total\",\"value\":73.299,"))
-    for (k <- Seq("\"nq\":111", "\"nretried\":2", "\"spin_ms\":757.400",
-        "\"membw_ms\":63.100", "\"membw_mt_ms\":171.900",
-        "\"membw_mt_end_ms\":165.200", "\"fsmeta_ms\":6.400",
-        "\"passes\":2", "\"contended\":true",
-        "\"band_ratio\":1.044", "\"sf\":"))
+    for (k <- Seq("\"unit\":\"sec\"", "\"nq\":111",
+        "\"sf\":\"/data/sf0.1\""))
       assert(line.contains(k), s"missing $k in $line")
     assert(line.count(_ == '"') % 2 == 0 && line.last == '}')
+    // the detail line never exceeds its budget, however many cells
+    val cells = (1 to 300).map(i => f"q_some_long_query_name_$i%03d" -> i / 100.0)
+    val detail = Bench.detailLine(cells.map(_._2).sum, cells, "/data/sf0.1")
+    assert(detail.length <= Bench.perQueryBudget)
     // window arithmetic: both lines + sbt tail inside 2000 chars
     assert(line.length + 1 + Bench.perQueryBudget + 1 + 60 < 2000)
   }
 
-  test("host-contention spin marker measures fixed CPU work and scales with it") {
-    // the marker must time genuine work: positive, and ~10x the iterations
-    // takes materially longer (loose factor — this spec also runs on
-    // contended hosts, which is the very condition the marker reports)
-    val small = Bench.spinMarkerMs(20000000L)
-    val large = Bench.spinMarkerMs(200000000L)
-    assert(small > 0.0 && large > 0.0)
-    assert(large > small * 2, s"spin not proportional to work: $small vs $large")
+  test("detail line lists broken cells first, then the slowest, and keeps the contract fields") {
+    val detail = Bench.detailLine(1.5, Seq("q_a" -> 0.5, "q_broken" -> -1.0,
+      "q_b" -> 2.0), "/x/sf0.1")
+    assert(detail == "{\"metric\":\"total\",\"value\":1.500,\"unit\":\"sec\"," +
+      "\"nq\":3,\"queries\":{\"q_broken\":-1.00,\"q_b\":2.00,\"q_a\":0.50}," +
+      "\"sf\":\"/x/sf0.1\"}")
   }
 
-  test("memory-bandwidth marker measures fixed traversal work and scales with it") {
-    // r11: the host change showed totals can inflate 15-30% at a FASTER
-    // spin — the second marker must expose a bandwidth-starved host from
-    // the artifact alone. Same proportionality contract as the spin: 8x
-    // the passes over the same array takes materially longer (loose
-    // factor, spec runs on contended hosts too). Small array here — the
-    // spec should not allocate 256 MB; main() uses the default size.
-    // Same warm + best-of-N discipline as the mt test below and as
-    // main()'s own warm call: without it the SMALL measurement absorbs
-    // first-call tiered-JIT/page-in residue that dwarfs its few ms of
-    // real work (measured: 15.9 ms for 2 passes that re-run at ~4 ms —
-    // one r13 suite run failed exactly this way).
-    val words = 4 << 20 // 32 MB
-    Bench.membwMarkerMs(passes = 1, words = words)
-    def best(p: Int): Double = (1 to 3).map(_ =>
-      Bench.membwMarkerMs(passes = p, words = words)).min
-    val small = best(2)
-    val large = best(16)
-    assert(small > 0.0 && large > 0.0)
-    assert(large > small * 2,
-      s"membw not proportional to work: $small vs $large")
+  private val ok: Bench.Query = (s, _) => s.range(10).toDF()
+
+  test("a query that throws NonFatal is recorded as failed and the loop goes on") {
+    val bad: Bench.Query = (_, _) => throw new IllegalStateException("boom")
+    val (cells, failures) =
+      Bench.measure(spark, sfDir, Seq("q_bad" -> bad, "q_ok" -> ok))
+    assert(cells.map(_._1) == Seq("q_bad", "q_ok"))
+    assert(cells.head._2 == -1.0)
+    assert(cells(1)._2 > 0.0)
+    // one head per failed run: best-of-2 ran it twice
+    assert(failures == Seq.fill(2)("q_bad" -> "IllegalStateException: boom"))
   }
 
-  test("saturated membw marker measures fixed concurrent traversal work") {
-    // r11 item 5: membw_ms is single-threaded; a host can be weak in
-    // AGGREGATE bandwidth instead. Same proportionality contract, small
-    // array (the spec must not allocate 256 MB), few threads.
-    val words = 4 << 20 // 32 MB
-    // JIT-warm first (as main() does), then best-of-3 per level: the
-    // first one-or-two full-size calls carry ~25 ms of warm residue
-    // (tiered JIT + page-in of fresh allocations) that dwarfs the small
-    // timing — min-of-N of fixed work is the usual low-noise estimator
-    Bench.membwMtMarkerMs(threads = 4, passes = 1, words = words)
-    def best(p: Int): Double = (1 to 3).map(_ =>
-      Bench.membwMtMarkerMs(threads = 4, passes = p, words = words)).min
-    val small = best(2)
-    val large = best(16)
-    assert(small > 0.0 && large > 0.0)
-    assert(large > small * 2,
-      s"membw_mt not proportional to work: $small vs $large")
+  test("a fatal error in a query propagates out of the measurement loop") {
+    val fatal: Bench.Query = (_, _) => throw new LinkageError("fatal")
+    intercept[LinkageError] {
+      Bench.measure(spark, sfDir, Seq("q_fatal" -> fatal, "q_ok" -> ok))
+    }
   }
 
   test("late-accumulator log filter denies exactly the benign shape") {
@@ -176,146 +125,5 @@ class BenchJsonSpec extends AnyFunSuite {
     // unrelated messages pass
     dag.error("benign-filter spec probe: a DIFFERENT error must pass through")
     assert(counter.get == 2, s"suppression count: ${counter.get}")
-  }
-
-  test("fsmeta marker measures fixed file-metadata work and scales with it") {
-    // r12 item 2: the cold shuffle-file-creation storm (15/32 threads in
-    // FileOutputStream.open0 at 84% idle) is FS-JOURNAL latency — no
-    // CPU/bandwidth marker sees it. The marker must time genuine
-    // create+write+delete work: positive, and ~8x the files takes
-    // materially longer (loose factor, best-of-3 — FS timings are the
-    // noisiest of the four markers, which is exactly why it exists).
-    Bench.fsmetaMarkerMs(files = 8) // page the code paths first
-    def best(files: Int): Double =
-      (1 to 3).map(_ => Bench.fsmetaMarkerMs(files = files)).min
-    val small = best(32)
-    val large = best(256)
-    assert(small > 0.0 && large > 0.0)
-    assert(large > small * 2,
-      s"fsmeta not proportional to work: $small vs $large")
-  }
-
-  test("input warm reads every file once, respects the size cap, and degrades on a missing dir") {
-    // late r13: the committed reference was recorded on a warm cache, so
-    // the warm removes the (small — sf0.1 is 17 MB) input-cache
-    // component from pass-1 cells and, more importantly, warm_ms records
-    // whether the input WAS cold so adjudication can rule input cache in
-    // or out from the artifact alone. The helper must time real byte
-    // reads (positive), return 0.0 WITHOUT reading when the dir's total
-    // size exceeds the cap (scale dirs must stay cold for the slot
-    // protocol) or the dir is absent, and never throw.
-    val dir = java.nio.file.Files.createTempDirectory("graft_warm")
-    val rnd = new scala.util.Random(7)
-    def fill(name: String, bytes: Int): Unit = {
-      val a = new Array[Byte](bytes); rnd.nextBytes(a)
-      java.nio.file.Files.write(dir.resolve(name), a)
-    }
-    (1 to 4).foreach(i => fill(s"f$i.parquet", 1 << 20))
-    val warmed = Bench.warmInputMs(dir.toString)
-    assert(warmed > 0.0, s"warm did not time reads: $warmed")
-    assert(Bench.warmInputMs(dir.toString, capBytes = 1L) == 0.0,
-      "cap exceeded must skip without reading")
-    assert(Bench.warmInputMs(dir.resolve("absent").toString) == 0.0,
-      "missing dir must be a no-op")
-    import scala.jdk.CollectionConverters._
-    java.nio.file.Files.walk(dir).iterator().asScala.toSeq.reverse
-      .foreach(java.nio.file.Files.delete)
-  }
-
-  test("contended classification gates on the committed quiet reference") {
-    // r12 item 1: 1.10 x the reference splits the measured bands (quiet
-    // 43-47 vs contended 52.8+ on the r12 host, ref 45.009) with
-    // clearance on both sides; a missing reference disables the
-    // classification instead of guessing a host class.
-    assert(!Bench.isContended(47.0, 45.0))   // top of the quiet band
-    assert(Bench.isContended(52.8, 45.0))    // both r12 contended windows
-    assert(Bench.isContended(52.96, 45.0))
-    assert(!Bench.isContended(49.0, 45.0))   // inside the 10% margin
-    assert(!Bench.isContended(500.0, 0.0))   // no reference -> never
-    assert(!Bench.isContended(500.0, -1.0))
-  }
-
-  test("prior markers parse with the same sf gate as the cells") {
-    val json =
-      """{"sf":"/x/sf0.1","membw_ms":140.0,"membw_mt_ms":45.0,
-         |"queries":{"q_a":5.0}}""".stripMargin
-    assert(Bench.parsePriorMarker(json, "sf0.1", "membw_mt_ms") == 45.0)
-    assert(Bench.parsePriorMarker(json, "sf0.1", "fsmeta_ms") == 0.0)
-    assert(Bench.parsePriorMarker(json, "sf10", "membw_mt_ms") == 0.0)
-    assert(Bench.parsePriorMarker("not json", "sf0.1", "membw_mt_ms") == 0.0)
-  }
-
-  test("inflation trigger splits the measured quiet and marker-quiet-inflated bands") {
-    // r13, found live: the session pair read QUIET on all four markers
-    // (membw_mt 42.9-46.8 in band, fsmeta 15.2 in band) yet ran every
-    // cell inflated - pass-1 inflation medians 1.167 and 1.219 against
-    // quiet same-host runs at 1.00-1.01 and the r12 contended windows at
-    // 1.31+. The 1.15 margin splits those measured bands; no prior
-    // coverage (scale dirs -> median 0.0) must never fire.
-    assert(!Bench.isInflated(1.01))  // quiet same-host runs
-    assert(!Bench.isInflated(1.14))  // inside the margin
-    assert(Bench.isInflated(1.167))  // both live marker-quiet windows
-    assert(Bench.isInflated(1.219))
-    assert(Bench.isInflated(1.31))   // r12 contended artifact
-    assert(!Bench.isInflated(0.0))   // no prior coverage -> never
-    assert(!Bench.isInflated(0.85))  // faster host -> never
-  }
-
-  test("inflation median is robust to missing/broken cells and empty overlap") {
-    val priors = Map("a" -> 1.0, "b" -> 2.0, "c" -> 4.0, "zero" -> 0.0)
-    // ratios: a 2.0, b 1.5, c 1.0 -> median 1.5; 'broken' (-1), 'new'
-    // (no prior) and 'zero' (non-positive prior) are excluded
-    val cells = Map("a" -> 2.0, "b" -> 3.0, "c" -> 4.0,
-      "broken" -> -1.0, "new" -> 9.0, "zero" -> 5.0)
-    assert(math.abs(Bench.inflationMedian(cells, priors) - 1.5) < 1e-9)
-    // even count: median of (2.0, 1.5) = 1.75
-    assert(math.abs(Bench.inflationMedian(
-      Map("a" -> 2.0, "b" -> 3.0), priors) - 1.75) < 1e-9)
-    assert(Bench.inflationMedian(Map("x" -> 1.0), priors) == 0.0)
-    assert(Bench.inflationMedian(Map.empty, priors) == 0.0)
-  }
-
-  test("retry priors parse, gate on sf basename, and scale by the worst bandwidth deficit") {
-    // r11 item 2 + ADVICE r12: the per-query threshold is 2x a recorded
-    // prior cell — priors must only apply at the matching SF, must drop
-    // non-positive cells, and must inflate by the WORSE of the
-    // single-stream and aggregate bandwidth deficits (the r12 host pair
-    // ran shuffle cells ~10x apart at IDENTICAL single-stream membw —
-    // only membw_mt separated them). Never deflate on a faster host.
-    val json =
-      """{"sf":"/root/testdata/sf0.1","membw_ms":140.0,"membw_mt_ms":50.0,
-         |"queries":{"q_a":5.0,"q_b":0.5,"q_broken":-1.0}}""".stripMargin
-    val same = Bench.parsePriors(json, "sf0.1", membwNow = 140.0,
-      membwMtNow = 50.0)
-    assert(same == Map("q_a" -> 5.0, "q_b" -> 0.5), s"got $same")
-    // weaker single-stream host (membw 280 vs recorded 140) doubles
-    val weak = Bench.parsePriors(json, "sf0.1", 280.0, 50.0)
-    assert(math.abs(weak("q_a") - 10.0) < 1e-9 &&
-      math.abs(weak("q_b") - 1.0) < 1e-9, s"got $weak")
-    // weak-AGGREGATE host at identical single-stream membw (the r12
-    // class): mt 150 vs recorded 50 triples the priors
-    val weakMt = Bench.parsePriors(json, "sf0.1", 140.0, 150.0)
-    assert(math.abs(weakMt("q_a") - 15.0) < 1e-9, s"got $weakMt")
-    // both weak: the worse deficit wins (max, not product)
-    val both = Bench.parsePriors(json, "sf0.1", 280.0, 150.0)
-    assert(math.abs(both("q_a") - 15.0) < 1e-9, s"got $both")
-    // FASTER host keeps the recorded priors — a threshold may be
-    // conservative, never tightened below the recorded cell
-    assert(Bench.parsePriors(json, "sf0.1", 70.0, 25.0)("q_a") == 5.0)
-    // a pre-r12 prior file without membw_mt_ms: mt term skipped
-    val noMt =
-      """{"sf":"/root/testdata/sf0.1","membw_ms":140.0,
-         |"queries":{"q_a":5.0}}""".stripMargin
-    assert(Bench.parsePriors(noMt, "sf0.1", 140.0, 999.0)("q_a") == 5.0)
-    // both now-markers at 0: RAW recorded cells (the inflation statistic
-    // and reprocessing paths read priors unscaled)
-    assert(Bench.parsePriors(json, "sf0.1", 0.0, 0.0)("q_a") == 5.0)
-    // sf basename mismatch: no priors (an sf0.001 smoke run must not
-    // inherit sf0.1 cells)
-    assert(Bench.parsePriors(json, "sf0.001", 140.0, 50.0).isEmpty)
-    // hostile/absent input degrades to empty, never throws
-    assert(Bench.parsePriors("not json", "sf0.1", 140.0, 50.0).isEmpty)
-    assert(Bench.parsePriors("{}", "sf0.1", 140.0, 50.0).isEmpty)
-    assert(Bench.parsePriors("""{"sf":"x/sf0.1"}""", "sf0.1", 140.0, 50.0).isEmpty)
   }
 }

@@ -28,7 +28,7 @@ class JobBudgetSpec extends SparkSpec {
   private val budget: Map[String, Int] = Map(
     "q_dedup_clusters" -> 20,   // r10 oracle pairing: truth CC + minhash CC;
                                 // r12 re-record (+3): the truth frame's
-                                // eager gram-array checkpoint (TruthArrProbe
+                                // eager gram-array checkpoint (BASELINE r12
                                 // trade — kills the racing duplicate gram
                                 // pass) and the restricted flag's tids
                                 // census + small-side materialization;

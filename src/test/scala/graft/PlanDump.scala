@@ -1,9 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import graft.queries.Registry
 
-/** Regenerates PLANS.md. Session config mirrors the driver's Bench run
-  * (local[32], shuffle.partitions=32) and plans against sf0.1 — the SF the
+/** Regenerates PLANS.md. The session is Bench's ([[Session.build]]) at
+  * the timed local[32], and it plans against sf0.1 — the SF the
   * bench actually measures (VERDICT r3 §next.7: AQE/broadcast thresholds
   * see sf0.1 input stats, so plans recorded at sf0.001 could differ from
   * the benched ones).
@@ -24,17 +23,8 @@ object PlanDump {
 
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
-    val cpus = "32"
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-plandump")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = 32
+    val spark = Session.build(sfDir, cpus)
     val names = Seq("flagship", "q_sql_tpch_q5", "q_sql_tpch_q18", "q_dedup_minhash",
       "q_knn_lsh", "q_percentile", "q_text_repetition", "q_pack_sequences",
       "q_stream_join", "q_event_retention", "q_text_tfidf", "q_dedup_clusters",

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Generates an sf1-scale dataset by key-shifted 10x replication of sf0.1
@@ -54,15 +54,7 @@ object ScaleGen {
     // need documents+embeddings (~14 GB at sf1000), so the fourth decade
     // is generated per-table.
     val subset = if (args.length > 4) Some(args(4).split(",").toSet) else None
-    val spark = SparkSession.builder()
-      .master("local[16]")
-      .appName("graft-scalegen")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.build(src, 16)
     val tables = Seq("region", "nation", "customer", "supplier", "part",
       "orders", "lineitem", "events", "documents", "embeddings")
       .filter(t => subset.forall(_.contains(t)))

@@ -4,27 +4,17 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local SparkSession for all specs — same configs as Verify/Bench
-  * (UTC, nanosAsLong for the events table, small shuffle partitions).
+/** Shared local SparkSession for all specs: the session Bench times
+  * ([[Session.build]]) on local[4], sized for sf0.001, plus a warehouse
+  * dir for the specs' bucketed tables.
   */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
-  val sfDir = "/root/testdata/sf0.001"
+  val sfDir: String = SparkSpec.sfDir
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.warehouse.dir", "/tmp/graft-warehouse")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  val sfDir = "/root/testdata/sf0.001"
+  lazy val session: SparkSession = Session.build(sfDir, 4,
+    Map("spark.sql.warehouse.dir" -> "/tmp/graft-warehouse"))
 }
