@@ -176,6 +176,13 @@ object Bench {
     prefix + shown.mkString(",") + suffix
   }
 
+  /** The published `value`: the sum of the measured cells. A failed
+    * query's -1 sentinel stays in its own cell and out of the sum, so a
+    * broken query never lowers the total.
+    */
+  private[graft] def measuredTotal(cells: Seq[(String, Double)]): Double =
+    cells.collect { case (_, v) if v >= 0 => v }.sum
+
   type Query = (SparkSession, String) => DataFrame
 
   /** Best-of-2 cell per query, in the given order. One execution is a
@@ -235,32 +242,7 @@ object Bench {
     // Warm the session before timing: parquet footers/IO cache + the
     // scan codepaths, so the first measured query doesn't absorb one-time
     // session startup. The measured queries themselves run cold.
-    // Per-table scale dirs (tools/sfcut.sh, ScaleGen subsets) hold only
-    // the tables a measurement needs — probe existence first, or Spark's
-    // FileStreamSink WARN logs a full stack trace per missing table
-    // before the catch sees it (hundreds of noise lines per scale run).
-    // probe through the Hadoop FS layer, not java.nio: the probe must see
-    // every path Spark itself can read (hdfs://, s3a://, file:// URIs),
-    // or a remote sfDir would silently skip the whole warm-up pass and
-    // the first measured query would absorb the startup cost anyway
-    // NonFatal only (r7 ADVICE): a fatal error here (OOM, interrupt) must
-    // propagate, not masquerade as a silent warm-up skip that leaves a
-    // genuinely broken FS config invisible — skips are logged by name.
-    Seq("region", "nation", "customer", "supplier", "part", "orders",
-      "lineitem", "events", "documents", "embeddings").foreach { t =>
-      val probed =
-        try {
-          val p = new org.apache.hadoop.fs.Path(sfDir, s"$t.parquet")
-          p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-        } catch { case NonFatal(e) =>
-          System.err.println(s"[bench] warm-up probe $t: $e")
-          true // unprobeable -> let load try
-        }
-      if (probed)
-        try graft.sources.Tables.load(spark, sfDir, t).count()
-        catch { case NonFatal(e) =>
-          System.err.println(s"[bench] warm-up skip $t: ${errorHead(e)}") }
-    }
+    graft.sources.Tables.warm(spark, sfDir)
     // warm the execution machinery itself (Janino/codegen, window exec,
     // generators, hash aggregation, sort) on a tiny synthetic plan, so the
     // first measured query that touches each operator class doesn't absorb
@@ -313,7 +295,7 @@ object Bench {
       case None        => SparkEntry.queries.toSeq
     }
     val (results, failures) = measure(spark, sfDir, selected)
-    val total = results.map(_._2).sum
+    val total = measuredTotal(results)
     // Full per-query detail — too long for the driver's 2000-char stdout
     // tail window (the r2 one-liner with all 89 queries at full precision
     // was truncated mid-line and failed to parse) — goes to a file, with

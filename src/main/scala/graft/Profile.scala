@@ -23,11 +23,7 @@ object Profile {
     val runs = sys.env.getOrElse("SPARK_GRAFT_RUNS", "1").toInt.max(1)
     val spark = Session.build(sfDir, cpus)
     // same warm-up as Bench so first-touch codegen doesn't pollute jobs
-    Seq("region", "nation", "customer", "supplier", "part", "orders",
-      "lineitem", "events", "documents", "embeddings").foreach { t =>
-      try graft.sources.Tables.load(spark, sfDir, t).count()
-      catch { case scala.util.control.NonFatal(_) => }
-    }
+    graft.sources.Tables.warm(spark, sfDir)
     val starts = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String, Int)]()
     val listener = new SparkListener {
       override def onJobStart(js: SparkListenerJobStart): Unit = {

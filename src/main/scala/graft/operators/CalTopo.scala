@@ -323,6 +323,17 @@ object CalTopo {
   /** The whole reference pipeline A1→A13 fused (the flagship), flattened to
     * scalar columns for oracle comparison (struct fields → top-level columns;
     * the nested form is what flows through the stages above).
+    *
+    * UNORDERED: rows come out in scan order, and the plan carries no
+    * exchange on the feature side (the folder dimension is broadcast), so
+    * each fetch unit of the scan stays one partition and
+    * [[graft.sources.FeatureCollectionSink]] delivers it as one
+    * FeatureCollection — the reference's one POST per map, in input order
+    * (`task.ts:92-159` never sorts). The total order the oracle compares
+    * on lives in the declared `flagship` query
+    * ([[graft.queries.CalTopoQueries]]), not here: a sort on the delivery
+    * path would cost a range-partitioning shuffle plus its sampling job
+    * per tick, and at scale a full sort of the fact table.
     */
   def flagship(features: DataFrame): DataFrame = {
     val folders = folderDim(features)
@@ -348,7 +359,6 @@ object CalTopo {
       element_at(pos, 1).as("x"),
       element_at(pos, 2).as("y"),
       element_at(pos, 3).as("z"),
-      col("path")
-    ).orderBy("id")
+      col("path"))
   }
 }

@@ -334,6 +334,10 @@ object Dedup {
     * restricted frame is checkpointed here and is the assignment's only
     * consumer, so its subplan — including [[clustersExactFirst]]'s
     * corpus-wide expansion join — still executes exactly once.
+    *
+    * `broadcastCap` is a ROW count, and the broadcast rows are (id,
+    * cluster) pairs of 2 longs: the default 2^22 admits ~64 MB at worst
+    * (the tids side, bare longs, ~32 MB).
     */
   def clusterAgreementFlag(truth: DataFrame, assignment: DataFrame,
       bound: Double, name: String,
@@ -370,6 +374,7 @@ object Dedup {
         case _                            => None
       }
     }
+    // broadcastCap counts (id, cluster) rows of 2 longs: ~64 MB worst case
     if (localRows.exists(_ <= broadcastCap)) return flagOver(assignment, bc = true)
     val tidsPlan = truth.select(col("id_a").as("id"))
       .union(truth.select(col("id_b").as("id")))

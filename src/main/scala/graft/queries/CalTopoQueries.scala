@@ -245,6 +245,8 @@ ORDER BY m.id""") { (s, d) =>
     },
 
     // A1→A14 fused — the flagship (the reference's single real "query").
+    // The operator is the unordered delivery transform; the total order
+    // the oracle compares on is this query's, like every query above.
     Q("flagship",
       s"""WITH $featuresCte,
 folders AS (SELECT id AS fid, title AS ftitle FROM features WHERE class = 'Folder')
@@ -263,7 +265,7 @@ FROM features f LEFT JOIN folders fo
   ON f.folder_id IS NOT NULL AND f.folder_id <> '' AND f.folder_id = fo.fid
 WHERE $mainWhere
 ORDER BY f.id""") { (s, d) =>
-      CalTopo.flagship(CalTopoFeatures.build(s, d))
+      CalTopo.flagship(CalTopoFeatures.build(s, d)).orderBy("id")
     }
   )
 }

@@ -86,6 +86,15 @@ class BenchJsonSpec extends SparkSpec {
     assert(failures == Seq.fill(2)("q_bad" -> "IllegalStateException: boom"))
   }
 
+  test("a failed query's -1 cell stays out of the published total") {
+    val cells = Seq("q_a" -> 0.5, "q_broken" -> -1.0, "q_b" -> 2.0)
+    assert(Bench.measuredTotal(cells) == 2.5)
+    assert(Bench.measuredTotal(Seq("q_broken" -> -1.0)) == 0.0)
+    // the cell itself keeps its sentinel in the detail line
+    assert(Bench.detailLine(Bench.measuredTotal(cells), cells, "/x")
+      .contains("\"q_broken\":-1.00"))
+  }
+
   test("a fatal error in a query propagates out of the measurement loop") {
     val fatal: Bench.Query = (_, _) => throw new LinkageError("fatal")
     intercept[LinkageError] {

@@ -46,11 +46,7 @@ object JobCountProbe {
     // mimic Bench's warm-up so first-touch codegen/footer costs don't
     // inflate the first queries' wall column (job counts are unaffected
     // by warmth, but the wall column doubles as a floor-share estimate)
-    Seq("region", "nation", "customer", "supplier", "part", "orders",
-      "lineitem", "events", "documents", "embeddings").foreach { t =>
-      try graft.sources.Tables.load(spark, sfDir, t).count()
-      catch { case scala.util.control.NonFatal(_) => () }
-    }
+    graft.sources.Tables.warm(spark, sfDir)
     def drained(): Long = {
       // the listener bus is async: flush before reading the tally
       org.apache.spark.GraftListenerBridge

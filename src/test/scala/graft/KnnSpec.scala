@@ -46,6 +46,24 @@ class KnnSpec extends SparkSpec {
       s"expected the six census-gated broadcast hints, got ${hints.size}")
   }
 
+  test("dedup knn sizes the bucket side apart: small dim, many groups keep it un-broadcast") {
+    // 100k distinct 2-dim vectors: the rep frame fits the vector gate
+    // (100k × (2 + 2) cells ≤ 2e6), the bucket-exploded side does not
+    // (100k × 8 tables × 3 cells > 2e6). Plan only; nothing executes
+    // past the operator's own census.
+    val wide = spark.range(100000).select(col("id").as("vec_id"),
+      array(col("id").cast("float"), lit(1.0f)).as("embedding"))
+    val res = Vectors.knnLshDeduped(wide, k = 5)
+    val hinted = res.queryExecution.analyzed.collect {
+      case h: org.apache.spark.sql.catalyst.plans.logical.ResolvedHint =>
+        h.output.map(_.name).toSet
+    }
+    assert(!hinted.exists(_.contains("bucket_b")),
+      s"bucket side broadcast past its cap: $hinted")
+    assert(hinted.exists(_.contains("emb_b")) && hinted.exists(_.contains("emb_a")),
+      s"vector re-joins lost their broadcast: $hinted")
+  }
+
   test("brute-force knn matches naive driver-side top-10 exactly") {
     val got = Vectors.knnBruteForce(emb, 0L, 10)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq

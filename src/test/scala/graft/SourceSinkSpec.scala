@@ -2,9 +2,18 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, Exchange}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.util.QueryExecutionListener
 import graft.operators.CalTopo
-import graft.sources.{CalTopoFeatures, FeatureSink}
+import graft.queries.Registry
+import graft.sources.{CalTopoFeatures, FeatureCollectionSink, FeatureSink, Tables}
 
 /** Custom DSv2 GeoJSON source (A1) + partition-parallel FeatureCollection
   * sink (A14): fixture round trips.
@@ -24,6 +33,150 @@ class SourceSinkSpec extends SparkSpec {
     Files.createDirectories(p.getParent)
     Files.writeString(p, doc)
     p.toString
+  }
+
+  /** The test data's CalTopo features as GeoJSON FeatureCollection
+    * documents in the wire shape the map endpoint serves (properties keyed
+    * by the typed schema's field names, coordinates as JSON arrays): one
+    * document per id predicate in `docs`, written under `dir`.
+    */
+  private def writeFeatureDocs(dir: java.nio.file.Path,
+      docs: Seq[String => Boolean]): Seq[String] = {
+    val f = CalTopoFeatures.build(spark, sfDir)
+    val props = f.columns.filterNot(Set("id", "geometry")).map(col)
+    val rows = f.select(col("id"), to_json(struct(props.toSeq: _*)),
+        col("geometry.type"), col("geometry.coordinates"))
+      .collect()
+    docs.zipWithIndex.map { case (holds, i) =>
+      val feats = rows.filter(r => holds(r.getString(0))).map { r =>
+        val geom =
+          if (r.isNullAt(2)) "null"
+          else s"""{"type":"${r.getString(2)}","coordinates":${r.getString(3)}}"""
+        s"""{"id":"${r.getString(0)}","type":"Feature","properties":${r.getString(1)},"geometry":$geom}"""
+      }
+      val p = dir.resolve(s"map$i.json")
+      Files.writeString(p,
+        feats.mkString("""{"type":"FeatureCollection","features":[""", ",", "]}"))
+      p.toString
+    }
+  }
+
+  /** The typed decode a map tick runs between the scan and the flagship:
+    * strict `from_json` of the raw properties plus the geometry struct.
+    */
+  private def decode(raw: DataFrame): DataFrame = {
+    val propsSchema = StructType(CalTopoFeatures.featureSchema.fields
+      .filterNot(f => f.name == "id" || f.name == "geometry"))
+    raw.select(col("id"),
+        from_json(col("properties_json"), propsSchema, Map("mode" -> "FAILFAST")).as("p"),
+        when(col("geom_type").isNotNull,
+          struct(col("geom_type").as("type"), col("geom_coords").as("coordinates")))
+          .as("geometry"))
+      .select(col("id"), col("p.*"), col("geometry"))
+  }
+
+  private def planNodes(p: SparkPlan): Seq[SparkPlan] = {
+    val kids = p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case q: QueryStageExec => Seq(q.plan)
+      case other => other.children ++ other.subqueries
+    }
+    p +: kids.flatMap(planNodes)
+  }
+
+  /** Runs `body` and returns the jobs it launched and the executed plans
+    * of the writes it made.
+    */
+  private def traced(body: => Unit): (Long, Seq[SparkPlan]) = {
+    val jobs = new JobCountProbe.JobCounter
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val qel = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.GraftListenerBridge.waitUntilListenerBusEmpty(sc)
+    sc.addSparkListener(jobs)
+    spark.listenerManager.register(qel)
+    try {
+      body
+      org.apache.spark.GraftListenerBridge.waitUntilListenerBusEmpty(sc)
+      (jobs.snapshot, plans.asScala.toSeq)
+    } finally {
+      sc.removeSparkListener(jobs)
+      spark.listenerManager.unregister(qel)
+    }
+  }
+
+  /** Delivered documents under `out`: each one's feature ids. */
+  private def deliveredIds(out: java.nio.file.Path): Seq[Seq[String]] = {
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    out.toFile.listFiles.filter(_.getName.endsWith(".json")).toSeq.map { f =>
+      val root = mapper.readTree(f)
+      assert(root.path("type").asText() == "FeatureCollection")
+      root.path("features").elements().asScala.map(_.path("id").asText()).toSeq
+    }
+  }
+
+  private def multiset(rows: Seq[Row]): Map[Row, Int] =
+    rows.groupBy(identity).map { case (r, rs) => r -> rs.size }
+
+  private lazy val declaredFlagship: Seq[Row] =
+    Registry.all.find(_.name == "flagship").get.build(spark, sfDir).collect().toSeq
+
+  test("flagship operator equals the declared flagship query as a multiset") {
+    val op = CalTopo.flagship(CalTopoFeatures.build(spark, sfDir)).collect().toSeq
+    assert(op.nonEmpty)
+    assert(multiset(op) == multiset(declaredFlagship))
+  }
+
+  test("map tick delivery: 2 jobs, a broadcast the only exchange, one document per fetch unit") {
+    val Seq(doc) = writeFeatureDocs(Files.createTempDirectory("graft-tick-in"),
+      Seq(_ => true))
+    val out = Files.createTempDirectory("graft-tick-out")
+    val tick = CalTopo.flagship(decode(
+      spark.read.format("graft.sources.GeoJsonSource").load(doc)))
+    // the GeoJSON path computes the declared query's rows
+    assert(multiset(tick.collect().toSeq) == multiset(declaredFlagship))
+    val (jobs, plans) = traced(FeatureCollectionSink.write(tick, out.toString))
+    // one broadcast job for the folder dimension, one write job
+    assert(jobs == 2, s"jobs: $jobs")
+    val Seq(plan) = plans
+    val exchanges = planNodes(plan).collect { case e: Exchange => e }
+    assert(exchanges.size == 1 && exchanges.head.isInstanceOf[BroadcastExchangeExec],
+      plan.toString)
+    assert(!plan.toString.toLowerCase.contains("rangepartitioning"), plan.toString)
+    val docs = deliveredIds(out)
+    assert(docs.size == 1)
+    assert(docs.flatten.toSet == declaredFlagship.map(_.getString(0)).toSet)
+    assert(docs.flatten.size == declaredFlagship.size)
+  }
+
+  test("a 2-document paths read delivers 2 documents holding every id") {
+    // folders sit in the first document only: the folder dimension is
+    // read from the whole scan, so the second document's paths resolve too
+    val first = (id: String) => id.startsWith("F") || id.hashCode % 2 == 0
+    val docs = writeFeatureDocs(Files.createTempDirectory("graft-tick2-in"),
+      Seq(first, !first(_)))
+    val out = Files.createTempDirectory("graft-tick2-out")
+    val tick = CalTopo.flagship(decode(
+      spark.read.format("graft.sources.GeoJsonSource")
+        .option("paths", docs.map("\"" + _ + "\"").mkString("[", ",", "]"))
+        .load()))
+    assert(multiset(tick.collect().toSeq) == multiset(declaredFlagship))
+    FeatureCollectionSink.write(tick, out.toString)
+    val delivered = deliveredIds(out)
+    assert(delivered.size == 2)
+    assert(delivered.flatten.sorted == declaredFlagship.map(_.getString(0)).sorted)
+  }
+
+  test("table warm-up loads the tables present and skips the absent ones") {
+    val dir = Files.createTempDirectory("graft-warm").toString
+    Tables.region(spark, sfDir).write.parquet(s"$dir/region.parquet")
+    Tables.nation(spark, sfDir).write.parquet(s"$dir/nation.parquet")
+    assert(Tables.warm(spark, dir) == Seq("region", "nation"))
+    assert(Tables.warm(spark, sfDir) == Tables.names)
   }
 
   test("normalizeTs recovers NTZ micros independent of session timezone") {
