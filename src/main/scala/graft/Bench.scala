@@ -160,20 +160,23 @@ object Bench {
   private[graft] val perQueryBudget = 1660
 
   /** The budgeted per-query stdout line: broken (-1) cells first so they
-    * are never budgeted out, then the slowest first, as many as fit
-    * [[perQueryBudget]].
+    * are never budgeted out, then the slowest first, up to the first cell
+    * that does not fit [[perQueryBudget]]. The shown cells are therefore
+    * an exact slowest-first prefix: a cell that is shown is never slower
+    * than one left out, and `omitted` counts the cells left out, so a
+    * cell cannot leave the line without saying so.
     */
   private[graft] def detailLine(total: Double, cells: Seq[(String, Double)],
       sf: String): String = {
     val prefix = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","nq":${cells.size},"queries":{"""
-    val suffix = s"""},"sf":${jsonString(sf)}}"""
-    var used = prefix.length + suffix.length
-    val shown = scala.collection.mutable.ArrayBuffer.empty[String]
-    cells.sortBy { case (_, v) => (v >= 0, -v) }.foreach { case (k, v) =>
-      val entry = "\"" + k + "\":" + fmt2(v)
-      if (used + entry.length + 1 <= perQueryBudget) { shown += entry; used += entry.length + 1 }
-    }
-    prefix + shown.mkString(",") + suffix
+    def suffix(omitted: Int) = s"""},"omitted":$omitted,"sf":${jsonString(sf)}}"""
+    val entries = cells.sortBy { case (_, v) => (v >= 0, -v) }
+      .map { case (k, v) => "\"" + k + "\":" + fmt2(v) }
+    // the widest omitted count is reserved, so the final line fits too
+    val room = perQueryBudget - prefix.length - suffix(cells.size).length
+    val shown = entries.take(
+      entries.scanLeft(0)(_ + _.length + 1).tail.takeWhile(_ <= room).size)
+    prefix + shown.mkString(",") + suffix(cells.size - shown.size)
   }
 
   /** The published `value`: the sum of the measured cells. A failed

@@ -25,6 +25,14 @@ import org.apache.spark.unsafe.types.UTF8String
   * words→hash transform per element_at access: O(n²) per doc, 12× on
   * the dedup family). This expression is the third corner: zero
   * shuffles AND a tight primitive loop in both eval modes.
+  *
+  * The MinHash and SimHash signatures are the same case: a doc's
+  * signature depends only on its own row, so [[MinHashSignature]] and
+  * [[SimHashSignature]] compute it row-locally, bitwise-equal to the
+  * explode → groupBy(id) → 64-slot aggregates (DedupSpec's references)
+  * without their doc-sized shuffle and their two large generated
+  * classes, which a dedup pass recompiled per query because it
+  * overflows Spark's codegen cache.
   */
 object TextExprs {
 
@@ -33,6 +41,28 @@ object TextExprs {
     * precompiling just hoists the per-row compile).
     */
   private val Whitespace = java.util.regex.Pattern.compile("\\s+")
+
+  /** xxhash64 of each of `text`'s words, in order — the words of
+    * [[graft.operators.Dedup.words]] (trim, lowercase, split on "\\s+",
+    * empties dropped), each hashed as `xxhash64(w)` hashes a string:
+    * `XXH64.hashUnsafeBytes` over its UTF-8 bytes, seed 42.
+    */
+  private def wordHashes(text: UTF8String): Array[Long] = {
+    val toks = Whitespace.split(text.trim().toLowerCase().toString, -1)
+    var m = 0
+    val wh = new Array[Long](toks.length)
+    var i = 0
+    while (i < toks.length) {
+      if (!toks(i).isEmpty) {
+        val w = UTF8String.fromString(toks(i))
+        wh(m) = XXH64.hashUnsafeBytes(
+          w.getBaseObject, w.getBaseOffset, w.numBytes, 42L)
+        m += 1
+      }
+      i += 1
+    }
+    if (m == wh.length) wh else java.util.Arrays.copyOf(wh, m)
+  }
 
   /** Distinct word-trigram hashes of `text`, first-occurrence order —
     * bitwise-identical to the composed built-in form
@@ -55,19 +85,8 @@ object TextExprs {
     * no words → empty array.
     */
   def gramHashes(text: UTF8String): ArrayData = {
-    val toks = Whitespace.split(text.trim().toLowerCase().toString, -1)
-    var m = 0
-    val wh = new Array[Long](toks.length)
-    var i = 0
-    while (i < toks.length) {
-      if (!toks(i).isEmpty) {
-        val w = UTF8String.fromString(toks(i))
-        wh(m) = XXH64.hashUnsafeBytes(
-          w.getBaseObject, w.getBaseOffset, w.numBytes, 42L)
-        m += 1
-      }
-      i += 1
-    }
+    val wh = wordHashes(text)
+    val m = wh.length
     if (m == 0) return ArrayData.toArrayData(Array.emptyLongArray)
     if (m == 1) return ArrayData.toArrayData(
       Array(XXH64.hashLong(wh(0), 42L)))
@@ -122,4 +141,129 @@ object TextExprs {
 
   def gramHashes(text: Column): Column =
     GraftSqlBridge.column(GramHashes(GraftSqlBridge.expression(text)))
+
+  /** MinHash signature of a gram-hash array: slot p is the minimum over
+    * the array's hashes h of `XXH64.hashInt(p, XXH64.hashLong(h, 42))` —
+    * the XxHash64 expression's seed chain for `xxhash64(h, lit(p))` — so
+    * the signature is bitwise-identical to the per-doc aggregate
+    * `min(xxhash64(h, lit(p)))` over the exploded hashes, for p in
+    * 0 until numPerm. A null element hashes as that expression skips a
+    * null child (`hashInt(p, 42)`). An empty array has no minimum and
+    * yields null, as the aggregate yielded no group.
+    */
+  def minhash(hs: ArrayData, numPerm: Int): ArrayData = {
+    val n = hs.numElements()
+    if (n == 0) return null
+    val sig = Array.fill(numPerm)(Long.MaxValue)
+    var i = 0
+    while (i < n) {
+      val seed = if (hs.isNullAt(i)) 42L else XXH64.hashLong(hs.getLong(i), 42L)
+      var p = 0
+      while (p < numPerm) {
+        val v = XXH64.hashInt(p, seed)
+        if (v < sig(p)) sig(p) = v
+        p += 1
+      }
+      i += 1
+    }
+    ArrayData.toArrayData(sig)
+  }
+
+  /** 64-bit SimHash of `text`'s word multiset: bit b is set when more of
+    * its words' `xxhash64(w)` values have bit b set than clear — the sign
+    * of the per-bit sum of +1/-1 contributions. Same words and hashes as
+    * [[gramHashes]], so it equals [[graft.operators.Dedup.simhash]] over
+    * [[graft.operators.Dedup.words]]. No words yields null.
+    */
+  def simhash(text: UTF8String): java.lang.Long = {
+    val wh = wordHashes(text)
+    if (wh.isEmpty) return null
+    val ones = new Array[Int](64)
+    var i = 0
+    while (i < wh.length) {
+      val h = wh(i)
+      var b = 0
+      while (b < 64) { ones(b) += ((h >>> b) & 1L).toInt; b += 1 }
+      i += 1
+    }
+    var sh = 0L
+    var b = 0
+    while (b < 64) { if (2 * ones(b) > wh.length) sh |= 1L << b; b += 1 }
+    sh
+  }
+
+  /** `minhash` as a Catalyst expression: array<bigint> → array<bigint>
+    * of `numPerm` slots, null for a null or empty input, codegen'd as
+    * one static call like [[GramHashes]].
+    */
+  case class MinHashSignature(child: Expression, numPerm: Int)
+      extends UnaryExpression {
+
+    override def dataType: DataType = ArrayType(LongType, containsNull = false)
+    override def nullable: Boolean = true
+
+    override def checkInputDataTypes()
+        : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
+      child.dataType match {
+        case ArrayType(LongType, _) =>
+          org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
+        case other =>
+          org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
+            s"minhash_signature expects array<bigint>, got ${other.catalogString}")
+      }
+
+    override def nullSafeEval(hs: Any): Any =
+      TextExprs.minhash(hs.asInstanceOf[ArrayData], numPerm)
+
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+      nullSafeCodeGen(ctx, ev, hs => {
+        val cls = TextExprs.getClass.getName.stripSuffix("$") + "$.MODULE$"
+        s"""${ev.value} = $cls.minhash($hs, $numPerm);
+           |${ev.isNull} = ${ev.value} == null;""".stripMargin
+      })
+
+    override protected def withNewChildInternal(
+        newChild: Expression): MinHashSignature = copy(child = newChild)
+  }
+
+  /** `simhash` as a Catalyst expression: string → bigint, null for a
+    * null or wordless text, codegen'd as one static call.
+    */
+  case class SimHashSignature(child: Expression) extends UnaryExpression {
+
+    override def dataType: DataType = LongType
+    override def nullable: Boolean = true
+
+    override def checkInputDataTypes()
+        : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
+      child.dataType match {
+        case StringType =>
+          org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
+        case other =>
+          org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
+            s"simhash_signature expects string, got ${other.catalogString}")
+      }
+
+    override def nullSafeEval(t: Any): Any =
+      TextExprs.simhash(t.asInstanceOf[UTF8String])
+
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+      nullSafeCodeGen(ctx, ev, t => {
+        val cls = TextExprs.getClass.getName.stripSuffix("$") + "$.MODULE$"
+        val h = ctx.freshName("sh")
+        s"""java.lang.Long $h = $cls.simhash($t);
+           |if ($h == null) ${ev.isNull} = true;
+           |else ${ev.value} = $h.longValue();""".stripMargin
+      })
+
+    override protected def withNewChildInternal(
+        newChild: Expression): SimHashSignature = copy(child = newChild)
+  }
+
+  def minhash(gramHashes: Column, numPerm: Int): Column =
+    GraftSqlBridge.column(
+      MinHashSignature(GraftSqlBridge.expression(gramHashes), numPerm))
+
+  def simhash(text: Column): Column =
+    GraftSqlBridge.column(SimHashSignature(GraftSqlBridge.expression(text)))
 }

@@ -4,18 +4,23 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Near-duplicate detection for LLM training-data pipelines (SURVEY.md §2
-  * B20). Everything is built from codegen'd built-ins — no UDFs — so the hot
-  * path stays inside whole-stage codegen and scales by partitioning alone:
+  * B20). Everything is codegen'd — no UDFs on the hot path — so it stays
+  * inside whole-stage codegen and scales by partitioning alone:
   *
   *  - exact:   hash-groupBy on normalized text (one shuffle on the hash).
   *  - minhash: shingle -> 64 minhashes -> LSH bands -> candidate pairs via a
-  *             self-equi-join on (band_id, band_hash). At 100 TB the band
+  *             self-equi-join on (band_id, band_hash). The signature is a
+  *             row-local native kernel, so at 100 TB the band
   *             join is the only shuffle and its key space is uniform by
   *             construction (hashes); the quadratic blowup inside a bucket
   *             is bounded because equal band-hashes imply near-identical
   *             docs (AQE skew-join splits any residual hot bucket).
-  *  - simhash: 64-bit sign-aggregated fingerprint, banded into 4x16-bit
-  *             chunks for Hamming-near candidate generation.
+  *  - simhash: 64-bit sign-aggregated fingerprint (row-local native
+  *             kernel), banded into 4x16-bit chunks for Hamming-near
+  *             candidate generation.
+  *
+  * The gram and signature kernels are native codegen'd expressions
+  * ([[graft.functions.TextExprs]]); the rest is built-ins.
   *
   * Determinism: all hashing is Spark's xxhash64 (seed fixed) — stable across
   * runs/partitionings; pair outputs are canonically ordered (id_a < id_b).
@@ -169,24 +174,6 @@ object Dedup {
     docs.filter(trim(coalesce(col("text"), lit(""))) =!= "")
       .select(col("id"),
         graft.functions.TextExprs.gramHashes(col("text")).as("g"))
-
-  /** Distinct (id, h) gram-hash rows — the gram kernel exploded. The
-    * generator input is the EXPRESSION, not a bound alias: explode over
-    * an aliased gram column makes InferFiltersFromGenerate add a
-    * size>0/isnotnull filter whose pushdown substitutes the whole gram
-    * subtree into the filter — evaluating the kernel twice per row (and
-    * it put the O(n²) HOF form in front of the parquet scan as a
-    * DataFilter; the rule skips inference for non-cheap generator
-    * inputs). The explode is row-local (a doc's grams never leave their
-    * input partition), so downstream per-doc aggregates
-    * ([[minhashSignatures]]) partial-aggregate each doc to ONE row
-    * map-side and the only shuffle left is doc-sized, not
-    * gram-occurrence-sized.
-    */
-  def shingleHashRows(docs: DataFrame): DataFrame =
-    docs.filter(trim(coalesce(col("text"), lit(""))) =!= "")
-      .select(col("id"),
-        explode(graft.functions.TextExprs.gramHashes(col("text"))).as("h"))
 
   /** Exact word-trigram Jaccard pairs inside a doc-id blocking window —
     * the SQL-expressible exact near-dup shape (`q_dedup_ngram_jaccard`,
@@ -415,35 +402,40 @@ object Dedup {
     flagOver(small, bc = small.count() <= broadcastCap)
   }
 
-  /** (id, mh) signature table. The numPerm signature slots are
-    * min-aggregates of cheap fixed-width re-hashes xxhash64(h, p) over
-    * the exploded gram-hash rows — a codegen'd HashAggregate, NOT an
-    * in-array HOF fold (64 interpreted transform() passes per doc were
-    * measured ~12× slower than the aggregate). Since r11 the gram rows
-    * are row-local ([[shingleHashRows]] explodes per-doc arrays — no
-    * window shuffle feeds them), so partial aggregation folds each doc
-    * to one signature row map-side and the only exchange left in the
-    * whole signature pass is doc-sized.
+  /** (id, name) rows of a row-local signature `sig`, without the rows
+    * where it is null (a doc with no grams or words: the aggregates these
+    * kernels replaced had no group for it). The null rows are dropped
+    * AFTER a generator: a filter on a generator's output cannot be pushed
+    * below it, so the kernel runs once per row. A plain isNotNull (or
+    * size > 0) filter over the projection would be rewritten by predicate
+    * pushdown into a second kernel call inside the filter.
+    */
+  private def signatureRows(df: DataFrame, sig: Column, name: String): DataFrame =
+    df.select(col("id"), explode(array(sig)).as(name))
+      .filter(col(name).isNotNull)
+
+  /** (id, mh) signature table: slot p of a doc's signature is the minimum
+    * over its distinct gram hashes h of xxhash64(h, p). One row-local
+    * pass — the gram kernel feeding the native
+    * [[graft.functions.TextExprs.minhash]] kernel, with no per-gram rows,
+    * exchange or aggregate. The former explode → groupBy(id) → 64 × min(xxhash64(h,
+    * p)) aggregate gave bitwise-identical signatures (DedupSpec keeps it as
+    * the reference) but paid a doc-sized shuffle, its stage job and one of
+    * the two largest generated classes of a dedup query. Docs with no
+    * grams (null or whitespace-only text) have no row.
     */
   def minhashSignatures(docs: DataFrame, numPerm: Int = 64): DataFrame =
-    signaturesFromRows(shingleHashRows(docs), numPerm)
+    signatureRows(docs, graft.functions.TextExprs.minhash(
+      graft.functions.TextExprs.gramHashes(col("text")), numPerm), "mh")
 
   /** [[minhashSignatures]] from a caller-supplied gram-array frame (the
-    * [[gramHashSets]] shape) — the row-local explode of `g` produces
-    * exactly [[shingleHashRows]]' rows ([[graft.functions.TextExprs
-    * .gramHashes]] already returns per-doc DISTINCT hashes), so the
-    * signatures are bitwise-identical while the gram kernel pass is
-    * shared with the truth frame (r14 — see
-    * [[exactJaccardWindowPairsArr]]).
+    * [[gramHashSets]] shape): the same kernel over `g`, so the signatures
+    * are bitwise-identical while the gram kernel pass is shared with the
+    * truth frame (r14 — see [[exactJaccardWindowPairsArr]]). Rows with an
+    * empty `g` have no signature row.
     */
   def minhashSignaturesArr(arr: DataFrame, numPerm: Int = 64): DataFrame =
-    signaturesFromRows(
-      arr.select(col("id"), explode(col("g")).as("h")), numPerm)
-
-  private def signaturesFromRows(rows: DataFrame, numPerm: Int): DataFrame =
-    rows.groupBy(col("id"))
-      .agg(array((0 until numPerm).map(p =>
-        min(xxhash64(col("h"), lit(p)))): _*).as("mh"))
+    signatureRows(arr, graft.functions.TextExprs.minhash(col("g"), numPerm), "mh")
 
   /** LSH band keys: split the signature into bands of `rows` values and hash
     * each band; a shared (band index, band hash) pair => candidate pair.
@@ -480,9 +472,9 @@ object Dedup {
     val m = col("members")
     // gramArr (r14): a caller that already checkpointed the per-doc gram
     // frame (the oracle-paired queries' truth construct) shares it here,
-    // so the signature pass explodes row-locally from the checkpoint
-    // instead of re-running the gram kernel over the corpus — signatures
-    // bitwise-identical (doc at [[minhashSignaturesArr]])
+    // so the signature kernel reads the checkpoint instead of re-running
+    // the gram kernel over the corpus — signatures bitwise-identical (doc
+    // at [[minhashSignaturesArr]])
     val buckets = filterCounting(
       gramArr.map(minhashSignaturesArr(_, numPerm))
         .getOrElse(minhashSignatures(docs, numPerm))
@@ -513,10 +505,10 @@ object Dedup {
 
   /** 64-bit SimHash of the word multiset: bit b is set when the sum of
     * per-word contributions (+1 when bit b of xxhash64(word) is 1 else -1)
-    * is positive. Expressed per-bit as a plain expression over a single
-    * word hash — used by [[simhashSignatures]] inside a codegen'd hash
-    * aggregate (a HOF fold over a 64-counter array was measured ~10x
-    * slower: higher-order lambdas run interpreted).
+    * is positive. The built-in, higher-order form over a words array —
+    * its lambdas run interpreted; [[simhashSignatures]] computes the same
+    * value with the native [[graft.functions.TextExprs.simhash]] kernel
+    * (DedupSpec pins the two equal per row). 0 for an empty array.
     */
   def simhash(ws: Column): Column = {
     val bits = sequence(lit(0), lit(63))
@@ -531,23 +523,46 @@ object Dedup {
       lit(0L), (acc, v) => acc.bitwiseOR(v))
   }
 
-  /** (id, sh) simhash table, codegen-friendly: words explode to rows, each
-    * hashed once; 64 per-bit sign sums aggregate map-side; the bit vector
-    * reassembles from the sums. Same result as [[simhash]] per row.
+  /** (id, sh) simhash table: [[simhash]] of each doc's [[words]], one
+    * row-local projection through the native
+    * [[graft.functions.TextExprs.simhash]] kernel. The former words
+    * explode → groupBy(id) → 64 per-bit sign sums gave bitwise-identical
+    * fingerprints (DedupSpec keeps it as the reference) at the cost of a
+    * doc-sized shuffle, its stage job and one of the two largest
+    * generated classes of a dedup query. Docs with no words (null or
+    * whitespace-only text) have no row.
     */
-  def simhashSignatures(docs: DataFrame): DataFrame = {
-    val h = xxhash64(col("w"))
-    val sums = (0 until 64).map { b =>
-      sum(when(shiftright(h, b).bitwiseAND(1) === 1, 1).otherwise(-1))
-        .as(s"c$b")
+  def simhashSignatures(docs: DataFrame): DataFrame =
+    signatureRows(docs, graft.functions.TextExprs.simhash(col("text")), "sh")
+
+  /** Min-id components of collected (id_a, id_b) long pairs by driver-side
+    * union-find (path-halving, then a min-id relabel) — [[clusters]]'
+    * driver route.
+    */
+  private def driverComponents(spark: org.apache.spark.sql.SparkSession,
+      rows: Array[org.apache.spark.sql.Row]): DataFrame = {
+    import spark.implicits._
+    val parent = scala.collection.mutable.LongMap.empty[Long]
+    def find(x: Long): Long = {
+      var r = x
+      while (parent(r) != r) r = parent(r)
+      var c = x
+      while (parent(c) != c) { val nx = parent(c); parent(c) = r; c = nx }
+      r
     }
-    docs.select(col("id"), explode(words(col("text"))).as("w"))
-      .groupBy(col("id"))
-      .agg(sums.head, sums.tail: _*)
-      .select(col("id"),
-        (0 until 64).map(b =>
-          when(col(s"c$b") > 0, lit(1L << b)).otherwise(lit(0L)))
-          .reduce(_ bitwiseOR _).as("sh"))
+    rows.foreach { row =>
+      val a = row.getLong(0); val b = row.getLong(1)
+      if (!parent.contains(a)) parent(a) = a
+      if (!parent.contains(b)) parent(b) = b
+      val ra = find(a); val rb = find(b)
+      if (ra != rb) parent(ra) = rb
+    }
+    val minOf = scala.collection.mutable.LongMap.empty[Long]
+    parent.keys.foreach { id =>
+      val r = find(id)
+      minOf(r) = math.min(minOf.getOrElse(r, id), id)
+    }
+    parent.keys.toSeq.map(id => (id, minOf(find(id)))).toDF("id", "cluster")
   }
 
   /** Connected components over a near-dup pair list (id_a < id_b): each
@@ -580,9 +595,12 @@ object Dedup {
     * checkpoint and its route census — one fewer materialization pass
     * and one fewer driver-blocking execution per call. CONTRACT: the
     * caller must guarantee `pairs` is checkpoint-backed (otherwise the
-    * pair-generation subplan re-executes per consumer below) and that
-    * the count is exact for the frame passed; DedupSpec pins route
-    * equality under `knownCount` against the self-censused form.
+    * pair-generation subplan re-executes per consumer below); DedupSpec
+    * pins route equality under `knownCount` against the self-censused
+    * form. The count only chooses the route to TRY: the driver route's
+    * collect is bounded in code at `driverCap + 1` rows, and a frame that
+    * turns out larger than `driverCap` takes the distributed loop, so a
+    * wrong `knownCount` costs time, never driver memory.
     */
   def clusters(pairs: DataFrame, maxIter: Int = 64,
       driverCap: Long = 1L << 20, knownCount: Option[Long] = None): DataFrame = {
@@ -620,30 +638,15 @@ object Dedup {
       pairsCk.schema(c).dataType == org.apache.spark.sql.types.LongType)
     if (driverCap > 0 && longIds &&
         knownCount.getOrElse(pairsCk.count()) <= driverCap) {
-      val spark = pairs.sparkSession
-      import spark.implicits._
-      val parent = scala.collection.mutable.LongMap.empty[Long]
-      def find(x: Long): Long = {
-        var r = x
-        while (parent(r) != r) r = parent(r)
-        var c = x
-        while (parent(c) != c) { val nx = parent(c); parent(c) = r; c = nx }
-        r
-      }
-      pairsCk.collect().foreach { row =>
-        val a = row.getLong(0); val b = row.getLong(1)
-        if (!parent.contains(a)) parent(a) = a
-        if (!parent.contains(b)) parent(b) = b
-        val ra = find(a); val rb = find(b)
-        if (ra != rb) parent(ra) = rb
-      }
-      val minOf = scala.collection.mutable.LongMap.empty[Long]
-      parent.keys.foreach { id =>
-        val r = find(id)
-        minOf(r) = math.min(minOf.getOrElse(r, id), id)
-      }
-      return parent.keys.toSeq.map(id => (id, minOf(find(id))))
-        .toDF("id", "cluster")
+      // The collect enforces the cap itself (ADVICE r15): at most
+      // driverCap + 1 rows reach the driver, whatever the count claimed,
+      // and one row past the cap sends the graph to the distributed loop.
+      // coalesce(1) keeps the bounded take ONE job: a CollectLimit over
+      // several partitions takes incrementally, one job per scale-up
+      // step. The one task reads the materialized pair frame, ≤ 16 MB.
+      val rows = pairsCk.coalesce(1)
+        .limit(math.min(driverCap, Int.MaxValue - 1L).toInt + 1).collect()
+      if (rows.length <= driverCap) return driverComponents(pairs.sparkSession, rows)
     }
 
     // ---- distributed route (the 100 TB path) -------------------------
@@ -920,8 +923,8 @@ object Dedup {
     * Shape mirrors [[minhashPairs]]: one signature pass, explode the 4
     * chunk keys, group by chunk key, and emit in-bucket pairs from the
     * collected member list — the previous band-key SELF-JOIN executed the
-    * expensive 64-sum signature aggregate once per side (exchange reuse
-    * does not fire here; measured as most of the query's cost, VERDICT r1
+    * signature pass once per side (exchange reuse did not fire; then a
+    * 64-sum aggregate, measured as most of the query's cost, VERDICT r1
     * §wrong.2). Buckets larger than `maxBucket` are dropped for the same
     * reason — and with the same recall caveat — as in [[minhashPairs]]:
     * the distance<=3 completeness guarantee holds only for pairs whose

@@ -57,7 +57,7 @@ object TextQueries {
       .filter(col("w4").isNotNull)
       // the gram travels as its 64-bit hash, never as a 5-word string:
       // consumers only DISTINCT and equi-join on it, and xxhash64 is
-      // injective-in-practice (same discipline as Dedup.shingleHashRows),
+      // injective-in-practice (same discipline as Dedup.gramHashSets),
       // so shared-gram counts are identical while shuffle bytes shrink
       // ~5x (8-byte longs vs ~40-byte strings) — the 100 TB shape the
       // contamination scaladoc promised

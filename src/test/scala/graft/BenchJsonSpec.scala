@@ -70,7 +70,31 @@ class BenchJsonSpec extends SparkSpec {
       "q_b" -> 2.0), "/x/sf0.1")
     assert(detail == "{\"metric\":\"total\",\"value\":1.500,\"unit\":\"sec\"," +
       "\"nq\":3,\"queries\":{\"q_broken\":-1.00,\"q_b\":2.00,\"q_a\":0.50}," +
-      "\"sf\":\"/x/sf0.1\"}")
+      "\"omitted\":0,\"sf\":\"/x/sf0.1\"}")
+  }
+
+  test("detail line is an exact slowest-first prefix and counts the cells it omits") {
+    // the rotation fix: a cell that does not fit ends the line, so a
+    // shorter, faster cell can never take a slower one's place, and the
+    // omitted count says how many were left out
+    val rnd = new scala.util.Random(7L)
+    val cells = (1 to 111).map(i =>
+      s"q_${"x" * rnd.nextInt(18)}_$i" -> (rnd.nextInt(600) / 100.0))
+    val compact = Bench.compactLine(cells.map(_._2).sum, cells.size, "/data/sf0.1")
+    val detail = Bench.detailLine(cells.map(_._2).sum, cells, "/data/sf0.1")
+    val shown = "\"(q_[^\"]+)\":".r.findAllMatchIn(detail).map(_.group(1)).toSeq
+    val omitted = "\"omitted\":(\\d+)".r.findFirstMatchIn(detail).get.group(1).toInt
+    assert(shown.nonEmpty && omitted > 0, "fixture must overflow the budget")
+    assert(omitted == cells.size - shown.size)
+    val value = cells.toMap
+    val slowestShown = shown.map(value).min
+    val left = cells.filterNot { case (k, _) => shown.contains(k) }
+    assert(left.forall(_._2 <= slowestShown),
+      s"an omitted cell is slower than a shown one (${left.maxBy(_._2)} > $slowestShown)")
+    assert(compact.length + 1 + detail.length + 1 + 60 < 2000)
+    for (k <- Seq("\"metric\":\"total\"", "\"unit\":\"sec\"", "\"nq\":111",
+        "\"sf\":\"/data/sf0.1\""))
+      assert(detail.contains(k), s"missing $k")
   }
 
   private val ok: Bench.Query = (s, _) => s.range(10).toDF()

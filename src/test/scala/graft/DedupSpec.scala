@@ -1,7 +1,9 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import graft.functions.TextExprs
 import graft.operators.Dedup
+import graft.sources.Tables
 
 /** MinHash-LSH / SimHash semantics pinned on planted near-duplicates (these
   * operators are rows-only in the driver's oracle check, so this spec is
@@ -292,6 +294,66 @@ class DedupSpec extends SparkSpec {
     }
   }
 
+  test("clusters: a lying knownCount cannot unbound the driver collect") {
+    // ADVICE r15 item 2: the driver route trusted the caller's count and
+    // collected the whole frame. The collect is now bounded in code: at
+    // most driverCap + 1 rows reach the driver, and one row past the cap
+    // sends the graph to the distributed loop — labels stay correct.
+    import spark.implicits._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+      SparkListenerTaskEnd}
+    // 1 000 disjoint 2-chains (3 000 pairs) over 8 partitions
+    val pairs = (0 until 1000).flatMap { c =>
+        val b = c * 10L
+        Seq((b, b + 1), (b + 1, b + 2), (b + 5, b + 6))
+      }.toDF("id_a", "id_b").repartition(8).localCheckpoint(true)
+    val n = pairs.count()
+    val expected = (0 until 1000).flatMap { c =>
+      val b = c * 10L
+      Seq(b -> b, (b + 1) -> b, (b + 2) -> b, (b + 5) -> (b + 5), (b + 6) -> (b + 5))
+    }.toMap
+    final class Reads extends SparkListener {
+      val stageJob = new java.util.concurrent.ConcurrentHashMap[Int, Int]
+      val jobs = new java.util.concurrent.ConcurrentLinkedQueue[Int]
+      val records = new java.util.concurrent.ConcurrentHashMap[Int, Long]
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        jobs.add(e.jobId); e.stageIds.foreach(stageJob.put(_, e.jobId))
+      }
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        Option(e.taskMetrics).foreach { m =>
+          records.merge(stageJob.getOrDefault(e.stageId, -1),
+            m.inputMetrics.recordsRead, (a: Long, b: Long) => a + b)
+        }
+    }
+    def traced(f: => Map[Long, Long]): (Map[Long, Long], Seq[Int], Reads) = {
+      val r = new Reads
+      spark.sparkContext.addSparkListener(r)
+      try {
+        val got = f
+        org.apache.spark.GraftListenerBridge
+          .waitUntilListenerBusEmpty(spark.sparkContext)
+        import scala.jdk.CollectionConverters._
+        (got, r.jobs.asScala.toSeq, r)
+      } finally spark.sparkContext.removeSparkListener(r)
+    }
+    def labels(cap: Long, claim: Long) =
+      Dedup.clusters(pairs, driverCap = cap, knownCount = Some(claim))
+        .collect().map(row => row.getLong(0) -> row.getLong(1)).toMap
+    // the lie: 10 pairs claimed, 3 000 present, cap 100
+    val (lied, liedJobs, liedReads) = traced(labels(100L, 10L))
+    assert(lied == expected, "labels under a lying knownCount")
+    val firstRead = liedReads.records.getOrDefault(liedJobs.head, 0L)
+    assert(firstRead > 0 && firstRead <= 101,
+      s"the driver route read $firstRead pair rows past a cap of 100")
+    // an honest count under the cap: the bounded take is ONE job over the
+    // 8-partition frame (an incremental CollectLimit would scale up in
+    // several), and the union-find output is the whole answer
+    val (honest, honestJobs, _) = traced(labels(1L << 20, n))
+    assert(honest == expected)
+    assert(honestJobs.size == 1, s"driver route ran ${honestJobs.size} jobs " +
+      "(want the bounded collect only: the labels are a local relation)")
+  }
+
   test("agreement flag: fused truth census and LocalRelation gate equal the census-gated form") {
     // r15 (VERDICT r14 item 1): (a) truthPairs=Some(n) skips the tids
     // census — |tids| ≤ 2·|truth| bounds the broadcast instead; (b) a
@@ -350,6 +412,113 @@ class DedupSpec extends SparkSpec {
     val direct = Dedup.minhashSignatures(corpus)
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     assert(viaArr == direct)
+  }
+
+  /** The explode → groupBy(id) → 64 × min(xxhash64(h, p)) aggregate the
+    * native MinHash kernel replaced: the reference it must equal.
+    */
+  private def aggregateMinhash(docs: org.apache.spark.sql.DataFrame) =
+    docs.filter(trim(coalesce(col("text"), lit(""))) =!= "")
+      .select(col("id"), explode(TextExprs.gramHashes(col("text"))).as("h"))
+      .groupBy(col("id"))
+      .agg(array((0 until 64).map(p => min(xxhash64(col("h"), lit(p)))): _*).as("mh"))
+
+  /** The words explode → groupBy(id) → 64 per-bit sign sums the native
+    * SimHash kernel replaced: the reference it must equal.
+    */
+  private def aggregateSimhash(docs: org.apache.spark.sql.DataFrame) = {
+    val h = xxhash64(col("w"))
+    val sums = (0 until 64).map { b =>
+      sum(when(shiftright(h, b).bitwiseAND(1) === 1, 1).otherwise(-1)).as(s"c$b")
+    }
+    docs.select(col("id"), explode(Dedup.words(col("text"))).as("w"))
+      .groupBy(col("id"))
+      .agg(sums.head, sums.tail: _*)
+      .select(col("id"), (0 until 64).map(b =>
+          when(col(s"c$b") > 0, lit(1L << b)).otherwise(lit(0L)))
+        .reduce(_ bitwiseOR _).as("sh"))
+  }
+
+  /** Texts at the kernels' edges: null, wordless (tab/newline-only passes
+    * the trim filter, which strips only spaces), 1 and 2 words, repeated
+    * words, unicode, mixed whitespace.
+    */
+  private def edgeDocs = {
+    // ids 1000001.. stay clear of the test corpus' doc ids
+    import spark.implicits._
+    Seq(
+      1000001L -> null.asInstanceOf[String],
+      1000002L -> "\t\n\t",
+      1000003L -> "",
+      1000004L -> "   ",
+      1000005L -> "word",
+      1000006L -> "two words",
+      1000007L -> "same same same same same",
+      1000008L -> "to be or not to be to be",
+      1000009L -> "MiXeD CaSe ÅÄÖ ß İstanbul ΣΊΣΥΦΟΣ 🙂 𝔘𝔫𝔦𝔠𝔬𝔡𝔢",
+      1000010L -> "tabs\tand\nnewlines\r\nmixed   spaces",
+      1000011L -> "  leading and trailing   ").toDF("id", "text")
+  }
+
+  private def corpusAndEdges = Tables.documents(spark, sfDir)
+    .select(col("doc_id").as("id"), col("text")).unionByName(edgeDocs)
+
+  private def minhashMap(df: org.apache.spark.sql.DataFrame) =
+    df.collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
+  private def simhashMap(df: org.apache.spark.sql.DataFrame) =
+    df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+
+  test("native minhash signatures equal the min-aggregate form bitwise") {
+    val docs = corpusAndEdges
+    val ref = minhashMap(aggregateMinhash(docs))
+    assert(ref.size > 100 && !ref.contains(1000001L) && !ref.contains(1000002L) &&
+      ref.contains(1000005L) && ref.contains(1000006L), "fixture must cover the edge docs")
+    assert(minhashMap(Dedup.minhashSignatures(docs)) == ref)
+    // the shared gram-frame form, live and materialized
+    assert(minhashMap(Dedup.minhashSignaturesArr(Dedup.gramHashSets(docs))) == ref)
+    assert(minhashMap(Dedup.minhashSignaturesArr(
+      Dedup.gramHashSets(docs).localCheckpoint(true))) == ref)
+  }
+
+  test("native simhash signatures equal the per-bit-sum aggregate and Dedup.simhash per row") {
+    val docs = corpusAndEdges
+    val ref = simhashMap(aggregateSimhash(docs))
+    assert(ref.size > 100 && !ref.contains(1000001L) && !ref.contains(1000002L) &&
+      ref.contains(1000005L), "fixture must cover the edge docs")
+    assert(simhashMap(Dedup.simhashSignatures(docs)) == ref)
+    // the higher-order row form, over the docs that have words
+    val perRow = simhashMap(docs.filter(size(Dedup.words(col("text"))) > 0)
+      .select(col("id"), Dedup.simhash(Dedup.words(col("text")))))
+    assert(perRow == ref)
+  }
+
+  test("signature plans are row-local and run each kernel once") {
+    import org.apache.spark.sql.catalyst.expressions.Expression
+    val docs = corpusAndEdges
+    def kernels(df: org.apache.spark.sql.DataFrame): Map[String, Int] =
+      df.queryExecution.optimizedPlan.collect { case n =>
+        n.expressions.flatMap(_.collect { case e: Expression => e.getClass.getSimpleName })
+      }.flatten.groupBy(identity).map { case (k, v) => k -> v.size }
+    val plans = Seq(
+      ("minhashSignatures", Dedup.minhashSignatures(docs),
+        Map("GramHashes" -> 1, "MinHashSignature" -> 1)),
+      ("minhashSignaturesArr (live)", Dedup.minhashSignaturesArr(Dedup.gramHashSets(docs)),
+        Map("GramHashes" -> 1, "MinHashSignature" -> 1)),
+      ("minhashSignaturesArr (checkpointed)",
+        Dedup.minhashSignaturesArr(Dedup.gramHashSets(docs).localCheckpoint(true)),
+        Map("GramHashes" -> 0, "MinHashSignature" -> 1)),
+      ("simhashSignatures", Dedup.simhashSignatures(docs),
+        Map("SimHashSignature" -> 1)))
+    for ((name, df, want) <- plans) {
+      val physical = df.queryExecution.executedPlan.toString
+      assert(!physical.contains("Exchange") && !physical.contains("HashAggregate"),
+        s"$name is not row-local:\n$physical")
+      val got = kernels(df)
+      want.foreach { case (k, n) =>
+        assert(got.getOrElse(k, 0) == n, s"$name: $k appears ${got.getOrElse(k, 0)}x, want $n\n" +
+          df.queryExecution.optimizedPlan)
+      }
+    }
   }
 
   test("embedding pairs: planted near-identical vectors found above a sharp threshold, orthogonal not paired") {

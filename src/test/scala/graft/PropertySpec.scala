@@ -78,7 +78,7 @@ class PropertySpec extends SparkSpec {
     // string-gram reference, including exact/near dups and the <3-word
     // degenerate shingle arm
     import spark.implicits._
-    // mirror of Dedup.shingleHashRows' gram semantics, on STRINGS
+    // mirror of Dedup.gramHashSets' gram semantics, on STRINGS
     def grams(t: String): Set[Seq[String]] = {
       val ws = t.trim.toLowerCase.split("\\s+").filter(_.nonEmpty).toSeq
       if (ws.length >= 3) ws.sliding(3).toSet else Set(ws)
