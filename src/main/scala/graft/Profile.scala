@@ -1,6 +1,11 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.GraftListenerBridge
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.sql.catalyst.QueryPlanningTracker
+import org.apache.spark.sql.execution.{QueryExecution, SQLExecution}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Per-job wall-time profile of one or more declared queries (measurement
   * tooling, guide §1.1/§7.1 — the sandbox has no Spark UI, so this prints
@@ -9,10 +14,20 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkList
   *   SPARK_GRAFT_ONLY=q_dedup_minhash SPARK_GRAFT_CPUS=32 \
   *   sbt "runMain graft.Profile"
   *
-  * Prints one line per Spark job: jobId, wall ms, #tasks, and the job's
-  * callSite/description — enough to attribute a query's cost to its
-  * build-time jobs (checkpoint materializations, censuses, CC rounds)
-  * versus the final noop write.
+  * Prints one `[job]` line per Spark job: jobId, wall ms, #tasks, and what
+  * ran it — the SQL execution it belongs to (`exec <id>: <description>`,
+  * e.g. `localCheckpoint at Vectors.scala:301` or the final `save`), else
+  * the job's own description or call site. An AQE stage job's call site
+  * is only `CompletableFuture.java`; its execution names the operator
+  * call that submitted it. That attributes a query's cost to its
+  * build-time executions (checkpoint materializations, censuses, CC
+  * rounds) versus the final noop write.
+  *
+  * One `[plan]` line per completed query execution (the censuses and
+  * collects of the build phase, then the write): its action name and its
+  * analysis, optimization and planning ms from the planning tracker, then
+  * its run ms. Driver-side DataFrame building before the write shows as
+  * the `build` ms of the run's total line.
   */
 object Profile {
   def main(args: Array[String]): Unit = {
@@ -24,16 +39,25 @@ object Profile {
     val spark = Session.build(sfDir, cpus)
     // same warm-up as Bench so first-touch codegen doesn't pollute jobs
     graft.sources.Tables.warm(spark, sfDir)
+    val executions = new java.util.concurrent.ConcurrentHashMap[Long, String]()
     val starts = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String, Int)]()
     val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart =>
+          executions.put(s.executionId, s.description)
+        case _ =>
+      }
       override def onJobStart(js: SparkListenerJobStart): Unit = {
-        val desc = Option(js.properties)
-          .map(_.getProperty("spark.job.description", "")).getOrElse("")
-        val site = Option(js.properties)
-          .map(_.getProperty("callSite.short", "")).getOrElse("")
+        val prop = (k: String) =>
+          Option(js.properties).map(_.getProperty(k, "")).getOrElse("")
+        val execution = Option(prop(SQLExecution.EXECUTION_ID_KEY))
+          .filter(_.nonEmpty).map(_.toLong)
+          .flatMap(id => Option(executions.get(id)).map(d => s"exec $id: $d"))
+        val desc = prop("spark.job.description")
+        val what = execution.getOrElse(
+          if (desc.nonEmpty) desc else prop("callSite.short"))
         val nTasks = js.stageInfos.map(_.numTasks).sum
-        starts.put(js.jobId,
-          (System.nanoTime(), if (desc.nonEmpty) desc else site, nTasks))
+        starts.put(js.jobId, (System.nanoTime(), what, nTasks))
       }
       override def onJobEnd(je: SparkListenerJobEnd): Unit = {
         Option(starts.remove(je.jobId)).foreach { case (t0, what, nTasks) =>
@@ -41,16 +65,34 @@ object Profile {
         }
       }
     }
-    spark.sparkContext.addSparkListener(listener)
+    val planTimes = new QueryExecutionListener {
+      override def onSuccess(action: String, qe: QueryExecution, ns: Long): Unit = {
+        val phases = qe.tracker.phases
+        def ms(phase: String) = phases.get(phase).map(_.durationMs).getOrElse(0L)
+        println(f"[plan] $action%-12s analysis ${ms(QueryPlanningTracker.ANALYSIS)}%5d ms" +
+          f"  optimization ${ms(QueryPlanningTracker.OPTIMIZATION)}%5d ms" +
+          f"  planning ${ms(QueryPlanningTracker.PLANNING)}%5d ms  run ${ns / 1e6}%9.1f ms")
+      }
+      override def onFailure(action: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    spark.listenerManager.register(planTimes)
     names.foreach { n =>
       SparkEntry.queries.get(n) match {
         case None => System.err.println(s"[profile] unknown query: $n")
         case Some(fn) =>
           (1 to runs).foreach { r =>
-            val t0 = System.nanoTime()
             println(s"---- $n run $r ----")
-            fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-            println(f"---- $n run $r total ${(System.nanoTime() - t0) / 1e9}%.3f s ----")
+            val t0 = System.nanoTime()
+            val df = fn(spark, sfDir)
+            val built = System.nanoTime()
+            df.write.format("noop").mode("overwrite").save()
+            val done = System.nanoTime()
+            // print this run's job and plan lines before its total
+            GraftListenerBridge.waitUntilListenerBusEmpty(sc)
+            println(f"---- $n run $r total ${(done - t0) / 1e9}%.3f s" +
+              f" (build ${(built - t0) / 1e6}%.1f ms) ----")
             System.gc()
           }
       }

@@ -172,8 +172,9 @@ object TextExprs {
   /** 64-bit SimHash of `text`'s word multiset: bit b is set when more of
     * its words' `xxhash64(w)` values have bit b set than clear — the sign
     * of the per-bit sum of +1/-1 contributions. Same words and hashes as
-    * [[gramHashes]], so it equals [[graft.operators.Dedup.simhash]] over
-    * [[graft.operators.Dedup.words]]. No words yields null.
+    * [[gramHashes]], so it equals the higher-order built-in form over
+    * [[graft.operators.Dedup.words]] that DedupSpec keeps as its per-row
+    * reference. No words yields null.
     */
   def simhash(text: UTF8String): java.lang.Long = {
     val wh = wordHashes(text)

@@ -4,12 +4,18 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** The reference pipeline (`/root/reference/task.ts:90-159`) re-expressed as
-  * composable DataFrame stages. Each stage is a pure `DataFrame => DataFrame`
-  * so Catalyst sees one declarative plan across the whole flagship query —
-  * filters collapse into the scan, struct ops stay in whole-stage codegen,
-  * and the folder join is an explicit broadcast (the dimension is tiny by
-  * construction, exactly like the reference's in-memory `Map`,
-  * `task.ts:90`).
+  * DataFrame stages, each a pure `DataFrame => DataFrame`; the folder join
+  * is an explicit broadcast (the dimension is tiny by construction, exactly
+  * like the reference's in-memory `Map`, `task.ts:90`).
+  *
+  * Every per-feature rule (A7 callsign, A8 remarks, A9 style casts, A11
+  * archived, A12 point type and marker colour, A13 path) is defined ONCE,
+  * as a column expression over a feature's metadata fields. The staged
+  * operators ([[projectNest]], [[enrichProperties]], [[pointEnrich]],
+  * [[folderJoin]]) nest those columns into the `properties` struct the
+  * reference builds; [[flagship]] selects the same columns flat, in one
+  * projection over the main flow joined to the folder dimension, so its
+  * plan carries no struct rewrites for the optimizer to inline and unpick.
   *
   * Divergences from the reference, all documented per SURVEY.md §7.4:
   *  - JS `undefined` vs `null`: parquet can't express absent-vs-null, so
@@ -58,25 +64,46 @@ object CalTopo {
       struct(struct(metadataCols.map(col): _*).as("metadata")).as("properties"),
       col("geometry"))
 
-  /** A7/A8/A9/A11 — callsign cast-rename (`task.ts:113`), falsy-coalescing
-    * remarks (`task.ts:114`), conditional style copies with numeric casts
-    * (`task.ts:116-120`), constant `archived = true` (`task.ts:128`).
+  /** A metadata field of a [[projectNest]]ed row. */
+  private val nested = (f: String) => col(s"properties.metadata.$f")
+
+  /** A7 — callsign cast-rename (`task.ts:113`). `m` reads a metadata field. */
+  private def callsign(m: String => Column): Column = m("title").cast("string")
+
+  /** A8 — falsy-coalescing remarks (`task.ts:114`). */
+  private def remarks(m: String => Column): Column =
+    when(m("description").isNull || m("description") === "", lit(""))
+      .otherwise(m("description").cast("string"))
+
+  /** The five A9 style fields and their output types, in output order. */
+  private val styleTypes = Seq("fill" -> "string", "fill_opacity" -> "double",
+    "stroke" -> "string", "stroke_opacity" -> "double", "stroke_width" -> "double")
+
+  /** A9 — conditional style copies with numeric casts (`task.ts:116-120`),
+    * the default arm: a null field stays null. `(field, value)` pairs.
     */
-  def enrichProperties(df: DataFrame): DataFrame = {
-    val m = (f: String) => col(s"properties.metadata.$f")
-    df.withColumn("properties",
-      col("properties")
-        .withField("callsign", m("title").cast("string"))
-        .withField("remarks",
-          when(m("description").isNull || m("description") === "", lit(""))
-            .otherwise(m("description").cast("string")))
-        .withField("fill", m("fill").cast("string"))
-        .withField("fill_opacity", m("fill_opacity").cast("double"))
-        .withField("stroke", m("stroke").cast("string"))
-        .withField("stroke_opacity", m("stroke_opacity").cast("double"))
-        .withField("stroke_width", m("stroke_width").cast("double"))
-        .withField("archived", lit(true)))
-  }
+  private def styleCasts(m: String => Column): Seq[(String, Column)] =
+    styleTypes.map { case (f, t) => f -> m(f).cast(t) }
+
+  /** A11 — constant `archived = true` (`task.ts:128`). */
+  private def archived: Column = lit(true)
+
+  /** A7/A8/A9/A11 as named `properties` fields, in output order. */
+  private def enrichedFields(m: String => Column,
+      style: Seq[(String, Column)]): Seq[(String, Column)] =
+    Seq("callsign" -> callsign(m), "remarks" -> remarks(m)) ++ style :+
+      ("archived" -> archived)
+
+  private def withFields(df: DataFrame, fields: Seq[(String, Column)]): DataFrame =
+    df.withColumn("properties", fields.foldLeft(col("properties")) {
+      case (p, (name, value)) => p.withField(name, value)
+    })
+
+  /** A7/A8/A9/A11 — callsign, remarks, style copies and `archived` added
+    * to `properties`.
+    */
+  def enrichProperties(df: DataFrame): DataFrame =
+    withFields(df, enrichedFields(nested, styleCasts(nested)))
 
   /** Generic any-rank coordinate walk (A10's escape hatch, and the
     * fallback arm of [[truncateGeometry]] for geometry types outside the
@@ -151,23 +178,40 @@ object CalTopo {
   def coordTruncate(df: DataFrame): DataFrame =
     df.withColumn("geometry", truncateGeometry(col("geometry")))
 
+  /** A12 — the point branch fires on a Point with a truthy marker-color
+    * (empty string is falsy, `task.ts:132`).
+    */
+  private def markerFires(geomType: Column, mc: Column): Column =
+    geomType === "Point" && mc.isNotNull && (mc =!= "")
+
+  /** A12 — CoT type `u-d-p` on points (`task.ts:129-130`). */
+  private def cotType(geomType: Column): Column = when(geomType === "Point", lit("u-d-p"))
+
+  /** A12 — a firing marker-color, '#'-prefixed (`task.ts:132-133`). */
+  private def markerColorOut(geomType: Column, mc: Column): Column =
+    when(markerFires(geomType, mc), concat(lit("#"), mc))
+
+  /** A12 — `marker-opacity = 1` when the marker-color fires (`task.ts:135`). */
+  private def markerOpacity(geomType: Column, mc: Column): Column =
+    when(markerFires(geomType, mc), lit(1.0))
+
+  /** A12 — the metadata marker-color, removed once it fires (`task.ts:134`). */
+  private def metadataMarkerColor(geomType: Column, mc: Column): Column =
+    when(markerFires(geomType, mc), lit(null).cast("string")).otherwise(mc)
+
   /** A12 — point branch (`task.ts:129-137`): CoT type `u-d-p`; truthy
     * marker-color gets '#'-prefixed + `marker-opacity = 1` and is removed
     * from metadata (empty string is falsy — untouched, `task.ts:132`).
     */
   def pointEnrich(df: DataFrame): DataFrame = {
-    val mc = col("properties.metadata.marker_color")
-    val isPoint = col("geometry.type") === "Point"
-    val fire = isPoint && mc.isNotNull && (mc =!= "")
-    df.withColumn("properties",
-      col("properties")
-        .withField("type", when(isPoint, lit("u-d-p")))
-        .withField("marker_color", when(fire, concat(lit("#"), mc)))
-        .withField("marker_opacity", when(fire, lit(1.0)))
-        .withField("metadata",
-          col("properties.metadata")
-            .withField("marker_color",
-              when(fire, lit(null).cast("string")).otherwise(mc))))
+    val gt = col("geometry.type")
+    val mc = nested("marker_color")
+    withFields(df, Seq(
+      "type" -> cotType(gt),
+      "marker_color" -> markerColorOut(gt, mc),
+      "marker_opacity" -> markerOpacity(gt, mc),
+      "metadata" -> col("properties.metadata")
+        .withField("marker_color", metadataMarkerColor(gt, mc))))
   }
 
   /** The `ico`/`icon` quirk (`task.ts:121`): `if (metadata.ico !==
@@ -249,38 +293,37 @@ object CalTopo {
       rawProps: Column): DataFrame =
     if (!cfg.strictJsSemantics) enrichProperties(df)
     else {
-      val m = (f: String) => col(s"properties.metadata.$f")
       val s = styleCastsStrictJs(rawProps)
-      df.withColumn("properties",
-        col("properties")
-          .withField("callsign", m("title").cast("string"))
-          .withField("remarks",
-            when(m("description").isNull || m("description") === "", lit(""))
-              .otherwise(m("description").cast("string")))
-          .withField("fill", s.getField("fill"))
-          .withField("fill_opacity", s.getField("fill_opacity"))
-          .withField("stroke", s.getField("stroke"))
-          .withField("stroke_opacity", s.getField("stroke_opacity"))
-          .withField("stroke_width", s.getField("stroke_width"))
-          .withField("archived", lit(true)))
+      withFields(df,
+        enrichedFields(nested, styleTypes.map { case (f, _) => f -> s.getField(f) }))
     }
 
-  /** A13 — folder→path broadcast join (`task.ts:142-152`): LEFT join of
-    * features against the folder dimension on a *truthy* folderId, then
-    * `path = '/' + folder.title`. Explicit `broadcast()` — the dim side is
-    * one row per folder; at 100 TB the fact side never shuffles for this.
+  /** A13 — a feature joins its folder on a *truthy* folderId
+    * (`task.ts:142-149`).
     */
-  def folderJoin(df: DataFrame, folders: DataFrame): DataFrame = {
-    val fid = col("properties.metadata.folder_id")
-    df.join(broadcast(folders),
-        fid.isNotNull && (fid =!= "") && fid === folders("fid"), "left")
-      .withColumn("path",
-        when(col("ftitle").isNotNull, concat(lit("/"), col("ftitle"))))
-      .drop("fid", "ftitle")
-  }
+  private def folderMatch(folderId: Column, fid: Column): Column =
+    folderId.isNotNull && (folderId =!= "") && folderId === fid
 
-  /** First coordinate position of the (already truncated) geometry, as
-    * array<double> — dispatched on the geometry type's coordinate rank.
+  /** A13 — `path = '/' + folder.title` when the folder resolved
+    * (`task.ts:150-152`).
+    */
+  private def path(ftitle: Column): Column =
+    when(ftitle.isNotNull, concat(lit("/"), ftitle))
+
+  /** A13 — folder→path broadcast join (`task.ts:142-152`): LEFT join of
+    * features against the folder dimension on [[folderMatch]], then
+    * [[path]]. Explicit `broadcast()` — the dim side is one row per folder;
+    * at 100 TB the fact side never shuffles for this.
+    */
+  def folderJoin(df: DataFrame, folders: DataFrame): DataFrame =
+    df.join(broadcast(folders),
+        folderMatch(nested("folder_id"), folders("fid")), "left")
+      .withColumn("path", path(col("ftitle")))
+      .drop("fid", "ftitle")
+
+  /** First coordinate position of the geometry, as array<double> —
+    * dispatched on the geometry type's coordinate rank; null for types
+    * outside the rank table.
     */
   def firstPosition(geom: Column): Column = {
     val t = geom.getField("type")
@@ -321,8 +364,24 @@ object CalTopo {
   }
 
   /** The whole reference pipeline A1→A13 fused (the flagship), flattened to
-    * scalar columns for oracle comparison (struct fields → top-level columns;
-    * the nested form is what flows through the stages above).
+    * scalar columns for oracle comparison.
+    *
+    * ONE projection: [[mainFlow]] left-joined to the broadcast
+    * [[folderDim]] on [[folderMatch]], each output column taken from the
+    * same rule definition the staged operators nest into `properties`
+    * (A7–A13 above). The staged chain (projectNest → enrichProperties →
+    * coordTruncate → pointEnrich → folderJoin, then a flattening select)
+    * gives the same rows; CalTopoSpec keeps it as the reference. Building
+    * the struct and unpicking it again cost the analyzer one pass per
+    * rewrite and the optimizer a few hundred nested expression nodes per
+    * map tick, before the first job.
+    *
+    * `x`/`y`/`z` are the first three components of [[firstPosition]] over
+    * the decoded coordinates: A10 truncation keeps the first three
+    * components of every position, so this is the truncated geometry's
+    * first position, and the output carries no coordinates — no per-row
+    * truncate → `to_json` → `from_json` round trip. A missing component
+    * is null (a 2-component position has no `z`).
     *
     * UNORDERED: rows come out in scan order, and the plan carries no
     * exchange on the feature side (the folder dimension is broadcast), so
@@ -337,28 +396,24 @@ object CalTopo {
     */
   def flagship(features: DataFrame): DataFrame = {
     val folders = folderDim(features)
-    val out = folderJoin(
-      pointEnrich(coordTruncate(enrichProperties(projectNest(mainFlow(features))))),
-      folders)
+    val gt = col("geometry.type")
+    val mc = col("marker_color")
     val pos = firstPosition(col("geometry"))
-    out.select(
-      col("id"),
-      col("properties.callsign").as("callsign"),
-      col("properties.remarks").as("remarks"),
-      col("properties.fill").as("fill"),
-      col("properties.fill_opacity").as("fill_opacity"),
-      col("properties.stroke").as("stroke"),
-      col("properties.stroke_opacity").as("stroke_opacity"),
-      col("properties.stroke_width").as("stroke_width"),
-      col("properties.archived").as("archived"),
-      col("properties.type").as("cot_type"),
-      col("properties.marker_color").as("marker_color_out"),
-      col("properties.marker_opacity").as("marker_opacity"),
-      col("properties.metadata.marker_color").as("metadata_marker_color"),
-      col("geometry.type").as("geom_type"),
-      element_at(pos, 1).as("x"),
-      element_at(pos, 2).as("y"),
-      element_at(pos, 3).as("z"),
-      col("path"))
+    val columns =
+      Seq(col("id"), callsign(col).as("callsign"), remarks(col).as("remarks")) ++
+      styleCasts(col).map { case (name, value) => value.as(name) } ++
+      Seq(archived.as("archived"),
+        cotType(gt).as("cot_type"),
+        markerColorOut(gt, mc).as("marker_color_out"),
+        markerOpacity(gt, mc).as("marker_opacity"),
+        metadataMarkerColor(gt, mc).as("metadata_marker_color"),
+        gt.as("geom_type"),
+        try_element_at(pos, lit(1)).as("x"),
+        try_element_at(pos, lit(2)).as("y"),
+        try_element_at(pos, lit(3)).as("z"),
+        path(folders("ftitle")).as("path"))
+    mainFlow(features)
+      .join(broadcast(folders), folderMatch(col("folder_id"), folders("fid")), "left")
+      .select(columns: _*)
   }
 }

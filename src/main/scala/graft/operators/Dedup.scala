@@ -32,8 +32,6 @@ object Dedup {
     */
   private def shr(e: Column, n: Column): Column =
     call_function("shiftright", e, n)
-  private def shl(e: Column, n: Column): Column =
-    call_function("shiftleft", e, n)
 
   /** Max-tracking accumulator (LongAccumulator only sums). */
   final class MaxAccumulator
@@ -278,7 +276,9 @@ object Dedup {
     * (`Vectors.withRecallFlag` is the bounded-sample kNN arm; THIS shape
     * avoids its single-partition window because a corpus-blocking truth
     * frame is O(corpus) rows, not probes × k). The marked join is
-    * lazy-checkpointed so the truth and candidate subplans execute once,
+    * checkpointed so the truth and candidate subplans execute once (with
+    * eager=false, but under AQE the call itself runs their shuffle-map
+    * stages; the flag's aggregate runs only the result stage),
     * and the scalar flag rides back on a broadcast single-row crossJoin
     * (the tfidf/vocab count pattern). `candidates` must be unique per
     * (id_a, id_b) — true of minhashPairs/simhashPairs' dropDuplicates
@@ -378,8 +378,9 @@ object Dedup {
     val keys = truthPairs match {
       case Some(n) if n <= broadcastCap / 2 => broadcast(tidsPlan)
       case _ =>
-        // LAZY: the census count below materializes it (tids has two
-        // consumers on this path — the count and the semi join)
+        // eager=false: under AQE this call runs the distinct's shuffle-map
+        // stage at once and the census count below runs the result stage
+        // (tids has two consumers on this path — the count and the semi join)
         val tids = tidsPlan.localCheckpoint(false)
         if (tids.count() <= broadcastCap) broadcast(tids) else tids
     }
@@ -503,27 +504,7 @@ object Dedup {
       .dropDuplicates("id_a", "id_b")
   }
 
-  /** 64-bit SimHash of the word multiset: bit b is set when the sum of
-    * per-word contributions (+1 when bit b of xxhash64(word) is 1 else -1)
-    * is positive. The built-in, higher-order form over a words array —
-    * its lambdas run interpreted; [[simhashSignatures]] computes the same
-    * value with the native [[graft.functions.TextExprs.simhash]] kernel
-    * (DedupSpec pins the two equal per row). 0 for an empty array.
-    */
-  def simhash(ws: Column): Column = {
-    val bits = sequence(lit(0), lit(63))
-    val counters = aggregate(
-      transform(ws, w => xxhash64(w)),
-      transform(bits, _ => lit(0)),
-      (acc, h) => zip_with(acc, bits,
-        (c, b) => c + when(shr(h, b).bitwiseAND(1) === 1, 1).otherwise(-1)))
-    aggregate(
-      zip_with(counters, bits,
-        (c, b) => when(c > 0, shl(lit(1L), b)).otherwise(lit(0L))),
-      lit(0L), (acc, v) => acc.bitwiseOR(v))
-  }
-
-  /** (id, sh) simhash table: [[simhash]] of each doc's [[words]], one
+  /** (id, sh) simhash table: the 64-bit SimHash of each doc's [[words]], one
     * row-local projection through the native
     * [[graft.functions.TextExprs.simhash]] kernel. The former words
     * explode → groupBy(id) → 64 per-bit sign sums gave bitwise-identical
@@ -623,9 +604,11 @@ object Dedup {
     // deduplicated inputs, pairs ≤ edges ≤ 2·pairs, so the same 2^20 cap
     // keeps the collect ≤ 16 MB of bare long pairs (the broadcast-join
     // order of driver traffic documented below).
-    // LAZY checkpoint (r9 VERDICT item 1, toy-SF job floor): the route
-    // census count() below materializes it in the SAME driver round-trip
-    // that an eager checkpoint would have spent on its own dedicated job.
+    // eager=false checkpoint (r9 VERDICT item 1, toy-SF job floor): it is
+    // not lazy under AQE — the call runs the pair subplan's shuffle-map
+    // stages at once — but the route census count() below runs its result
+    // stage in the SAME driver round-trip that an eager checkpoint would
+    // have spent on its own dedicated job.
     // With a caller-supplied count the projection rides the CALLER'S
     // checkpoint instead — no second copy of the pair frame is stored and
     // no second census job runs (r15).
@@ -782,8 +765,10 @@ object Dedup {
       .filter(!degenerate)
       .groupBy(col("text")).agg(min(col("id")).as("id"))
       .select(col("id"), col("text"))
-      // LAZY: the first full-scan action inside [[survivors]] (the edge
-      // census of [[clusters]]) materializes it — no dedicated job
+      // eager=false: under AQE this call runs the aggregate's shuffle-map
+      // stage at once; the first full-scan action inside [[survivors]]
+      // (the edge census of [[clusters]]) runs the result stage — no
+      // dedicated checkpoint job
       .localCheckpoint(false)
     // Checkpointed BEFORE the census count (r7 ADVICE): keepIds is read
     // twice — once by the gate's count() and once by the keep-join when
@@ -792,7 +777,8 @@ object Dedup {
     // cap's own argument (one bare long per surviving distinct text), so
     // materializing it eagerly costs what the count alone already did.
     val keepIds = survivors(reps, threshold).select(col("id"))
-      // LAZY: the broadcast-gate count() below materializes it
+      // eager=false: under AQE this call runs the survivors join's input
+      // stages at once; the broadcast-gate count() below runs the result stage
       .localCheckpoint(false)
     // Census-gated broadcast of the keep side (same discipline as
     // [[clustersExactFirst]]'s expansion join, and for the same reason:
@@ -860,8 +846,9 @@ object Dedup {
     // construction on a duplicated corpus), so materializing it is cheap.
     val groups = nonDegenerate.groupBy(col("text"))
       .agg(min(col("id")).as("rep"), count(lit(1)).as("grp_n"))
-      // LAZY: materialized by [[clusters]]' edge census ([[minhashPairs]]
-      // scans it inside that plan) — no dedicated job
+      // eager=false: under AQE this call runs the aggregate's shuffle-map
+      // stage at once; [[clusters]]' edge census ([[minhashPairs]] scans
+      // it inside that plan) runs the result stage — no dedicated job
       .localCheckpoint(false)
     val repLabels = clusters(minhashPairs(
         groups.select(col("rep").as("id"), col("text")), threshold))
@@ -876,7 +863,8 @@ object Dedup {
       .filter(col("rep_cluster").isNotNull || col("grp_n") >= 2)
       .select(col("text"),
         coalesce(col("rep_cluster"), col("rep")).as("cluster"))
-      // LAZY: the broadcast-gate count() below materializes it
+      // eager=false: under AQE this call runs the join's input stages at
+      // once; the broadcast-gate count() below runs the result stage
       .localCheckpoint(false)
     // Census-gated broadcast of the expansion side. `labeled` descends
     // from checkpointed frames, so Catalyst sees no stats and plans the

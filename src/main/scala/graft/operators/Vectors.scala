@@ -298,7 +298,9 @@ object Vectors {
       .agg(graft.functions.BottomIds(k + 1)(col("vec_id")).as("low_ids"))
       .select(col("eh"), col("embedding"),
         element_at(col("low_ids"), 1).as("rep"), col("low_ids"))
-      .localCheckpoint(false) // lazy: no job until the query executes
+      // eager=false is not lazy under AQE: this call runs the groupBy's
+      // shuffle-map stage at once, and the census below runs the rest
+      .localCheckpoint(false)
     val reps = groups.select(col("rep").as("vec_id"), col("embedding"))
     // census over the checkpointed groups frame, shared by the collision
     // check here and the expansion-join broadcast gate below. Makes the
@@ -349,7 +351,9 @@ object Vectors {
           Seq("eh"))
         .filter(col("embedding") === col("gemb")))
       .select(col("rep"), col("vec_id").as("member"))
-      .localCheckpoint(false) // bare ids: 16 B/row however duplicated
+      // bare ids: 16 B/row however duplicated. Under AQE this call runs
+      // the join's input stages at once; only the result stage waits
+      .localCheckpoint(false)
     val lowArr = groups.select(col("rep"), col("low_ids"))
     // rank candidate groups per probe group; keep the k that can matter.
     // Tiebreak on id_b directly: a group's rep IS its lowest member id,

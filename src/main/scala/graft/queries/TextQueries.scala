@@ -39,9 +39,11 @@ object TextQueries {
     * tail trim — null past the doc's last word). Materialized with
     * localCheckpoint because every consumer reads it from both sides of a
     * join or filter split, and Spark re-executes a shared subplan per
-    * consumer. LAZY checkpoint (eager=false): materializes on first
-    * execution, so plan-only consumers (plan audits, explain) run no job
-    * at build time. Used by q_text_contamination and
+    * consumer. Checkpointed with eager=false, which is not lazy under
+    * AQE: the call runs the window's shuffle-map stage at once, and only
+    * the result stage waits for the first execution — so even a
+    * plan-only consumer (plan audits, explain) runs that shuffle job at
+    * build time. Used by q_text_contamination and
     * q_pipeline_decontaminate.
     */
   private def fiveGrams(s: org.apache.spark.sql.SparkSession,
@@ -75,8 +77,10 @@ object TextQueries {
     * arm 1 — ≥70% of declared survivors survive the real pipeline (an
     * over-dropping pipeline fails); arm 2 — ≥70% of truth-dropped ids are
     * also dropped by it (a no-op pipeline fails). All scalars ride back
-    * on broadcast single-row crossJoins; the mark join is
-    * lazy-checkpointed so every subplan executes once.
+    * on broadcast single-row crossJoins; the mark join is checkpointed
+    * so every subplan executes once. Both checkpoints here use
+    * eager=false, but under AQE each call runs its subplan's shuffle-map
+    * stages at once, in the build phase; only the result stages wait.
     */
   private def survivorsAgainstTruth(s: org.apache.spark.sql.SparkSession,
       d: String,
@@ -101,7 +105,7 @@ object TextQueries {
     // NO caller checkpoint on the labels (r15): the driver route returns a
     // LocalRelation (literal driver data — its two consumers below re-read
     // rows, never a subplan) and the distributed route's labels are the CC
-    // loop's own eager per-round checkpoint — the extra lazy checkpoint
+    // loop's own eager per-round checkpoint — the extra eager=false checkpoint
     // only re-copied either into fresh blocks inside the final execution
     val labels = Dedup.clusters(truth)
     val declared = docsL.join(labels, Seq("id"), "left")
@@ -530,9 +534,11 @@ ORDER BY d.doc_id""") { (s, d) =>
       // null-lang group, so the two subplans canonicalize differently and
       // exchange reuse cannot serve them — without materialization the
       // corpus is scanned once per branch. The aggregate is |langs| rows.
-      // checkpoint LAZY (r10): both consumers run inside the one final
-      // query execution (first task materializes, the other reads cache)
-      // — the eager form paid a dedicated build-time job
+      // checkpoint with eager=false (r10): under AQE the call still runs
+      // the aggregate's shuffle-map stage at once, but the result stage
+      // runs inside the one final query execution (first task
+      // materializes, the other reads cache) — the eager form paid a
+      // dedicated build-time job for it
       val c = docs.groupBy("lang").agg(count(lit(1)).as("cnt"))
         .localCheckpoint(false)
       val m = c.agg(min(col("cnt")).as("mn"))

@@ -1,9 +1,16 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import java.nio.file.Files
+
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.expressions.{StructsToJson, UpdateFields}
+import org.apache.spark.sql.catalyst.expressions.objects.Invoke
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ObjectType, StructType}
 import graft.operators.CalTopo
 import graft.sources.CalTopoFeatures
+import CalTopoSpec.{decode, multiset, stagedFlagship}
 
 /** Reference-pipeline edge cases from the reference's own bug history
   * (FIXTURES.md §3): geometry-less features (CHANGELOG v2.2.0), 4-component
@@ -249,4 +256,147 @@ class CalTopoSpec extends SparkSpec {
     assert(a.nonEmpty)
     assert(a.sameElements(b))
   }
+
+  test("fused flagship equals the staged stage chain on the generated features") {
+    val features = CalTopoFeatures.build(spark, sfDir)
+    val fused = CalTopo.flagship(features).collect().toSeq
+    assert(fused.nonEmpty)
+    assert(multiset(fused) == multiset(stagedFlagship(features).collect().toSeq))
+  }
+
+  /** One map tick's decoded features: a written GeoJSON document read
+    * through `GeoJsonSource` and [[CalTopoSpec.decode]]. It holds every
+    * geometry type (GeometryCollection takes the truncation's fallback
+    * arm), 2/3/4-component first positions, null and "" text, "" and
+    * absent marker-color, resolving/dangling/missing/"" folder ids, null
+    * and absent geometry, and a folder with a geometry.
+    */
+  private def edgeTick: DataFrame = {
+    def feat(id: String, props: String, geom: String) =
+      s"""{"id":"$id","type":"Feature","properties":{$props}""" +
+        (if (geom == null) "}" else s""","geometry":$geom}""")
+    def g(t: String, cs: String) = s"""{"type":"$t","coordinates":$cs}"""
+    val feats = Seq(
+      feat("F1", """"class":"Folder","title":"One"""", null),
+      feat("F2", """"class":"Folder","title":"Two"""", g("Point", "[0.0,0.0]")),
+      feat("pt4", """"class":"Marker","title":"p4","description":"d","marker_color":"FF0000","folder_id":"F1"""",
+        g("Point", "[10.5,20.25,100.0,999.0]")),
+      feat("pt2", """"class":"Marker","title":"p2","description":"","marker_color":"","folder_id":""""",
+        g("Point", "[1.0,2.0]")),
+      feat("pt3", """"class":"Marker","title":"p3","description":null""",
+        g("Point", "[1.5,2.5,3.5]")),
+      feat("ln", """"class":"Shape","title":"l","fill":"#00AAFF","fill_opacity":0.5,"stroke":"#FF8800","stroke_opacity":0.25,"stroke_width":2.0,"folder_id":"DANGLING"""",
+        g("LineString", "[[0.0,1.0],[1.0,1.0,1.0],[2.0,2.0,2.0,2.0]]")),
+      feat("pg", """"class":"Shape","title":"pg","marker_color":"00FF00","folder_id":"F2"""",
+        g("Polygon", "[[[1.0,2.0,3.0,4.0],[5.0,6.0,7.0,8.0],[1.0,2.0,3.0,4.0]]]")),
+      feat("mpt", """"class":"Shape","title":"mpt","description":"x"""",
+        g("MultiPoint", "[[1.0,2.0,3.0],[4.0,5.0,6.0,7.0]]")),
+      feat("mls", """"class":"Shape","title":"mls","folder_id":"F1"""",
+        g("MultiLineString", "[[[1.0,2.0,3.0,4.0],[5.0,6.0]],[[7.0,8.0,9.0]]]")),
+      feat("mpg", """"class":"Shape","title":"mpg"""",
+        g("MultiPolygon", "[[[[1.0,2.0,3.0,4.0],[5.0,6.0,7.0,8.0]]],[[[9.0,10.0,11.0,12.0]]]]")),
+      feat("gc", """"class":"Shape","title":"gc","folder_id":"F2"""",
+        g("GeometryCollection",
+          """[{"type":"Point","coordinates":[1.0,2.0,3.0,4.0]},{"type":"LineString","coordinates":[[5.0,6.0,7.0,8.0],[9.0,10.0,11.0,12.0]]}]""")),
+      feat("nogeom", """"class":"Marker","title":"n","folder_id":"F1"""", "null"),
+      feat("absent", """"class":"Marker","title":"a"""", null))
+    val doc = Files.createTempDirectory("graft-flagship-doc").resolve("map.json")
+    Files.writeString(doc,
+      feats.mkString("""{"type":"FeatureCollection","features":[""", ",", "]}"))
+    decode(spark.read.format("graft.sources.GeoJsonSource").load(doc.toString))
+  }
+
+  test("fused flagship equals the staged stage chain on a decoded GeoJSON document") {
+    val features = edgeTick
+    val fused = CalTopo.flagship(features).collect().toSeq
+    assert(multiset(fused) == multiset(stagedFlagship(features).collect().toSeq))
+    val byId = fused.map(r => r.getString(0) -> r).toMap
+    assert(byId.keySet ==
+      Set("pt4", "pt2", "pt3", "ln", "pg", "mpt", "mls", "mpg", "gc"))
+    def get(id: String, c: String) = Option(byId(id).getAs[Any](c))
+    def xyz(id: String) = Seq("x", "y", "z").map(get(id, _))
+    assert(xyz("pt4") == Seq(Some(10.5), Some(20.25), Some(100.0)))
+    assert(xyz("pt2") == Seq(Some(1.0), Some(2.0), None))
+    assert(xyz("ln") == Seq(Some(0.0), Some(1.0), None))
+    assert(xyz("mpg") == Seq(Some(1.0), Some(2.0), Some(3.0)))
+    assert(xyz("gc") == Seq(None, None, None))
+    assert(get("pt4", "marker_color_out") == Some("#FF0000"))
+    assert(get("pt2", "marker_color_out").isEmpty && get("pt2", "remarks") == Some(""))
+    assert(get("pg", "marker_color_out").isEmpty &&
+      get("pg", "metadata_marker_color") == Some("00FF00"))
+    assert(Seq("pt4", "pt2", "pt3", "ln", "pg", "gc").map(get(_, "path")) ==
+      Seq(Some("/One"), None, None, None, Some("/Two"), Some("/Two")))
+  }
+
+  test("flagship's plan rewrites no struct and serializes no JSON") {
+    // over a decoded tick: the generated feature table serializes its own
+    // coordinates with to_json, a decoded document does not
+    val qe = CalTopo.flagship(edgeTick).queryExecution
+    // the optimizer rewrites UpdateFields into struct builds and replaces
+    // StructsToJson with an Invoke of its evaluator, so look for all three
+    def found(plan: LogicalPlan) = plan.flatMap(_.expressions.flatMap(_.collect {
+      case e: UpdateFields => e.prettyName
+      case e: StructsToJson => e.prettyName
+      case i: Invoke if (i.targetObject.dataType match {
+        case ObjectType(c) => c.getSimpleName == "StructsToJsonEvaluator"
+        case _ => false
+      }) => i.prettyName
+    }))
+    for (plan <- Seq(qe.analyzed, qe.optimizedPlan))
+      assert(found(plan).isEmpty, s"${found(plan)} in\n$plan")
+  }
+}
+
+object CalTopoSpec {
+
+  /** The flagship as the staged chain A5 → A6 → A7/8/9/11 → A10 → A12 →
+    * A13, flattened by one select: the reference the fused operator must
+    * equal row for row. Position components are read with
+    * `try_element_at`, as the operator does: under ANSI mode `element_at`
+    * past a 2-component position fails the query instead of giving null.
+    */
+  def stagedFlagship(features: DataFrame): DataFrame = {
+    val folders = CalTopo.folderDim(features)
+    val out = CalTopo.folderJoin(
+      CalTopo.pointEnrich(CalTopo.coordTruncate(CalTopo.enrichProperties(
+        CalTopo.projectNest(CalTopo.mainFlow(features))))),
+      folders)
+    val pos = CalTopo.firstPosition(col("geometry"))
+    out.select(
+      col("id"),
+      col("properties.callsign").as("callsign"),
+      col("properties.remarks").as("remarks"),
+      col("properties.fill").as("fill"),
+      col("properties.fill_opacity").as("fill_opacity"),
+      col("properties.stroke").as("stroke"),
+      col("properties.stroke_opacity").as("stroke_opacity"),
+      col("properties.stroke_width").as("stroke_width"),
+      col("properties.archived").as("archived"),
+      col("properties.type").as("cot_type"),
+      col("properties.marker_color").as("marker_color_out"),
+      col("properties.marker_opacity").as("marker_opacity"),
+      col("properties.metadata.marker_color").as("metadata_marker_color"),
+      col("geometry.type").as("geom_type"),
+      try_element_at(pos, lit(1)).as("x"),
+      try_element_at(pos, lit(2)).as("y"),
+      try_element_at(pos, lit(3)).as("z"),
+      col("path"))
+  }
+
+  /** The typed decode a map tick runs between the scan and the flagship:
+    * strict `from_json` of the raw properties plus the geometry struct.
+    */
+  def decode(raw: DataFrame): DataFrame = {
+    val propsSchema = StructType(CalTopoFeatures.featureSchema.fields
+      .filterNot(f => f.name == "id" || f.name == "geometry"))
+    raw.select(col("id"),
+        from_json(col("properties_json"), propsSchema, Map("mode" -> "FAILFAST")).as("p"),
+        when(col("geom_type").isNotNull,
+          struct(col("geom_type").as("type"), col("geom_coords").as("coordinates")))
+          .as("geometry"))
+      .select(col("id"), col("p.*"), col("geometry"))
+  }
+
+  def multiset(rows: Seq[Row]): Map[Row, Int] =
+    rows.groupBy(identity).map { case (r, rs) => r -> rs.size }
 }

@@ -4,16 +4,16 @@ import java.nio.file.{Files, Paths}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, Exchange}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.QueryExecutionListener
 import graft.operators.CalTopo
 import graft.queries.Registry
 import graft.sources.{CalTopoFeatures, FeatureCollectionSink, FeatureSink, Tables}
+import CalTopoSpec.{decode, multiset}
 
 /** Custom DSv2 GeoJSON source (A1) + partition-parallel FeatureCollection
   * sink (A14): fixture round trips.
@@ -61,20 +61,6 @@ class SourceSinkSpec extends SparkSpec {
     }
   }
 
-  /** The typed decode a map tick runs between the scan and the flagship:
-    * strict `from_json` of the raw properties plus the geometry struct.
-    */
-  private def decode(raw: DataFrame): DataFrame = {
-    val propsSchema = StructType(CalTopoFeatures.featureSchema.fields
-      .filterNot(f => f.name == "id" || f.name == "geometry"))
-    raw.select(col("id"),
-        from_json(col("properties_json"), propsSchema, Map("mode" -> "FAILFAST")).as("p"),
-        when(col("geom_type").isNotNull,
-          struct(col("geom_type").as("type"), col("geom_coords").as("coordinates")))
-          .as("geometry"))
-      .select(col("id"), col("p.*"), col("geometry"))
-  }
-
   private def planNodes(p: SparkPlan): Seq[SparkPlan] = {
     val kids = p match {
       case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
@@ -118,9 +104,6 @@ class SourceSinkSpec extends SparkSpec {
       root.path("features").elements().asScala.map(_.path("id").asText()).toSeq
     }
   }
-
-  private def multiset(rows: Seq[Row]): Map[Row, Int] =
-    rows.groupBy(identity).map { case (r, rs) => r -> rs.size }
 
   private lazy val declaredFlagship: Seq[Row] =
     Registry.all.find(_.name == "flagship").get.build(spark, sfDir).collect().toSeq
