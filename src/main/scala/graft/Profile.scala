@@ -23,11 +23,17 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * build-time executions (checkpoint materializations, censuses, CC
   * rounds) versus the final noop write.
   *
-  * One `[plan]` line per completed query execution (the censuses and
-  * collects of the build phase, then the write): its action name and its
-  * analysis, optimization and planning ms from the planning tracker, then
-  * its run ms. Driver-side DataFrame building before the write shows as
-  * the `build` ms of the run's total line.
+  * One `[plan]` line per completed query execution (the
+  * materializations and collects of the build phase, then the write): its
+  * action name and its analysis, optimization and planning ms from the
+  * planning tracker, then its run ms. Driver-side DataFrame building
+  * before the write shows as the `build` ms of the run's total line.
+  *
+  * One `[materialize]` line per [[Materialize]] call of the run: its site,
+  * whether it stored the frame, deferred it or found its count known, the
+  * measured rows and bytes, the exchanges of the plan it ran, its fold
+  * values, and the route or broadcast the caller chose from them. Its
+  * jobs show as `exec <id>: materialize <site>`.
   */
 object Profile {
   def main(args: Array[String]): Unit = {
@@ -84,6 +90,7 @@ object Profile {
         case Some(fn) =>
           (1 to runs).foreach { r =>
             println(s"---- $n run $r ----")
+            Materialize.drain()
             val t0 = System.nanoTime()
             val df = fn(spark, sfDir)
             val built = System.nanoTime()
@@ -91,6 +98,7 @@ object Profile {
             val done = System.nanoTime()
             // print this run's job and plan lines before its total
             GraftListenerBridge.waitUntilListenerBusEmpty(sc)
+            Materialize.drain().foreach(c => println(s"[materialize] $c"))
             println(f"---- $n run $r total ${(done - t0) / 1e9}%.3f s" +
               f" (build ${(built - t0) / 1e6}%.1f ms) ----")
             System.gc()

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.Materialize
 
 /** Near-duplicate detection for LLM training-data pipelines (SURVEY.md §2
   * B20). Everything is codegen'd — no UDFs on the hot path — so it stays
@@ -230,22 +231,8 @@ object Dedup {
     // numbers: recompute 1.7× the wall at identical peak disk — re-run
     // post-rewrite in BASELINE.md r11).
     val arrPlan = gramHashSets(docs)
-    val arr = if (materialize) arrPlan.localCheckpoint(true) else arrPlan
-    exactJaccardWindowPairsArr(arr, tau, window)
-  }
-
-  /** [[exactJaccardWindowPairs]] over a CALLER-SUPPLIED per-doc gram-array
-    * frame (the [[gramHashSets]] shape, normally checkpointed by the
-    * caller) — r14: the oracle-paired dedup queries build a truth frame
-    * AND a candidate pipeline over the SAME corpus, and both need the
-    * gram kernel; sharing one checkpointed gram frame removes a full
-    * corpus scan + kernel pass per query (at 100 TB: one whole read of
-    * the corpus). Values are unchanged — the kernel output is
-    * deterministic, so pairs from a shared frame are bitwise-identical
-    * to pairs from a private one.
-    */
-  def exactJaccardWindowPairsArr(arr: DataFrame, tau: Double,
-      window: Int): DataFrame = {
+    val arr = if (materialize) Materialize(arrPlan, "Dedup.exactJaccardWindowPairs grams").df
+              else arrPlan
     val sizes = arr.select(col("id"), size(col("g")).as("n"))
     val rows = arr.select(col("id"), explode(col("g")).as("h"))
     val blk = floor(col("id") / window).cast("long")
@@ -276,24 +263,23 @@ object Dedup {
     * (`Vectors.withRecallFlag` is the bounded-sample kNN arm; THIS shape
     * avoids its single-partition window because a corpus-blocking truth
     * frame is O(corpus) rows, not probes × k). The marked join is
-    * checkpointed so the truth and candidate subplans execute once (with
-    * eager=false, but under AQE the call itself runs their shuffle-map
-    * stages; the flag's aggregate runs only the result stage),
-    * and the scalar flag rides back on a broadcast single-row crossJoin
-    * (the tfidf/vocab count pattern). `candidates` must be unique per
-    * (id_a, id_b) — true of minhashPairs/simhashPairs' dropDuplicates
-    * outputs. Empty truth ⇒ zero output rows (the flag is vacuous).
+    * materialized once, and the same job counts its rows and its hits
+    * (a sum fold over the hit mark), so the flag is a literal: no flag
+    * aggregate or broadcast runs in the returned plan. `candidates` must
+    * be unique per (id_a, id_b) — true of minhashPairs/simhashPairs'
+    * dropDuplicates outputs. Empty truth ⇒ zero output rows (the flag is
+    * vacuous).
     */
   def withPairRecallFlag(truth: DataFrame, candidates: DataFrame,
       bound: Double, name: String): DataFrame = {
-    val marked = truth.join(
-        candidates.select(col("id_a"), col("id_b"), lit(1).as("__hit")),
-        Seq("id_a", "id_b"), "left")
-      .localCheckpoint(false)
-    val flag = marked.agg(
-      (count(col("__hit")) >=
-        count(lit(1)).cast("double") * lit(bound)).as(name))
-    marked.drop("__hit").crossJoin(broadcast(flag))
+    val marked = Materialize(truth.join(
+        candidates.select(col("id_a"), col("id_b"), lit(true).as("__hit")),
+        Seq("id_a", "id_b"), "left"),
+      s"Dedup.withPairRecallFlag $name", Materialize.sum("__hit"))
+    // the aggregate's own arithmetic: hits >= double(rows) * bound
+    val ok = marked.sum(0) >= marked.rows.toDouble * bound
+    marked.route(s"$name=$ok")
+    marked.df.drop("__hit").withColumn(name, lit(ok))
   }
 
   /** Single-row cluster-agreement flag of a cluster `assignment` against
@@ -315,21 +301,22 @@ object Dedup {
     * only ever READS assignment rows at truth ids, so the restriction is
     * value-identical (DedupSpec pins it against the unrestricted form).
     *
-    * `truth` must expose (id_a, id_b) and should be checkpointed by the
+    * `truth` must expose (id_a, id_b) and should be materialized by the
     * caller (it usually also feeds the declared CC). `assignment` must
-    * expose (id, cluster) and needs NO caller-side checkpoint: the
-    * restricted frame is checkpointed here and is the assignment's only
+    * expose (id, cluster) and needs NO caller-side materialization: the
+    * restricted frame is materialized here and is the assignment's only
     * consumer, so its subplan — including [[clustersExactFirst]]'s
     * corpus-wide expansion join — still executes exactly once.
     *
     * `broadcastCap` is a ROW count, and the broadcast rows are (id,
     * cluster) pairs of 2 longs: the default 2^22 admits ~64 MB at worst
-    * (the tids side, bare longs, ~32 MB).
+    * (the tids side, bare longs, ~32 MB) — past the 10 MB
+    * autoBroadcastJoinThreshold, so the measured counts drive explicit
+    * broadcast hints.
     */
   def clusterAgreementFlag(truth: DataFrame, assignment: DataFrame,
       bound: Double, name: String,
-      broadcastCap: Long = 1L << 22,
-      truthPairs: Option[Long] = None): DataFrame = {
+      broadcastCap: Long = 1L << 22): DataFrame = {
     // the shared endpoint-join + agg tail: `small` must expose
     // (id, cluster); `bc` decides whether the endpoint sides broadcast
     def flagOver(small: DataFrame, bc: Boolean): DataFrame = {
@@ -342,65 +329,41 @@ object Dedup {
         .agg((count(when(col("__ca") === col("__cb"), 1)) >=
           count(lit(1)).cast("double") * lit(bound)).as(name))
     }
-    // r15, VERDICT r14 item 1 (LocalRelation-gated censuses): clusters()'
-    // driver union-find route returns a LocalRelation whose exact row
-    // count is driver-resident — ZERO jobs to read it. When it fits the
-    // cap, the semi-join restriction (whose only purpose is shrinking a
-    // CORPUS-sized distributed assignment) and BOTH censuses are skipped
-    // and the endpoint joins broadcast the assignment directly. A left
-    // join reads the same assignment rows either way, so the flag is
-    // value-identical (the restriction itself was pinned value-identical
-    // to the unrestricted form; DedupSpec pins this path against the
-    // census-gated one). The LocalRelation is literal driver data: two
-    // consumers re-read rows, never a subplan.
-    val localRows: Option[Long] = {
-      import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Project}
-      assignment.queryExecution.analyzed match {
-        case l: LocalRelation             => Some(l.data.size.toLong)
-        case Project(_, l: LocalRelation) => Some(l.data.size.toLong)
-        case _                            => None
-      }
-    }
-    // broadcastCap counts (id, cluster) rows of 2 longs: ~64 MB worst case
-    if (localRows.exists(_ <= broadcastCap)) return flagOver(assignment, bc = true)
+    // An assignment whose exact row count the driver already has — the
+    // driver route of clusters() returns a LocalRelation — is broadcast
+    // directly when it fits: the semi-join restriction exists only to
+    // shrink a CORPUS-sized distributed assignment, and a left join reads
+    // the same assignment rows either way (DedupSpec pins this path
+    // against the restricted one). Two consumers re-read literal rows,
+    // never a subplan.
+    if (Materialize.knownRows(assignment).exists(_ <= broadcastCap))
+      return flagOver(assignment, bc = true)
     val tidsPlan = truth.select(col("id_a").as("id"))
       .union(truth.select(col("id_b").as("id")))
       .distinct()
-    // census-gated broadcast (the keepIds discipline): tids descends from
-    // a checkpointed frame Catalyst has no stats for, and 2^22 bare longs
-    // ≈ 32 MB — pairs ×10/decade keeps it far under the cap through
-    // sf1000. r15 fusion: |tids| ≤ 2 × |truth pairs| by construction, so
-    // a caller that already censused its (checkpointed) truth frame
-    // passes the count and the gate needs no job of its own — and with
-    // the count() gone the semi join is tids' ONLY consumer, so the
-    // checkpoint goes too (the distinct subplan executes exactly once,
-    // inside `small`'s materialization).
-    val keys = truthPairs match {
-      case Some(n) if n <= broadcastCap / 2 => broadcast(tidsPlan)
-      case _ =>
-        // eager=false: under AQE this call runs the distinct's shuffle-map
-        // stage at once and the census count below runs the result stage
-        // (tids has two consumers on this path — the count and the semi join)
-        val tids = tidsPlan.localCheckpoint(false)
-        if (tids.count() <= broadcastCap) broadcast(tids) else tids
-    }
-    val small = assignment.join(keys, Seq("id"), "left_semi")
-      // checkpointed: both endpoint joins below read it in one query
-      // execution — without materialization the whole assignment subplan
-      // would be duplicated per side. The census count right below
-      // materializes it EAGERLY relative to the consuming joins, so two
-      // broadcast exchanges can never race its block construction (the
-      // TruthArr lesson at [[exactJaccardWindowPairs]], in miniature)
-      .localCheckpoint(false)
-    // Endpoint broadcasts are gated on the restricted frame's OWN census,
-    // not the tids one (ADVICE r12): the semi join bounds |small| ≤ |tids|
-    // only when the assignment carries at most one row per id — true of
-    // every current caller (cluster labelings), but a future caller with
-    // duplicated labels would have blown a tids-derived broadcast budget
-    // silently. The count is one job over a pairs-sized checkpointed
-    // frame; the checkpointed sides carry no stats and would otherwise
-    // plan as sort-merge, shuffling the pairs-sized truth frame twice.
-    flagOver(small, bc = small.count() <= broadcastCap)
+    // |tids| ≤ 2 × |truth pairs| by construction, so a measured truth
+    // frame bounds the tids broadcast without a job, and the semi join is
+    // the distinct subplan's only consumer (it executes once, inside the
+    // restricted frame's materialization). Otherwise tids is measured.
+    val keys =
+      if (Materialize.knownRows(truth).exists(_ <= broadcastCap / 2)) broadcast(tidsPlan)
+      else {
+        val tids = Materialize(tidsPlan, s"Dedup.clusterAgreementFlag $name tids")
+        tids.broadcastIf(tids.rows <= broadcastCap)(tids.df)
+      }
+    // Materialized: both endpoint joins below read it in one query
+    // execution, and without it the whole assignment subplan would run
+    // once per side. The endpoint broadcasts are gated on the restricted
+    // frame's OWN count, not the tids one (ADVICE r12): the semi join
+    // bounds |small| ≤ |tids| only when the assignment carries at most
+    // one row per id — true of every current caller (cluster labelings),
+    // but a caller with duplicated labels would otherwise blow a
+    // tids-derived broadcast budget silently.
+    val small = Materialize(assignment.join(keys, Seq("id"), "left_semi"),
+      s"Dedup.clusterAgreementFlag $name")
+    val bc = small.rows <= broadcastCap
+    small.route(if (bc) "broadcast" else "shuffle")
+    flagOver(small.df, bc)
   }
 
   /** (id, name) rows of a row-local signature `sig`, without the rows
@@ -432,7 +395,7 @@ object Dedup {
   /** [[minhashSignatures]] from a caller-supplied gram-array frame (the
     * [[gramHashSets]] shape): the same kernel over `g`, so the signatures
     * are bitwise-identical while the gram kernel pass is shared with the
-    * truth frame (r14 — see [[exactJaccardWindowPairsArr]]). Rows with an
+    * truth frame (r14 — see [[exactJaccardWindowPairs]]). Rows with an
     * empty `g` have no signature row.
     */
   def minhashSignaturesArr(arr: DataFrame, numPerm: Int = 64): DataFrame =
@@ -467,18 +430,11 @@ object Dedup {
     */
   def minhashPairs(docs: DataFrame, threshold: Double = 0.5,
       numPerm: Int = 64, bandRows: Int = 4, maxBucket: Int = 256,
-      stats: Option[DropStats] = None,
-      gramArr: Option[DataFrame] = None): DataFrame = {
+      stats: Option[DropStats] = None): DataFrame = {
     val st = stats.getOrElse(dropStats(docs.sparkSession, "minhash"))
     val m = col("members")
-    // gramArr (r14): a caller that already checkpointed the per-doc gram
-    // frame (the oracle-paired queries' truth construct) shares it here,
-    // so the signature kernel reads the checkpoint instead of re-running
-    // the gram kernel over the corpus — signatures bitwise-identical (doc
-    // at [[minhashSignaturesArr]])
     val buckets = filterCounting(
-      gramArr.map(minhashSignaturesArr(_, numPerm))
-        .getOrElse(minhashSignatures(docs, numPerm))
+      minhashSignatures(docs, numPerm)
         .select(col("id"), col("mh"), explode(bandKeys(col("mh"), bandRows)).as("bk"))
         .groupBy(col("bk"))
         .agg(collect_list(struct(col("id"), col("mh"))).as("members")),
@@ -557,80 +513,59 @@ object Dedup {
     * the distributed loop costs ~0.6 s/round in driver-synced job
     * overhead REGARDLESS of graph size — profiled 1.7 s on a 256-edge
     * graph, pure fixed cost across the 4 dedup-family bench queries.
-    * The pair frame is materialized (checkpointed) before the loop
-    * anyway, so its exact size is one cheap count: at or under
-    * `driverCap` pairs (default 2^20 — a ≤16 MB collect, the same order
-    * Spark itself moves for a broadcast join) and long-typed ids, the
-    * components come from driver-side union-find (path-halving +
-    * min-id relabel, microseconds at that size) straight over the
-    * undirected pairs — the bidirectional explode, distinct and dst
-    * repartition are built only on the distributed route (r14); larger
-    * graphs — the 100 TB case — take the unchanged pointer-jumping
-    * loop. Identical labels by construction (both compute
-    * min-id-per-component; DedupSpec pins the two routes equal on the
-    * same graph). `driverCap = 0` forces the distributed loop.
+    * The pair frame is materialized before the loop anyway, and the same
+    * job counts it ([[graft.Materialize]]): at or under `driverCap` pairs
+    * (default 2^20 — a ≤16 MB collect, the same order Spark itself moves
+    * for a broadcast join) and long-typed ids, the components come from
+    * driver-side union-find (path-halving + min-id relabel, microseconds
+    * at that size) straight over the undirected pairs — the bidirectional
+    * explode, distinct and dst repartition are built only on the
+    * distributed route (r14); larger graphs — the 100 TB case — take the
+    * unchanged pointer-jumping loop. Identical labels by construction
+    * (both compute min-id-per-component; DedupSpec pins the two routes
+    * equal on the same graph). `driverCap = 0` forces the distributed
+    * loop.
     *
-    * `knownCount` (r15, census fusion — VERDICT r14 item 1): a caller
-    * that has ALREADY materialized `pairs` (checkpointed it) and counted
-    * it passes the count here, and the operator skips both its own
-    * checkpoint and its route census — one fewer materialization pass
-    * and one fewer driver-blocking execution per call. CONTRACT: the
-    * caller must guarantee `pairs` is checkpoint-backed (otherwise the
-    * pair-generation subplan re-executes per consumer below); DedupSpec
-    * pins route equality under `knownCount` against the self-censused
-    * form. The count only chooses the route to TRY: the driver route's
-    * collect is bounded in code at `driverCap + 1` rows, and a frame that
-    * turns out larger than `driverCap` takes the distributed loop, so a
-    * wrong `knownCount` costs time, never driver memory.
+    * A `pairs` frame the caller already materialized (or a local
+    * relation) is not stored again: its measured count routes the call
+    * with no job of its own.
     */
   def clusters(pairs: DataFrame, maxIter: Int = 64,
-      driverCap: Long = 1L << 20, knownCount: Option[Long] = None): DataFrame = {
+      driverCap: Long = 1L << 20): DataFrame = {
     // The PAIR frame is what's materialized once (r14): the pair-
     // generation subplan (minhashPairs' signature/bucket pipeline, or a
-    // truth construct) is the expensive input, and the route census —
-    // previously a count over the exploded+distinct+dst-repartitioned
-    // edge frame — needs only the pair count. Undirected pairs are ALL
-    // the driver union-find needs (duplicates are idempotent, both
-    // endpoints register), so the bidirectional explode, the distinct
-    // (one shuffle) and the dst repartition (another) are now built —
-    // and paid — ONLY on the distributed route that requires them.
-    // Measured r14 at sf0.1: two exchanges + their AQE stage jobs gone
-    // from every driver-routed clusters() call (8 such calls across the
-    // dedup bench family). driverCap now bounds RAW PAIRS as passed —
-    // the operator contract allows duplicate pairs, so the census counts
-    // them too (a duplicate-heavy input can exceed the cap and take the
-    // distributed loop even when its DISTINCT graph would fit: perf-only,
-    // the ≤16 MB collect-size safety always holds — ADVICE r14). For
-    // deduplicated inputs, pairs ≤ edges ≤ 2·pairs, so the same 2^20 cap
-    // keeps the collect ≤ 16 MB of bare long pairs (the broadcast-join
-    // order of driver traffic documented below).
-    // eager=false checkpoint (r9 VERDICT item 1, toy-SF job floor): it is
-    // not lazy under AQE — the call runs the pair subplan's shuffle-map
-    // stages at once — but the route census count() below runs its result
-    // stage in the SAME driver round-trip that an eager checkpoint would
-    // have spent on its own dedicated job.
-    // With a caller-supplied count the projection rides the CALLER'S
-    // checkpoint instead — no second copy of the pair frame is stored and
-    // no second census job runs (r15).
-    val pairsCk = knownCount match {
-      case Some(_) => pairs.select(col("id_a"), col("id_b"))
-      case None    => pairs.select(col("id_a"), col("id_b")).localCheckpoint(false)
-    }
+    // truth construct) is the expensive input, and the route needs only
+    // the pair count. Undirected pairs are ALL the driver union-find needs
+    // (duplicates are idempotent, both endpoints register), so the
+    // bidirectional explode, the distinct (one shuffle) and the dst
+    // repartition (another) are built — and paid — ONLY on the
+    // distributed route that requires them. driverCap bounds RAW PAIRS as
+    // passed — the operator contract allows duplicate pairs, so the count
+    // includes them (a duplicate-heavy input can exceed the cap and take
+    // the distributed loop even when its DISTINCT graph would fit:
+    // perf-only — ADVICE r14). For deduplicated inputs, pairs ≤ edges ≤
+    // 2·pairs, so the same 2^20 cap keeps the collect ≤ 16 MB of bare
+    // long pairs.
+    val pairsM = Materialize(pairs.select(col("id_a"), col("id_b")),
+      "Dedup.clusters pairs")
+    val pairsCk = pairsM.df
 
     val longIds = Seq("id_a", "id_b").forall(c =>
       pairsCk.schema(c).dataType == org.apache.spark.sql.types.LongType)
-    if (driverCap > 0 && longIds &&
-        knownCount.getOrElse(pairsCk.count()) <= driverCap) {
+    if (driverCap > 0 && longIds && pairsM.rows <= driverCap) {
       // The collect enforces the cap itself (ADVICE r15): at most
-      // driverCap + 1 rows reach the driver, whatever the count claimed,
-      // and one row past the cap sends the graph to the distributed loop.
+      // driverCap + 1 rows reach the driver, whatever the count said.
       // coalesce(1) keeps the bounded take ONE job: a CollectLimit over
       // several partitions takes incrementally, one job per scale-up
       // step. The one task reads the materialized pair frame, ≤ 16 MB.
       val rows = pairsCk.coalesce(1)
         .limit(math.min(driverCap, Int.MaxValue - 1L).toInt + 1).collect()
-      if (rows.length <= driverCap) return driverComponents(pairs.sparkSession, rows)
+      if (rows.length <= driverCap) {
+        pairsM.route("driver")
+        return driverComponents(pairs.sparkSession, rows)
+      }
     }
+    pairsM.route("distributed")
 
     // ---- distributed route (the 100 TB path) -------------------------
     // Both edge directions explode from the materialized pair frame (one
@@ -643,9 +578,9 @@ object Dedup {
     // 1-hop neighbors AND (b) the label OF the current label (path
     // compression) — chains collapse in O(log diameter) rounds, so
     // `maxIter` rounds cover chains up to ~2^maxIter deep.
-    // localCheckpoint(eager) truncates the lineage per round (without it
-    // round N's plan embeds all previous rounds and both Catalyst
-    // analysis and re-execution blow up — measured). Round-cost design
+    // Materializing each round truncates the lineage (without it round
+    // N's plan embeds all previous rounds and both Catalyst analysis and
+    // re-execution blow up — measured). Round-cost design
     // (the r1 shape ran 15x SLOWER with 8x more cores — fixed per-job
     // overhead, VERDICT r1 §wrong.5):
     //  - edges are hash-partitioned by dst BEFORE the one-time
@@ -657,20 +592,20 @@ object Dedup {
     //    decrease and old labels are still reachable-from ancestors, so
     //    jumping through the previous generation stays monotone-correct;
     //  - convergence is a per-row `changed` flag computed inside the
-    //    round and tested with a narrow limit-1 scan of the round's own
-    //    just-materialized checkpoint — the exceptAll comparison launched
-    //    an extra full two-sided shuffle job every round.
-    val edgesCk = pairsCk
+    //    round and folded ("any changed") into the round's own
+    //    materialization job — the exceptAll comparison launched an extra
+    //    full two-sided shuffle job every round, and the limit-1 probe
+    //    that replaced it one more job per round.
+    val edgesCk = Materialize.deferred(pairsCk
       .select(explode(array(
         struct(col("id_a").as("src"), col("id_b").as("dst")),
         struct(col("id_b").as("src"), col("id_a").as("dst")))).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
       .distinct()
-      .repartition(col("dst")).localCheckpoint(false)
+      .repartition(col("dst")), "Dedup.clusters edges")
 
-    var labels = edgesCk.select(col("src").as("id")).distinct()
-      .withColumn("cluster", col("id"))
-      .localCheckpoint(true)
+    var labels = Materialize(edgesCk.select(col("src").as("id")).distinct()
+      .withColumn("cluster", col("id")), "Dedup.clusters labels").df
     var iter = 0
     var done = false
     // run TO CONVERGENCE — the per-row `changed` flag is the exit, and
@@ -702,9 +637,10 @@ object Dedup {
             .as("cluster"))
         .select(col("id"), col("cluster"),
           (col("cluster") =!= col("old_cluster")).as("changed"))
-        .localCheckpoint(true)
-      done = jumped.where(col("changed")).isEmpty
-      labels = jumped.select(col("id"), col("cluster"))
+      val round = Materialize(jumped, s"Dedup.clusters round $iter",
+        Materialize.any("changed"))
+      done = !round.any(0)
+      labels = round.df.select(col("id"), col("cluster"))
       iter += 1
     }
     labels
@@ -718,10 +654,8 @@ object Dedup {
     * bucketed/keyed shape pinned by its own spec, and the final keep is a
     * left join against the (far smaller) label table.
     */
-  def survivors(docs: DataFrame, threshold: Double = 0.5,
-      gramArr: Option[DataFrame] = None): DataFrame = {
-    val labels = clusters(minhashPairs(
-      docs.select(col("id"), col("text")), threshold, gramArr = gramArr))
+  def survivors(docs: DataFrame, threshold: Double = 0.5): DataFrame = {
+    val labels = clusters(minhashPairs(docs.select(col("id"), col("text")), threshold))
     docs.join(labels, Seq("id"), "left")
       .filter(col("cluster").isNull || col("cluster") === col("id"))
       .drop("cluster")
@@ -757,39 +691,23 @@ object Dedup {
     // shingle-less texts can never pair in plain survivors — they ALL
     // survive there, so they must not be collapsed to a representative
     val degenerate = trim(coalesce(col("text"), lit(""))) === ""
-    // Eager checkpoint for the same reason as [[clustersExactFirst]]:
-    // [[survivors]] consumes reps once inside [[clusters]]' checkpointed
-    // jobs and once in the final keep-join — separate query executions,
-    // so without materialization the collapse aggregate runs twice.
-    val reps = docs.select(col("id"), col("text"))
+    // Materialized for the same reason as [[clustersExactFirst]]'s
+    // groups: [[survivors]] consumes reps once inside [[clusters]]' pair
+    // materialization and once in the keep-ids join — separate query
+    // executions, so without it the collapse aggregate runs twice.
+    // Deferred: the first of those jobs stores it.
+    val reps = Materialize.deferred(docs.select(col("id"), col("text"))
       .filter(!degenerate)
       .groupBy(col("text")).agg(min(col("id")).as("id"))
-      .select(col("id"), col("text"))
-      // eager=false: under AQE this call runs the aggregate's shuffle-map
-      // stage at once; the first full-scan action inside [[survivors]]
-      // (the edge census of [[clusters]]) runs the result stage — no
-      // dedicated checkpoint job
-      .localCheckpoint(false)
-    // Checkpointed BEFORE the census count (r7 ADVICE): keepIds is read
-    // twice — once by the gate's count() and once by the keep-join when
-    // the returned plan runs — and without materialization the
-    // reps-level survivors join would execute twice. It is tiny by the
-    // cap's own argument (one bare long per surviving distinct text), so
-    // materializing it eagerly costs what the count alone already did.
-    val keepIds = survivors(reps, threshold).select(col("id"))
-      // eager=false: under AQE this call runs the survivors join's input
-      // stages at once; the broadcast-gate count() below runs the result stage
-      .localCheckpoint(false)
-    // Census-gated broadcast of the keep side (same discipline as
-    // [[clustersExactFirst]]'s expansion join, and for the same reason:
-    // keepIds descends from CHECKPOINTED frames whose stats Catalyst
-    // cannot see, so the semi-join would otherwise shuffle the whole
-    // corpus by id against a few-thousand-row right side). keepIds is one
-    // bare long per surviving DISTINCT text; counting the materialized
-    // frame is a scan of in-memory partitions. 2^22 ids ≈ 32 MB
-    // broadcast.
-    val keep = if (keepIds.count() <= broadcastCap) broadcast(keepIds)
-               else keepIds
+      .select(col("id"), col("text")), "Dedup.survivorsExactFirst reps")
+    // Measured-count broadcast of the keep side (same discipline as
+    // [[clustersExactFirst]]'s expansion join): keepIds is one bare long
+    // per surviving DISTINCT text, and without the hint the semi-join
+    // shuffles the whole corpus by id against it whenever it is over the
+    // 10 MB auto-broadcast threshold. 2^22 ids ≈ 32 MB broadcast.
+    val keepIds = Materialize(survivors(reps, threshold).select(col("id")),
+      "Dedup.survivorsExactFirst keep")
+    val keep = keepIds.broadcastIf(keepIds.rows <= broadcastCap)(keepIds.df)
     docs.filter(!degenerate).join(keep, Seq("id"), "left_semi")
       .unionByName(docs.filter(degenerate))
   }
@@ -838,49 +756,37 @@ object Dedup {
       broadcastCap: Long = 1L << 17): DataFrame = {
     val nonDegenerate = docs.select(col("id"), col("text"))
       .filter(trim(coalesce(col("text"), lit(""))) =!= "")
-    // Eager checkpoint: [[clusters]] materializes its edge graph in its
-    // own jobs, so the two consumers of `groups` (pair generation there,
-    // the expansion join here) run in SEPARATE query executions — exchange
-    // reuse cannot span them and the corpus collapse would run twice.
-    // The collapsed table is one row per DISTINCT text (the small side by
-    // construction on a duplicated corpus), so materializing it is cheap.
-    val groups = nonDegenerate.groupBy(col("text"))
-      .agg(min(col("id")).as("rep"), count(lit(1)).as("grp_n"))
-      // eager=false: under AQE this call runs the aggregate's shuffle-map
-      // stage at once; [[clusters]]' edge census ([[minhashPairs]] scans
-      // it inside that plan) runs the result stage — no dedicated job
-      .localCheckpoint(false)
+    // Materialized: [[clusters]] stores its pair frame in its own job, so
+    // the two consumers of `groups` (pair generation there, the expansion
+    // join here) run in SEPARATE query executions — exchange reuse cannot
+    // span them and the corpus collapse would run twice. The collapsed
+    // table is one row per DISTINCT text (the small side by construction
+    // on a duplicated corpus). Deferred: [[clusters]]' pair job stores it.
+    val groups = Materialize.deferred(nonDegenerate.groupBy(col("text"))
+      .agg(min(col("id")).as("rep"), count(lit(1)).as("grp_n")),
+      "Dedup.clustersExactFirst groups")
     val repLabels = clusters(minhashPairs(
         groups.select(col("rep").as("id"), col("text")), threshold))
       .select(col("id").as("rep_id"), col("cluster").as("rep_cluster"))
-    // Checkpointed BEFORE the census count (r7 ADVICE): `labeled` feeds
-    // the gate's count() AND the expansion join — separate query
-    // executions — so without materialization the groups ⋈ repLabels
-    // join over the checkpointed inputs would run twice. It is bounded by
-    // the distinct-text count (the cap's own argument), so the eager
-    // checkpoint costs one small-join job the count was paying anyway.
-    val labeled = groups.join(repLabels, col("rep") === col("rep_id"), "left")
-      .filter(col("rep_cluster").isNotNull || col("grp_n") >= 2)
-      .select(col("text"),
-        coalesce(col("rep_cluster"), col("rep")).as("cluster"))
-      // eager=false: under AQE this call runs the join's input stages at
-      // once; the broadcast-gate count() below runs the result stage
-      .localCheckpoint(false)
-    // Census-gated broadcast of the expansion side. `labeled` descends
-    // from checkpointed frames, so Catalyst sees no stats and plans the
-    // text join as a sort-merge — shuffling AND sorting the whole corpus
-    // by its full text strings against a right side that is bounded by
-    // the distinct-text count (measured at sf1000: a 5 000-row right side
-    // put 50 M ~1 KB texts through an exchange; the A/B probe clocked
-    // that shape at 48–114 s/run with the CC route making no difference —
-    // the shuffle was the entire story). Counting `labeled` is a
-    // scan of its checkpointed in-memory partitions, not a corpus scan. The cap
-    // is rows of (text, cluster) — 2^17 rows ≈ 100–300 MB at typical
-    // document sizes, the upper end of a comfortable broadcast; above it
-    // (a mostly-unique corpus where near-dup clusters rival the corpus)
-    // the sort-merge join is the honest plan and stays.
-    val expand = if (labeled.count() <= broadcastCap) broadcast(labeled)
-                 else labeled
+    val labeled = Materialize(
+      groups.join(repLabels, col("rep") === col("rep_id"), "left")
+        .filter(col("rep_cluster").isNotNull || col("grp_n") >= 2)
+        .select(col("text"),
+          coalesce(col("rep_cluster"), col("rep")).as("cluster")),
+      "Dedup.clustersExactFirst labeled")
+    // Measured-count broadcast of the expansion side. Without it a
+    // labeled side over the 10 MB auto-broadcast threshold plans the text
+    // join as a sort-merge — shuffling AND sorting the whole corpus by its
+    // full text strings against a right side that is bounded by the
+    // distinct-text count (measured at sf1000: a 5 000-row right side put
+    // 50 M ~1 KB texts through an exchange; the A/B probe clocked that
+    // shape at 48–114 s/run with the CC route making no difference — the
+    // shuffle was the entire story). The cap is rows of (text, cluster) —
+    // 2^17 rows ≈ 100–300 MB at typical document sizes, the upper end of
+    // a comfortable broadcast; above it (a mostly-unique corpus where
+    // near-dup clusters rival the corpus) the sort-merge join is the
+    // honest plan and stays.
+    val expand = labeled.broadcastIf(labeled.rows <= broadcastCap)(labeled.df)
     nonDegenerate.join(expand, Seq("text"))
       .select(col("id"), col("cluster"))
   }

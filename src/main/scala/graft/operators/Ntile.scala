@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.Materialize
 
 /** Distributed EXACT `ntile(k)` — identical tile assignment to
   * `ntile(k).over(Window.partitionBy(g).orderBy(v, id))` at ANY group size
@@ -120,26 +121,26 @@ object Ntile {
     require(tieCap >= 1)
 
     if (windowCap > 0) {
-      // checkpoint the per-group size table (one row per group): both the
-      // census scalar and the mixed-route key table read it, and without
-      // the checkpoint the second consumer would re-run the full-df
-      // groupBy scan from scratch
-      val sizes = df.select(groupCol.as("g"), valueCol.cast("double").as("v"))
-        .filter(col("v").isNotNull)
-        .groupBy(col("g")).agg(count(lit(1)).as("n"))
-        // LAZY (r9 VERDICT item 1, toy-SF job floor): the census first()
-        // below materializes it in its own round-trip
-        .localCheckpoint(false)
-      // one scalar census decides the route; the homogeneous cases (all
+      // materialize the per-group size table (one row per group): its
+      // job counts the groups and, by a sum fold, the oversized ones, and
+      // the mixed-route key table reads it without re-running the full-df
+      // groupBy scan
+      val sizes = Materialize(
+        df.select(groupCol.as("g"), valueCol.cast("double").as("v"))
+          .filter(col("v").isNotNull)
+          .groupBy(col("g")).agg(count(lit(1)).as("n"))
+          .withColumn("large", col("n") > windowCap),
+        "Ntile.exact sizes", Materialize.sum("large"))
+      // those two numbers decide the route; the homogeneous cases (all
       // groups small / all oversized — by far the common ones) then run on
       // `df` DIRECTLY, with no routing join in the plan at all. That
       // matters for the oversized case: the machinery re-executes its
       // input subplan once per pass, so a semi-join wrapper would be
       // re-joined 5-6 times (measured +7 s at sf10 where the join filters
       // nothing)
-      val census = sizes.agg(count(lit(1)), count(when(col("n") > windowCap, 1)))
-        .first()
-      val (nGroups, nLarge) = (census.getLong(0), census.getLong(1))
+      val (nGroups, nLarge) = (sizes.rows, sizes.sum(0))
+      sizes.route(if (nLarge == 0) "window" else if (nLarge < nGroups) "mixed"
+                  else "distributed")
       if (nLarge == 0)
         return windowPath(df, groupCol, valueCol, idCol, k, outCol)
       if (nLarge < nGroups) {
@@ -150,7 +151,7 @@ object Ntile {
         // key is a real window-form group, and with plain === an
         // oversized null-key group would never match its own key row and
         // silently fall through to the single-task window path
-        val largeKeys = sizes.filter(col("n") > windowCap)
+        val largeKeys = sizes.df.filter(col("large"))
           .select(col("g").as("__ntile_g"))
         // the machinery re-executes its input subplan per pass, so `large`
         // pays the semi-join once per pass — the same order as the raw
@@ -219,28 +220,25 @@ object Ntile {
     val accuracy = boundaryAccuracy
     val smallFloor = boundarySmallFloor(k)
     val rankFor = boundaryRankFor(k)
-    // checkpoint the one-row-per-group boundary frame: it feeds FOUR
+    // materialize the one-row-per-group boundary frame: it feeds FOUR
     // consumers (count pass, tie scan, wide pivot, and the probe inside),
     // each of which would otherwise re-run the sketch/probe machinery
-    val bounds = Percentiles.exact(base, col("g"), col("v"),
+    val boundsM = Materialize(Percentiles.exact(base, col("g"), col("v"),
       targets = (1 to k - 1).map(i => (s"__bv$i", i.toDouble / k)),
       delta = delta, accuracy = accuracy, smallFloor = smallFloor,
       sliceCap = math.max(1000000L, smallFloor),
-      discrete = true, rankFor = Some(rankFor))
-      // LAZY: the broadcast-gate count() below materializes it
-      .localCheckpoint(false)
+      discrete = true, rankFor = Some(rankFor)), "Ntile.exact bounds")
+    val bounds = boundsM.df
 
-    // census-gated broadcast (same discipline as Dedup's expansion joins):
-    // every boundary-side table below holds O(groups × k) cells, which at
-    // windowCap=1M and a 10^13-row input can reach 10^7 oversized groups —
-    // a forced broadcast there is a multi-hundred-MB replica on every
-    // executor. Force the hint only while the cell count is comfortably
-    // in-memory; past the cap AQE picks the join side (and at millions of
-    // groups it will correctly shuffle). bounds is checkpointed, so the
-    // census count is a scan of in-memory partitions, not a re-run
-    val nDistGroups = bounds.count()
-    def bc(d: DataFrame): DataFrame =
-      if (nDistGroups * k <= 2000000L) broadcast(d) else d
+    // measured-count broadcast (same discipline as Dedup's expansion
+    // joins): every boundary-side table below holds O(groups × k) cells,
+    // which at windowCap=1M and a 10^13-row input can reach 10^7
+    // oversized groups — a forced broadcast there is a multi-hundred-MB
+    // replica on every executor. Force the hint only while the cell count
+    // is comfortably in-memory (the cap admits past the 10 MB
+    // auto-broadcast threshold); past the cap AQE picks the join side
+    // (and at millions of groups it will correctly shuffle)
+    val bc = boundsM.broadcastIf(boundsM.rows * k <= 2000000L) _
 
     // -- one exact pass: per-group n plus, per boundary, the count strictly
     //    below its value and the size of its tied run (map-side combinable;
@@ -278,8 +276,6 @@ object Ntile {
         (col("cum") - col("below")).as("kk"),
         col("m").as("cnt"),
         col("idlo").as("lo"), col("idhi").as("hi"))
-      // LAZY: the fused probe aggregate below materializes it
-      .localCheckpoint(false)
 
     // -- tie-break id selection. Tied rows (v equal to SOME boundary value)
     //    are a tiny slice of real data; materialize them once only if any
@@ -290,25 +286,22 @@ object Ntile {
         .filter(bvCols.map(col("v") === _).reduce(_ || _))
         .select(col("g"), col("v"), col("id"))
 
-    var state = st
     var tied: DataFrame = null
     var rounds = 0
     def active: Column = col("cnt") > tieCap && col("lo") < col("hi")
-    // ONE aggregate job serves the boundary-rank sanity check, the
-    // loop-entry census, AND st's checkpoint materialization (was an
-    // eager checkpoint plus two limit(1) probes — three driver
-    // round-trips over the same tiny frame; same fusion as
-    // [[Percentiles]]' firstProbe). count(when(...)), never sum: 0 on an
-    // empty frame where sum() is NULL
-    val stProbe = state.agg(
-        count(when(col("kk") < 1 || col("kk") > col("cnt"), 1)).as("viol"),
-        count(when(active, 1)).as("act"))
-      .head()
+    // ONE materialization job stores st and folds the boundary-rank
+    // sanity check and the loop-entry test (as [[Percentiles]]' first
+    // state does): no probe job of their own
+    val stM = Materialize(st
+        .withColumn("__viol", col("kk") < 1 || col("kk") > col("cnt"))
+        .withColumn("__act", active),
+      "Ntile.exact state", Materialize.sum("__viol"), Materialize.any("__act"))
     // the boundary rank must land inside its own tied run — anything else
     // means the boundary value pass was wrong; fail loudly, never misbin
-    require(stProbe.getLong(0) == 0L,
+    require(stM.sum(0) == 0L,
       "NTILE boundary rank fell outside its tied value run")
-    var anyActive = stProbe.getLong(1) > 0L
+    var state = stM.df.drop("__viol", "__act")
+    var anyActive = stM.any(1)
     while (anyActive) {
       require(rounds < maxRounds,
         s"NTILE tie bisection did not converge in $maxRounds rounds")
@@ -319,8 +312,8 @@ object Ntile {
         // task. Including id spreads the run evenly at the same shuffle
         // cost; the downstream aggregates are map-side combinable, so no
         // co-location by (g, v) is needed
-        tied = tiedRows(base).repartition(col("g"), col("v"), col("id"))
-          .localCheckpoint(true)
+        tied = Materialize(tiedRows(base).repartition(col("g"), col("v"), col("id")),
+          "Ntile.exact tied rows").df
       // overflow-safe exact long midpoint: (lo & hi) + ((lo ^ hi) >> 1) is
       // floor((lo+hi)/2) in pure integer arithmetic. The naive
       // lo + (hi - lo)/2 wraps when the extremes straddle more than 2^63,
@@ -346,9 +339,11 @@ object Ntile {
           when(goLeft, col("cl")).otherwise(col("cnt") - col("cl")).as("cnt"),
           when(goLeft, col("lo")).otherwise(col("minr")).as("lo"),
           when(goLeft, col("maxl")).otherwise(col("hi")).as("hi"))
-      state = state.where(!active).unionByName(refined)
-        .localCheckpoint(true)
-      anyActive = !state.where(active).limit(1).isEmpty
+      val round = Materialize(state.where(!active).unionByName(refined)
+          .withColumn("__act", active),
+        s"Ntile.exact round $rounds", Materialize.any("__act"))
+      state = round.df.drop("__act")
+      anyActive = round.any(0)
       rounds += 1
     }
 
@@ -367,15 +362,15 @@ object Ntile {
     val bidCols = (1 to k - 1).map { i =>
       first(when(col("i") === i, col("bid")), ignoreNulls = true).as(s"__bid$i")
     }
-    // checkpoint the final (group, bv_i, bid_i) table too: it is tiny and
+    // materialize the final (group, bv_i, bid_i) table too: it is tiny and
     // this truncates every boundary job out of the caller's visible plan —
     // what remains is input ⋈ broadcast(tiny) + codegen'd comparisons.
-    // LAZY: it has exactly ONE consumer (the broadcast side of the final
-    // join), so the caller's own first action materializes it — an eager
-    // checkpoint here was a pure extra driver round-trip
-    val bWide = bounds.join(
-        bids.groupBy(col("g")).agg(bidCols.head, bidCols.tail: _*), "g")
-      .localCheckpoint(false)
+    // DEFERRED: it has exactly ONE consumer (the broadcast side of the
+    // final join), so the caller's own first action stores it — an eager
+    // job here was a pure extra driver round-trip
+    val bWide = Materialize.deferred(bounds.join(
+        bids.groupBy(col("g")).agg(bidCols.head, bidCols.tail: _*), "g"),
+      "Ntile.exact boundaries")
 
     val v = valueCol.cast("double")
     val id = idCol.cast("long")

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.Materialize
 
 /** Distributed EXACT per-group percentiles with bounded executor memory at
   * any group size — the hardened form of the sketch-bracket technique used
@@ -71,8 +72,8 @@ import org.apache.spark.sql.functions._
   * checkpointed in-bracket SUBSET (Σ cnt per target ≈ T·2δn rows — at
   * 10^11-row groups, ~10^8 rows vs the 10^11-row parent), so refinement
   * cost shrinks geometrically. Driver-side control flow sees only
-  * booleans (limit-1 isEmpty probes) and per-round tiny checkpointed
-  * state frames — never data rows. NULL values are excluded up front
+  * counts and booleans folded into each round's materialization job
+  * ([[graft.Materialize]]) — never data rows. NULL values are excluded up front
   * (both engines' percentile semantics ignore them). A NULL GROUP KEY is
   * a real group (as in SQL GROUP BY): the machinery carries the key in a
   * one-field struct so the internal equi-joins match null keys, and the
@@ -239,26 +240,23 @@ object Percentiles {
       min(col("v")).as("vmin"), max(col("v")).as("vmax"),
       percentile_approx(col("v"), array(pcts.map(lit): _*), lit(accuracy))
         .as("qs")) ++ extra.toSeq.flatMap(_.sketchAggs)
-    val br = base.groupBy(col("g")).agg(sketchAggCols.head, sketchAggCols.tail: _*)
-      // LAZY checkpoint of the (one-row-per-group) sketch result: it
-      // feeds the probe action AND the returned plan — without
-      // truncation the expensive sketch aggregation would re-execute
-      // once per consumer. Lazy (not eager) so the census count() below
-      // materializes it — ONE driver-blocking job where eager+count was
-      // two (r9 VERDICT item 1: at toy SF the suite floor is job
-      // round-trips, not data; same fusion as [[Vectors]]' census)
-      .localCheckpoint(false)
-    // census-gated broadcast for every internal join below (see the
-    // broadcastCells scaladoc): one cheap count over the checkpointed
-    // sketch frame decides whether the O(groups × T)-cell boundary frames
-    // may be forced onto every executor. 8·T cells/group over-counts br's
-    // 2T+4 slightly and matches the widest long frame (st0/state at ~8
-    // columns × T rows per group), so one gate covers all five sites.
-    // This count is ALSO the job that materializes br's lazy checkpoint.
-    val nGroups = br.count()
+    // materialize the (one-row-per-group) sketch result: it feeds the
+    // probe action AND the returned plan — without truncation the
+    // expensive sketch aggregation would re-execute once per consumer.
+    // The same job counts the groups (r9 VERDICT item 1: at toy SF the
+    // suite floor is job round-trips, not data).
+    val brM = Materialize(
+      base.groupBy(col("g")).agg(sketchAggCols.head, sketchAggCols.tail: _*),
+      "Percentiles.exact sketch")
+    val br = brM.df
+    // measured-count broadcast for every internal join below (see the
+    // broadcastCells scaladoc): the group count decides whether the
+    // O(groups × T)-cell boundary frames may be forced onto every
+    // executor. 8·T cells/group over-counts br's 2T+4 slightly and
+    // matches the widest long frame (st0/state at ~8 columns × T rows per
+    // group), so one gate covers all five sites.
     val cellsPerGroup = 8L * math.max(1, targets.size)
-    def gated(d: DataFrame): DataFrame =
-      if (nGroups * cellsPerGroup <= broadcastCells) broadcast(d) else d
+    val gated = brM.broadcastIf(brM.rows * cellsPerGroup <= broadcastCells) _
     val targetRows = targets.zipWithIndex.map { case ((name, p), i) =>
       struct(lit(name).as("t"), lit(p).as("p"), lit(i).as("ti"))
     }
@@ -341,41 +339,37 @@ object Percentiles {
     // 258 s → 11 s on a 20 M-row constant group ([[Ntile.exact]]'s forced-
     // bisection measurement, BASELINE.md r7 "Forced tie-bisection")
     val collapsed = col("lo") >= col("hi")
-    var state = st0.join(probed, Seq("g", "t"))
-      .withColumn("done", collapsed)
-      .withColumn("el_lo", when(collapsed, col("lo")).cast("double"))
-      .withColumn("el_hi", when(collapsed, col("lo")).cast("double"))
-      // lazy for the same reason as br: the firstProbe aggregate below
-      // is the job that materializes it (one round-trip, not two)
-      .localCheckpoint(false)
-    // a bracket that failed to enclose its target ranks fails LOUDLY here
-    // rather than interpolating a wrong value downstream. ONE aggregate
-    // job over the checkpointed (groups × T)-row state serves the
-    // enclosure check, the loop-entry census, the pass-4 pending census,
-    // AND the checkpoint materialization (r8/r9 VERDICT item 1's
-    // fixed-cost floor: these were four separate driver-blocking jobs
-    // over the same tiny frame — at toy SF the suite's floor is job
-    // round-trips, not data)
     val enclosureViolated = col("below") >= col("rk") ||
       col("below") + col("cnt") < col("rkhi")
+    val active = !col("done") && col("cnt") > lit(sliceCap)
 
-    def active(s: DataFrame): Column =
-      !col("done") && col("cnt") > lit(sliceCap)
-
-    // count(when(...)) not sum(when(...)): on an EMPTY state frame (empty
-    // input / all-NULL value column) sum() returns NULL and getLong would
-    // NPE, where the pre-fusion limit(1).isEmpty probes passed vacuously —
-    // count() returns 0 on empty input and the machinery falls through to
-    // an empty result as before
-    val firstProbe = state.agg(
-        count(when(enclosureViolated, 1)).as("viol"),
-        count(when(active(state), 1)).as("act"),
-        count(when(!col("done"), 1)).as("pend"))
-      .head()
-    require(firstProbe.getLong(0) == 0L,
+    // Each materialization of the (groups × T)-row state folds the
+    // loop's two tests: any bracket still active, any target still
+    // pending the pass-4 collect. The first one also folds the enclosure
+    // check: a bracket that failed to enclose its target ranks fails
+    // LOUDLY here rather than interpolating a wrong value downstream
+    // (r8/r9 VERDICT item 1's fixed-cost floor: these were four separate
+    // driver-blocking jobs over the same tiny frame). Folds over an EMPTY
+    // state (empty input / all-NULL value column) are 0, so the machinery
+    // falls through to an empty result.
+    var (state, anyActive, anyPending) = (null: DataFrame, false, false)
+    def materializeState(d: DataFrame, site: String,
+        extraFolds: Materialize.Fold*): Materialize.Materialized = {
+      val m = Materialize(d.withColumn("__act", active).withColumn("__pend", !col("done")),
+        site, Seq(Materialize.any("__act"), Materialize.any("__pend")) ++ extraFolds: _*)
+      state = m.df.drop("__act", "__pend", "__viol")
+      anyActive = m.any(0)
+      anyPending = m.any(1)
+      m
+    }
+    val opening = materializeState(st0.join(probed, Seq("g", "t"))
+        .withColumn("done", collapsed)
+        .withColumn("el_lo", when(collapsed, col("lo")).cast("double"))
+        .withColumn("el_hi", when(collapsed, col("lo")).cast("double"))
+        .withColumn("__viol", enclosureViolated),
+      "Percentiles.exact state", Materialize.sum("__viol"))
+    require(opening.sum(2) == 0L,
       "percentile bracket missed its target rank (sketch accuracy too low)")
-    var anyActive = firstProbe.getLong(1) > 0L
-    val pendAtStart = firstProbe.getLong(2)
 
     // fused-probe extras: per-group scalars duplicated across the T
     // exploded target rows — recover one row per group from the CACHED
@@ -406,13 +400,12 @@ object Percentiles {
         // bracket into T partitions, re-serializing every round through T
         // tasks (the same concentration defect the r7 review removed from
         // [[Ntile]]'s tied slice)
-        subset = base.join(gated(st0.select(col("g"), col("t"),
+        subset = Materialize(base.join(gated(st0.select(col("g"), col("t"),
             col("lo").as("lo0"), col("hi").as("hi0"))), "g")
           .filter(col("v").between(col("lo0"), col("hi0")))
-          .select(col("g"), col("t"), col("v"))
-          .localCheckpoint(true)
+          .select(col("g"), col("t"), col("v")), "Percentiles.exact subset").df
       }
-      val act = state.where(active(state))
+      val act = state.where(active)
         .select(col("g"), col("t"), col("lo"), col("hi"),
           (col("lo") + (col("hi") - col("lo")) / 2).as("mid"))
       // degenerate interval (mid folds onto lo for adjacent doubles):
@@ -429,7 +422,7 @@ object Percentiles {
       val bc = col("below") + col("cl")
       val goLeft = bc >= col("rkhi")
       val goRight = bc < col("rk")
-      val refined = state.where(active(state))
+      val refined = state.where(active)
         .join(halves, Seq("g", "t"))
         .select(col("g"), col("n"), col("t"), col("p"), col("r"), col("rk"),
           col("rkhi"),
@@ -453,10 +446,8 @@ object Percentiles {
             .as("el_lo"),
           coalesce(col("el_hi"), when(col("lo") >= col("hi"), col("lo")))
             .as("el_hi"))
-      state = state.where(!active(state))
-        .unionByName(refined)
-        .localCheckpoint(true)
-      anyActive = !state.where(active(state)).limit(1).isEmpty
+      materializeState(state.where(!active).unionByName(refined),
+        s"Percentiles.exact round $rounds")
       rounds += 1
     }
 
@@ -470,18 +461,13 @@ object Percentiles {
         .filter(col("v").between(col("lo0"), col("hi0")))
         .select(col("g"), col("t"), col("v"))
     } else subset
-    // when every target resolved up front (all brackets collapsed — the
-    // constant-value case) there is nothing to collect: pin the slice scan
-    // to limit(0) so OptimizeLimitZero folds it to an empty relation at
-    // plan time instead of relying on AQE to propagate the empty broadcast
-    // side through the returned (lazy) plan. In the common zero-round
-    // path the answer already rode the firstProbe aggregate (pend count)
-    // — no extra driver job; only a run that actually bisected re-probes
-    // the (tiny, checkpointed) post-loop state
-    val pendingEmpty =
-      if (rounds == 0) pendAtStart == 0L
-      else pending.limit(1).isEmpty
-    val collectSrc = if (pendingEmpty) src0.limit(0) else src0
+    // when every target resolved (all brackets collapsed — the
+    // constant-value case — or resolved by bisection) there is nothing to
+    // collect: pin the slice scan to limit(0) so OptimizeLimitZero folds
+    // it to an empty relation at plan time instead of relying on AQE to
+    // propagate the empty broadcast side through the returned (lazy)
+    // plan. The answer rode the last state materialization's fold.
+    val collectSrc = if (!anyPending) src0.limit(0) else src0
     val slices = collectSrc
       .join(gated(pending), Seq("g", "t"))
       .filter(col("v").between(col("flo"), col("fhi")))

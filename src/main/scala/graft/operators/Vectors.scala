@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Materialize
 import graft.functions.VectorExprs
 
 /** Similarity search over embedding columns (SURVEY.md §2 B21): brute-force
@@ -294,36 +295,34 @@ object Vectors {
     // touching the array.
     val hashed = emb.select(col("vec_id"), col("embedding"),
       xxhash64(col("embedding")).as("eh"))
-    val groups = hashed.groupBy(col("eh"), col("embedding"))
-      .agg(graft.functions.BottomIds(k + 1)(col("vec_id")).as("low_ids"))
+    // One materialization job stores the groups and measures what the
+    // gates below need: the group count, the corpus rows they hold (the
+    // collision check on the members join) and the vector dimension.
+    // Makes the operator eager at construction (the same trade
+    // Ntile/Percentiles made for their gates).
+    val groupsM = Materialize(hashed.groupBy(col("eh"), col("embedding"))
+      .agg(graft.functions.BottomIds(k + 1)(col("vec_id")).as("low_ids"),
+        count(lit(1)).as("grp_n"))
       .select(col("eh"), col("embedding"),
-        element_at(col("low_ids"), 1).as("rep"), col("low_ids"))
-      // eager=false is not lazy under AQE: this call runs the groupBy's
-      // shuffle-map stage at once, and the census below runs the rest
-      .localCheckpoint(false)
+        element_at(col("low_ids"), 1).as("rep"), col("low_ids"),
+        col("grp_n"), size(col("embedding")).as("dim")),
+      "Vectors.knnLshDeduped groups",
+      Materialize.sum("grp_n"), Materialize.max("dim"))
+    val groups = groupsM.df
     val reps = groups.select(col("rep").as("vec_id"), col("embedding"))
-    // census over the checkpointed groups frame, shared by the collision
-    // check here and the expansion-join broadcast gate below. Makes the
-    // operator eager at construction (the same trade Ntile/Percentiles
-    // made for their gates).
-    // the same single census job also measures the vector dimension
-    // (r15): max(size) rides the existing aggregate for free and sizes
-    // the rep-frame broadcast gate below — no extra blocking execution.
-    val censusRow = groups.agg(count(lit(1)), count_distinct(col("eh")),
-      max(size(col("embedding")))).head()
-    val (nGroups, nHashes) = (censusRow.getLong(0), censusRow.getLong(1))
-    val dim = if (censusRow.isNullAt(2)) 0L else censusRow.getInt(2).toLong
+    val (nGroups, nRows) = (groupsM.rows, groupsM.sum(0))
+    val dim = groupsM.value(1).getOrElse(0L)
     // Rep-frame broadcast gate (r15, VERDICT r14 item 3 — the query sat
-    // flat two rounds at ~15 AQE stage jobs in ONE execution): every
-    // frame below descends from the checkpointed groups, so Catalyst has
-    // no stats and plans the bucket self-join, both vector re-joins, and
-    // the group-metadata joins as sort-merge — a shuffle pair of AQE
-    // stage jobs each, for frames of nGroups rows. Under the same
-    // 2·10⁶-cell posture as the repArr gate (a rep row is dim floats +
-    // 2 longs), those sides broadcast instead. At 100 TB unique-corpus
+    // flat two rounds at ~15 AQE stage jobs in ONE execution): the
+    // bucket self-join, both vector re-joins and the group-metadata joins
+    // read frames of nGroups rows derived from groups, which without a
+    // hint planned as sort-merge — a shuffle pair of AQE stage jobs each.
+    // Under the same 2·10⁶-cell posture as the repArr gate (a rep row is
+    // dim floats + 2 longs; the cap admits past the 10 MB auto-broadcast
+    // threshold), those sides broadcast instead. At 100 TB unique-corpus
     // volume the gate is off and the plan is byte-identical to r14's.
     val repsFit = nGroups * (dim + 2L) <= 2000000L
-    def repSide(df: DataFrame): DataFrame = if (repsFit) broadcast(df) else df
+    val repSide = groupsM.broadcastIf(repsFit) _
     // the bucket self-join's side is the rep frame exploded per table:
     // nGroups × tables rows of (id, t, bucket), sized on its own (at
     // dim 2 and 8 tables, repsFit alone admits 6× the cap on this side)
@@ -332,28 +331,26 @@ object Vectors {
     // HASH ALONE — a one-long join key, so neither side ever sorts or
     // hashes the array (joining on (eh, embedding) was measured 3x
     // slower at sf100: the SMJ sort walks the full vector per
-    // comparison). Exactness under xxhash64 collisions comes from the
-    // census, not a per-row guard: when every group owns a distinct hash
-    // (nHashes == nGroups — every corpus in practice), joining on eh
-    // alone IS exact and the join goes bare-id — no 128-float equality
-    // walked per corpus row, and the build side shrinks from ~1 KB/row
-    // to 16 B/row. Only a measured collision (two different embeddings
-    // sharing an eh) keeps the embedding-equality filter. In the
-    // duplication regime groups is tiny, AQE broadcasts it, and the
-    // corpus never shuffles.
-    val members = (if (nHashes == nGroups)
-      hashed.select(col("eh"), col("vec_id"))
+    // comparison). Exactness under xxhash64 collisions is checked, not
+    // guarded per row: every corpus row joins its own group, so the
+    // bare-eh join has exactly Σ group sizes rows iff no two different
+    // embeddings share an eh (every corpus in practice) — then it IS
+    // exact, no 128-float equality is walked per corpus row, and the
+    // build side is 16 B/row instead of ~1 KB/row. Only a measured
+    // collision re-runs the join with the embedding-equality filter. In
+    // the duplication regime groups is tiny and broadcast, and the corpus
+    // never shuffles. Bare ids: 16 B/row however duplicated.
+    val bareMembers = Materialize(hashed.select(col("eh"), col("vec_id"))
         .join(repSide(groups.select(col("eh"), col("rep"))), Seq("eh"))
-    else
-      hashed
-        .join(repSide(groups.select(col("eh"),
-            col("embedding").as("gemb"), col("rep"))),
-          Seq("eh"))
-        .filter(col("embedding") === col("gemb")))
-      .select(col("rep"), col("vec_id").as("member"))
-      // bare ids: 16 B/row however duplicated. Under AQE this call runs
-      // the join's input stages at once; only the result stage waits
-      .localCheckpoint(false)
+        .select(col("rep"), col("vec_id").as("member")),
+      "Vectors.knnLshDeduped members")
+    val members = if (bareMembers.rows == nRows) bareMembers.df
+      else Materialize(hashed
+          .join(repSide(groups.select(col("eh"), col("embedding").as("gemb"),
+            col("rep"))), Seq("eh"))
+          .filter(col("embedding") === col("gemb"))
+          .select(col("rep"), col("vec_id").as("member")),
+        "Vectors.knnLshDeduped members by embedding").df
     val lowArr = groups.select(col("rep"), col("low_ids"))
     // rank candidate groups per probe group; keep the k that can matter.
     // Tiebreak on id_b directly: a group's rep IS its lowest member id,
@@ -400,11 +397,10 @@ object Vectors {
       .agg(array_sort(collect_list(
         struct(col("rn"), col("id_b"), col("cos_sim")))).as("cand"))
     // member expansion by ARRAY ops only: drop the self row (at most one),
-    // keep the first k. repArr descends from checkpointed frames, so
-    // Catalyst sees no stats and plans a shuffle join even when repArr is
-    // tiny — the same blind spot the census-gated broadcasts close in
-    // Dedup/Ntile/Percentiles. Apply the same discipline: groups is
-    // checkpointed, one cheap count decides; under the cap the ≤ k+1
+    // keep the first k. repArr is an aggregate over a window over joins,
+    // whose size Catalyst cannot bound from the measured inputs, so it
+    // plans a shuffle join even when repArr is tiny. The measured group
+    // count decides instead; under the cap the ≤ k+1
     // structs/rep frame broadcasts onto the membership rows (the
     // duplication regime and every bench SF), past it the hint is
     // dropped and the duplicate-free 100 TB regime keeps the bare

@@ -87,17 +87,20 @@ FROM features WHERE $mainWhere ORDER BY id"""
 
   /** Flatten a truncated-geometry frame to the scalar columns
     * [[coordTruncateSql]] compares (first/last position components).
+    * Components are read with `try_element_at`: under ANSI mode
+    * `element_at` past a 2-component position fails the query instead of
+    * giving null.
     */
   def truncatedScalars(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     val pos = CalTopo.firstPosition(col("geometry"))
     val lpos = CalTopo.lastPosition(col("geometry"))
     df.select(col("id"), col("geometry.type").as("geom_type"),
       size(pos).as("n_components"),
-      element_at(pos, 1).as("x"), element_at(pos, 2).as("y"),
-      element_at(pos, 3).as("z"),
+      try_element_at(pos, lit(1)).as("x"), try_element_at(pos, lit(2)).as("y"),
+      try_element_at(pos, lit(3)).as("z"),
       size(lpos).as("n_last"),
-      element_at(lpos, 1).as("xl"), element_at(lpos, 2).as("yl"),
-      element_at(lpos, 3).as("zl"))
+      try_element_at(lpos, lit(1)).as("xl"), try_element_at(lpos, lit(2)).as("yl"),
+      try_element_at(lpos, lit(3)).as("zl"))
       .orderBy("id")
   }
 

@@ -244,18 +244,16 @@ SELECT (SELECT COUNT(*) FROM v) AS n_view,
           unix_micros(col("ts")).as("t"))
       // each stage feeds TWO consumers (its count + the next stage's
       // build side) and Spark re-executes a shared subplan per consumer —
-      // a repeated full fact pass at 100 TB. Lazy checkpoints materialize
-      // each stage once at execution, nothing at plan time.
+      // a repeated full fact pass at 100 TB. Deferred materializations
+      // store each stage once at execution, nothing at plan time.
       def step(prev: org.apache.spark.sql.DataFrame, prevT: String,
           etype: String, outT: String) =
-        ev.filter(col("event_type") === etype)
+        graft.Materialize.deferred(ev.filter(col("event_type") === etype)
           .join(prev, "user_id")
           .filter(col("t") > col(prevT) && col("t") <= col(prevT) + W)
-          .groupBy("user_id").agg(min(col("t")).as(outT))
-          .localCheckpoint(false)
-      val v = ev.filter(col("event_type") === "view")
-        .groupBy("user_id").agg(min(col("t")).as("t1"))
-        .localCheckpoint(false)
+          .groupBy("user_id").agg(min(col("t")).as(outT)), s"q_event_funnel $etype")
+      val v = graft.Materialize.deferred(ev.filter(col("event_type") === "view")
+        .groupBy("user_id").agg(min(col("t")).as("t1")), "q_event_funnel view")
       val c = step(v, "t1", "click", "t2")
       val p = step(c, "t2", "purchase", "t3")
       v.agg(count(lit(1)).as("n_view"))
@@ -289,12 +287,12 @@ FROM bins LEFT JOIN c USING (bin) ORDER BY bin_start_us""") { (s, d) =>
       // table a second time. The counts table is bounded by the TIME
       // RANGE (one row per observed minute), so materializing it for its
       // two consumers (spine + join) is cheap and the corpus is read once.
-      // LAZY (r10): both consumers (spine + join) run inside the ONE
+      // DEFERRED (r10): both consumers (spine + join) run inside the ONE
       // final query execution, whose first task to touch a partition
-      // materializes it — an eager checkpoint here paid a dedicated
+      // stores it — an eager checkpoint here paid a dedicated
       // driver-blocking job at build time for nothing
-      val counts = ev.groupBy("bin").agg(count(lit(1)).as("n_events"))
-        .localCheckpoint(false)
+      val counts = graft.Materialize.deferred(
+        ev.groupBy("bin").agg(count(lit(1)).as("n_events")), "q_event_resample counts")
       val bins = counts.agg(min(col("bin")).as("mn"), max(col("bin")).as("mx"))
         .select(explode(sequence(col("mn"), col("mx"))).as("bin"))
       bins.join(counts, Seq("bin"), "left")

@@ -1,6 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
+import graft.Materialize
 import graft.operators.Dedup
 import graft.sources.Tables
 
@@ -36,11 +37,10 @@ object TextQueries {
 
   /** (doc_id, g): every word 5-gram of every document, in ONE window pass
     * (all leads share the window spec; the 4-ahead lead doubles as the
-    * tail trim — null past the doc's last word). Materialized with
-    * localCheckpoint because every consumer reads it from both sides of a
-    * join or filter split, and Spark re-executes a shared subplan per
-    * consumer. Checkpointed with eager=false, which is not lazy under
-    * AQE: the call runs the window's shuffle-map stage at once, and only
+    * tail trim — null past the doc's last word). Materialized (deferred)
+    * because every consumer reads it from both sides of a join or filter
+    * split, and Spark re-executes a shared subplan per consumer. Under
+    * AQE the call runs the window's shuffle-map stage at once, and only
     * the result stage waits for the first execution — so even a
     * plan-only consumer (plan audits, explain) runs that shuffle job at
     * build time. Used by q_text_contamination and
@@ -50,7 +50,7 @@ object TextQueries {
       d: String): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val seq5 = Window.partitionBy("doc_id").orderBy("pos")
-    Tables.documents(s, d)
+    Materialize.deferred(Tables.documents(s, d)
       .select(col("doc_id"),
         posexplode(split(col("text"), " ")).as(Seq("pos", "w")))
       .select(col("doc_id"), col("w"),
@@ -65,9 +65,23 @@ object TextQueries {
       // contamination scaladoc promised
       .select(col("doc_id"),
         xxhash64(col("w"), col("w1"), col("w2"), col("w3"),
-          col("w4")).as("g"))
-      .localCheckpoint(false)
+          col("w4")).as("g")), "TextQueries.fiveGrams")
   }
+
+  /** The truth frame of the oracle-paired dedup queries: exact
+    * word-trigram Jaccard ≥ 0.5 pairs inside a 200-id window
+    * ([[Dedup.exactJaccardWindowPairs]], whose gram-kernel pass is
+    * materialized eagerly — BASELINE.md r12 "Eager gram-array
+    * checkpoint"). The kernel input — and ONLY it — is spreadSmall'd so
+    * the pass runs on all cores; the queries' other document consumers
+    * are id-joins that would pay the extra exchange for nothing (measured
+    * r14: spreading the pipeline's documents put q_dedup_pipeline from
+    * 4.5 to ~6.5 s).
+    */
+  private def windowTruth(s: org.apache.spark.sql.SparkSession,
+      d: String): org.apache.spark.sql.DataFrame =
+    Dedup.exactJaccardWindowPairs(Tables.spreadSmall(s, d, "documents")
+      .select(col("doc_id").as("id"), col("text")), tau = 0.5, window = 200)
 
   /** Declared rows + flag for the two oracle-paired pipeline queries
     * (r10): survivors of the REAL CC operator over the exact window-pair
@@ -76,61 +90,104 @@ object TextQueries {
     * agreement flag computed genuinely from `realPipeline`'s output:
     * arm 1 — ≥70% of declared survivors survive the real pipeline (an
     * over-dropping pipeline fails); arm 2 — ≥70% of truth-dropped ids are
-    * also dropped by it (a no-op pipeline fails). All scalars ride back
-    * on broadcast single-row crossJoins; the mark join is checkpointed
-    * so every subplan executes once. Both checkpoints here use
-    * eager=false, but under AQE each call runs its subplan's shuffle-map
-    * stages at once, in the build phase; only the result stages wait.
+    * also dropped by it (a no-op pipeline fails). Every document is
+    * materialized once with both keep decisions, and that one job's sum
+    * folds count both arms, so the flag is a literal and every subplan
+    * executes once.
     */
   private def survivorsAgainstTruth(s: org.apache.spark.sql.SparkSession,
       d: String,
-      realPipeline: (org.apache.spark.sql.DataFrame,
-        Option[org.apache.spark.sql.DataFrame]) => org.apache.spark.sql.DataFrame,
+      realPipeline: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame,
       flagName: String): org.apache.spark.sql.DataFrame = {
     val docsL = Tables.documents(s, d)
       .select(col("doc_id").as("id"), col("text"), col("lang"))
-    // ONE gram-kernel pass shared by the truth frame and the real
-    // pipeline's minhash signatures (r14 — doc at
-    // Dedup.exactJaccardWindowPairsArr); eager for the same AQE-race
-    // reason as the operator default (BASELINE.md r12 "Eager gram-array
-    // checkpoint"). The kernel input — and ONLY it — is spreadSmall'd:
-    // the checkpoint is the corpus' one kernel pass, while docsL's other
-    // consumers are id-joins that would pay the extra exchange for nothing (measured r14: spreading docsL
-    // itself put q_dedup_pipeline from 4.5 to ~6.5 s)
-    val gramArr = Dedup.gramHashSets(Tables.spreadSmall(s, d, "documents")
-        .select(col("doc_id").as("id"), col("text")))
-      .localCheckpoint(true)
-    val truth = Dedup.exactJaccardWindowPairsArr(gramArr, tau = 0.5,
-      window = 200)
-    // NO caller checkpoint on the labels (r15): the driver route returns a
-    // LocalRelation (literal driver data — its two consumers below re-read
-    // rows, never a subplan) and the distributed route's labels are the CC
-    // loop's own eager per-round checkpoint — the extra eager=false checkpoint
-    // only re-copied either into fresh blocks inside the final execution
-    val labels = Dedup.clusters(truth)
-    val declared = docsL.join(labels, Seq("id"), "left")
-      .filter(col("cluster").isNull || col("cluster") === col("id"))
-      .select(col("id").as("doc_id"), col("lang"))
-    // real pipeline recomputes its gram kernel (candidate-side share
-    // reverted after the sf10 probe — see q_dedup_minhash); the shared
-    // frame still serves the truth construct above
-    val real = realPipeline(docsL, None)
-      .select(col("id").as("doc_id"), lit(1).as("__rs"))
-      .localCheckpoint(false) // feeds both flag arms
-    val marked = declared.join(real, Seq("doc_id"), "left")
-      .localCheckpoint(false)
-    val arm1 = marked.agg((count(col("__rs")) >=
-      count(lit(1)).cast("double") * lit(0.7)).as("__a1"))
-    val arm2 = labels.filter(col("cluster") =!= col("id"))
-      .select(col("id").as("doc_id"))
-      .join(real, Seq("doc_id"), "left")
-      .agg((count(when(col("__rs").isNull, 1)) >=
-        count(lit(1)).cast("double") * lit(0.7)).as("__a2"))
-    val flag = arm1.crossJoin(arm2)
-      .select((col("__a1") && col("__a2")).as(flagName))
-    marked.drop("__rs").crossJoin(broadcast(flag))
+    // no caller materialization of the labels (r15): the driver route
+    // returns a LocalRelation and the distributed route's labels are the
+    // CC loop's own per-round materialization
+    val labels = Dedup.clusters(windowTruth(s, d))
+    // the real pipeline recomputes its gram kernel (candidate-side share
+    // reverted after the sf10 probe — see q_dedup_minhash)
+    val real = realPipeline(docsL)
+      .select(col("id").as("doc_id"), lit(true).as("__rs"))
+    val truthKeep = col("cluster").isNull || col("cluster") === col("id")
+    val marked = Materialize(docsL.join(labels, Seq("id"), "left")
+        .select(col("id").as("doc_id"), col("lang"), truthKeep.as("__tk"))
+        .join(real, Seq("doc_id"), "left")
+        .select(col("doc_id"), col("lang"), col("__tk"),
+          (col("__tk") && col("__rs").isNotNull).as("__both_keep"),
+          (!col("__tk") && col("__rs").isNull).as("__both_drop")),
+      s"TextQueries $flagName", Materialize.sum("__tk"),
+      Materialize.sum("__both_keep"), Materialize.sum("__both_drop"))
+    val (declared, dropped) = (marked.sum(0), marked.rows - marked.sum(0))
+    val ok = marked.sum(1) >= declared.toDouble * 0.7 &&
+      marked.sum(2) >= dropped.toDouble * 0.7
+    marked.route(s"$flagName=$ok")
+    marked.df.filter(col("__tk"))
+      .select(col("doc_id"), col("lang"), lit(ok).as(flagName))
       .orderBy("doc_id")
   }
+
+  // DuckDB oracle text of the window-pair dedup queries: per-doc distinct
+  // word trigrams as strings, and the exact Jaccard of a doc pair
+  private val trigramsCte = """grams AS (
+  SELECT doc_id, list_distinct(
+    list_transform(range(1, greatest(len(string_split(text,' ')) - 2, 1) + 1),
+      i -> array_to_string(string_split(text,' ')[i:i+2], ' '))) AS g
+  FROM documents)"""
+  private val jaccardSql = """CAST(len(list_intersect(a.g, b.g)) AS DOUBLE)
+    / (len(a.g) + len(b.g) - len(list_intersect(a.g, b.g)))"""
+  private def windowJoinSql(window: Int, tau: Double): String =
+    s"""FROM grams a JOIN grams b
+  ON b.doc_id > a.doc_id AND b.doc_id <= a.doc_id + $window
+WHERE $jaccardSql >= $tau"""
+
+  /** Exact Jaccard ≥ `tau` pairs inside a `window`-id window, plus a TRUE
+    * `flag` column when given (the oracle of a recall-flagged query).
+    */
+  private def windowPairsSql(window: Int, tau: Double, flag: Option[String]): String =
+    s"""WITH $trigramsCte
+SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+  $jaccardSql AS jaccard${flag.map(f => s",\n  TRUE AS $f").getOrElse("")}
+${windowJoinSql(window, tau)}
+ORDER BY id_a, id_b"""
+
+  /** Transitive closure of the window-200 truth edges (recursive CTE). */
+  private val reachCtes = s"""WITH RECURSIVE $trigramsCte,
+pairs AS (
+  SELECT a.doc_id AS id_a, b.doc_id AS id_b
+  ${windowJoinSql(200, 0.5)}),
+edges AS (
+  SELECT id_a AS src, id_b AS dst FROM pairs
+  UNION
+  SELECT id_b, id_a FROM pairs),
+reach(src, dst) AS (
+  SELECT src, dst FROM edges
+  UNION
+  SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src
+    WHERE e.dst <> r.src)"""
+
+  /** Min-id cluster labels of the truth closure, plus a TRUE `flag`. */
+  private def clustersSql(flag: String): String = s"""$reachCtes
+SELECT src AS id, least(src, min(dst)) AS cluster, TRUE AS $flag
+FROM reach GROUP BY src ORDER BY id"""
+
+  /** Documents the truth closure keeps (no smaller-id cluster), plus a
+    * TRUE `flag`.
+    */
+  private def pipelineSql(flag: String): String = s"""$reachCtes,
+labels AS (
+  SELECT src AS id, least(src, min(dst)) AS cluster FROM reach GROUP BY src)
+SELECT d.doc_id, d.lang, TRUE AS $flag
+FROM documents d
+WHERE d.doc_id NOT IN (SELECT id FROM labels WHERE cluster <> id)
+ORDER BY doc_id"""
+
+  /** Oracle CTEs of every document's word 5-grams as strings ([[fiveGrams]]). */
+  private val fiveGramsCte = """WITH t AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
+e AS (SELECT doc_id, ws, unnest(range(1, greatest(len(ws)-4, 0) + 1)) AS i FROM t),
+grams AS (
+  SELECT doc_id, array_to_string(ws[CAST(i AS INT):CAST(i+4 AS INT)], ' ') AS g
+  FROM e),"""
 
   val all: Seq[Q] = Seq(
 
@@ -356,47 +413,15 @@ ORDER BY doc_id, score DESC, word""") { (s, d) =>
     // duplicates — q_dedup_clusters_exact_first below collapses the
     // d²-inflated clique graph first; this plain form stays as the
     // uncollapsed baseline.
-    Q("q_dedup_clusters",
-      """WITH RECURSIVE grams AS (
-  SELECT doc_id, list_distinct(
-    list_transform(range(1, greatest(len(string_split(text,' ')) - 2, 1) + 1),
-      i -> array_to_string(string_split(text,' ')[i:i+2], ' '))) AS g
-  FROM documents),
-pairs AS (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b
-  FROM grams a JOIN grams b
-    ON b.doc_id > a.doc_id AND b.doc_id <= a.doc_id + 200
-  WHERE CAST(len(list_intersect(a.g, b.g)) AS DOUBLE)
-      / (len(a.g) + len(b.g) - len(list_intersect(a.g, b.g))) >= 0.5),
-edges AS (
-  SELECT id_a AS src, id_b AS dst FROM pairs
-  UNION
-  SELECT id_b, id_a FROM pairs),
-reach(src, dst) AS (
-  SELECT src, dst FROM edges
-  UNION
-  SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src
-    WHERE e.dst <> r.src)
-SELECT src AS id, least(src, min(dst)) AS cluster, TRUE AS minhash_cluster_ok
-FROM reach GROUP BY src ORDER BY id""") { (s, d) =>
-      // one shared gram-kernel pass (spreadSmall'd input) for truth AND
-      // the flag pipeline's minhash signatures (r14)
+    Q("q_dedup_clusters", clustersSql("minhash_cluster_ok")) { (s, d) =>
       val docs = Tables.documents(s, d)
         .select(col("doc_id").as("id"), col("text"))
-      val gramArr = Dedup.gramHashSets(Tables.spreadSmall(s, d, "documents")
-          .select(col("doc_id").as("id"), col("text")))
-        .localCheckpoint(true)
-      val truth = Dedup.exactJaccardWindowPairsArr(gramArr, tau = 0.5,
-          window = 200)
-        .localCheckpoint(false) // feeds the CC operator AND the flag
-      // ONE truth census, shared (r15, VERDICT r14 item 1): the count
-      // routes the CC call (knownCount — clusters skips its own
-      // checkpoint + census) AND bounds the flag's tids broadcast
-      // (truthPairs — the tids census is skipped). The flag's
-      // driver-routed minhash assignment is a LocalRelation, so its
-      // censuses are skipped too — 8 driver-blocking executions down to 6.
-      val truthN = truth.count()
-      val declared = Dedup.clusters(truth, knownCount = Some(truthN))
+      // ONE truth materialization feeds the CC operator AND the flag; its
+      // measured count routes the CC call (clusters stores nothing again)
+      // and bounds the flag's tids broadcast. The flag's driver-routed
+      // minhash assignment is a LocalRelation, so it needs no count job.
+      val truth = Materialize(windowTruth(s, d), "q_dedup_clusters truth").df
+      val declared = Dedup.clusters(truth)
       // truth-restricted agreement (r12, VERDICT r11 item 1): the flag
       // only reads the assignment at truth-pair ids, so the corpus-sized
       // label frame is semi-filtered to them before the endpoint joins —
@@ -406,7 +431,7 @@ FROM reach GROUP BY src ORDER BY id""") { (s, d) =>
       // reverted after the sf10 probe — see q_dedup_minhash)
       val flag = Dedup.clusterAgreementFlag(truth,
         Dedup.clusters(Dedup.minhashPairs(docs, threshold = 0.5)),
-        bound = 0.7, name = "minhash_cluster_ok", truthPairs = Some(truthN))
+        bound = 0.7, name = "minhash_cluster_ok")
       declared.crossJoin(broadcast(flag)).orderBy("id")
     },
 
@@ -421,45 +446,18 @@ FROM reach GROUP BY src ORDER BY id""") { (s, d) =>
     // ORACLE-PAIRED since r10: same declared truth-CC rows as
     // q_dedup_clusters (same oracle closure), with the flag computed from
     // THIS operator's full collapse→CC→expand composition instead.
-    Q("q_dedup_clusters_exact_first",
-      """WITH RECURSIVE grams AS (
-  SELECT doc_id, list_distinct(
-    list_transform(range(1, greatest(len(string_split(text,' ')) - 2, 1) + 1),
-      i -> array_to_string(string_split(text,' ')[i:i+2], ' '))) AS g
-  FROM documents),
-pairs AS (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b
-  FROM grams a JOIN grams b
-    ON b.doc_id > a.doc_id AND b.doc_id <= a.doc_id + 200
-  WHERE CAST(len(list_intersect(a.g, b.g)) AS DOUBLE)
-      / (len(a.g) + len(b.g) - len(list_intersect(a.g, b.g))) >= 0.5),
-edges AS (
-  SELECT id_a AS src, id_b AS dst FROM pairs
-  UNION
-  SELECT id_b, id_a FROM pairs),
-reach(src, dst) AS (
-  SELECT src, dst FROM edges
-  UNION
-  SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src
-    WHERE e.dst <> r.src)
-SELECT src AS id, least(src, min(dst)) AS cluster, TRUE AS exact_first_cluster_ok
-FROM reach GROUP BY src ORDER BY id""") { (s, d) =>
-      // the truth gram pass runs over a spreadSmall'd scan; the flag's
-      // exact-first composition collapses identical texts BEFORE
-      // shingling (rep-level gram pass — a different doc set), so it
-      // keeps the plain scan (its docs consumers are joins/aggregates
+    Q("q_dedup_clusters_exact_first", clustersSql("exact_first_cluster_ok")) { (s, d) =>
+      // the flag's exact-first composition collapses identical texts
+      // BEFORE shingling (rep-level gram pass — a different doc set), so
+      // it keeps the plain scan (its docs consumers are joins/aggregates
       // where the spread exchange is pure overhead)
       val docs = Tables.documents(s, d)
         .select(col("doc_id").as("id"), col("text"))
-      val truth = Dedup.exactJaccardWindowPairs(
-          Tables.spreadSmall(s, d, "documents")
-            .select(col("doc_id").as("id"), col("text")),
-          tau = 0.5, window = 200)
-        .localCheckpoint(false)
-      // ONE truth census shared by the CC route gate and the flag's tids
-      // broadcast gate (r15 — see q_dedup_clusters)
-      val truthN = truth.count()
-      val declared = Dedup.clusters(truth, knownCount = Some(truthN))
+      // ONE truth materialization: its count routes the CC call and
+      // bounds the flag's tids broadcast (see q_dedup_clusters)
+      val truth = Materialize(windowTruth(s, d),
+        "q_dedup_clusters_exact_first truth").df
+      val declared = Dedup.clusters(truth)
       // truth-restricted agreement (r12, VERDICT r11 item 1): on the
       // duplication-adversarial decades EVERY doc carries a label (d ≥ 2
       // copies ⇒ exact clique), so the r11 shape shuffled the 5 M-row
@@ -470,8 +468,7 @@ FROM reach GROUP BY src ORDER BY id""") { (s, d) =>
       // executes once (the flag stays genuinely at risk), value-identical
       val flag = Dedup.clusterAgreementFlag(truth,
         Dedup.clustersExactFirst(docs, threshold = 0.5),
-        bound = 0.7, name = "exact_first_cluster_ok",
-        truthPairs = Some(truthN))
+        bound = 0.7, name = "exact_first_cluster_ok")
       declared.crossJoin(broadcast(flag)).orderBy("id")
     },
 
@@ -529,18 +526,17 @@ FROM documents d JOIN c USING (lang) CROSS JOIN m
 WHERE ((d.doc_id & 2147483647) * 2654435761) % c.cnt < m.mn
 ORDER BY d.doc_id""") { (s, d) =>
       val docs = Tables.documents(s, d)
-      // Eager checkpoint: the join infers isnotnull(lang) into ITS copy of
+      // Materialized: the join infers isnotnull(lang) into ITS copy of
       // this aggregate's scan while the global-min branch must keep the
       // null-lang group, so the two subplans canonicalize differently and
       // exchange reuse cannot serve them — without materialization the
       // corpus is scanned once per branch. The aggregate is |langs| rows.
-      // checkpoint with eager=false (r10): under AQE the call still runs
-      // the aggregate's shuffle-map stage at once, but the result stage
-      // runs inside the one final query execution (first task
-      // materializes, the other reads cache) — the eager form paid a
-      // dedicated build-time job for it
-      val c = docs.groupBy("lang").agg(count(lit(1)).as("cnt"))
-        .localCheckpoint(false)
+      // Deferred (r10): under AQE the call still runs the aggregate's
+      // shuffle-map stage at once, but the result stage runs inside the
+      // one final query execution (first task stores, the other reads) —
+      // the eager form paid a dedicated build-time job for it
+      val c = Materialize.deferred(
+        docs.groupBy("lang").agg(count(lit(1)).as("cnt")), "q_sample_mixture counts")
       val m = c.agg(min(col("cnt")).as("mn"))
       docs.join(broadcast(c), "lang")
         .crossJoin(broadcast(m))
@@ -631,20 +627,7 @@ ORDER BY keeper""") { (s, d) =>
     // B20c — n-gram Jaccard near-dup pairs in a doc_id neighbor window
     // (exact word-trigram Jaccard; the window is the SQL-expressible
     // blocking stand-in for LSH blocking).
-    Q("q_dedup_ngram_jaccard",
-      """WITH grams AS (
-  SELECT doc_id, list_distinct(
-    list_transform(range(1, greatest(len(string_split(text,' ')) - 2, 1) + 1),
-      i -> array_to_string(string_split(text,' ')[i:i+2], ' '))) AS g
-  FROM documents)
-SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-  CAST(len(list_intersect(a.g, b.g)) AS DOUBLE)
-    / (len(a.g) + len(b.g) - len(list_intersect(a.g, b.g))) AS jaccard
-FROM grams a JOIN grams b
-  ON b.doc_id > a.doc_id AND b.doc_id <= a.doc_id + 5
-WHERE CAST(len(list_intersect(a.g, b.g)) AS DOUBLE)
-    / (len(a.g) + len(b.g) - len(list_intersect(a.g, b.g))) >= 0.8
-ORDER BY id_a, id_b""") { (s, d) =>
+    Q("q_dedup_ngram_jaccard", windowPairsSql(5, 0.8, None)) { (s, d) =>
       // hashed grams, not gram strings: 64-bit gram hashes are 1-1 with
       // the oracle's string trigrams on this corpus (single-space, all
       // lowercase, no short docs — asserted in TextSpec), so intersection
@@ -678,31 +661,10 @@ ORDER BY id_a, id_b""") { (s, d) =>
     // signature, band join, or bucket cap still flips the flag red.
     // Index internals never enter the hash; DedupSpec keeps the raw
     // candidate-set pins on the operator itself.
-    Q("q_dedup_minhash",
-      """WITH grams AS (
-  SELECT doc_id, list_distinct(
-    list_transform(range(1, greatest(len(string_split(text,' ')) - 2, 1) + 1),
-      i -> array_to_string(string_split(text,' ')[i:i+2], ' '))) AS g
-  FROM documents)
-SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-  CAST(len(list_intersect(a.g, b.g)) AS DOUBLE)
-    / (len(a.g) + len(b.g) - len(list_intersect(a.g, b.g))) AS jaccard,
-  TRUE AS minhash_recall_ok
-FROM grams a JOIN grams b
-  ON b.doc_id > a.doc_id AND b.doc_id <= a.doc_id + 200
-WHERE CAST(len(list_intersect(a.g, b.g)) AS DOUBLE)
-    / (len(a.g) + len(b.g) - len(list_intersect(a.g, b.g))) >= 0.5
-ORDER BY id_a, id_b""") { (s, d) =>
-      // one shared gram-kernel pass for truth AND candidate signatures
-      // (r14 — doc at Dedup.exactJaccardWindowPairsArr); the kernel input
-      // is spreadSmall'd so the pass runs on all cores
+    Q("q_dedup_minhash", windowPairsSql(200, 0.5, Some("minhash_recall_ok"))) { (s, d) =>
       val docs = Tables.documents(s, d)
         .select(col("doc_id").as("id"), col("text"))
-      val gramArr = Dedup.gramHashSets(Tables.spreadSmall(s, d, "documents")
-          .select(col("doc_id").as("id"), col("text")))
-        .localCheckpoint(true)
-      val truth = Dedup.exactJaccardWindowPairsArr(gramArr, tau = 0.5,
-        window = 200)
+      val truth = windowTruth(s, d)
       // same blocking universe as the truth frame: candidates outside the
       // window are neither hits nor misses. The candidate signature pass
       // RECOMPUTES the gram kernel rather than reading the truth frame's
@@ -731,21 +693,7 @@ ORDER BY id_a, id_b""") { (s, d) =>
     // (sf0.001 recall >= 0.6 vs 0.722 recorded; ADVICE r10). DedupSpec
     // also keeps the raw pins (distance-0 word shuffles, unrelated docs
     // unpaired, drop accounting).
-    Q("q_dedup_simhash",
-      """WITH grams AS (
-  SELECT doc_id, list_distinct(
-    list_transform(range(1, greatest(len(string_split(text,' ')) - 2, 1) + 1),
-      i -> array_to_string(string_split(text,' ')[i:i+2], ' '))) AS g
-  FROM documents)
-SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-  CAST(len(list_intersect(a.g, b.g)) AS DOUBLE)
-    / (len(a.g) + len(b.g) - len(list_intersect(a.g, b.g))) AS jaccard,
-  TRUE AS simhash_recall_ok
-FROM grams a JOIN grams b
-  ON b.doc_id > a.doc_id AND b.doc_id <= a.doc_id + 200
-WHERE CAST(len(list_intersect(a.g, b.g)) AS DOUBLE)
-    / (len(a.g) + len(b.g) - len(list_intersect(a.g, b.g))) >= 0.5
-ORDER BY id_a, id_b""") { (s, d) =>
+    Q("q_dedup_simhash", windowPairsSql(200, 0.5, Some("simhash_recall_ok"))) { (s, d) =>
       // r15: spread REVERTED (r14 spread both the truth gram pass and the
       // simhash word-explode signature pass) — driver ground truth 0.75×,
       // 8-core ratio 0.64 (PERF_r14.json; VERDICT r14 item 2): the spread
@@ -786,11 +734,7 @@ FROM e ORDER BY doc_id, chunk_id""") { (s, d) =>
     // |distinct grams|, not |gram occurrences|; at 100 TB the gram would
     // be a 64-bit hash (1-1 on this corpus) to shrink shuffle bytes.
     Q("q_text_contamination",
-      """WITH t AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-e AS (SELECT doc_id, ws, unnest(range(1, greatest(len(ws)-4, 0) + 1)) AS i FROM t),
-grams AS (
-  SELECT doc_id, array_to_string(ws[CAST(i AS INT):CAST(i+4 AS INT)], ' ') AS g
-  FROM e),
+      s"""$fiveGramsCte
 test_grams AS (SELECT DISTINCT doc_id, g FROM grams WHERE doc_id % 2 = 1),
 train_grams AS (SELECT DISTINCT g FROM grams WHERE doc_id % 2 = 0)
 SELECT doc_id, COUNT(*) AS n_shared
@@ -812,11 +756,7 @@ GROUP BY doc_id ORDER BY doc_id""") { (s, d) =>
     // and never materialize unmatched rows, so at 100 TB the output costs
     // no more than the scan plus the (distinct-bounded) gram join.
     Q("q_pipeline_decontaminate",
-      """WITH t AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-e AS (SELECT doc_id, ws, unnest(range(1, greatest(len(ws)-4, 0) + 1)) AS i FROM t),
-grams AS (
-  SELECT doc_id, array_to_string(ws[CAST(i AS INT):CAST(i+4 AS INT)], ' ') AS g
-  FROM e),
+      s"""$fiveGramsCte
 test_g AS (SELECT DISTINCT g FROM grams WHERE doc_id % 2 = 1),
 bad AS (SELECT DISTINCT doc_id FROM grams
         WHERE doc_id % 2 = 0 AND g IN (SELECT g FROM test_g))
@@ -850,37 +790,9 @@ ORDER BY d.doc_id""") { (s, d) =>
     // measured 0.955–0.983 / 1.000 at sf0.001/0.01/0.1
     // (DedupRecallProbe r10; arm 1 is sub-1 because the real minhash
     // pipeline legitimately links pairs BEYOND the truth window).
-    Q("q_dedup_pipeline",
-      """WITH RECURSIVE grams AS (
-  SELECT doc_id, list_distinct(
-    list_transform(range(1, greatest(len(string_split(text,' ')) - 2, 1) + 1),
-      i -> array_to_string(string_split(text,' ')[i:i+2], ' '))) AS g
-  FROM documents),
-pairs AS (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b
-  FROM grams a JOIN grams b
-    ON b.doc_id > a.doc_id AND b.doc_id <= a.doc_id + 200
-  WHERE CAST(len(list_intersect(a.g, b.g)) AS DOUBLE)
-      / (len(a.g) + len(b.g) - len(list_intersect(a.g, b.g))) >= 0.5),
-edges AS (
-  SELECT id_a AS src, id_b AS dst FROM pairs
-  UNION
-  SELECT id_b, id_a FROM pairs),
-reach(src, dst) AS (
-  SELECT src, dst FROM edges
-  UNION
-  SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src
-    WHERE e.dst <> r.src),
-labels AS (
-  SELECT src AS id, least(src, min(dst)) AS cluster FROM reach GROUP BY src)
-SELECT d.doc_id, d.lang, TRUE AS pipeline_agree_ok
-FROM documents d
-WHERE d.doc_id NOT IN (SELECT id FROM labels WHERE cluster <> id)
-ORDER BY doc_id""") { (s, d) =>
+    Q("q_dedup_pipeline", pipelineSql("pipeline_agree_ok")) { (s, d) =>
       survivorsAgainstTruth(s, d,
-        (real, arr) =>
-          graft.operators.Dedup.survivors(real, threshold = 0.5,
-            gramArr = arr), // arr is None post-revert; see the helper
+        graft.operators.Dedup.survivors(_, threshold = 0.5),
         "pipeline_agree_ok")
     },
 
@@ -893,39 +805,9 @@ ORDER BY doc_id""") { (s, d) =>
     // since r10: same declared truth-survivor rows as q_dedup_pipeline,
     // with the two-arm flag computed from THIS operator's full
     // collapse→pipeline composition instead.
-    Q("q_dedup_pipeline_exact_first",
-      """WITH RECURSIVE grams AS (
-  SELECT doc_id, list_distinct(
-    list_transform(range(1, greatest(len(string_split(text,' ')) - 2, 1) + 1),
-      i -> array_to_string(string_split(text,' ')[i:i+2], ' '))) AS g
-  FROM documents),
-pairs AS (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b
-  FROM grams a JOIN grams b
-    ON b.doc_id > a.doc_id AND b.doc_id <= a.doc_id + 200
-  WHERE CAST(len(list_intersect(a.g, b.g)) AS DOUBLE)
-      / (len(a.g) + len(b.g) - len(list_intersect(a.g, b.g))) >= 0.5),
-edges AS (
-  SELECT id_a AS src, id_b AS dst FROM pairs
-  UNION
-  SELECT id_b, id_a FROM pairs),
-reach(src, dst) AS (
-  SELECT src, dst FROM edges
-  UNION
-  SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src
-    WHERE e.dst <> r.src),
-labels AS (
-  SELECT src AS id, least(src, min(dst)) AS cluster FROM reach GROUP BY src)
-SELECT d.doc_id, d.lang, TRUE AS pipeline_exact_first_ok
-FROM documents d
-WHERE d.doc_id NOT IN (SELECT id FROM labels WHERE cluster <> id)
-ORDER BY doc_id""") { (s, d) =>
+    Q("q_dedup_pipeline_exact_first", pipelineSql("pipeline_exact_first_ok")) { (s, d) =>
       survivorsAgainstTruth(s, d,
-        // exact-first collapses identical texts to reps BEFORE shingling —
-        // its rep-level gram pass is a different doc set, so the shared
-        // corpus-level gram frame does not apply here
-        (real, _) =>
-          graft.operators.Dedup.survivorsExactFirst(real, threshold = 0.5),
+        graft.operators.Dedup.survivorsExactFirst(_, threshold = 0.5),
         "pipeline_exact_first_ok")
     },
 

@@ -24,6 +24,23 @@ object VectorQueries {
     s"""sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE),
       list_transform($a, v -> CAST(v AS DOUBLE) * CAST(v AS DOUBLE))), (x, y) -> x + y))"""
 
+  /** Oracle of the recall-flagged kNN queries: the exact top-`k` cosine
+    * neighbours of the 32-probe sample (vec_id < 32), plus a TRUE `flag`.
+    */
+  private def sampledTopKSql(k: Int, flag: String): String =
+    s"""WITH pairs AS (
+  SELECT a.vec_id AS id_a, b.vec_id AS id_b,
+    ${duckDot("a.embedding", "b.embedding")}
+    / (${duckNorm("a.embedding")} * ${duckNorm("b.embedding")}) AS cos_sim
+  FROM embeddings a JOIN embeddings b ON b.vec_id <> a.vec_id
+  WHERE a.vec_id < 32),
+ranked AS (
+  SELECT *, ROW_NUMBER() OVER (PARTITION BY id_a
+                               ORDER BY cos_sim DESC, id_b) AS rn
+  FROM pairs)
+SELECT id_a, id_b, cos_sim, TRUE AS $flag
+FROM ranked WHERE rn <= $k ORDER BY id_a, id_b"""
+
   val all: Seq[Q] = Seq(
 
     // B16/B21 groundwork — per-vector norm + dims, exact double fold.
@@ -61,19 +78,7 @@ ORDER BY cos_sim DESC, vec_id LIMIT 10""") { (s, d) =>
     // Scale shape: the sample's exact side is |probes| x corpus (linear,
     // broadcast probes), the LSH side is the production bucket join with
     // the probe filter pushed below its window.
-    Q("q_knn_lsh",
-      s"""WITH pairs AS (
-  SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-    ${duckDot("a.embedding", "b.embedding")}
-    / (${duckNorm("a.embedding")} * ${duckNorm("b.embedding")}) AS cos_sim
-  FROM embeddings a JOIN embeddings b ON b.vec_id <> a.vec_id
-  WHERE a.vec_id < 32),
-ranked AS (
-  SELECT *, ROW_NUMBER() OVER (PARTITION BY id_a
-                               ORDER BY cos_sim DESC, id_b) AS rn
-  FROM pairs)
-SELECT id_a, id_b, cos_sim, TRUE AS lsh_recall_ok
-FROM ranked WHERE rn <= 5 ORDER BY id_a, id_b""") { (s, d) =>
+    Q("q_knn_lsh", sampledTopKSql(5, "lsh_recall_ok")) { (s, d) =>
       val emb = Tables.embeddings(s, d)
       val exact = Vectors.knnBruteForceBatch(emb, col("vec_id") < 32, k = 5)
       val lsh = Vectors.knnLsh(emb, k = 5).filter(col("id_a") < 32)
@@ -94,19 +99,7 @@ FROM ranked WHERE rn <= 5 ORDER BY id_a, id_b""") { (s, d) =>
     // (bitwise ≡ knnLsh by KnnSpec, so the same 0.15 bound vs measured
     // 0.325–0.488 holds; a broken collapse, expansion, or membership
     // join flips the flag red).
-    Q("q_knn_lsh_dedup",
-      s"""WITH pairs AS (
-  SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-    ${duckDot("a.embedding", "b.embedding")}
-    / (${duckNorm("a.embedding")} * ${duckNorm("b.embedding")}) AS cos_sim
-  FROM embeddings a JOIN embeddings b ON b.vec_id <> a.vec_id
-  WHERE a.vec_id < 32),
-ranked AS (
-  SELECT *, ROW_NUMBER() OVER (PARTITION BY id_a
-                               ORDER BY cos_sim DESC, id_b) AS rn
-  FROM pairs)
-SELECT id_a, id_b, cos_sim, TRUE AS lsh_dedup_recall_ok
-FROM ranked WHERE rn <= 5 ORDER BY id_a, id_b""") { (s, d) =>
+    Q("q_knn_lsh_dedup", sampledTopKSql(5, "lsh_dedup_recall_ok")) { (s, d) =>
       val emb = Tables.embeddings(s, d)
       val exact = Vectors.knnBruteForceBatch(emb, col("vec_id") < 32, k = 5)
       val lshd = Vectors.knnLshDeduped(emb, k = 5).filter(col("id_a") < 32)
@@ -128,19 +121,7 @@ FROM ranked WHERE rn <= 5 ORDER BY id_a, id_b""") { (s, d) =>
     // label-uncorrelated data) — >5 sigma of margin, and a broken
     // quantizer or cell join flips the flag. KnnSpec pins the batch's
     // single-probe slice bitwise-equal to the original knnIvf.
-    Q("q_knn_ivf",
-      s"""WITH pairs AS (
-  SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-    ${duckDot("a.embedding", "b.embedding")}
-    / (${duckNorm("a.embedding")} * ${duckNorm("b.embedding")}) AS cos_sim
-  FROM embeddings a JOIN embeddings b ON b.vec_id <> a.vec_id
-  WHERE a.vec_id < 32),
-ranked AS (
-  SELECT *, ROW_NUMBER() OVER (PARTITION BY id_a
-                               ORDER BY cos_sim DESC, id_b) AS rn
-  FROM pairs)
-SELECT id_a, id_b, cos_sim, TRUE AS ivf_recall_ok
-FROM ranked WHERE rn <= 10 ORDER BY id_a, id_b""") { (s, d) =>
+    Q("q_knn_ivf", sampledTopKSql(10, "ivf_recall_ok")) { (s, d) =>
       val emb = Tables.embeddings(s, d)
       val exact = Vectors.knnBruteForceBatch(emb, col("vec_id") < 32, k = 10)
       val ivf = Vectors.knnIvfBatch(emb, col("vec_id") < 32, k = 10, nprobe = 2)

@@ -328,6 +328,24 @@ class CalTopoSpec extends SparkSpec {
       Seq(Some("/One"), None, None, None, Some("/Two"), Some("/Two")))
   }
 
+  test("truncated scalars read 2-, 3- and 4-component positions under ANSI mode") {
+    // coord_truncate / q_udf_geo_truncate flatten positions through
+    // truncatedScalars: a missing third component is null, never an
+    // INVALID_ARRAY_INDEX_IN_ELEMENT_AT failure of the whole query
+    val rows = graft.queries.CalTopoQueries.truncatedScalars(
+        CalTopo.coordTruncate(CalTopo.mainFlow(edgeTick)))
+      .collect().map(r => r.getString(0) -> r).toMap
+    def vals(id: String, cs: String*) = cs.map(c => Option(rows(id).getAs[Any](c)))
+    assert(vals("pt2", "n_components", "x", "y", "z") ==
+      Seq(Some(2), Some(1.0), Some(2.0), None))
+    assert(vals("pt3", "n_components", "z") == Seq(Some(3), Some(3.5)))
+    assert(vals("pt4", "n_components", "x", "y", "z") ==
+      Seq(Some(3), Some(10.5), Some(20.25), Some(100.0)))
+    // a LineString from a 2-component first to a 4-component last position
+    assert(vals("ln", "n_components", "z", "n_last", "xl", "yl", "zl") ==
+      Seq(Some(2), None, Some(3), Some(2.0), Some(2.0), Some(2.0)))
+  }
+
   test("flagship's plan rewrites no struct and serializes no JSON") {
     // over a decoded tick: the generated feature table serializes its own
     // coordinates with to_json, a decoded document does not

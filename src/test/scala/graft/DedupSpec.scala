@@ -273,135 +273,75 @@ class DedupSpec extends SparkSpec {
       .collect().head.getBoolean(0))
   }
 
-  test("clusters: caller-censused route (knownCount) equals the self-censused form") {
-    // r15 census fusion (VERDICT r14 item 1): a caller that already
-    // checkpointed and counted its pair frame passes the count; the
-    // operator skips its own checkpoint + census. Labels must be
-    // identical on BOTH routes — knownCount only chooses routing, and
-    // the contract requires a checkpoint-backed frame with an exact
-    // count, which this fixture honors.
+  test("clusters: a materialized pair frame routes on its measured count, same labels") {
+    // a caller that already materialized its pair frame passes it as is:
+    // clusters() reads the measured count and stores nothing again.
+    // Labels must be identical on BOTH routes, and the driver route's only
+    // job is the bounded collect.
     import spark.implicits._
-    val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L), (3L, 7L))
-      .toDF("id_a", "id_b").localCheckpoint(false)
-    val n = pairs.count()
-    val expected = Dedup.clusters(pairs).collect()
+    val plain = Seq((1L, 2L), (2L, 3L), (10L, 11L), (3L, 7L)).toDF("id_a", "id_b")
+    val pairs = Materialize(plain, "DedupSpec pairs")
+    assert(pairs.rows == 4L && Materialize.knownRows(pairs.df).contains(4L))
+    val expected = Dedup.clusters(plain).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     // driver route (n ≤ default cap) and distributed route (cap below n)
-    for (cap <- Seq(1L << 20, n - 1)) {
-      val got = Dedup.clusters(pairs, driverCap = cap,
-        knownCount = Some(n)).collect()
+    for (cap <- Seq(1L << 20, pairs.rows - 1)) {
+      val got = Dedup.clusters(pairs.df, driverCap = cap).collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(got == expected, s"driverCap=$cap")
     }
+    val counter = new JobCountProbe.JobCounter
+    spark.sparkContext.addSparkListener(counter)
+    try {
+      Materialize.drain()
+      Dedup.clusters(pairs.df)
+      org.apache.spark.GraftListenerBridge.waitUntilListenerBusEmpty(spark.sparkContext)
+      assert(counter.snapshot == 1L, s"driver route ran ${counter.snapshot} jobs " +
+        "(want the bounded collect only)")
+      val call = Materialize.drain().find(_.site == "Dedup.clusters pairs")
+      assert(call.exists(c => c.how == "known" && c.route == "driver"),
+        s"pair frame call: $call")
+    } finally spark.sparkContext.removeSparkListener(counter)
   }
 
-  test("clusters: a lying knownCount cannot unbound the driver collect") {
-    // ADVICE r15 item 2: the driver route trusted the caller's count and
-    // collected the whole frame. The collect is now bounded in code: at
-    // most driverCap + 1 rows reach the driver, and one row past the cap
-    // sends the graph to the distributed loop — labels stay correct.
-    import spark.implicits._
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
-      SparkListenerTaskEnd}
-    // 1 000 disjoint 2-chains (3 000 pairs) over 8 partitions
-    val pairs = (0 until 1000).flatMap { c =>
-        val b = c * 10L
-        Seq((b, b + 1), (b + 1, b + 2), (b + 5, b + 6))
-      }.toDF("id_a", "id_b").repartition(8).localCheckpoint(true)
-    val n = pairs.count()
-    val expected = (0 until 1000).flatMap { c =>
-      val b = c * 10L
-      Seq(b -> b, (b + 1) -> b, (b + 2) -> b, (b + 5) -> (b + 5), (b + 6) -> (b + 5))
-    }.toMap
-    final class Reads extends SparkListener {
-      val stageJob = new java.util.concurrent.ConcurrentHashMap[Int, Int]
-      val jobs = new java.util.concurrent.ConcurrentLinkedQueue[Int]
-      val records = new java.util.concurrent.ConcurrentHashMap[Int, Long]
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        jobs.add(e.jobId); e.stageIds.foreach(stageJob.put(_, e.jobId))
-      }
-      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
-        Option(e.taskMetrics).foreach { m =>
-          records.merge(stageJob.getOrDefault(e.stageId, -1),
-            m.inputMetrics.recordsRead, (a: Long, b: Long) => a + b)
-        }
-    }
-    def traced(f: => Map[Long, Long]): (Map[Long, Long], Seq[Int], Reads) = {
-      val r = new Reads
-      spark.sparkContext.addSparkListener(r)
-      try {
-        val got = f
-        org.apache.spark.GraftListenerBridge
-          .waitUntilListenerBusEmpty(spark.sparkContext)
-        import scala.jdk.CollectionConverters._
-        (got, r.jobs.asScala.toSeq, r)
-      } finally spark.sparkContext.removeSparkListener(r)
-    }
-    def labels(cap: Long, claim: Long) =
-      Dedup.clusters(pairs, driverCap = cap, knownCount = Some(claim))
-        .collect().map(row => row.getLong(0) -> row.getLong(1)).toMap
-    // the lie: 10 pairs claimed, 3 000 present, cap 100
-    val (lied, liedJobs, liedReads) = traced(labels(100L, 10L))
-    assert(lied == expected, "labels under a lying knownCount")
-    val firstRead = liedReads.records.getOrDefault(liedJobs.head, 0L)
-    assert(firstRead > 0 && firstRead <= 101,
-      s"the driver route read $firstRead pair rows past a cap of 100")
-    // an honest count under the cap: the bounded take is ONE job over the
-    // 8-partition frame (an incremental CollectLimit would scale up in
-    // several), and the union-find output is the whole answer
-    val (honest, honestJobs, _) = traced(labels(1L << 20, n))
-    assert(honest == expected)
-    assert(honestJobs.size == 1, s"driver route ran ${honestJobs.size} jobs " +
-      "(want the bounded collect only: the labels are a local relation)")
-  }
-
-  test("agreement flag: fused truth census and LocalRelation gate equal the census-gated form") {
-    // r15 (VERDICT r14 item 1): (a) truthPairs=Some(n) skips the tids
-    // census — |tids| ≤ 2·|truth| bounds the broadcast instead; (b) a
-    // LocalRelation-backed assignment (the driver-route clusters output)
-    // under the cap skips the semi-join restriction and BOTH censuses.
-    // Each gated path must equal the self-censused flag on agreeing and
-    // disagreeing assignments.
+  test("agreement flag: measured truth and LocalRelation gates equal the measured-census form") {
+    // (a) a materialized truth frame bounds the tids broadcast by its
+    // measured count — |tids| ≤ 2·|truth| — so the tids frame is never
+    // stored or counted; (b) a LocalRelation-backed assignment (the
+    // driver-route clusters output) under the cap skips the semi-join
+    // restriction and its materialization. Each path must equal the flag
+    // over frames with no known count (a plain checkpoint's statistics are
+    // estimates, so both are measured inside the operator), on agreeing
+    // and disagreeing assignments.
     import spark.implicits._
     val dup = (0 until 3).map(i =>
         corpus.select((col("id") + lit(i * 1000L)).as("id"), col("text")))
       .reduce(_ unionByName _)
-    val truth = Dedup.exactJaccardWindowPairs(
+    val truthPlan = Dedup.exactJaccardWindowPairs(
       dup.select(col("id"), col("text")), tau = 0.5, window = 200)
-      .localCheckpoint(false)
-    val truthN = truth.count()
-    assert(truthN >= 2, "fixture must plant truth pairs")
+    val truth = Materialize(truthPlan, "DedupSpec truth")
+    assert(truth.rows >= 2, "fixture must plant truth pairs")
+    val truthCk = truthPlan.localCheckpoint(false)
+    assert(Materialize.knownRows(truthCk).isEmpty)
     // LocalRelation assignment straight from the driver-route clusters
     val goodLocal = Dedup.clusters(Dedup.minhashPairs(dup, threshold = 0.5))
-    assert({
-      import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Project}
-      goodLocal.queryExecution.analyzed match {
-        case _: LocalRelation | Project(_, _: LocalRelation) => true
-        case _                                               => false
-      }
-    }, "fixture must exercise the LocalRelation gate")
+    assert(Materialize.knownRows(goodLocal).isDefined,
+      "fixture must exercise the LocalRelation gate")
     // the same labels with the gate defeated (checkpoint -> LogicalRDD)
     val goodCk = goodLocal.localCheckpoint(false)
     val badLocal = dup.select(col("id"), col("id").as("cluster"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
       .toDF("id", "cluster")
     val badCk = badLocal.localCheckpoint(false)
+    def flag(t: org.apache.spark.sql.DataFrame,
+        a: org.apache.spark.sql.DataFrame): Boolean =
+      Dedup.clusterAgreementFlag(t, a, 0.7, "ok").collect().head.getBoolean(0)
     for (((gated, ungated), label) <- Seq(
         (goodLocal, goodCk) -> "agreeing", (badLocal, badCk) -> "disagreeing")) {
-      val self = Dedup.clusterAgreementFlag(truth, ungated, 0.7, "ok")
-        .collect().head.getBoolean(0)
-      val localGate = Dedup.clusterAgreementFlag(truth, gated, 0.7, "ok")
-        .collect().head.getBoolean(0)
-      val fused = Dedup.clusterAgreementFlag(truth, ungated, 0.7, "ok",
-        truthPairs = Some(truthN)).collect().head.getBoolean(0)
-      assert(localGate == self, s"$label: LocalRelation gate diverged")
-      assert(fused == self, s"$label: fused truth census diverged")
+      val self = flag(truthCk, ungated)
+      assert(flag(truthCk, gated) == self, s"$label: LocalRelation gate diverged")
+      assert(flag(truth.df, ungated) == self, s"$label: measured truth gate diverged")
     }
-    // oversized truthPairs must fall back to the censused arm, same value
-    assert(Dedup.clusterAgreementFlag(truth, goodCk, 0.7, "ok",
-      truthPairs = Some(Long.MaxValue / 4)).collect().head.getBoolean(0) ==
-      Dedup.clusterAgreementFlag(truth, goodCk, 0.7, "ok")
-        .collect().head.getBoolean(0))
   }
 
   test("minhashSignaturesArr over gramHashSets is bitwise-identical to minhashSignatures") {

@@ -29,50 +29,31 @@ class JobBudgetSpec extends SparkSpec {
   // its doc-sized shuffle and that shuffle's AQE stage job, so every
   // dedup query with a candidate pipeline is re-recorded one lower, and
   // the three signature-heavy queries are pinned at their new counts.
+  // Materialize re-record: each checkpoint + count()/agg() census pair
+  // became one materialization job (the census folded into it), the CC,
+  // Ntile and Percentiles loops fold their convergence test into each
+  // round's job, the recall and pipeline flags are literals from folds,
+  // and measured statistics plus the final plan's partitioning let the
+  // planner drop exchanges over stored frames. Every pin below fell.
   private val budget: Map[String, Int] = Map(
-    "q_dedup_clusters" -> 19,   // r10 oracle pairing: truth CC + minhash CC;
-                                // r12 re-record (+3): the truth frame's
-                                // eager gram-array checkpoint (BASELINE r12
-                                // trade — kills the racing duplicate gram
-                                // pass) and the restricted flag's tids
-                                // census + small-side materialization;
-                                // r13 re-record (+2): the agreement flag's
-                                // endpoint broadcasts now gate on the
-                                // restricted frame's OWN census (ADVICE
-                                // r12 — robust to duplicated-label
-                                // callers), which also materializes its
-                                // checkpoint eagerly ahead of the two
-                                // consuming joins;
-                                // r15 re-record 26 -> 20 (VERDICT r14
-                                // item 1): ONE shared truth census routes
-                                // the CC call (knownCount skips clusters'
-                                // own checkpoint+census) and bounds the
-                                // flag's tids broadcast (truthPairs skips
-                                // the tids census); the flag's driver-
-                                // routed minhash assignment is a
-                                // LocalRelation, so its semi-join
-                                // restriction + small census are skipped;
-                                // row-local signatures: 20 -> 19
-    "q_dedup_clusters_exact_first" -> 30, // r10 oracle pairing; r13 +2/+1
-                                // (flag small-census, see q_dedup_clusters);
-                                // row-local signatures: 31 -> 30
-    "q_dedup_minhash" -> 13,    // row-local signatures (was 14)
-    "q_dedup_pipeline" -> 24,   // row-local signatures (was 25)
-    "q_dedup_pipeline_exact_first" -> 28, // r10 oracle pairing; r13
-                                // re-record at measured 32 (same change);
-                                // row-local signatures: 29 -> 28
-    "q_dedup_simhash" -> 12,    // row-local signatures (was 13)
-    "q_event_resample" -> 4,
+    "q_dedup_clusters" -> 17,   // was 19 (r15 census fusion, row-local
+                                // signatures; see git history)
+    "q_dedup_clusters_exact_first" -> 22, // was 30
+    "q_dedup_minhash" -> 12,    // was 13
+    "q_dedup_pipeline" -> 16,   // was 24
+    "q_dedup_pipeline_exact_first" -> 17, // was 28
+    "q_dedup_simhash" -> 8,     // was 12
+    "q_event_resample" -> 3,    // was 4
     "q_knn_ivf" -> 11,          // r15: bounded recall-flag broadcast
     "q_knn_lsh" -> 12,
-    "q_knn_lsh_dedup" -> 19,    // r10 oracle pairing: + exact batch & flag;
-                                // r15 re-record 21 -> 19 (census-gated rep
+    "q_knn_lsh_dedup" -> 15,    // was 19 (r10 oracle pairing: + exact
+                                // batch & flag; r15 census-gated rep
                                 // broadcasts + bounded flag broadcast)
-    "q_ntile" -> 8,
-    "q_ntile_approx" -> 19,
-    "q_percentile" -> 17,
-    "q_percentile_approx" -> 19,
-    "q_sample_mixture" -> 7,
+    "q_ntile" -> 7,             // was 8
+    "q_ntile_approx" -> 17,     // was 19
+    "q_percentile" -> 15,       // was 17
+    "q_percentile_approx" -> 16, // was 19
+    "q_sample_mixture" -> 6,    // was 7
     "q_text_tfidf" -> 9)
 
   /** Ceilings include AQE stage jobs, so they are Spark-version- and

@@ -1,0 +1,149 @@
+package graft
+
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge}
+import org.apache.spark.sql.functions._
+import graft.operators.Dedup
+
+/** [[Materialize]]'s contract: the measured rows and folds are exactly
+  * what `count()` and `agg()` give over the same frame, the optimizer
+  * sees them, the checkpoint keeps the input's partitioning, and the
+  * bounds the callers rely on hold whatever a frame's statistics claim.
+  */
+class MaterializeSpec extends SparkSpec {
+
+  /** (id, m int, b boolean) with nulls in m and b, over `parts` partitions. */
+  private def frame(n: Long, parts: Int): DataFrame =
+    spark.range(0L, n, 1L, parts).select(col("id"),
+      when(col("id") % 5 =!= 0, (col("id") % 7).cast("int")).as("m"),
+      when(col("id") % 3 =!= 0, col("id") % 2 === 0).as("b"))
+
+  test("rows and folds equal count() and agg() on empty, one- and multi-partition inputs") {
+    for ((n, parts) <- Seq((0L, 1), (1000L, 1), (1000L, 7))) {
+      val df = frame(n, parts)
+      val m = Materialize(df, s"MaterializeSpec $n/$parts", Materialize.sum("id"),
+        Materialize.max("m"), Materialize.any("b"), Materialize.sum("b"))
+      val want = df.agg(count(lit(1)), sum(col("id")), max(col("m")),
+        count(when(col("b"), 1)), sum(col("b").cast("long"))).head()
+      assert(m.rows == want.getLong(0), s"rows at $n/$parts")
+      assert(m.sum(0) == Option(want.get(1)).map(_.asInstanceOf[Long]).getOrElse(0L))
+      assert(m.value(1) == Option(want.get(2)).map(_.asInstanceOf[Int].toLong))
+      assert(m.any(2) == (want.getLong(3) > 0L))
+      assert(m.sum(3) == Option(want.get(4)).map(_.asInstanceOf[Long]).getOrElse(0L))
+      // the stored frame holds the same rows
+      assert(m.df.orderBy("id").collect().toSeq == df.orderBy("id").collect().toSeq)
+    }
+  }
+
+  test("the optimizer's statistics are the measured count and bytes") {
+    val m = Materialize(frame(1000L, 4).filter(col("id") < 137), "MaterializeSpec stats")
+    assert(m.rows == 137L)
+    val stats = m.df.queryExecution.optimizedPlan.stats
+    assert(stats.rowCount.contains(BigInt(137)))
+    assert(stats.sizeInBytes == BigInt(m.bytes) && m.bytes > 0L)
+    assert(Materialize.knownRows(m.df.select(col("id"))).contains(137L))
+    // a plain checkpoint's statistics are estimates, never trusted as exact
+    assert(Materialize.knownRows(frame(10L, 1).localCheckpoint(true)).isEmpty)
+  }
+
+  test("a known count is not stored again and a deferred call runs no job") {
+    val m = Materialize(frame(100L, 2), "MaterializeSpec once")
+    val counter = new JobCountProbe.JobCounter
+    spark.sparkContext.addSparkListener(counter)
+    try {
+      val again = Materialize(m.df.select(col("id"), col("b")), "MaterializeSpec again")
+      val deferred = Materialize.deferred(frame(100L, 2), "MaterializeSpec deferred")
+      org.apache.spark.GraftListenerBridge.waitUntilListenerBusEmpty(spark.sparkContext)
+      assert(counter.snapshot == 0L, s"${counter.snapshot} jobs")
+      assert(again.rows == 100L && again.call.how == "known")
+      assert(deferred.count() == 100L)
+    } finally spark.sparkContext.removeSparkListener(counter)
+  }
+
+  test("a repartition(dst) input keeps its hash partitioning") {
+    // the connected-components loop joins every round on dst against an
+    // edge frame partitioned by dst before it is stored
+    val edges = spark.range(0L, 500L, 1L, 3)
+      .select((col("id") % 50).as("src"), (col("id") % 37).as("dst"))
+      .repartition(col("dst"))
+    for (stored <- Seq(Materialize(edges, "MaterializeSpec edges").df,
+        Materialize.deferred(edges, "MaterializeSpec edges deferred"))) {
+      val plan = stored.groupBy(col("dst")).agg(count(lit(1)))
+        .queryExecution.executedPlan.toString
+      assert(!plan.contains("Exchange"), s"re-shuffled a dst-partitioned frame:\n$plan")
+    }
+  }
+
+  test("an over-cap pair frame reaches the driver as at most driverCap + 1 rows, whatever its stats claim") {
+    // clusters() routes on a materialized frame's measured count without a
+    // job; its driver collect still enforces the cap in code, so a frame
+    // whose statistics lie (10 rows claimed, 3 000 stored) sends at most
+    // driverCap + 1 rows to the driver and takes the distributed loop
+    import spark.implicits._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+      SparkListenerTaskEnd}
+    val ck = (0 until 1000).flatMap { c =>
+        val b = c * 10L
+        Seq((b, b + 1), (b + 1, b + 2), (b + 5, b + 6))
+      }.toDF("id_a", "id_b").repartition(8).localCheckpoint(true)
+    GraftSqlBridge.checkpointRdd(ck).setName(Materialize.Measured + "forged")
+    val lying = GraftSqlBridge.restated(ck, ck, Some((10L, 160L)))
+    assert(Materialize.knownRows(lying).contains(10L))
+    val expected = (0 until 1000).flatMap { c =>
+      val b = c * 10L
+      Seq(b -> b, (b + 1) -> b, (b + 2) -> b, (b + 5) -> (b + 5), (b + 6) -> (b + 5))
+    }.toMap
+    final class Reads extends SparkListener {
+      val stageJob = new java.util.concurrent.ConcurrentHashMap[Int, Int]
+      val jobs = new java.util.concurrent.ConcurrentLinkedQueue[Int]
+      val records = new java.util.concurrent.ConcurrentHashMap[Int, Long]
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        jobs.add(e.jobId); e.stageIds.foreach(stageJob.put(_, e.jobId))
+      }
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        Option(e.taskMetrics).foreach { m =>
+          records.merge(stageJob.getOrDefault(e.stageId, -1),
+            m.inputMetrics.recordsRead, (a: Long, b: Long) => a + b)
+        }
+    }
+    val reads = new Reads
+    spark.sparkContext.addSparkListener(reads)
+    val got = try {
+      Materialize.drain()
+      val labels = Dedup.clusters(lying, driverCap = 100L).collect()
+        .map(row => row.getLong(0) -> row.getLong(1)).toMap
+      org.apache.spark.GraftListenerBridge.waitUntilListenerBusEmpty(spark.sparkContext)
+      labels
+    } finally spark.sparkContext.removeSparkListener(reads)
+    assert(got == expected, "labels under a lying row count")
+    val firstRead = reads.records.getOrDefault(reads.jobs.peek(), 0L)
+    assert(firstRead > 0 && firstRead <= 101,
+      s"the driver route read $firstRead pair rows past a cap of 100")
+    assert(Materialize.drain().exists(c =>
+      c.site == "Dedup.clusters pairs" && c.route == "distributed"))
+  }
+
+  test("an over-cap side is not broadcast") {
+    val small = Materialize(frame(5000L, 4), "MaterializeSpec side")
+    val big = spark.range(0L, 20000L, 1L, 4).toDF("id")
+    def joinPlan(fits: Boolean): String = {
+      val out = big.join(small.broadcastIf(fits)(small.df), Seq("id"))
+      out.collect()
+      out.queryExecution.executedPlan.toString
+    }
+    // measured at ~5 000 rows, the side is far over a 1 KB threshold, so
+    // without the hint neither the planner nor AQE broadcasts it
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "1024")
+    try {
+      val over = joinPlan(small.rows <= 100L)
+      assert(small.call.route == "shuffle")
+      assert(!over.contains("BroadcastHashJoin") && !over.contains("BroadcastExchange"), over)
+      assert(joinPlan(small.rows <= 10000L).contains("BroadcastHashJoin"))
+      assert(small.call.route == "broadcast")
+    } finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None    => spark.conf.unset(key)
+    }
+  }
+}

@@ -23,6 +23,11 @@ class ShuffleBudgetSpec extends SparkSpec {
   // OPTIMIZATION_r14.md. r15 re-record: the five driver-regressed spread
   // sites reverted (q_text_repetition, q_pivot, q_cube, q_dedup_simhash,
   // q_dedup_ngram_jaccard — VERDICT r14 item 2), each -1 Exchange.
+  // Materialize re-record (tightened, twelve entries): a stored frame now
+  // reports the partitioning of the plan that produced it and its
+  // measured size, so scans of stored frames plan without the re-shuffle
+  // or sort exchange they needed, and the recall/pipeline flags are
+  // literals (no flag aggregate or broadcast in the returned plan).
   private val budget: Map[String, Int] = Map(
     "coalesce_default" -> 1,
     "coord_truncate" -> 2,
@@ -53,10 +58,11 @@ class ShuffleBudgetSpec extends SparkSpec {
     // cell's dominant shuffle; CC internals hide behind checkpoints)
     "q_dedup_clusters_exact_first" -> 5, // r10 oracle pairing — see
                                 // q_dedup_clusters. r15 re-record 7 -> 5:
-                                // the fused truth census (truthPairs)
-                                // broadcasts the tids subplan directly —
-                                // its standalone checkpoint + census
-                                // exchanges left the visible plan
+                                // the truth frame's count bounds the tids
+                                // broadcast, so the tids subplan is
+                                // broadcast directly — its standalone
+                                // checkpoint + census exchanges left the
+                                // visible plan
     "q_dedup_embedding" -> 2,
     "q_dedup_exact" -> 2,
     // r10 re-record 4 -> 3: the oracle-paired form's VISIBLE plan is the
@@ -64,28 +70,28 @@ class ShuffleBudgetSpec extends SparkSpec {
     // internals hide behind that boundary — both audited via the raw
     // operator pins in PlanSpec/DedupSpec) + the 1-row flag broadcast +
     // output sort
-    "q_dedup_minhash" -> 3,
+    "q_dedup_minhash" -> 1,
     // r10 re-record 2 -> 7: the exploded-window + array_intersect form
     // became the inverted-index set-similarity join (shared machinery
     // with the minhash/simhash truth frames) — more exchanges, each
     // moving (id, gram-hash) or pair-count rows instead of full gram-set
     // arrays; measured FASTER at sf0.1 (1.27 -> 1.08 s) and 3.2x cheaper
     // at the truth frames' window 200
-    "q_dedup_ngram_jaccard" -> 5, // r15: spread reverted (driver 0.72×);
+    "q_dedup_ngram_jaccard" -> 3, // r15: spread reverted (driver 0.72×);
                                 // the window self-join read the spread
                                 // exchange on both sides, so -2 plan nodes
-    "q_dedup_pipeline" -> 6, // r10 oracle pairing — truth keep-join + two-arm flag broadcasts
+    "q_dedup_pipeline" -> 0, // r10 oracle pairing — truth keep-join + two-arm flag broadcasts
     // exact-first: text-groupBy collapse + degenerate-branch scan + the
     // keep semi-join's BroadcastExchange (r7 re-record 5 -> 3: the
     // census-gated broadcast of keepIds replaced the corpus-wide
     // shuffle-by-id semi join; CC internals hide behind checkpoints)
-    "q_dedup_pipeline_exact_first" -> 6, // r10 oracle pairing
-    "q_dedup_simhash" -> 3, // r10 oracle pairing — see q_dedup_minhash
+    "q_dedup_pipeline_exact_first" -> 0, // r10 oracle pairing
+    "q_dedup_simhash" -> 0, // r10 oracle pairing — see q_dedup_minhash
     "q_dedup_wordset" -> 2,
-    "q_event_funnel" -> 13,
+    "q_event_funnel" -> 4,
     "q_event_retention" -> 4,
     "q_event_histogram" -> 2,
-    "q_event_resample" -> 3,
+    "q_event_resample" -> 1,
     "q_except" -> 3,
     "q_except_all" -> 2,
     "q_filter_project" -> 1,
@@ -130,7 +136,7 @@ class ShuffleBudgetSpec extends SparkSpec {
     // r15 re-record 15 -> 14 (VERDICT r14 item 3): the census-gated rep
     // broadcasts (bucket side, vector re-joins, group metadata) and the
     // bounded recall-flag broadcast collapse shuffle pairs; jobs 21 -> 19
-    "q_knn_lsh_dedup" -> 14,
+    "q_knn_lsh_dedup" -> 11,
     "q_map_funcs" -> 2,
     "q_math_funcs" -> 1,
     "q_merge_upsert" -> 2,
@@ -159,13 +165,13 @@ class ShuffleBudgetSpec extends SparkSpec {
     // the exact machinery (q_percentile's 6) with the sketch aggregate
     // (+1), its broadcast to the rank-count pass (+1), the rank-count
     // aggregate (+1), and the flag frame's broadcast (+1)
-    "q_percentile_approx" -> 10,
-    "q_pipeline_decontaminate" -> 5,
+    "q_percentile_approx" -> 7,
+    "q_pipeline_decontaminate" -> 3,
     "q_pipeline_training_prep" -> 3,
     "q_pivot" -> 3, // r15: spread reverted (driver 0.62×), -1 Exchange
     "q_rollup" -> 6,
     "q_sample_hash" -> 1,
-    "q_sample_mixture" -> 6,
+    "q_sample_mixture" -> 3,
     "q_sample_stratified" -> 2,
     "q_skew_agg" -> 3,
     "q_sql_exists" -> 2,
@@ -183,7 +189,7 @@ class ShuffleBudgetSpec extends SparkSpec {
     "q_stream_tumbling" -> 2,
     "q_string_funcs" -> 1,
     "q_text_chunk" -> 1,
-    "q_text_contamination" -> 5,
+    "q_text_contamination" -> 1,
     "q_text_fingerprint" -> 1,
     "q_text_langid" -> 1,
     "q_text_quality" -> 1,
