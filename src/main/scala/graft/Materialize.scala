@@ -38,9 +38,9 @@ import org.apache.spark.sql.types._
   * that count and runs no job ([[knownRows]]).
   *
   * Every call is logged ([[drain]]) with its site, rows, bytes, fold
-  * values, the exchanges of the plan it ran and the route the caller chose
-  * from it (`graft.Profile` prints the log). Each call's jobs carry the
-  * description `materialize <site>`.
+  * values, the exchanges of the plan it ran and the choice each of the
+  * caller's gates made from it (`graft.Profile` prints the log). Each
+  * call's jobs carry the description `materialize <site>`.
   *
   * Storage is `localCheckpoint`'s: executor block storage, memory and
   * disk, with no lineage. A lost executor loses the frame, as it did at
@@ -63,11 +63,19 @@ object Materialize {
   final class Call(val site: String, val rows: Long, val bytes: Long,
       val folds: Seq[(Fold, Option[Long])], val exchanges: Int,
       val how: String) {
-    @volatile var route: String = ""
+    private val gates = scala.collection.mutable.LinkedHashMap.empty[String, String]
+    /** Each gate's choice, in the order the gates were first decided:
+      * `reps=broadcast buckets=shuffle`.
+      */
+    def route: String = gates.synchronized {
+      gates.map { case (g, c) => s"$g=$c" }.mkString(" ")
+    }
+    private[Materialize] def decide(gate: String, choice: String): Unit =
+      gates.synchronized(gates(gate) = choice)
     override def toString: String = s"$site $how" +
       (if (rows < 0) "" else s" rows=$rows bytes=$bytes") + s" exchanges=$exchanges" +
       folds.map { case (f, v) => s" $f=${v.getOrElse("null")}" }.mkString +
-      (if (route.isEmpty) "" else s" route=$route")
+      (if (route.isEmpty) "" else s" $route")
   }
 
   /** A materialized frame and what its job measured. */
@@ -79,11 +87,15 @@ object Materialize {
     def value(i: Int): Option[Long] = call.folds(i)._2
     def sum(i: Int): Long = value(i).getOrElse(0L)
     def any(i: Int): Boolean = value(i).exists(_ != 0L)
-    /** Record the route the caller took on these numbers. */
-    def route(r: String): Unit = call.route = r
-    /** `side` with a broadcast hint when `fits`, recording the choice. */
-    def broadcastIf(fits: Boolean)(side: DataFrame): DataFrame = {
-      route(if (fits) "broadcast" else "shuffle")
+    /** Record the choice the caller's `gate` made on these numbers. One
+      * call can drive several gates; each keeps its own entry.
+      */
+    def route(gate: String, choice: String): Unit = call.decide(gate, choice)
+    /** `side` with a broadcast hint when `fits`, recording the choice
+      * under `gate`.
+      */
+    def broadcastIf(gate: String, fits: Boolean)(side: DataFrame): DataFrame = {
+      route(gate, if (fits) "broadcast" else "shuffle")
       if (fits) broadcast(side) else side
     }
   }

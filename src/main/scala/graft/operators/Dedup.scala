@@ -259,16 +259,16 @@ object Dedup {
   }
 
   /** Truth rows + a genuine recall flag of a candidate pair set — the
-    * dedup-pair arm of the exact-plus-genuine-flag oracle pattern
-    * (`Vectors.withRecallFlag` is the bounded-sample kNN arm; THIS shape
-    * avoids its single-partition window because a corpus-blocking truth
-    * frame is O(corpus) rows, not probes × k). The marked join is
-    * materialized once, and the same job counts its rows and its hits
-    * (a sum fold over the hit mark), so the flag is a literal: no flag
-    * aggregate or broadcast runs in the returned plan. `candidates` must
+    * flag of the exact-plus-genuine-flag oracle pattern, for the dedup
+    * pair queries (a corpus-blocking truth frame against minhash/simhash
+    * candidates) and the kNN queries (a sampled exact top-k against the
+    * LSH/IVF top-k). The marked join is materialized once, and the same
+    * job counts its rows and its hits (a sum fold over the hit mark), so
+    * the flag is a literal: no flag aggregate, window or broadcast runs in
+    * the returned plan, and the hit count is retry-safe. `candidates` must
     * be unique per (id_a, id_b) — true of minhashPairs/simhashPairs'
-    * dropDuplicates outputs. Empty truth ⇒ zero output rows (the flag is
-    * vacuous).
+    * dropDuplicates outputs and of every top-k. Empty truth ⇒ zero output
+    * rows (the flag is vacuous). Makes the caller eager.
     */
   def withPairRecallFlag(truth: DataFrame, candidates: DataFrame,
       bound: Double, name: String): DataFrame = {
@@ -278,11 +278,11 @@ object Dedup {
       s"Dedup.withPairRecallFlag $name", Materialize.sum("__hit"))
     // the aggregate's own arithmetic: hits >= double(rows) * bound
     val ok = marked.sum(0) >= marked.rows.toDouble * bound
-    marked.route(s"$name=$ok")
+    marked.route(name, ok.toString)
     marked.df.drop("__hit").withColumn(name, lit(ok))
   }
 
-  /** Single-row cluster-agreement flag of a cluster `assignment` against
+  /** Measured cluster-agreement flag of a cluster `assignment` against
     * a `truth` pair frame: TRUE when ≥ `bound` of the truth pairs get the
     * same assignment cluster on both endpoints (null-safe =: an endpoint
     * missing from the assignment compares unequal, counting against the
@@ -301,6 +301,10 @@ object Dedup {
     * only ever READS assignment rows at truth ids, so the restriction is
     * value-identical (DedupSpec pins it against the unrestricted form).
     *
+    * Truth ⋈ both endpoints is materialized once, and the same job counts
+    * its rows and sums "same cluster" (retry-safe), so the caller gets the
+    * measured Boolean and declares it as a literal column.
+    *
     * `truth` must expose (id_a, id_b) and should be materialized by the
     * caller (it usually also feeds the declared CC). `assignment` must
     * expose (id, cluster) and needs NO caller-side materialization: the
@@ -316,18 +320,21 @@ object Dedup {
     */
   def clusterAgreementFlag(truth: DataFrame, assignment: DataFrame,
       bound: Double, name: String,
-      broadcastCap: Long = 1L << 22): DataFrame = {
-    // the shared endpoint-join + agg tail: `small` must expose
-    // (id, cluster); `bc` decides whether the endpoint sides broadcast
-    def flagOver(small: DataFrame, bc: Boolean): DataFrame = {
-      def endpoint(df: DataFrame): DataFrame = if (bc) broadcast(df) else df
-      truth
-        .join(endpoint(small.select(col("id").as("id_a"), col("cluster").as("__ca"))),
-          Seq("id_a"), "left")
-        .join(endpoint(small.select(col("id").as("id_b"), col("cluster").as("__cb"))),
-          Seq("id_b"), "left")
-        .agg((count(when(col("__ca") === col("__cb"), 1)) >=
-          count(lit(1)).cast("double") * lit(bound)).as(name))
+      broadcastCap: Long = 1L << 22): Boolean = {
+    // the measured endpoint-join tail: `small` must expose (id, cluster);
+    // `endpoint` is the gate deciding whether both endpoint sides broadcast
+    def agreement(small: DataFrame, endpoint: DataFrame => DataFrame): Boolean = {
+      val same = Materialize(truth
+          .join(endpoint(small.select(col("id").as("id_a"), col("cluster").as("__ca"))),
+            Seq("id_a"), "left")
+          .join(endpoint(small.select(col("id").as("id_b"), col("cluster").as("__cb"))),
+            Seq("id_b"), "left")
+          .select((col("__ca") === col("__cb")).as("__same")),
+        s"Dedup.clusterAgreementFlag $name", Materialize.sum("__same"))
+      // the former aggregate's arithmetic: same >= double(rows) * bound
+      val ok = same.sum(0) >= same.rows.toDouble * bound
+      same.route(name, ok.toString)
+      ok
     }
     // An assignment whose exact row count the driver already has — the
     // driver route of clusters() returns a LocalRelation — is broadcast
@@ -337,7 +344,7 @@ object Dedup {
     // against the restricted one). Two consumers re-read literal rows,
     // never a subplan.
     if (Materialize.knownRows(assignment).exists(_ <= broadcastCap))
-      return flagOver(assignment, bc = true)
+      return agreement(assignment, broadcast(_))
     val tidsPlan = truth.select(col("id_a").as("id"))
       .union(truth.select(col("id_b").as("id")))
       .distinct()
@@ -349,7 +356,7 @@ object Dedup {
       if (Materialize.knownRows(truth).exists(_ <= broadcastCap / 2)) broadcast(tidsPlan)
       else {
         val tids = Materialize(tidsPlan, s"Dedup.clusterAgreementFlag $name tids")
-        tids.broadcastIf(tids.rows <= broadcastCap)(tids.df)
+        tids.broadcastIf("tids", tids.rows <= broadcastCap)(tids.df)
       }
     // Materialized: both endpoint joins below read it in one query
     // execution, and without it the whole assignment subplan would run
@@ -360,10 +367,8 @@ object Dedup {
     // but a caller with duplicated labels would otherwise blow a
     // tids-derived broadcast budget silently.
     val small = Materialize(assignment.join(keys, Seq("id"), "left_semi"),
-      s"Dedup.clusterAgreementFlag $name")
-    val bc = small.rows <= broadcastCap
-    small.route(if (bc) "broadcast" else "shuffle")
-    flagOver(small.df, bc)
+      s"Dedup.clusterAgreementFlag $name restricted")
+    agreement(small.df, small.broadcastIf("endpoints", small.rows <= broadcastCap) _)
   }
 
   /** (id, name) rows of a row-local signature `sig`, without the rows
@@ -561,11 +566,11 @@ object Dedup {
       val rows = pairsCk.coalesce(1)
         .limit(math.min(driverCap, Int.MaxValue - 1L).toInt + 1).collect()
       if (rows.length <= driverCap) {
-        pairsM.route("driver")
+        pairsM.route("cc", "driver")
         return driverComponents(pairs.sparkSession, rows)
       }
     }
-    pairsM.route("distributed")
+    pairsM.route("cc", "distributed")
 
     // ---- distributed route (the 100 TB path) -------------------------
     // Both edge directions explode from the materialized pair frame (one
@@ -707,7 +712,7 @@ object Dedup {
     // 10 MB auto-broadcast threshold. 2^22 ids ≈ 32 MB broadcast.
     val keepIds = Materialize(survivors(reps, threshold).select(col("id")),
       "Dedup.survivorsExactFirst keep")
-    val keep = keepIds.broadcastIf(keepIds.rows <= broadcastCap)(keepIds.df)
+    val keep = keepIds.broadcastIf("keep", keepIds.rows <= broadcastCap)(keepIds.df)
     docs.filter(!degenerate).join(keep, Seq("id"), "left_semi")
       .unionByName(docs.filter(degenerate))
   }
@@ -786,7 +791,7 @@ object Dedup {
     // a comfortable broadcast; above it (a mostly-unique corpus where
     // near-dup clusters rival the corpus) the sort-merge join is the
     // honest plan and stays.
-    val expand = labeled.broadcastIf(labeled.rows <= broadcastCap)(labeled.df)
+    val expand = labeled.broadcastIf("expand", labeled.rows <= broadcastCap)(labeled.df)
     nonDegenerate.join(expand, Seq("text"))
       .select(col("id"), col("cluster"))
   }

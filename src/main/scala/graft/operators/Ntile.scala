@@ -139,8 +139,8 @@ object Ntile {
       // re-joined 5-6 times (measured +7 s at sf10 where the join filters
       // nothing)
       val (nGroups, nLarge) = (sizes.rows, sizes.sum(0))
-      sizes.route(if (nLarge == 0) "window" else if (nLarge < nGroups) "mixed"
-                  else "distributed")
+      sizes.route("path", if (nLarge == 0) "window"
+        else if (nLarge < nGroups) "mixed" else "distributed")
       if (nLarge == 0)
         return windowPath(df, groupCol, valueCol, idCol, k, outCol)
       if (nLarge < nGroups) {
@@ -238,7 +238,7 @@ object Ntile {
     // is comfortably in-memory (the cap admits past the 10 MB
     // auto-broadcast threshold); past the cap AQE picks the join side
     // (and at millions of groups it will correctly shuffle)
-    val bc = boundsM.broadcastIf(boundsM.rows * k <= 2000000L) _
+    val bc = boundsM.broadcastIf("bounds", boundsM.rows * k <= 2000000L) _
 
     // -- one exact pass: per-group n plus, per boundary, the count strictly
     //    below its value and the size of its tied run (map-side combinable;

@@ -256,7 +256,7 @@ object Percentiles {
     // matches the widest long frame (st0/state at ~8 columns × T rows per
     // group), so one gate covers all five sites.
     val cellsPerGroup = 8L * math.max(1, targets.size)
-    val gated = brM.broadcastIf(brM.rows * cellsPerGroup <= broadcastCells) _
+    val gated = brM.broadcastIf("sketch", brM.rows * cellsPerGroup <= broadcastCells) _
     val targetRows = targets.zipWithIndex.map { case ((name, p), i) =>
       struct(lit(name).as("t"), lit(p).as("p"), lit(i).as("ti"))
     }

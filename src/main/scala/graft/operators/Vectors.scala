@@ -81,54 +81,6 @@ object Vectors {
     topK(cands, k)
   }
 
-  /** Appends boolean column `name` = (|approx ∩ exact| ≥ bound ×
-    * |exact|) to `exact` — the genuinely-computed recall@k flag the r10
-    * oracle-paired kNN queries declare (VERDICT r9 item 3): the declared
-    * rows are the EXACT top-k (bitwise oracle-matched), bucket/cell
-    * internals never enter the driver's hash, yet a broken index flips
-    * this flag and the hash check goes red. Computed as a GLOBAL WINDOW
-    * aggregate over the joined frame, so the exact subplan executes
-    * exactly once (a separate flag aggregate + crossJoin re-executed the
-    * whole exact pass — measured 16–17 Exchanges vs 10–11 for this
-    * shape); the single-partition window is safe because the frame is a
-    * bounded probe sample (≤ probes × k rows), never the corpus. Both
-    * inputs must be unique per (id_a, id_b) — true of every top-k output
-    * here. KnnSpec pins the negative arm (a zero-overlap approx side
-    * must yield FALSE).
-    */
-  def withRecallFlag(exact: DataFrame, approx: DataFrame, bound: Double,
-      name: String, bcastApprox: Boolean = false): DataFrame = {
-    val w = Window.partitionBy()
-      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    // bcastApprox (r15, VERDICT r14 item 3): both sides are bounded
-    // top-k outputs (≤ probes × k rows — the operator's input contract
-    // above), but they descend from window/checkpoint subplans Catalyst
-    // has no stats for, so the hit join planned as a sort-merge
-    // shuffling both ≤160-row sides — two AQE stage jobs of pure fixed
-    // overhead at bench SFs. The bound is structural (a top-k emits ≤ k
-    // rows per probe at ANY corpus scale), so the hint is scale-safe —
-    // but it is CALLER-OPT-IN because PlanAuditSpec's broadcast audit
-    // only admits plan-PROVABLE bounds (Aggregate/GlobalLimit in the
-    // hint's subtree): q_knn_lsh_dedup/q_knn_ivf's approx sides carry an
-    // Aggregate and opt in; plain q_knn_lsh's does not and keeps the
-    // shuffle join rather than loosening the audit.
-    // NOTE this operator IS the bench tail's "No Partition Defined for
-    // Window operation" WARN source (VERDICT r14 item 6, attributed by
-    // per-query Profile counts: only the three kNN queries log it): the
-    // global window runs over the same ≤ probes × k frame — single
-    // partition by DESIGN, and the alternatives are worse (a separate
-    // flag aggregate + crossJoin re-executes the exact subplan, measured
-    // 16–17 Exchanges vs 10–11; a foldable partitionBy(lit) is undone by
-    // optimizer rule EliminateWindowPartitions).
-    val hits = approx.select(col("id_a"), col("id_b"), lit(1).as("__hit"))
-    exact
-      .join(if (bcastApprox) broadcast(hits) else hits,
-        Seq("id_a", "id_b"), "left")
-      .withColumn(name, count(col("__hit")).over(w) >=
-        count(lit(1)).over(w).cast("double") * lit(bound))
-      .drop("__hit")
-  }
-
   /** All table buckets per vector — native codegen'd expression
     * ([[graft.functions.VectorExprs.LshBuckets]]).
     */
@@ -153,19 +105,17 @@ object Vectors {
     * aggregate, the projection is cheap relative to the pair join).
     */
   private def lshCandidates(emb: DataFrame, bits: Int, tables: Int,
-      bcastBuckets: Boolean = false, bcastVectors: Boolean = false): DataFrame = {
-    // bcastBuckets / bcastVectors (r15, VERDICT r14 item 3): set by
-    // [[knnLshDeduped]] when its groups census measured that side under
-    // the broadcast cell cap — the bucket-exploded side (|emb| × tables
-    // rows) and the two vector re-joins (|emb| rows of dim floats) are
-    // sized apart. A set side broadcasts instead of shuffling (the rep
-    // frame descends from a checkpoint, so Catalyst has no stats and
-    // planned every one of these as sort-merge — 3 shuffle pairs of AQE
-    // stage jobs for a ≤ thousands-row frame). The plain [[knnLsh]] path
-    // never sets them: there `emb` is the CORPUS and an explicit
-    // broadcast of it cannot survive 100 TB (VERDICT r1 §wrong.4).
-    def side(bc: Boolean)(df: DataFrame): DataFrame =
-      if (bc) broadcast(df) else df
+      bucketSide: DataFrame => DataFrame = identity,
+      vectorSide: DataFrame => DataFrame = identity): DataFrame = {
+    // bucketSide / vectorSide: [[knnLshDeduped]] passes its measured
+    // broadcast gates for the bucket-exploded side (|emb| × tables rows)
+    // and the two vector re-joins (|emb| rows of dim floats), sized
+    // apart. The rep frame descends from a stored frame whose size
+    // Catalyst cannot bound for these derived sides, so without the
+    // hints each join plans as sort-merge — a shuffle pair of AQE stage
+    // jobs for a ≤ thousands-row frame. The plain [[knnLsh]] path keeps
+    // the identity: there `emb` is the CORPUS and an explicit broadcast
+    // of it cannot survive 100 TB (VERDICT r1 §wrong.4).
     val withBucket = emb
       .select(col("vec_id"),
         posexplode(lshBuckets(col("embedding"), bits, tables))
@@ -174,7 +124,7 @@ object Vectors {
       col("t").as("t_a"), col("bucket").as("bucket_a"))
     val b = withBucket.select(col("vec_id").as("id_b"),
       col("t").as("t_b"), col("bucket").as("bucket_b"))
-    val pairs = a.join(side(bcastBuckets)(b),
+    val pairs = a.join(bucketSide(b),
         col("t_a") === col("t_b") && col("bucket_a") === col("bucket_b") &&
           col("id_a") =!= col("id_b"))
       .select(col("id_a"), col("id_b"))
@@ -184,8 +134,8 @@ object Vectors {
     // plain shuffled equi-joins on the un-broadcast path: the corpus is
     // the BIG side there. Join id_b first so the id_a join runs last and
     // its output partitioning feeds the id_a window sort-free.
-    pairs.join(side(bcastVectors)(embB), "id_b")
-      .join(side(bcastVectors)(embA), "id_a")
+    pairs.join(vectorSide(embB), "id_b")
+      .join(vectorSide(embA), "id_a")
       .select(col("id_a"), col("id_b"),
         cosine(col("emb_a"), col("emb_b")).as("cos_sim"))
   }
@@ -322,7 +272,7 @@ object Vectors {
     // threshold), those sides broadcast instead. At 100 TB unique-corpus
     // volume the gate is off and the plan is byte-identical to r14's.
     val repsFit = nGroups * (dim + 2L) <= 2000000L
-    val repSide = groupsM.broadcastIf(repsFit) _
+    val repSide = groupsM.broadcastIf("reps", repsFit) _
     // the bucket self-join's side is the rep frame exploded per table:
     // nGroups × tables rows of (id, t, bucket), sized on its own (at
     // dim 2 and 8 tables, repsFit alone admits 6× the cap on this side)
@@ -358,7 +308,8 @@ object Vectors {
     val wg = Window.partitionBy(col("id_a"))
       .orderBy(col("cos_sim").desc, col("id_b").asc)
     val topGroups = lshCandidates(reps, bits, tables,
-        bcastBuckets = bucketsFit, bcastVectors = repsFit)
+        bucketSide = groupsM.broadcastIf("buckets", bucketsFit) _,
+        vectorSide = repSide)
       .withColumn("grn", row_number().over(wg))
       .filter(col("grn") <= k)
       .drop("grn")
@@ -409,9 +360,8 @@ object Vectors {
     // matches Percentiles' over-count posture: 4 cells per
     // (rn, id_b, cos_sim) struct × k+1 structs/rep, so the shared
     // 2·10⁶-cell cap admits comparable byte volume at both sites.
-    val repArrJ =
-      if (nGroups * 4L * (k + 1L) <= 2000000L) broadcast(repArr) else repArr
-    members.join(repArrJ, "rep")
+    val candsFit = nGroups * 4L * (k + 1L) <= 2000000L
+    members.join(groupsM.broadcastIf("cands", candsFit)(repArr), "rep")
       .select(col("member").as("id_a"),
         explode(slice(filter(col("cand"),
           c => c.getField("id_b") =!= col("member")), 1, k)).as("c"))
@@ -420,12 +370,22 @@ object Vectors {
         col("c").getField("cos_sim").as("cos_sim"))
   }
 
-  /** IVF-style search: partition the corpus by its `label` column (the
-    * stand-in for a coarse quantizer's cell assignment), locate the probe's
-    * cell by nearest cell-centroid, and search only that cell.
-    * Centroids are computed with exact DECIMAL sums so they are
-    * order-independent (a float running mean would not be).
+  /** (label, centroid) per IVF cell, the one quantizer of [[knnIvf]] and
+    * [[knnIvfBatch]]: each component is an exact DECIMAL mean, so it is
+    * order-independent (a float running mean would not be), cast to
+    * double. The label rides through the explode — a join back to emb on
+    * vec_id just to fetch it re-scanned the table and shuffled the
+    * exploded dims (|vectors| x |dims| rows) once more for nothing.
     */
+  private def cellCentroids(emb: DataFrame): DataFrame =
+    emb.select(col("label"), posexplode(col("embedding")))
+      .select(col("label"), col("pos"), col("col").cast("decimal(28,10)").as("v"))
+      .groupBy(col("label"), col("pos"))
+      .agg((sum(col("v")) / count(lit(1))).cast("double").as("c"))
+      .groupBy(col("label"))
+      .agg(array_sort(collect_list(struct(col("pos"), col("c"))))
+        .getField("c").as("centroid"))
+
   /** Batched IVF: one plan probing, for EVERY probe row matching
     * `probeFilter`, its `nprobe` nearest cells and searching only those
     * cells — the scale shape of [[knnIvf]] (real IVF serving is batched;
@@ -439,13 +399,7 @@ object Vectors {
     */
   def knnIvfBatch(emb: DataFrame, probeFilter: Column, k: Int,
       nprobe: Int = 1, probeLimit: Int = 1024): DataFrame = {
-    val dims = emb.select(col("label"), posexplode(col("embedding")))
-      .select(col("label"), col("pos"), col("col").cast("decimal(28,10)").as("v"))
-    val centroids = dims.groupBy(col("label"), col("pos"))
-      .agg((sum(col("v")) / count(lit(1))).cast("double").as("c"))
-      .groupBy(col("label"))
-      .agg(array_sort(collect_list(struct(col("pos"), col("c"))))
-        .getField("c").as("centroid"))
+    val centroids = cellCentroids(emb)
     val probes = emb.filter(probeFilter).limit(probeLimit)
       .select(col("vec_id").as("id_a"), col("embedding").as("q_emb"))
     val wc = Window.partitionBy(col("id_a"))
@@ -464,17 +418,13 @@ object Vectors {
     topK(cands, k)
   }
 
+  /** IVF-style search: partition the corpus by its `label` column (the
+    * stand-in for a coarse quantizer's cell assignment), locate the probe's
+    * cell by nearest cell centroid ([[cellCentroids]]), and search only
+    * that cell.
+    */
   def knnIvf(emb: DataFrame, queryId: Long, k: Int, nprobe: Int = 1): DataFrame = {
-    // label rides through the explode — a join back to emb on vec_id just
-    // to fetch it re-scanned the table and shuffled the exploded dims
-    // (|vectors| x |dims| rows) once more for nothing
-    val dims = emb.select(col("label"), posexplode(col("embedding")))
-      .select(col("label"), col("pos"), col("col").cast("decimal(28,10)").as("v"))
-    val centroids = dims.groupBy(col("label"), col("pos"))
-      .agg((sum(col("v")) / count(lit(1))).cast("double").as("c"))
-      .groupBy(col("label"))
-      .agg(array_sort(collect_list(struct(col("pos"), col("c"))))
-        .getField("c").as("centroid"))
+    val centroids = cellCentroids(emb)
     val q = emb.filter(col("vec_id") === queryId)
       .select(col("embedding").as("q_emb"))
     // probe the nprobe nearest cells; with nprobe >= |cells| this is exact

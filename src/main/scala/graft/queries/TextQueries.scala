@@ -121,7 +121,7 @@ object TextQueries {
     val (declared, dropped) = (marked.sum(0), marked.rows - marked.sum(0))
     val ok = marked.sum(1) >= declared.toDouble * 0.7 &&
       marked.sum(2) >= dropped.toDouble * 0.7
-    marked.route(s"$flagName=$ok")
+    marked.route(flagName, ok.toString)
     marked.df.filter(col("__tk"))
       .select(col("doc_id"), col("lang"), lit(ok).as(flagName))
       .orderBy("doc_id")
@@ -429,10 +429,10 @@ ORDER BY doc_id, score DESC, word""") { (s, d) =>
       // the assignment subplan exactly once)
       // flag pipeline recomputes the gram kernel (candidate-side share
       // reverted after the sf10 probe — see q_dedup_minhash)
-      val flag = Dedup.clusterAgreementFlag(truth,
+      val ok = Dedup.clusterAgreementFlag(truth,
         Dedup.clusters(Dedup.minhashPairs(docs, threshold = 0.5)),
         bound = 0.7, name = "minhash_cluster_ok")
-      declared.crossJoin(broadcast(flag)).orderBy("id")
+      declared.withColumn("minhash_cluster_ok", lit(ok)).orderBy("id")
     },
 
     // B20g' — the same cluster assignment with exact dedup collapsed FIRST
@@ -466,10 +466,10 @@ ORDER BY doc_id, score DESC, word""") { (s, d) =>
       // The helper semi-filters the assignment to truth ids first;
       // clustersExactFirst's full collapse→CC→expand composition still
       // executes once (the flag stays genuinely at risk), value-identical
-      val flag = Dedup.clusterAgreementFlag(truth,
+      val ok = Dedup.clusterAgreementFlag(truth,
         Dedup.clustersExactFirst(docs, threshold = 0.5),
         bound = 0.7, name = "exact_first_cluster_ok")
-      declared.crossJoin(broadcast(flag)).orderBy("id")
+      declared.withColumn("exact_first_cluster_ok", lit(ok)).orderBy("id")
     },
 
     // Deterministic hash sampling — the reproducible down-sampling a

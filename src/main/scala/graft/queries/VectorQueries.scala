@@ -1,7 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
-import graft.operators.Vectors
+import graft.operators.{Dedup, Vectors}
 import graft.sources.Tables
 
 /** SURVEY.md §2 rows B21 (similarity search) and B23 (multimodal columns)
@@ -77,12 +77,15 @@ ORDER BY cos_sim DESC, vec_id LIMIT 10""") { (s, d) =>
     // raw-candidate and recall-floor pins on the operator itself.
     // Scale shape: the sample's exact side is |probes| x corpus (linear,
     // broadcast probes), the LSH side is the production bucket join with
-    // the probe filter pushed below its window.
+    // the probe filter pushed below its window. The flag is a literal
+    // measured by one materialization of exact ⋈ approx
+    // ([[Dedup.withPairRecallFlag]]), so building the query runs that job,
+    // as for the other eight oracle flags.
     Q("q_knn_lsh", sampledTopKSql(5, "lsh_recall_ok")) { (s, d) =>
       val emb = Tables.embeddings(s, d)
       val exact = Vectors.knnBruteForceBatch(emb, col("vec_id") < 32, k = 5)
       val lsh = Vectors.knnLsh(emb, k = 5).filter(col("id_a") < 32)
-      Vectors.withRecallFlag(exact, lsh, 0.15, "lsh_recall_ok")
+      Dedup.withPairRecallFlag(exact, lsh, 0.15, "lsh_recall_ok")
         .orderBy("id_a", "id_b")
     },
 
@@ -103,10 +106,7 @@ ORDER BY cos_sim DESC, vec_id LIMIT 10""") { (s, d) =>
       val emb = Tables.embeddings(s, d)
       val exact = Vectors.knnBruteForceBatch(emb, col("vec_id") < 32, k = 5)
       val lshd = Vectors.knnLshDeduped(emb, k = 5).filter(col("id_a") < 32)
-      // bcastApprox: the deduped index's output carries an Aggregate, so
-      // the ≤ probes×k broadcast is plan-provably bounded (audit-clean)
-      Vectors.withRecallFlag(exact, lshd, 0.15, "lsh_dedup_recall_ok",
-        bcastApprox = true)
+      Dedup.withPairRecallFlag(exact, lshd, 0.15, "lsh_dedup_recall_ok")
         .orderBy("id_a", "id_b")
     },
 
@@ -125,10 +125,7 @@ ORDER BY cos_sim DESC, vec_id LIMIT 10""") { (s, d) =>
       val emb = Tables.embeddings(s, d)
       val exact = Vectors.knnBruteForceBatch(emb, col("vec_id") < 32, k = 10)
       val ivf = Vectors.knnIvfBatch(emb, col("vec_id") < 32, k = 10, nprobe = 2)
-      // bcastApprox: the IVF batch's centroid Aggregate sits in the
-      // approx subtree, so the bounded broadcast is audit-clean
-      Vectors.withRecallFlag(exact, ivf, 0.12, "ivf_recall_ok",
-        bcastApprox = true)
+      Dedup.withPairRecallFlag(exact, ivf, 0.12, "ivf_recall_ok")
         .orderBy("id_a", "id_b")
     },
 

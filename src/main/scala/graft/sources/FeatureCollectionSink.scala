@@ -13,10 +13,10 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-/** DSv2 write-path sink for FeatureCollection delivery (SURVEY.md §2 A14,
-  * the connector-API twin of [[FeatureSink]]'s foreachPartition shape).
-  * What the connector protocol adds over foreachPartition is exactly what a
-  * production submit needs and ad-hoc delivery lacks:
+/** DSv2 write-path sink for FeatureCollection delivery (SURVEY.md §2 A14):
+  * the engine's one FeatureCollection sink, for batch writes and streaming
+  * micro-batches alike. What the connector protocol adds over a bare
+  * foreachPartition delivery is exactly what a production submit needs:
   *
   *  - task attempts write to ATTEMPT-UNIQUE temp names, so speculative /
   *    retried tasks can never interleave partial documents;
@@ -24,17 +24,16 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *    every task succeeded — a failed job leaves no delivered documents;
   *  - `abort()` removes whatever temps exist.
   *
-  * One FeatureCollection document per non-empty partition, same layout as
-  * [[FeatureSink]]. The delivery step is transport-dispatched on the `path`
-  * option's scheme ([[DocTransport]]): a directory path renames temps to
+  * One FeatureCollection document per non-empty partition, named
+  * `prefix-%05d.json` by partition id. The delivery step is
+  * transport-dispatched on the `path` option's scheme ([[DocTransport]]): a directory path renames temps to
   * final names; an http(s) URL POSTs each document to `$path/$finalName`
   * at commit (the reference's submit, `task.ts:154`), spooling task temps
   * under `spoolDir` (driver-visible; defaults under java.io.tmpdir).
   *
   * Input contract: ONE string column holding each row's Feature JSON —
   * produced by [[FeatureCollectionSink.write]], which wraps the caller's
-  * DataFrame with the same `to_json(struct(*))` projection FeatureSink
-  * uses. (Serializing arbitrary rows inside the writer would need the
+  * DataFrame with a `to_json(struct(*))` projection. (Serializing arbitrary rows inside the writer would need the
   * private catalyst JacksonGenerator; the projection keeps serialization
   * in codegen'd Catalyst land where it belongs.)
   */

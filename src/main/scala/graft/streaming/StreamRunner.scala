@@ -314,15 +314,18 @@ object StreamRunner {
   }
 
   /** Stream -> batch-sink bridge: deliver each micro-batch through the
-    * FeatureCollection sink (`foreachBatch` hands the sink a normal
-    * DataFrame, so ANY batch writer becomes a streaming sink — the Spark
-    * idiom for sinks without a native streaming connector, like the
-    * reference's HTTP submit).
+    * FeatureCollection sink's commit protocol (`foreachBatch` hands the
+    * sink a normal DataFrame, so ANY batch writer becomes a streaming sink
+    * — the Spark idiom for sinks without a native streaming connector,
+    * like the reference's HTTP submit). The batch id prefixes the
+    * documents, so successive micro-batches never collide on partition
+    * ids.
     */
   def streamToFeatureSink(stream: DataFrame, outDir: String): Unit = {
     val q = stream.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.sources.FeatureSink.submit(batch, outDir, prefix = s"batch-$batchId")
+        graft.sources.FeatureCollectionSink.write(batch, outDir,
+          prefix = s"batch-$batchId")
       }
       .trigger(Trigger.AvailableNow())
       .start()

@@ -258,19 +258,17 @@ class DedupSpec extends SparkSpec {
       .localCheckpoint(false)
     for ((assign, label) <- Seq((good, "agreeing"), (bad, "disagreeing"))) {
       val restricted = Dedup.clusterAgreementFlag(truth, assign, 0.7, "ok")
-        .collect().head.getBoolean(0)
       assert(restricted == unrestricted(assign, "ok"),
         s"$label assignment: restricted flag diverged")
     }
-    assert(!Dedup.clusterAgreementFlag(truth, bad, 0.7, "ok")
-      .collect().head.getBoolean(0), "disagreeing assignment must fail")
+    assert(!Dedup.clusterAgreementFlag(truth, bad, 0.7, "ok"),
+      "disagreeing assignment must fail")
     // the sub-broadcast-cap census arm too (cap 0 forces the plain join)
     assert(Dedup.clusterAgreementFlag(truth, good, 0.7, "ok",
-      broadcastCap = 0L).collect().head.getBoolean(0))
+      broadcastCap = 0L))
     // empty truth: vacuously true in both forms (0 >= 0)
     val emptyTruth = truth.filter(lit(false)).localCheckpoint(false)
-    assert(Dedup.clusterAgreementFlag(emptyTruth, good, 0.7, "ok")
-      .collect().head.getBoolean(0))
+    assert(Dedup.clusterAgreementFlag(emptyTruth, good, 0.7, "ok"))
   }
 
   test("clusters: a materialized pair frame routes on its measured count, same labels") {
@@ -299,7 +297,7 @@ class DedupSpec extends SparkSpec {
       assert(counter.snapshot == 1L, s"driver route ran ${counter.snapshot} jobs " +
         "(want the bounded collect only)")
       val call = Materialize.drain().find(_.site == "Dedup.clusters pairs")
-      assert(call.exists(c => c.how == "known" && c.route == "driver"),
+      assert(call.exists(c => c.how == "known" && c.route == "cc=driver"),
         s"pair frame call: $call")
     } finally spark.sparkContext.removeSparkListener(counter)
   }
@@ -335,7 +333,7 @@ class DedupSpec extends SparkSpec {
     val badCk = badLocal.localCheckpoint(false)
     def flag(t: org.apache.spark.sql.DataFrame,
         a: org.apache.spark.sql.DataFrame): Boolean =
-      Dedup.clusterAgreementFlag(t, a, 0.7, "ok").collect().head.getBoolean(0)
+      Dedup.clusterAgreementFlag(t, a, 0.7, "ok")
     for (((gated, ungated), label) <- Seq(
         (goodLocal, goodCk) -> "agreeing", (badLocal, badCk) -> "disagreeing")) {
       val self = flag(truthCk, ungated)

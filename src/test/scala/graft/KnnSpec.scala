@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.Vectors
+import graft.operators.{Dedup, Vectors}
 import graft.sources.Tables
 
 /** Similarity-search semantics: brute force against a naive driver-side
@@ -53,7 +53,13 @@ class KnnSpec extends SparkSpec {
     // past the operator's own census.
     val wide = spark.range(100000).select(col("id").as("vec_id"),
       array(col("id").cast("float"), lit(1.0f)).as("embedding"))
+    Materialize.drain()
     val res = Vectors.knnLshDeduped(wide, k = 5)
+    // the groups job's log line names each gate's own choice (the
+    // candidate-array side, 100k × 4 × (k + 1) cells, is past its cap too)
+    val groups = Materialize.drain().find(_.site == "Vectors.knnLshDeduped groups")
+    assert(groups.map(_.route).contains("reps=broadcast buckets=shuffle cands=shuffle"),
+      s"groups call: $groups")
     val hinted = res.queryExecution.analyzed.collect {
       case h: org.apache.spark.sql.catalyst.plans.logical.ResolvedHint =>
         h.output.map(_.name).toSet
@@ -102,7 +108,7 @@ class KnnSpec extends SparkSpec {
     // driver's hash check
     def flag(exact: org.apache.spark.sql.DataFrame,
         approx: org.apache.spark.sql.DataFrame, bound: Double): Boolean =
-      Vectors.withRecallFlag(exact, approx, bound, "f")
+      Dedup.withPairRecallFlag(exact, approx, bound, "f")
         .select("f").head().getBoolean(0)
     val exact = Vectors.knnBruteForceBatch(emb, col("vec_id") < 32, k = 5)
     val lsh = Vectors.knnLsh(emb, k = 5).filter(col("id_a") < 32)

@@ -119,14 +119,14 @@ class MaterializeSpec extends SparkSpec {
     assert(firstRead > 0 && firstRead <= 101,
       s"the driver route read $firstRead pair rows past a cap of 100")
     assert(Materialize.drain().exists(c =>
-      c.site == "Dedup.clusters pairs" && c.route == "distributed"))
+      c.site == "Dedup.clusters pairs" && c.route == "cc=distributed"))
   }
 
   test("an over-cap side is not broadcast") {
     val small = Materialize(frame(5000L, 4), "MaterializeSpec side")
     val big = spark.range(0L, 20000L, 1L, 4).toDF("id")
     def joinPlan(fits: Boolean): String = {
-      val out = big.join(small.broadcastIf(fits)(small.df), Seq("id"))
+      val out = big.join(small.broadcastIf("side", fits)(small.df), Seq("id"))
       out.collect()
       out.queryExecution.executedPlan.toString
     }
@@ -137,10 +137,10 @@ class MaterializeSpec extends SparkSpec {
     spark.conf.set(key, "1024")
     try {
       val over = joinPlan(small.rows <= 100L)
-      assert(small.call.route == "shuffle")
+      assert(small.call.route == "side=shuffle")
       assert(!over.contains("BroadcastHashJoin") && !over.contains("BroadcastExchange"), over)
       assert(joinPlan(small.rows <= 10000L).contains("BroadcastHashJoin"))
-      assert(small.call.route == "broadcast")
+      assert(small.call.route == "side=broadcast")
     } finally prev match {
       case Some(v) => spark.conf.set(key, v)
       case None    => spark.conf.unset(key)

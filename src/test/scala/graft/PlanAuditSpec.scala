@@ -17,15 +17,7 @@ class PlanAuditSpec extends SparkSpec {
     * table). Bounded work: |corpus| x O(1).
     */
   private val singleRowBroadcastOk =
-    Set("q_knn_cosine", "q_knn_ivf", "q_dedup_embedding",
-      "q_knn_lsh",        // limit-capped probe sample + 1-row recall flag
-      "q_dedup_minhash",  // 1-row recall flag (r10 oracle pairing)
-      "q_dedup_simhash",  // 1-row recall flag (r10 oracle pairing)
-      "q_dedup_clusters", // 1-row co-clustering flag (r10 oracle pairing)
-      "q_dedup_clusters_exact_first", // 1-row co-clustering flag (r10)
-      "q_dedup_pipeline", // 1-row two-arm agreement flag (r10)
-      "q_dedup_pipeline_exact_first", // 1-row two-arm agreement flag (r10)
-      "q_knn_lsh_dedup",  // limit-capped probe sample + 1-row recall flag
+    Set("q_knn_cosine",     // broadcasts the single query vector
       "q_text_tfidf",     // broadcasts the single-row corpus count N
       "q_sample_mixture", // broadcasts the single-row global min count
       "q_event_funnel",   // crossJoins three single-row stage counts

@@ -44,9 +44,9 @@ class PlanSpec extends SparkSpec {
       assert(!p.contains("BroadcastNestedLoopJoin"),
         s"$q has a nested-loop join")
     }
-    // the registered q_dedup_minhash carries a 1-row recall-flag
-    // broadcast since its r10 oracle pairing, so (like q_knn_lsh below)
-    // the no-BNLJ pin moves to the raw operator: its band-bucket pair
+    // the registered q_dedup_minhash runs its candidates while it is
+    // built (its recall flag is measured then), so (like q_knn_lsh below)
+    // the no-BNLJ pin is on the raw operator: its band-bucket pair
     // generation must stay an equi-join, never all-pairs
     val mhPlan = graft.operators.Dedup
       .minhashPairs(graft.sources.Tables.documents(spark, sfDir)
@@ -57,10 +57,9 @@ class PlanSpec extends SparkSpec {
       "minhashPairs operator has a cartesian product")
     assert(!mhPlan.contains("BroadcastNestedLoopJoin"),
       "minhashPairs operator has a nested-loop join")
-    // the registered q_knn_lsh now wraps the operator with bounded
-    // probe-sample broadcasts (r10 oracle pairing), so the no-BNLJ pin
-    // moves to the raw LSH operator itself: its bucket join must stay an
-    // equi-join, never all-pairs
+    // the registered q_knn_lsh likewise runs its index while it is built,
+    // so the no-BNLJ pin is on the raw LSH operator itself: its bucket
+    // join must stay an equi-join, never all-pairs
     val lshPlan = graft.operators.Vectors
       .knnLsh(graft.sources.Tables.embeddings(spark, sfDir), k = 5)
       .queryExecution.executedPlan.toString
@@ -124,25 +123,62 @@ class PlanSpec extends SparkSpec {
       df.queryExecution.executedPlan.toString).isDefined)
   }
 
-  test("q_text_vocab takes its top-50 with per-partition heaps and never runs a partition-less window") {
-    val qe = Registry.all.find(_.name == "q_text_vocab").get
-      .build(spark, sfDir).queryExecution
+  test("q_text_vocab takes its top-50 with per-partition heaps") {
     // the vocab cutoff must be TakeOrderedAndProject (no global sort of
-    // the 10^8-token vocabulary), and every WindowExec must carry a
-    // partition spec — Spark's "No Partition Defined ... single
-    // partition" path is banned from the declared surface
-    assert(qe.executedPlan.toString.contains("TakeOrderedAndProject"),
-      qe.executedPlan.toString.linesIterator.take(8).mkString("\n"))
-    // check the OPTIMIZED LOGICAL plan: that is where foldable partition
-    // keys get stripped (a lit(0) key silently degrades to the
-    // partition-less form), and the physical tree hides inside the AQE
-    // wrapper where collect() does not descend
+    // the 10^8-token vocabulary)
+    val p = plan("q_text_vocab")
+    assert(p.contains("TakeOrderedAndProject"), p.linesIterator.take(8).mkString("\n"))
+  }
+
+  test("no registry query runs a partition-less window") {
+    // every Window must carry a partition spec — Spark's "No Partition
+    // Defined ... single partition" path funnels its input through one
+    // task and is banned from the declared surface. Check the OPTIMIZED
+    // LOGICAL plan: that is where foldable partition keys get stripped (a
+    // lit(0) key silently degrades to the partition-less form), and the
+    // physical tree hides inside the AQE wrapper where collect() does not
+    // descend
     import org.apache.spark.sql.catalyst.plans.logical.{Window => LWindow}
-    val partitionless = qe.optimizedPlan.collect {
-      case w: LWindow if w.partitionSpec.isEmpty => w
+    val partitionless = Registry.all.flatMap { q =>
+      q.build(spark, sfDir).queryExecution.optimizedPlan.collect {
+        case w: LWindow if w.partitionSpec.isEmpty => q.name
+      }
     }
     assert(partitionless.isEmpty,
-      s"partition-less Window in optimized plan:\n${partitionless.mkString("\n")}")
+      s"partition-less Window in: ${partitionless.distinct.mkString(", ")}")
+  }
+
+  test("every oracle flag column is a measured literal") {
+    // each approximate operator's recall or agreement flag is measured
+    // while the query is built and declared as a Boolean literal, so no
+    // flag aggregate, window or cross join runs in the returned plan
+    import org.apache.spark.sql.catalyst.expressions.{Alias, Literal}
+    import org.apache.spark.sql.types.BooleanType
+    val flags = Seq(
+      "q_knn_lsh" -> "lsh_recall_ok",
+      "q_knn_lsh_dedup" -> "lsh_dedup_recall_ok",
+      "q_knn_ivf" -> "ivf_recall_ok",
+      "q_dedup_minhash" -> "minhash_recall_ok",
+      "q_dedup_simhash" -> "simhash_recall_ok",
+      "q_dedup_clusters" -> "minhash_cluster_ok",
+      "q_dedup_clusters_exact_first" -> "exact_first_cluster_ok",
+      "q_dedup_pipeline" -> "pipeline_agree_ok",
+      "q_dedup_pipeline_exact_first" -> "pipeline_exact_first_ok")
+    val notLiteral = flags.flatMap { case (name, flag) =>
+      val analyzed = Registry.all.find(_.name == name).get
+        .build(spark, sfDir).queryExecution.analyzed
+      val out = analyzed.output.find(_.name == flag)
+      assert(out.isDefined, s"$name declares no $flag column")
+      // the expressions that define the flag column, wherever they are
+      val defs = analyzed.flatMap(_.expressions.collect {
+        case a: Alias if a.exprId == out.get.exprId => a.child
+      })
+      defs match {
+        case Seq(Literal(_: Boolean, BooleanType)) => None
+        case other => Some(s"$name.$flag = ${other.mkString(", ")}")
+      }
+    }
+    assert(notLiteral.isEmpty, s"flags not declared as literals: ${notLiteral.mkString("; ")}")
   }
 
   test("correlated NOT EXISTS decorrelates to a left-anti join") {

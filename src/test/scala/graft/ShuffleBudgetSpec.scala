@@ -28,6 +28,10 @@ class ShuffleBudgetSpec extends SparkSpec {
   // measured size, so scans of stored frames plan without the re-shuffle
   // or sort exchange they needed, and the recall/pipeline flags are
   // literals (no flag aggregate or broadcast in the returned plan).
+  // Literal-flag re-record (tightened, five entries): the kNN recall flags
+  // and the cluster-agreement flags are measured while the query is built
+  // as well, so no flag join, window or cross join is left in the returned
+  // plan; BuildExchangeBudgetSpec pins their build + returned-plan totals.
   private val budget: Map[String, Int] = Map(
     "coalesce_default" -> 1,
     "coord_truncate" -> 2,
@@ -47,29 +51,19 @@ class ShuffleBudgetSpec extends SparkSpec {
     "q_array_funcs" -> 1,
     "q_cube" -> 2, // r15: spread reverted (driver 0.78×), -1 Exchange
     "q_date_funcs" -> 2,
-    // r10 re-record 1 -> 5: oracle pairing — the declared CC runs on the
-    // truth edges (its internals still hide behind the operator's round
-    // checkpoints) and the flag adds the truth/minhash-label joins + the
-    // 1-row broadcast; every new exchange moves edge/label frames
-    "q_dedup_clusters" -> 5,
-    // exact-first: text-groupBy collapse + output sort + the expansion
-    // join's BroadcastExchange (r7 re-record 4 -> 3: the census-gated
-    // broadcast replaced the corpus-wide sort-merge-by-text — the sf1000
-    // cell's dominant shuffle; CC internals hide behind checkpoints)
-    "q_dedup_clusters_exact_first" -> 5, // r10 oracle pairing — see
-                                // q_dedup_clusters. r15 re-record 7 -> 5:
-                                // the truth frame's count bounds the tids
-                                // broadcast, so the tids subplan is
-                                // broadcast directly — its standalone
-                                // checkpoint + census exchanges left the
-                                // visible plan
+    // the declared CC labels over the truth edges plus the output sort;
+    // the CC rounds and the agreement flag run while the query is built
+    // (literal-flag re-record 5 -> 1)
+    "q_dedup_clusters" -> 1,
+    // the same declared rows; the exact-first composition the flag
+    // measures runs while the query is built (literal-flag re-record 5 -> 1)
+    "q_dedup_clusters_exact_first" -> 1,
     "q_dedup_embedding" -> 2,
     "q_dedup_exact" -> 2,
-    // r10 re-record 4 -> 3: the oracle-paired form's VISIBLE plan is the
-    // lazy-checkpointed truth⋈candidates mark frame (operator + truth
-    // internals hide behind that boundary — both audited via the raw
-    // operator pins in PlanSpec/DedupSpec) + the 1-row flag broadcast +
-    // output sort
+    // the oracle-paired form's returned plan reads the stored
+    // truth⋈candidates mark frame (operator and truth internals run while
+    // the query is built — both audited via the raw operator pins in
+    // PlanSpec/DedupSpec) under the output sort; the flag is a literal
     "q_dedup_minhash" -> 1,
     // r10 re-record 2 -> 7: the exploded-window + array_intersect form
     // became the inverted-index set-similarity join (shared machinery
@@ -80,7 +74,7 @@ class ShuffleBudgetSpec extends SparkSpec {
     "q_dedup_ngram_jaccard" -> 3, // r15: spread reverted (driver 0.72×);
                                 // the window self-join read the spread
                                 // exchange on both sides, so -2 plan nodes
-    "q_dedup_pipeline" -> 0, // r10 oracle pairing — truth keep-join + two-arm flag broadcasts
+    "q_dedup_pipeline" -> 0, // reads the stored documents; the two-arm flag is a literal
     // exact-first: text-groupBy collapse + degenerate-branch scan + the
     // keep semi-join's BroadcastExchange (r7 re-record 5 -> 3: the
     // census-gated broadcast of keepIds replaced the corpus-wide
@@ -113,30 +107,14 @@ class ShuffleBudgetSpec extends SparkSpec {
     "q_join_bucketed" -> 2,
     "q_json_funcs" -> 2,
     "q_knn_cosine" -> 1,
-    // r10 oracle pairing: the registered queries declare the exact
-    // sampled-probe top-k plus a genuine recall flag, so on top of the
-    // operator core (6 for LSH's bucket pipeline; centroid aggregate +
-    // cell join for IVF) the plan carries the exact batch (probe
-    // broadcast + per-probe window) and the flag join/window — every
-    // added exchange moves only sample-bounded frames (≤ probes × k
-    // rows), never the corpus
-    "q_knn_ivf" -> 11, // r15: bounded recall-flag broadcast, -1 Exchange
-    "q_knn_lsh" -> 11,
-    // dedup-before-index: rep-level bucket join + group ranking window +
-    // rep-level candidate ranking + bounded-array expansion join; the
-    // BottomIds groups aggregate hides behind the lazy localCheckpoint
-    // boundary. r8 re-record 11 -> 10: the member-level top-k window
-    // (the measured dominant stage at sf1000 — 74 s over a 620 M-row
-    // shuffle) is gone; candidates are ranked ONCE per rep and members
-    // expand by array slice, so no member-scale exchange remains beyond
-    // the membership join itself
-    // r10 re-record 10 -> 15: oracle pairing composes the operator (10)
-    // with the exact probe batch + recall-flag join/window (the q_knn_lsh
-    // shape) — added exchanges move sample-bounded frames only
-    // r15 re-record 15 -> 14 (VERDICT r14 item 3): the census-gated rep
-    // broadcasts (bucket side, vector re-joins, group metadata) and the
-    // bounded recall-flag broadcast collapse shuffle pairs; jobs 21 -> 19
-    "q_knn_lsh_dedup" -> 11,
+    // the registered kNN queries declare the exact sampled-probe top-k
+    // plus a recall flag measured while the query is built (the exact
+    // batch, the index and their join run in that materialization), so
+    // the returned plan only reads the stored rows (literal-flag
+    // re-record 11 -> 0 for all three)
+    "q_knn_ivf" -> 0,
+    "q_knn_lsh" -> 0,
+    "q_knn_lsh_dedup" -> 0,
     "q_map_funcs" -> 2,
     "q_math_funcs" -> 1,
     "q_merge_upsert" -> 2,

@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
 import graft.operators.CalTopo
 import graft.queries.Registry
-import graft.sources.{CalTopoFeatures, FeatureCollectionSink, FeatureSink, Tables}
+import graft.sources.{CalTopoFeatures, FeatureCollectionSink, Tables}
 import CalTopoSpec.{decode, multiset}
 
 /** Custom DSv2 GeoJSON source (A1) + partition-parallel FeatureCollection
@@ -267,7 +267,7 @@ class SourceSinkSpec extends SparkSpec {
     }
     val flagship = CalTopo.flagship(CalTopoFeatures.build(spark, sfDir))
     val n = flagship.count()
-    FeatureSink.submit(flagship.repartition(3), out)
+    FeatureCollectionSink.write(flagship.repartition(3), out)
     val files = Paths.get(out).toFile.listFiles.filter(_.getName.endsWith(".json"))
     assert(files.nonEmpty && files.length <= 3)
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
