@@ -100,6 +100,14 @@ object Materialize {
     }
   }
 
+  /** The cell cap of every measured broadcast gate (Ntile's bounds,
+    * Percentiles' internal joins, the kNN reps, buckets and cands sides):
+    * a side whose measured rows × cells per row stay under it is hinted
+    * as a broadcast, past it AQE picks the side. It admits sides past the
+    * 10 MB auto-broadcast threshold.
+    */
+  val BroadcastCells = 2000000L
+
   /** Name prefix of the RDDs [[apply]] measured: only their statistics are
     * trusted as exact by [[knownRows]] (a plain checkpoint's are estimates,
     * and a LIMIT's row count is only an upper bound).

@@ -4,12 +4,13 @@ package graft
   * queries (measurement tooling for the optimization rounds — guide §1.1:
   * capture the plan shape before and after every change). Usage:
   *
-  *   SPARK_GRAFT_PLAN_QUERIES=q_dedup_minhash,q_dedup_clusters \
+  *   SPARK_GRAFT_ONLY=q_dedup_minhash,q_dedup_clusters \
   *   SPARK_GRAFT_PLAN_SUFFIX=before \
   *   SPARK_GRAFT_PLAN_DIR=plans/r14 \
   *   sbt "runMain graft.PlanExplain"
   *
-  * Writes <dir>/<query>_<suffix>.txt. The session is Bench's
+  * Writes <dir>/<query>_<suffix>.txt. The query list is the same
+  * `SPARK_GRAFT_ONLY` variable Bench and Profile read. The session is Bench's
   * ([[Session.build]]), so the dumped plans match what the bench runs.
   * NOTE: iterative operators (Dedup.clusters, Percentiles.exact) execute
   * their driver-synced jobs at BUILD time; their dumped plan is the final
@@ -20,7 +21,7 @@ object PlanExplain {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
-    val names = sys.env.getOrElse("SPARK_GRAFT_PLAN_QUERIES", "")
+    val names = sys.env.getOrElse("SPARK_GRAFT_ONLY", "")
       .split(",").map(_.trim).filter(_.nonEmpty).toSeq
     val suffix = sys.env.getOrElse("SPARK_GRAFT_PLAN_SUFFIX", "before")
     val dir = java.nio.file.Paths.get(

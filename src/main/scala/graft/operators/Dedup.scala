@@ -202,7 +202,7 @@ object Dedup {
     * `docs` must have (id, text); output (id_a, id_b, jaccard), unordered.
     */
   def exactJaccardWindowPairs(docs: DataFrame, tau: Double,
-      window: Int, materialize: Boolean = true): DataFrame = {
+      window: Int): DataFrame = {
     // What's materialized ONCE is the PER-DOC GRAM ARRAY frame (r11) —
     // one row per doc, array-encoded longs, no id repeated per gram —
     // not the exploded (id, h) rows the r10 form checkpointed. Both join
@@ -226,13 +226,9 @@ object Dedup {
     // host class hates).
     // The price is one dedicated driver round-trip per truth construct
     // (~tens of ms; JobBudgetSpec ceilings re-recorded deliberately).
-    // The `materialize = false` arm recomputes the gram subplan per
-    // consumer (the disk-posture A/B, VERDICT r10 item 4; its r10
-    // numbers: recompute 1.7× the wall at identical peak disk — re-run
-    // post-rewrite in BASELINE.md r11).
-    val arrPlan = gramHashSets(docs)
-    val arr = if (materialize) Materialize(arrPlan, "Dedup.exactJaccardWindowPairs grams").df
-              else arrPlan
+    // Recomputing the gram subplan per consumer instead measured 1.7× the
+    // wall at identical peak disk (BASELINE.md r11).
+    val arr = Materialize(gramHashSets(docs), "Dedup.exactJaccardWindowPairs grams").df
     val sizes = arr.select(col("id"), size(col("g")).as("n"))
     val rows = arr.select(col("id"), explode(col("g")).as("h"))
     val blk = floor(col("id") / window).cast("long")
@@ -435,33 +431,44 @@ object Dedup {
     */
   def minhashPairs(docs: DataFrame, threshold: Double = 0.5,
       numPerm: Int = 64, bandRows: Int = 4, maxBucket: Int = 256,
-      stats: Option[DropStats] = None): DataFrame = {
-    val st = stats.getOrElse(dropStats(docs.sparkSession, "minhash"))
-    val m = col("members")
-    val buckets = filterCounting(
+      stats: Option[DropStats] = None): DataFrame =
+    bucketPairs(
       minhashSignatures(docs, numPerm)
-        .select(col("id"), col("mh"), explode(bandKeys(col("mh"), bandRows)).as("bk"))
-        .groupBy(col("bk"))
-        .agg(collect_list(struct(col("id"), col("mh"))).as("members")),
+        .select(col("id"), col("mh"), explode(bandKeys(col("mh"), bandRows)).as("bk")),
+      "bk", "mh", stats.getOrElse(dropStats(docs.sparkSession, "minhash")), maxBucket,
+      // signature agreement via the native EqualSlots kernel — the HOF
+      // zip_with/aggregate fold paid ~64 interpreted lambda dispatches
+      // plus an intermediate array PER CANDIDATE PAIR, which dominates
+      // once duplication inflates pair counts (same count, same cast,
+      // bitwise-equal est_jaccard)
+      "est_jaccard", (a, b) =>
+        graft.functions.VectorExprs.equalSlots(a, b).cast("double") / numPerm,
+      _ >= threshold)
+
+  /** In-bucket candidate pairs: group `keyed` (id, `sig`, `key`) by `key`,
+    * drop buckets outside [2, maxBucket] ([[filterCounting]]), and emit
+    * every (id_a < id_b) pair of a bucket's members with `score` computed
+    * from the two signatures, keeping those that pass `keep`. A pair that
+    * shares several buckets is emitted once.
+    */
+  private def bucketPairs(keyed: DataFrame, key: String, sig: String,
+      st: DropStats, maxBucket: Int, score: String,
+      scoreOf: (Column, Column) => Column, keep: Column => Column): DataFrame = {
+    val m = col("members")
+    filterCounting(
+      keyed.groupBy(col(key))
+        .agg(collect_list(struct(col("id"), col(sig))).as("members")),
       st, maxBucket)
-    // signature agreement via the native EqualSlots kernel — the HOF
-    // zip_with/aggregate fold paid ~64 interpreted lambda dispatches plus
-    // an intermediate array PER CANDIDATE PAIR, which dominates once
-    // duplication inflates pair counts (same count, same cast, bitwise-
-    // equal est_jaccard)
-    def estJaccard(a: Column, b: Column): Column =
-      graft.functions.VectorExprs.equalSlots(a.getField("mh"), b.getField("mh"))
-        .cast("double") / numPerm
-    buckets.select(explode(flatten(
+      .select(explode(flatten(
         transform(m, (a, i) =>
           transform(slice(m, i + 2, size(m)), b =>
             struct(
               least(a.getField("id"), b.getField("id")).as("id_a"),
               greatest(a.getField("id"), b.getField("id")).as("id_b"),
-              estJaccard(a, b).as("est_jaccard")))))).as("p"))
+              scoreOf(a.getField(sig), b.getField(sig)).as(score)))))).as("p"))
       .select(col("p.id_a").as("id_a"), col("p.id_b").as("id_b"),
-        col("p.est_jaccard").as("est_jaccard"))
-      .filter(col("est_jaccard") >= threshold)
+        col(s"p.$score").as(score))
+      .filter(keep(col(score)))
       .dropDuplicates("id_a", "id_b")
   }
 
@@ -831,29 +838,13 @@ object Dedup {
     * raise the cap where completeness matters more.
     */
   def simhashPairs(docs: DataFrame, maxDist: Int = 3,
-      maxBucket: Int = 256, stats: Option[DropStats] = None): DataFrame = {
-    val st = stats.getOrElse(dropStats(docs.sparkSession, "simhash"))
-    val m = col("members")
-    val buckets = filterCounting(
+      maxBucket: Int = 256, stats: Option[DropStats] = None): DataFrame =
+    bucketPairs(
       simhashSignatures(docs)
         .select(col("id"), col("sh"),
           explode(transform(sequence(lit(0), lit(3)),
             c => struct(c.as("ci"),
-              shr(col("sh"), c * 16).bitwiseAND(0xFFFFL).as("cv")))).as("chunk"))
-        .groupBy(col("chunk"))
-        .agg(collect_list(struct(col("id"), col("sh"))).as("members")),
-      st, maxBucket)
-    buckets.select(explode(flatten(
-        transform(m, (a, i) =>
-          transform(slice(m, i + 2, size(m)), b =>
-            struct(
-              least(a.getField("id"), b.getField("id")).as("id_a"),
-              greatest(a.getField("id"), b.getField("id")).as("id_b"),
-              bit_count(a.getField("sh").bitwiseXOR(b.getField("sh")))
-                .as("hamming")))))).as("p"))
-      .select(col("p.id_a").as("id_a"), col("p.id_b").as("id_b"),
-        col("p.hamming").as("hamming"))
-      .filter(col("hamming") <= maxDist)
-      .dropDuplicates("id_a", "id_b")
-  }
+              shr(col("sh"), c * 16).bitwiseAND(0xFFFFL).as("cv")))).as("chunk")),
+      "chunk", "sh", stats.getOrElse(dropStats(docs.sparkSession, "simhash")), maxBucket,
+      "hamming", (a, b) => bit_count(a.bitwiseXOR(b)), _ <= maxDist)
 }

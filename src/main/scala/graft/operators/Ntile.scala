@@ -19,18 +19,20 @@ import graft.Materialize
   *
   *  1. NTILE's tile boundaries sit at ranks cum_i = i·q + min(i, r) where
   *     n = k·q + r (the first r tiles get q+1 rows). The boundary VALUES
-  *     at those ranks come from [[Percentiles.exact]] via its `rankFor`
-  *     override — sketch brackets at p=i/k, exact rank counts, bisection
-  *     refinement — so no aggregation buffer grows with group size.
+  *     at those ranks come from [[Percentiles.exact]] under NTILE's
+  *     `rankFor` rule — sketch brackets at p=i/k with Percentiles' own δ
+  *     and accuracy, exact rank counts, bisection refinement — so no
+  *     aggregation buffer grows with group size.
   *  2. The sort key is (v, id), so rows tied with a boundary VALUE split
   *     between tiles by id. One aggregate pass computes per boundary the
   *     exact below-count and tie-run size; the boundary's tie-break id is
   *     then the (cum_i − below_i)-th smallest id WITHIN the tied run —
   *     selected by sorted-collect when the run is ≤ `tieCap` ids, else by
   *     driver-synced bisection on the id domain (interval strictly shrinks
-  *     every round; ≤ 64 rounds for long ids) until the remaining slice
-  *     fits the cap. Executor memory is bounded by `tieCap` at ANY tie-run
-  *     size — a 10^9-copy constant column costs log rounds, not an OOM.
+  *     every round; ≤ 64 rounds for long ids, under Percentiles'
+  *     `maxRounds` guard) until the remaining slice fits the cap.
+  *     Executor memory is bounded by `tieCap` at ANY tie-run size — a
+  *     10^9-copy constant column costs log rounds, not an OOM.
   *  3. tile = 1 + Σ_i [ (v, id) > (bv_i, bid_i) lexicographically ], a
   *     broadcast join + codegen'd comparisons: no window, no per-group
   *     serialization, embarrassingly parallel at any scale.
@@ -79,21 +81,13 @@ import graft.Materialize
   */
 object Ntile {
 
-  /** The boundary machinery's sketch knobs and rank rule;
-    * [[distributedPath]] consumes exactly these. Their forced
-    * tie-bisection measurements are in BASELINE.md r7 "Forced
-    * tie-bisection measured at the scale it exists for".
-    */
-  private[graft] val boundaryDelta = 0.002
-  private[graft] val boundaryAccuracy = 2000
-
   /** Sub-floor groups take the whole-group [vmin, vmax] bracket: NTILE's
     * rank rule deviates from p·n by up to k rows, which must stay inside
-    * the (δ − 1/accuracy)·n enclosure margin — see the derivation at the
-    * use site.
+    * [[Percentiles]]' (δ − 1/accuracy)·n enclosure margin — see the
+    * derivation at the use site.
     */
   private[graft] def boundarySmallFloor(k: Int): Long = {
-    val margin = boundaryDelta - 1.0 / boundaryAccuracy
+    val margin = Percentiles.delta - 1.0 / Percentiles.accuracy
     math.max(10000L, math.ceil(2 * k / margin).toLong)
   }
 
@@ -115,7 +109,6 @@ object Ntile {
       k: Int,
       outCol: String = "tile",
       tieCap: Long = 1000000L,
-      maxRounds: Int = 128,
       windowCap: Long = 1000000L): DataFrame = {
     require(k >= 2, "ntile needs k >= 2")
     require(tieCap >= 1)
@@ -162,10 +155,10 @@ object Ntile {
         val large = df.join(largeKeys, groupCol <=> col("__ntile_g"), "left_semi")
         return windowPath(small, groupCol, valueCol, idCol, k, outCol)
           .unionByName(distributedPath(large, groupCol, valueCol, idCol, k,
-            outCol, tieCap, maxRounds))
+            outCol, tieCap))
       }
     }
-    distributedPath(df, groupCol, valueCol, idCol, k, outCol, tieCap, maxRounds)
+    distributedPath(df, groupCol, valueCol, idCol, k, outCol, tieCap)
   }
 
   /** Built-in window `ntile` over groups PROVEN ≤ `windowCap` rows — with
@@ -197,8 +190,7 @@ object Ntile {
       idCol: Column,
       k: Int,
       outCol: String,
-      tieCap: Long,
-      maxRounds: Int): DataFrame = {
+      tieCap: Long): DataFrame = {
 
     // the group key travels through the machinery wrapped in a one-field
     // struct: struct comparison matches null fields (verified Spark
@@ -216,8 +208,6 @@ object Ntile {
     //    — the sketch's own rank error eats into the δ·n margin — take
     //    the whole-group [vmin, vmax] bracket (smallFloor below;
     //    Percentiles' enclosure require still guards every target loudly).
-    val delta = boundaryDelta
-    val accuracy = boundaryAccuracy
     val smallFloor = boundarySmallFloor(k)
     val rankFor = boundaryRankFor(k)
     // materialize the one-row-per-group boundary frame: it feeds FOUR
@@ -225,9 +215,8 @@ object Ntile {
     // each of which would otherwise re-run the sketch/probe machinery
     val boundsM = Materialize(Percentiles.exact(base, col("g"), col("v"),
       targets = (1 to k - 1).map(i => (s"__bv$i", i.toDouble / k)),
-      delta = delta, accuracy = accuracy, smallFloor = smallFloor,
-      sliceCap = math.max(1000000L, smallFloor),
-      discrete = true, rankFor = Some(rankFor)), "Ntile.exact bounds")
+      rankFor = Some(rankFor), smallFloor = smallFloor,
+      sliceCap = math.max(1000000L, smallFloor)), "Ntile.exact bounds")
     val bounds = boundsM.df
 
     // measured-count broadcast (same discipline as Dedup's expansion
@@ -238,7 +227,7 @@ object Ntile {
     // is comfortably in-memory (the cap admits past the 10 MB
     // auto-broadcast threshold); past the cap AQE picks the join side
     // (and at millions of groups it will correctly shuffle)
-    val bc = boundsM.broadcastIf("bounds", boundsM.rows * k <= 2000000L) _
+    val bc = boundsM.broadcastIf("bounds", boundsM.rows * k <= Materialize.BroadcastCells) _
 
     // -- one exact pass: per-group n plus, per boundary, the count strictly
     //    below its value and the size of its tied run (map-side combinable;
@@ -303,8 +292,8 @@ object Ntile {
     var state = stM.df.drop("__viol", "__act")
     var anyActive = stM.any(1)
     while (anyActive) {
-      require(rounds < maxRounds,
-        s"NTILE tie bisection did not converge in $maxRounds rounds")
+      require(rounds < Percentiles.maxRounds,
+        s"NTILE tie bisection did not converge in ${Percentiles.maxRounds} rounds")
       if (tied == null)
         // spread by id too: hashing only (g, v) would concentrate a mega
         // tie run — the exact case this path exists for — into ONE

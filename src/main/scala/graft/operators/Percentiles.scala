@@ -81,130 +81,93 @@ import graft.Materialize
   */
 object Percentiles {
 
+  /** Sketch bracket half-width in rank share: each target brackets at
+    * p ± delta.
+    */
+  private[graft] val delta = 0.002
+
+  /** percentile_approx accuracy: the sketch's rank error is at most
+    * n/accuracy. 1/accuracy must stay below [[delta]] or the p ± δ
+    * bracket endpoints cannot be trusted to enclose the target rank (the
+    * enclosure `require` would fire); 2000 leaves a
+    * (δ − 1/accuracy)·n = 0.0015·n rank margin.
+    */
+  private[graft] val accuracy = 2000
+
+  /** Bisection rounds before a loop fails loudly (it converges in at
+    * most 64 on doubles or longs).
+    */
+  private[graft] val maxRounds = 256
+
+  /** The discrete rank rule: the element at 1-based rank ceil(p·n)
+    * (quantile_disc, equi-depth bin boundaries).
+    */
+  val discreteRank: (Column, Column) => Column = (p, n) => ceil(p * n)
+
   /** TRUE iff a value's true-rank interval [lt+1, le] intersects
     * [target − tol, target + tol] — the GK/KLL sketch guarantee expressed
     * over exact rank counts (lt = values strictly below, le = values at
     * or below; a tied value occupies the whole [lt+1, le] rank run).
-    * `q_percentile_approx`'s within_accuracy flag is this predicate with
-    * target = p·n and tol = n/accuracy + 1; ExtraSpec pins its negative
-    * arms (an interval strictly left or right of the tolerance window
-    * must flip the flag) so a broken sketch cannot pass unnoticed.
+    * [[exact]]'s `flag` is this predicate with target = p·n and
+    * tol = n/accuracy + 1; ExtraSpec pins its negative arms (an interval
+    * strictly left or right of the tolerance window must flip the flag)
+    * so a broken sketch cannot pass unnoticed.
     */
   def rankIntervalWithin(lt: Column, le: Column,
       target: Column, tol: Column): Column =
     (le.cast("double") >= target - tol) &&
       (lt.cast("double") + lit(1.0) <= target + tol)
 
-  /** Caller-supplied aggregates FUSED into the machinery's own two full
-    * scans (VERDICT r9 item 2: `q_percentile_approx`'s flag needed its own
-    * sketch pass plus a rank-count pass over the same `li` grouped by the
-    * same `g` the machinery already scans twice — 5 full passes where 2
-    * suffice; measured 2.53 s → the fused form at sf0.1, and two fewer
-    * shuffles at any scale).
-    *
-    *  - `sketchAggs`: extra aggregates (aliased) evaluated inside pass 1's
-    *    per-group sketch aggregation, over the value column `v`. Their
-    *    results ride the checkpointed per-group sketch row.
-    *  - `proj`: extra projections (aliased) evaluated after pass 2's
-    *    base ⋈ sketch join — may reference `v` and any `sketchAggs` alias
-    *    (same scalar-projection discipline as the machinery's own bracket
-    *    bounds: element_at lookups hoisted OUT of the aggregate).
-    *  - `aggs`: extra aggregates (aliased) evaluated inside pass 2's
-    *    per-group probe aggregation, over `v` and the `proj` aliases.
-    *
-    * The fused results surface on the operator output as one extra column
-    * per `aggs` alias plus `__n` (the group's non-null value count — the
-    * normalizer every rank-tolerance flag needs). Alias names must not
-    * collide with target names or start with `__below`/`__cnt`/`__p`.
-    *
-    * `atTargets = true` additionally evaluates the machinery's OWN sketch
-    * at each target's raw percentage (appended to the same
-    * percentile_approx evaluation array — zero extra summaries, zero
-    * extra scans) and exposes the values to `aggs` as `__at0..__at(T-1)`
-    * in target declaration order. This is how a sketch-accuracy flag
-    * should be fused: it validates the very summary the machinery
-    * brackets with (rank guarantee n/`accuracy`), where a caller-supplied
-    * second sketch at a different accuracy doubles the pass-1 map-side
-    * sketch-update cost — measured 0.61–0.67 s vs 0.39–0.41 s on the
-    * pass-1 stage at sf0.1 (q_percentile_approx warm runs, r10).
-    */
-  case class FusedProbe(
-      sketchAggs: Seq[Column],
-      proj: Seq[Column],
-      aggs: Seq[Column],
-      atTargets: Boolean = false)
-
-  /** Exact continuous-interpolation percentiles, one output column per
-    * target, one row per group.
+  /** Exact percentiles, one output column per target, one row per group.
     *
     * @param targets   (outputColumn, percentage) pairs, percentage in [0,1]
-    * @param delta     sketch bracket half-width in rank share (±δ·n)
-    * @param accuracy  percentile_approx accuracy (rank error ≤ n/accuracy).
-    *                  Must satisfy 1/accuracy < delta or the p±δ bracket
-    *                  endpoints cannot be trusted to enclose the target
-    *                  rank (the enclosure `require` would fire). The
-    *                  default 2000 leaves an (δ − 1/accuracy)·n = 0.0015·n
-    *                  rank margin at the default δ
+    * @param rankFor   the rank rule. None: continuous interpolation at
+    *                  r = (n−1)·p (SQL percentile()). Some(f): the discrete
+    *                  element at the 1-based rank f(p, n), clamped into
+    *                  [1, n] — [[discreteRank]] for quantile_disc, or a
+    *                  rule no literal percentage expresses (NTILE's
+    *                  i·(n div k) + min(i, n mod k), [[Ntile.exact]]).
+    *                  The sketch still brackets at p ± δ, so f's rank must
+    *                  stay within (δ − 1/accuracy)·n of p·n for groups at
+    *                  or above `smallFloor`: a rule that deviates from p·n
+    *                  by up to d rows needs `smallFloor` ≥ d/(δ − 1/accuracy)
+    *                  (the enclosure `require` fails loudly, never
+    *                  silently, if it is lower).
     * @param sliceCap  max values any single aggregation buffer may hold
     * @param smallFloor groups below this collect whole (must be ≤ sliceCap)
-    * @param discrete  rank semantics: false = continuous interpolation at
-    *                  r=(n-1)·p (SQL percentile()); true = the DISCRETE
-    *                  element at 1-based rank ceil(p·n) (quantile_disc /
-    *                  equi-depth bin boundaries). Discrete mode just pins
-    *                  r to the exact integer ceil(p·n)-1 — the
-    *                  interpolation weights become (1, 0) and the whole
-    *                  bracket/bisection machinery is reused unchanged.
-    * @param rankFor   optional exact-rank override: maps (p, n) to the
-    *                  1-based target rank (clamped into [1, n]) and implies
-    *                  discrete semantics. The sketch still brackets at
-    *                  p±δ, so the returned rank must stay within
-    *                  (δ − 1/accuracy)·n of p·n for groups above
-    *                  `smallFloor` — callers whose rank rule deviates from
-    *                  p·n by up to d rows must raise `smallFloor` to at
-    *                  least d/δ (the enclosure `require` below fails loudly,
-    *                  never silently, if they don't). Lets rank rules that
-    *                  no literal percentage expresses (e.g. NTILE's
-    *                  i·(n div k) + min(i, n mod k), [[Ntile.exact]]) reuse
-    *                  the bracket/bisection machinery unchanged.
     * @param broadcastCells census gate for the machinery's internal
-    *                  broadcasts (r7 VERDICT's one weak mark): every
-    *                  boundary-side frame below holds O(groups × T) cells
-    *                  — br's row alone carries the 2T-double qs sketch
-    *                  array — so at extreme group counts (10^7 oversized
-    *                  groups on a 10^13-row input routed here by
-    *                  [[Ntile.exact]]) a forced broadcast is a multi-GB
-    *                  replica on every executor. The hint is forced only
-    *                  while groups × rows-and-sketch-cells stays under
-    *                  this cap; past it the joins carry no hint and AQE
-    *                  picks the side (at millions of groups it will
-    *                  correctly shuffle). Same discipline as
-    *                  [[Ntile]]'s boundary-table gate and
-    *                  [[Dedup.survivorsExactFirst]]'s keep-join. br is
-    *                  checkpointed, so the census count is a scan of
-    *                  in-memory partitions, not a re-run of the sketch.
+    *                  broadcasts: every boundary-side frame below holds
+    *                  O(groups × T) cells — br's row alone carries the
+    *                  2T-double qs sketch array — so at extreme group
+    *                  counts (10^7 oversized groups on a 10^13-row input
+    *                  routed here by [[Ntile.exact]]) a forced broadcast
+    *                  is a multi-GB replica on every executor. The hint is
+    *                  forced only while groups × rows-and-sketch-cells
+    *                  stays under this cap; past it the joins carry no
+    *                  hint and AQE picks the side. br is materialized, so
+    *                  the group count is its measured row count.
+    * @param flag      names an output column that checks the sketch
+    *                  itself: the same percentile_approx array also
+    *                  evaluates each raw target percentage, the probe
+    *                  pass counts the values below (lt) and at or below
+    *                  (le) each of them, and the opening state's
+    *                  materialization counts the (group, target) pairs
+    *                  that fail [[rankIntervalWithin]](lt, le, p·n,
+    *                  n/accuracy + 1). The column is the Boolean literal
+    *                  "no pair failed" — no extra summary, scan or job.
     */
   def exact(
       df: DataFrame,
       groupCol: Column,
       valueCol: Column,
       targets: Seq[(String, Double)],
-      delta: Double = 0.002,
-      accuracy: Int = 2000,
+      rankFor: Option[(Column, Column) => Column] = None,
       sliceCap: Long = 1000000L,
       smallFloor: Long = 1000L,
-      maxRounds: Int = 256,
-      discrete: Boolean = false,
-      rankFor: Option[(Column, Column) => Column] = None,
-      broadcastCells: Long = 2000000L,
-      extra: Option[FusedProbe] = None): DataFrame = {
+      broadcastCells: Long = Materialize.BroadcastCells,
+      flag: Option[String] = None): DataFrame = {
     require(targets.nonEmpty && targets.forall { case (_, p) => p >= 0 && p <= 1 })
     require(smallFloor <= sliceCap, "smallFloor must not exceed sliceCap")
-    require(accuracy > 1.0 / delta,
-      s"accuracy=$accuracy must exceed 1/delta=${1.0 / delta} or the sketch " +
-        "bracket cannot enclose its target rank")
-    val spark = df.sparkSession
-    import spark.implicits._
-
     // the group key travels through the machinery wrapped in a one-field
     // struct (same null-safe-join idiom as [[Ntile.exact]]): struct
     // equality matches null fields, so a NULL group key — a real group,
@@ -228,18 +191,17 @@ object Percentiles {
     //    exact ranks are recomputed in pass 2 and the enclosure `require`
     //    below still guards every target, so the final interpolated result
     //    is identical.
-    // bracket endpoints per target; atTargets appends the raw target
+    // bracket endpoints per target; a flag appends the raw target
     // percentages at the END so the tt.ti*2+{1,2} bracket indexing below
     // is unchanged
-    val atTargets = extra.exists(_.atTargets)
     val pcts = targets.flatMap { case (_, p) =>
       Seq(math.max(0.0, p - delta), math.min(1.0, p + delta)) } ++
-      (if (atTargets) targets.map(_._2) else Nil)
+      (if (flag.isDefined) targets.map(_._2) else Nil)
     val sketchAggCols = Seq(
       count(lit(1)).as("n"),
       min(col("v")).as("vmin"), max(col("v")).as("vmax"),
       percentile_approx(col("v"), array(pcts.map(lit): _*), lit(accuracy))
-        .as("qs")) ++ extra.toSeq.flatMap(_.sketchAggs)
+        .as("qs"))
     // materialize the (one-row-per-group) sketch result: it feeds the
     // probe action AND the returned plan — without truncation the
     // expensive sketch aggregation would re-execute once per consumer.
@@ -270,16 +232,13 @@ object Percentiles {
           .otherwise(element_at(col("qs"), col("tt.ti") * 2 + 2)).as("hi"))
       // 1-based target ranks for symmetric interpolation: r = (n-1)·p,
       // k = floor(r); need elements at ranks k+1 and (k+2 capped at n).
-      // Discrete mode: r is the exact integer ceil(p·n)-1 (clamped ≥0),
-      // so rk = ceil(p·n) and the hi-rank element's weight is exactly 0.
+      // A rank rule makes r the exact integer f(p, n)-1 (f clamped into
+      // [1, n]), so rk = f(p, n) and the hi-rank element's weight is 0.
       .withColumn("r", rankFor match {
         case Some(f) =>
           (greatest(least(f(col("p"), col("n")), col("n")), lit(1L)) - 1)
             .cast("double")
-        case None =>
-          if (discrete)
-            greatest(ceil(col("p") * col("n")) - 1, lit(0L)).cast("double")
-          else (col("n") - 1) * col("p")
+        case None => (col("n") - 1) * col("p")
       })
       .withColumn("rk", (floor(col("r")) + 1).cast("long"))
       .withColumn("rkhi", least(col("rk") + 1, col("n")))
@@ -302,34 +261,31 @@ object Percentiles {
     // 17.0 vs 9.1 s (≈ the join's own floor) over a 20 M-row group at
     // T=9 (BASELINE.md r7 "Forced tie-bisection measured at the scale it
     // exists for")
+    // a flag's lt/le counts at each raw target estimate ride the same scan
+    val counts = Seq("below", "cnt") ++ (if (flag.isDefined) Seq("lt", "le") else Nil)
     val probeProj = Seq(col("g"), col("v")) ++ targets.indices.flatMap { i =>
-      Seq(loEx(i).as(s"__plo$i"), hiEx(i).as(s"__phi$i"))
-    } ++ (if (atTargets) targets.indices.map { i =>
-      element_at(col("qs"), 2 * targets.size + i + 1).as(s"__at$i")
-    } else Nil) ++ extra.toSeq.flatMap(_.proj)
+      Seq(loEx(i).as(s"__plo$i"), hiEx(i).as(s"__phi$i")) ++
+        (if (flag.isDefined)
+          Seq(element_at(col("qs"), 2 * targets.size + i + 1).as(s"__at$i"))
+        else Nil)
+    }
     val probeAggs = targets.indices.flatMap { i =>
-      Seq(
-        sum(when(col("v") < col(s"__plo$i"), 1L).otherwise(0L))
-          .as(s"__below$i"),
-        sum(when(col("v").between(col(s"__plo$i"), col(s"__phi$i")), 1L)
-          .otherwise(0L)).as(s"__cnt$i"))
-    } ++ extra.toSeq.flatMap(_.aggs)
-    val probedWide = base.join(gated(br), "g")
+      def countIf(c: Column): Column = sum(when(c, 1L).otherwise(0L))
+      Seq(countIf(col("v") < col(s"__plo$i")).as(s"__below$i"),
+        countIf(col("v").between(col(s"__plo$i"), col(s"__phi$i"))).as(s"__cnt$i")) ++
+        (if (flag.isDefined)
+          Seq(countIf(col("v") < col(s"__at$i")).as(s"__lt$i"),
+            countIf(col("v") <= col(s"__at$i")).as(s"__le$i"))
+        else Nil)
+    }
+    val probed = base.join(gated(br), "g")
       .select(probeProj: _*)
       .groupBy(col("g")).agg(probeAggs.head, probeAggs.tail: _*)
-    // fused-probe output aliases, recovered positionally: g, then the 2T
-    // machinery counters, then the caller's aggs in declaration order
-    val extraNames = extra.toSeq
-      .flatMap(_ => probedWide.columns.drop(1 + 2 * targets.size))
-    val probed = probedWide
-      .select(col("g") +: explode(array(targets.zipWithIndex.map {
+      .select(col("g"), explode(array(targets.zipWithIndex.map {
         case ((name, _), i) =>
-          struct(lit(name).as("t"), col(s"__below$i").as("below"),
-            col(s"__cnt$i").as("cnt"))
-      }: _*)).as("pb") +: extraNames.map(col): _*)
-      .select(Seq(col("g"), col("pb.t").as("t"),
-        col("pb.below").as("below"), col("pb.cnt").as("cnt")) ++
-        extraNames.map(col): _*)
+          struct(lit(name).as("t") +: counts.map(c => col(s"__$c$i").as(c)): _*)
+      }: _*)).as("pb"))
+      .select(col("g") +: col("pb.t").as("t") +: counts.map(c => col(s"pb.$c").as(c)): _*)
     // a bracket whose interval is ALREADY collapsed (lo >= hi — every
     // in-bracket value equals lo, e.g. a constant-valued mega run) is done
     // before the loop starts: the enclosure require below proves the target
@@ -357,33 +313,27 @@ object Percentiles {
         extraFolds: Materialize.Fold*): Materialize.Materialized = {
       val m = Materialize(d.withColumn("__act", active).withColumn("__pend", !col("done")),
         site, Seq(Materialize.any("__act"), Materialize.any("__pend")) ++ extraFolds: _*)
-      state = m.df.drop("__act", "__pend", "__viol")
+      state = m.df.drop("__act", "__pend", "__viol", "__miss", "lt", "le")
       anyActive = m.any(0)
       anyPending = m.any(1)
       m
     }
-    val opening = materializeState(st0.join(probed, Seq("g", "t"))
+    // the flag's check: the raw target estimate's true-rank interval
+    // must meet p·n within the sketch's rank error n/accuracy, +1 row of
+    // slack for the target-rank definition (Spark's summary queries rank
+    // ceil(p·n); ties to p·n)
+    val n = col("n").cast("double")
+    val miss = flag.map(_ => !rankIntervalWithin(col("lt"), col("le"),
+      col("p") * n, n / lit(accuracy.toDouble) + lit(1.0)))
+    val opening = materializeState(miss.foldLeft(st0.join(probed, Seq("g", "t"))
         .withColumn("done", collapsed)
         .withColumn("el_lo", when(collapsed, col("lo")).cast("double"))
         .withColumn("el_hi", when(collapsed, col("lo")).cast("double"))
-        .withColumn("__viol", enclosureViolated),
-      "Percentiles.exact state", Materialize.sum("__viol"))
+        .withColumn("__viol", enclosureViolated))(_.withColumn("__miss", _)),
+      "Percentiles.exact state",
+      Materialize.sum("__viol") +: miss.map(_ => Materialize.sum("__miss")).toSeq: _*)
     require(opening.sum(2) == 0L,
       "percentile bracket missed its target rank (sketch accuracy too low)")
-
-    // fused-probe extras: per-group scalars duplicated across the T
-    // exploded target rows — recover one row per group from the CACHED
-    // state frame (this scan reads the checkpoint, never the probe pass),
-    // then strip them from the loop state (the bisection's refined select
-    // re-lists columns; a union against extra-bearing rows would mismatch)
-    val extraOut: DataFrame =
-      if (extra.isEmpty) null
-      else {
-        val fa = first(col("n")).as("__n") +:
-          extraNames.map(c => first(col(c)).as(c))
-        state.groupBy(col("g")).agg(fa.head, fa.tail: _*)
-      }
-    if (extraNames.nonEmpty) state = state.drop(extraNames: _*)
 
     // -- pass 3: bisection refinement over the materialized subset
     var subset: DataFrame = null
@@ -490,14 +440,10 @@ object Percentiles {
       first(when(col("t") === lit(name), col("res")), ignoreNulls = true)
         .as(name)
     }
-    val pivoted = perTarget.groupBy(col("g")).agg(outCols.head, outCols.tail: _*)
-    // fused-probe extras (plus __n) join back per group — struct-key
-    // equi-join, so NULL group keys survive like everywhere else here
-    val withExtras =
-      if (extraOut == null) pivoted else pivoted.join(gated(extraOut), Seq("g"))
-    withExtras
+    val out = perTarget.groupBy(col("g")).agg(outCols.head, outCols.tail: _*)
       // unwrap the struct key back to the caller's group values (nulls
       // included) so the output contract is unchanged
       .withColumn("g", col("g.__pk"))
+    flag.fold(out)(out.withColumn(_, lit(opening.sum(3) == 0L)))
   }
 }

@@ -271,12 +271,12 @@ object Vectors {
     // dim floats + 2 longs; the cap admits past the 10 MB auto-broadcast
     // threshold), those sides broadcast instead. At 100 TB unique-corpus
     // volume the gate is off and the plan is byte-identical to r14's.
-    val repsFit = nGroups * (dim + 2L) <= 2000000L
+    val repsFit = nGroups * (dim + 2L) <= Materialize.BroadcastCells
     val repSide = groupsM.broadcastIf("reps", repsFit) _
     // the bucket self-join's side is the rep frame exploded per table:
     // nGroups × tables rows of (id, t, bucket), sized on its own (at
     // dim 2 and 8 tables, repsFit alone admits 6× the cap on this side)
-    val bucketsFit = nGroups * tables * 3L <= 2000000L
+    val bucketsFit = nGroups * tables * 3L <= Materialize.BroadcastCells
     // membership as bare-id ROWS (rep, member): corpus ⋈ groups ON THE
     // HASH ALONE — a one-long join key, so neither side ever sorts or
     // hashes the array (joining on (eh, embedding) was measured 3x
@@ -360,7 +360,7 @@ object Vectors {
     // matches Percentiles' over-count posture: 4 cells per
     // (rn, id_b, cos_sim) struct × k+1 structs/rep, so the shared
     // 2·10⁶-cell cap admits comparable byte volume at both sites.
-    val candsFit = nGroups * 4L * (k + 1L) <= 2000000L
+    val candsFit = nGroups * 4L * (k + 1L) <= Materialize.BroadcastCells
     members.join(groupsM.broadcastIf("cands", candsFit)(repArr), "rep")
       .select(col("member").as("id_a"),
         explode(slice(filter(col("cand"),

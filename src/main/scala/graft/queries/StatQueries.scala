@@ -29,12 +29,6 @@ object StatQueries {
   // assertion so the invariant stays coupled to the query)
   private[graft] val PackBudget = 512
 
-  // groups smaller than this collect whole in the decile-boundary pass
-  // (q_ntile_approx): below it the ±0.002·n sketch bracket is narrower
-  // than a single element and would miss its rank. Bounds the fallback
-  // buffer at 1000 doubles per group — scale-independent.
-  private[graft] val SmallGroupFloor = 1000L
-
   val all: Seq[Q] = Seq(
 
     // Sequence packing: assign docs (in deterministic doc_id order, per
@@ -219,7 +213,7 @@ GROUP BY event_type, decile ORDER BY event_type, decile""") { (s, d) =>
     // binning WITHOUT the per-group total-order window. Boundaries are the
     // EXACT discrete quantiles (value at 1-based rank ceil(p·n), ties by
     // value so rank→value is well-defined), computed by the shared
-    // bounded-memory percentile operator in discrete-rank mode
+    // bounded-memory percentile operator under its discrete rank rule
     // ([[graft.operators.Percentiles.exact]]): sketch brackets, exact
     // rank counts, bisection refinement whenever a bracket slice would
     // exceed its buffer cap — so no aggregation buffer grows with group
@@ -265,7 +259,7 @@ FROM d GROUP BY event_type, decile ORDER BY event_type, decile"""
       val bounds = graft.operators.Percentiles.exact(
           ev, col("event_type"), col("value"),
           targets = (1 to 9).map(i => (s"bnd$i", i / 10.0)),
-          smallFloor = SmallGroupFloor, discrete = true)
+          rankFor = Some(graft.operators.Percentiles.discreteRank))
         .withColumnRenamed("g", "event_type")
       val decile = (lit(1) +
         (1 to 9).map(i => (col("value") > col(s"bnd$i")).cast("int"))

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 
 /** Structured Streaming surface (SURVEY.md §2 B19): the reference is a
   * scheduled batch pull (`/root/reference/task.ts:46`), whose idiomatic
@@ -163,7 +163,7 @@ object StreamRunner {
   def sessionizeFlat(spark: SparkSession, events: DataFrame,
       gapMinutes: Int = 10): DataFrame = {
     import spark.implicits._
-    import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
+    import org.apache.spark.sql.streaming.GroupStateTimeout
     val gap = gapMinutes * 60000000L
     events.select(col("user_id"), unix_micros(col("ts")).as("t"))
       .as[(Long, Long)]
@@ -232,7 +232,7 @@ object StreamRunner {
       gapMinutes: Int = 10,
       watermarkDelay: String = "10 minutes"): DataFrame = {
     import spark.implicits._
-    import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
+    import org.apache.spark.sql.streaming.GroupStateTimeout
     val gap = gapMinutes * 60000000L // micros
     events.withWatermark("ts", watermarkDelay)
       .select(col("user_id"), col("ts"), unix_micros(col("ts")).as("t"))
@@ -271,42 +271,20 @@ object StreamRunner {
       .toDF("user_id", "session_start_us", "n_events")
   }
 
-  /** Drain a streaming aggregation to an in-memory table with
-    * Trigger.AvailableNow (complete mode: final window results), returning
-    * the materialized result. Used by StreamingSpec and the demo main.
+  /** Drain a stream to the in-memory table `name` with
+    * Trigger.AvailableNow, returning the materialized result. `mode` is
+    * the output mode: complete (the default) holds an aggregation's final
+    * window results; update (required by mapGroupsWithState) holds one
+    * row per state update, so readers take the last update per key;
+    * append suits append-only streams such as stream-stream joins. Used
+    * by StreamingSpec, IncrementalStreamSpec and the demo main.
     */
-  def runToMemory(spark: SparkSession, agg: DataFrame, name: String): DataFrame = {
-    val q = agg.writeStream
-      .format("memory")
-      .queryName(name)
-      .outputMode("complete")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(name)
-  }
-
-  /** Like [[runToMemory]] but update output mode (required by
-    * mapGroupsWithState); the memory table then holds one row per state
-    * update, so readers take the last update per key.
-    */
-  def runToMemoryUpdate(spark: SparkSession, agg: DataFrame, name: String): DataFrame = {
-    val q = agg.writeStream
-      .format("memory")
-      .queryName(name)
-      .outputMode("update")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(name)
-  }
-
-  /** Append-mode drain (stream-stream joins emit append-only). */
-  def runToMemoryAppend(spark: SparkSession, df: DataFrame, name: String): DataFrame = {
+  def runToMemory(spark: SparkSession, df: DataFrame, name: String,
+      mode: OutputMode = OutputMode.Complete()): DataFrame = {
     val q = df.writeStream
       .format("memory")
       .queryName(name)
-      .outputMode("append")
+      .outputMode(mode)
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()

@@ -198,6 +198,37 @@ class ExtraSpec extends SparkSpec {
     assert(a.sameElements(b), "gate must never change results")
   }
 
+  test("Percentiles.exact with rankFor = discreteRank equals sort-and-index") {
+    import spark.implicits._
+    // the discrete element at 1-based rank ceil(p·n), clamped into [1, n]:
+    // p = 0 must clamp up to rank 1 and p = 1 lands on rank n. Groups: a
+    // single row, one below smallFloor, a heavy tie pile and a spread
+    // group; the second setting sends the two large groups through the
+    // sketch brackets and forces bisection rounds
+    val groups = Seq(
+      "one" -> Seq(5.0),
+      "few" -> Seq(3.0, 1.0, 4.0, 1.0, 5.0, 9.0, 2.0),
+      "ties" -> (0 until 3000).map(i => if (i % 10 < 9) 42.0 else 1000.0 + i % 97),
+      "spread" -> (0 until 2000).map(i => ((i * 7919) % 2000).toDouble / 4))
+    val df = groups.flatMap { case (g, vs) => vs.map(g -> _) }.toDF("grp", "v")
+    val targets = Seq("p0" -> 0.0, "p10" -> 0.1, "p50" -> 0.5, "p95" -> 0.95,
+      "p100" -> 1.0)
+    def ref(vs: Seq[Double], p: Double): Double = {
+      val s = vs.sorted
+      s(math.min(math.max(math.ceil(p * s.size).toInt, 1), s.size) - 1)
+    }
+    Seq((1000000L, 1000L), (50L, 10L)).foreach { case (cap, floor) =>
+      val got = graft.operators.Percentiles.exact(df, col("grp"), col("v"),
+          targets, rankFor = Some(graft.operators.Percentiles.discreteRank),
+          sliceCap = cap, smallFloor = floor)
+        .collect().map(r => r.getString(0) -> r).toMap
+      assert(got.keySet == groups.map(_._1).toSet, s"sliceCap=$cap")
+      for ((g, vs) <- groups; (t, p) <- targets)
+        assert(got(g).getAs[Double](t) == ref(vs, p),
+          s"$g $t sliceCap=$cap smallFloor=$floor: ${got(g).getAs[Double](t)} != ${ref(vs, p)}")
+    }
+  }
+
   test("Percentiles.exact keeps a NULL group key as a real group") {
     import spark.implicits._
     // a null key would silently vanish at the first internal equi-join

@@ -8,19 +8,6 @@ import graft.queries.Registry
   * the benched ones).
   */
 object PlanDump {
-  /** Append `plan`'s decisive operator lines (joins, exchanges, aggregates,
-    * windows, generators, scans) to `sb` — the ONE keep-list both the named
-    * queries and the truth-frame section filter through.
-    */
-  private def appendFilteredPlan(sb: StringBuilder, plan: String): Unit = {
-    val keep = Seq("Join", "Exchange", "HashAggregate", "ObjectHashAggregate",
-      "SortAggregate", "Window", "Generate", "FileScan", "Scan", "TakeOrdered",
-      "CollectMetrics", "Expand", "WindowGroupLimit", "BatchEvalPython", "Sort ")
-    plan.split("\n").foreach { l =>
-      if (keep.exists(l.contains)) sb.append(l.take(160)).append("\n")
-    }
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val cpus = 32
@@ -58,58 +45,20 @@ object PlanDump {
     sb.append("generations, and the full correctness surface (CORRECTNESS_r06:\n")
     sb.append("100/100 oracle pass) ran against the current micros type — the schema\n")
     sb.append("drift is driver-side and absorbed, not a regression.\n")
+    // each plan's decisive operator lines: joins, exchanges, aggregates,
+    // windows, generators, scans
+    val keep = Seq("Join", "Exchange", "HashAggregate", "ObjectHashAggregate",
+      "SortAggregate", "Window", "Generate", "FileScan", "Scan", "TakeOrdered",
+      "CollectMetrics", "Expand", "WindowGroupLimit", "BatchEvalPython", "Sort ")
     for (n <- names) {
       val q = Registry.all.find(_.name == n).get
       val plan = q.build(spark, sfDir).queryExecution.executedPlan.toString
       sb.append(s"\n## $n\n\n```\n")
-      appendFilteredPlan(sb, plan)
+      plan.split("\n").foreach { l =>
+        if (keep.exists(l.contains)) sb.append(l.take(160)).append("\n")
+      }
       sb.append("```\n")
     }
-    // The truth-frame subplan (inside six paired queries) is invisible
-    // above: the production queries lazy-checkpoint it, so their dumps
-    // start at Scan ExistingRDD. Dump the materialize=false arm once so
-    // the audit can SEE the r11 shape: a zero-shuffle gram pass (the
-    // native gram_hashes kernel inside a plain Project — no Window, no
-    // Exchange before the join) feeding the inverted-index self-join on
-    // (gram hash, id block) with the window folded into the key.
-    // The join-shape sentence is SF-SPECIFIC (ADVICE r11: the narrative
-    // hardcoded sf0.1 claims while sfDir is a CLI arg — a regeneration at
-    // another SF would ship a stale story beside a contradicting plan), so
-    // it is gated on the directory this dump actually planned against.
-    sb.append("\n## truth frame: Dedup.exactJaccardWindowPairs " +
-      "(materialize=false arm — the checkpointed subplan the six paired " +
-      s"queries share)\n\nPlanned against `$sfDir` (this dump's CLI arg). " +
-      "Two artifacts of THIS dump arm,\nnot the shipped default: (1) ")
-    if (sfDir.contains("sf0.1"))
-      sb.append("at sf0.1 the inverted-index self-join plans as\na " +
-        "BroadcastHashJoin (the gram-row side's estimated stats are tiny " +
-        "here); at\nscale AQE re-plans it to a shuffle join — the sf100 " +
-        "probe measured that\nexchange, ~16 GB spill. ")
-    else
-      sb.append("the inverted-index self-join's shape is\nstats-driven " +
-        "(tiny estimated gram-row sides broadcast, as at sf0.1; larger " +
-        "SFs\nshuffle — the sf100 probe measured ~16 GB spill on that " +
-        "exchange), so read\nthe join line below rather than assuming " +
-        "either. ")
-    sb.append("(2) join-constraint\n" +
-      "inference pushes an always-true isnotnull(size(gram_hashes(text)))" +
-      " into the\nsizes-branch scan, double-evaluating the kernel — only " +
-      "in the recompute arm;\nthe production materialize=true arm reads " +
-      "sizes from the checkpoint (part of\nwhy recompute measured 280 vs " +
-      "217 s at sf100). What the dump is FOR: the gram\npass is a plain " +
-      "Project+Generate chain — zero Window, zero Exchange before\nthe " +
-      "join (the r10 shape shuffled every gram occurrence here).\n\n```\n")
-    locally {
-      import org.apache.spark.sql.functions.col
-      val docs = graft.sources.Tables.documents(spark, sfDir)
-        .select(col("doc_id").as("id"), col("text"))
-      val plan = graft.operators.Dedup
-        .exactJaccardWindowPairs(docs, tau = 0.5, window = 200,
-          materialize = false)
-        .queryExecution.executedPlan.toString
-      appendFilteredPlan(sb, plan)
-    }
-    sb.append("```\n")
     java.nio.file.Files.writeString(java.nio.file.Paths.get("PLANS.md"), sb.toString)
     println("wrote PLANS.md")
     spark.stop()

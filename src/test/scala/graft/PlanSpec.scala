@@ -163,7 +163,8 @@ class PlanSpec extends SparkSpec {
       "q_dedup_clusters" -> "minhash_cluster_ok",
       "q_dedup_clusters_exact_first" -> "exact_first_cluster_ok",
       "q_dedup_pipeline" -> "pipeline_agree_ok",
-      "q_dedup_pipeline_exact_first" -> "pipeline_exact_first_ok")
+      "q_dedup_pipeline_exact_first" -> "pipeline_exact_first_ok",
+      "q_percentile_approx" -> "within_accuracy")
     val notLiteral = flags.flatMap { case (name, flag) =>
       val analyzed = Registry.all.find(_.name == name).get
         .build(spark, sfDir).queryExecution.analyzed

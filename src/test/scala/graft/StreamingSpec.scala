@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.streaming.OutputMode
 import graft.streaming.StreamRunner
 import graft.queries.Registry
 
@@ -51,10 +52,10 @@ class StreamingSpec extends SparkSpec {
 
   test("mapGroupsWithState per-user counts equal batch groupBy counts") {
     import org.apache.spark.sql.functions._
-    val stream = StreamRunner.runToMemoryUpdate(spark,
+    val stream = StreamRunner.runToMemory(spark,
       StreamRunner.statefulCounts(spark,
         StreamRunner.eventsStream(spark, sfDir)),
-      "spec_stateful")
+      "spec_stateful", OutputMode.Update())
       .groupBy("user_id").agg(max("n_events").as("n_events"))
       .orderBy("user_id").collect()
     val expected = graft.sources.Tables.events(spark, sfDir)
@@ -65,10 +66,10 @@ class StreamingSpec extends SparkSpec {
 
   test("stream-stream interval join equals the batch join") {
     import org.apache.spark.sql.functions._
-    val stream = StreamRunner.runToMemoryAppend(spark,
+    val stream = StreamRunner.runToMemory(spark,
       StreamRunner.purchaseAfterErrorJoin(
         StreamRunner.eventsStream(spark, sfDir)),
-      "spec_ss_join")
+      "spec_ss_join", OutputMode.Append())
       .orderBy("err_id", "pur_id").collect()
     val batch = StreamRunner.purchaseAfterErrorJoin(
         graft.sources.Tables.events(spark, sfDir))
@@ -123,9 +124,9 @@ class StreamingSpec extends SparkSpec {
     // the horizon and the emitted key set equals the global distinct set;
     // on an unbounded stream the same operator holds only horizon-recent
     // keys in state (the production at-least-once repair path)
-    val stream = StreamRunner.runToMemoryAppend(spark,
+    val stream = StreamRunner.runToMemory(spark,
       StreamRunner.dedupWithinWatermark(StreamRunner.eventsStream(spark, sfDir)),
-      "spec_dedup_wm")
+      "spec_dedup_wm", OutputMode.Append())
       .collect().map(r => (r.getLong(0), r.getString(1))).toSet
     val expected = graft.sources.Tables.events(spark, sfDir)
       .select("user_id", "event_type").distinct()
@@ -137,23 +138,23 @@ class StreamingSpec extends SparkSpec {
     // First-arrival payloads are replay-order-dependent, so the contract
     // (and this check) is the KEY SET: one row per (user_id, event_type),
     // the same set the deterministic batch form pins against its oracle.
-    val stream = StreamRunner.runToMemoryAppend(spark,
+    val stream = StreamRunner.runToMemory(spark,
       StreamRunner.dedupByKey(StreamRunner.eventsStream(spark, sfDir)),
-      "spec_dedup")
+      "spec_dedup", OutputMode.Append())
       .collect().map(r => (r.getLong(0), r.getString(1))).toSet
     val expected = batch("q_stream_dedup")
       .collect().map(r => (r.getLong(0), r.getString(1))).toSet
     assert(stream == expected)
-    assert(stream.size == StreamRunner.runToMemoryAppend(spark,
+    assert(stream.size == StreamRunner.runToMemory(spark,
       StreamRunner.dedupByKey(StreamRunner.eventsStream(spark, sfDir)),
-      "spec_dedup2").count())
+      "spec_dedup2", OutputMode.Append()).count())
   }
 
   test("flatMapGroupsWithState sessionizer emits exactly the q_stream_session rows") {
-    val stream = StreamRunner.runToMemoryAppend(spark,
+    val stream = StreamRunner.runToMemory(spark,
       StreamRunner.sessionizeFlat(spark,
         StreamRunner.eventsStream(spark, sfDir)),
-      "spec_fmgws")
+      "spec_fmgws", OutputMode.Append())
       .orderBy("user_id", "session_start_us").collect()
     val expected = batch("q_stream_session").collect()
     assert(stream.length == expected.length)
