@@ -1,7 +1,7 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, GraftSqlBridge}
-import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge, Row}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.UnsafeRow
 import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan, Project}
 import org.apache.spark.sql.execution.{LogicalRDD, SparkPlan}
@@ -26,6 +26,10 @@ import org.apache.spark.sql.types._
   * A `count()` or an `agg(...).head()` census over a checkpoint would be
   * a second execution: a shuffle-map job plus a result job, where
   * [[apply]] is one job.
+  *
+  * [[bounded]] is [[apply]] for a frame that is small by construction:
+  * the same one job also sends the frame's rows to the driver, within a
+  * cap enforced per partition, so the caller can turn them into a literal.
   *
   * [[deferred]] is the other form, for a frame whose count nobody reads:
   * the checkpoint is only marked, and its first consumer stores it. Under
@@ -59,10 +63,13 @@ object Materialize {
   def max(column: String): Fold = Fold("max", column)
   def any(column: String): Fold = Fold("any", column)
 
-  /** One logged call. `rows` and `bytes` are -1 for a [[deferred]] call. */
+  /** One logged call. `rows` and `bytes` are -1 for a [[deferred]] call;
+    * `collected` is the number of rows that reached the driver, -1 unless
+    * the call was [[bounded]].
+    */
   final class Call(val site: String, val rows: Long, val bytes: Long,
       val folds: Seq[(Fold, Option[Long])], val exchanges: Int,
-      val how: String) {
+      val how: String, val collected: Long = -1L) {
     private val gates = scala.collection.mutable.LinkedHashMap.empty[String, String]
     /** Each gate's choice, in the order the gates were first decided:
       * `reps=broadcast buckets=shuffle`.
@@ -73,14 +80,17 @@ object Materialize {
     private[Materialize] def decide(gate: String, choice: String): Unit =
       gates.synchronized(gates(gate) = choice)
     override def toString: String = s"$site $how" +
-      (if (rows < 0) "" else s" rows=$rows bytes=$bytes") + s" exchanges=$exchanges" +
+      (if (rows < 0) "" else s" rows=$rows bytes=$bytes") +
+      (if (collected < 0) "" else s" collected=$collected") + s" exchanges=$exchanges" +
       folds.map { case (f, v) => s" $f=${v.getOrElse("null")}" }.mkString +
       (if (route.isEmpty) "" else s" $route")
   }
 
-  /** A materialized frame and what its job measured. */
+  /** A materialized frame and what its job measured. `local` holds the
+    * frame's rows when a [[bounded]] call found them within its cap.
+    */
   final class Materialized private[Materialize] (val df: DataFrame,
-      val call: Call) {
+      val call: Call, val local: Option[Seq[Row]] = None) {
     def rows: Long = call.rows
     def bytes: Long = call.bytes
     /** The i-th fold's value; None only for a `max` that saw no value. */
@@ -120,32 +130,57 @@ object Materialize {
       case Some(n) if folds.isEmpty =>
         val bytes = df.queryExecution.analyzed.stats.sizeInBytes.min(Long.MaxValue)
         new Materialized(df, log(new Call(site, n, bytes.toLong, Nil, 0, "known")))
-      case _ => described(df, site) {
-        val specs = folds.map { f =>
-          val t = df.schema(f.column).dataType
-          require(Seq(LongType, IntegerType, ShortType, ByteType, BooleanType)
-            .contains(t), s"fold over ${f.column}: $t is not integral or boolean")
-          (f.kind, df.schema.fieldIndex(f.column), t)
-        }.toArray
-        val ck = df.localCheckpoint(false)
-        val rdd = GraftSqlBridge.checkpointRdd(ck).setName(Measured + site)
-        val parts = new Array[Array[Long]](rdd.getNumPartitions)
-        df.sparkSession.sparkContext.runJob(rdd,
-          (it: Iterator[InternalRow]) => foldPartition(it, specs),
-          (i: Int, r: Array[Long]) => parts(i) = r)
-        val (rows, bytes) = (parts.map(_(0)).sum, parts.map(_(1)).sum)
-        val values = folds.indices.map { i =>
-          val seen = parts.filter(_(3 + 2 * i) != 0L).map(_(2 + 2 * i))
-          folds(i).kind match {
-            case "sum" => Some(seen.sum)
-            case "max" => seen.maxOption
-            case _     => Some(seen.foldLeft(0L)(_ | _))
-          }
-        }
-        new Materialized(GraftSqlBridge.restated(ck, df, Some((rows, bytes))),
-          log(new Call(site, rows, bytes, folds.zip(values), exchanges(df), "stored")))
+      case _ => stored(df, site, folds, None)
+    }
+
+  /** [[apply]] that also brings `df`'s rows to the driver when it holds at
+    * most `cap` of them, in the same one job. Each of the job's P
+    * partitions sends at most ⌈(cap + 1) / P⌉ rows, or only an overflow
+    * mark when it holds more, so at most cap + P rows ever reach the
+    * driver, whatever the frame's statistics claim. `local` is set when no
+    * partition overflowed and the frame holds at most `cap` rows; a
+    * skewed frame whose one partition holds more than its share is
+    * treated as over the cap. `df` is the stored frame either way.
+    */
+  def bounded(df: DataFrame, site: String, cap: Int, folds: Fold*): Materialized =
+    stored(df, site, folds, Some(cap))
+
+  private def stored(df: DataFrame, site: String, folds: Seq[Fold],
+      cap: Option[Int]): Materialized = described(df, site) {
+    val specs = folds.map { f =>
+      val t = df.schema(f.column).dataType
+      require(Seq(LongType, IntegerType, ShortType, ByteType, BooleanType)
+        .contains(t), s"fold over ${f.column}: $t is not integral or boolean")
+      (f.kind, df.schema.fieldIndex(f.column), t)
+    }.toArray
+    val ck = df.localCheckpoint(false)
+    val rdd = GraftSqlBridge.checkpointRdd(ck).setName(Measured + site)
+    val n = rdd.getNumPartitions
+    // each partition's share of cap + 1 rows, rounded up; -1 sends none
+    val share = cap.fold(-1L)(c => (c + 1L + n - 1) / math.max(n, 1))
+    val parts = new Array[Array[Long]](n)
+    val kept = new Array[Array[InternalRow]](n)
+    df.sparkSession.sparkContext.runJob(rdd,
+      (it: Iterator[InternalRow]) => foldPartition(it, specs, share),
+      (i: Int, r: (Array[Long], Array[InternalRow])) => { parts(i) = r._1; kept(i) = r._2 })
+    val (rows, bytes) = (parts.map(_(0)).sum, parts.map(_(1)).sum)
+    val values = folds.indices.map { i =>
+      val seen = parts.filter(_(3 + 2 * i) != 0L).map(_(2 + 2 * i))
+      folds(i).kind match {
+        case "sum" => Some(seen.sum)
+        case "max" => seen.maxOption
+        case _     => Some(seen.foldLeft(0L)(_ | _))
       }
     }
+    val local = cap.filter(c => rows <= c && !kept.contains(null)).map { _ =>
+      val toRow = CatalystTypeConverters.createToScalaConverter(df.schema)
+      kept.toSeq.flatten.map(toRow(_).asInstanceOf[Row])
+    }
+    val collected = if (cap.isEmpty) -1L else kept.filter(_ != null).map(_.length.toLong).sum
+    new Materialized(GraftSqlBridge.restated(ck, df, Some((rows, bytes))),
+      log(new Call(site, rows, bytes, folds.zip(values), exchanges(df), "stored",
+        collected)), local)
+  }
 
   /** A local checkpoint that its first consumer stores; no job of its own
     * (see the object doc). For frames whose count nobody reads.
@@ -170,12 +205,18 @@ object Materialize {
     of(df.queryExecution.analyzed)
   }
 
-  /** Per partition: rows, bytes, then (value, seen) per fold. */
+  /** Per partition: rows, bytes, then (value, seen) per fold; and the
+    * partition's rows when it holds at most `share` of them (null when it
+    * holds more, or when `share` is negative).
+    */
   private def foldPartition(it: Iterator[InternalRow],
-      specs: Array[(String, Int, DataType)]): Array[Long] = {
+      specs: Array[(String, Int, DataType)],
+      share: Long): (Array[Long], Array[InternalRow]) = {
     val out = new Array[Long](2 + 2 * specs.length)
+    val kept = if (share < 0) null else Array.newBuilder[InternalRow]
     it.foreach { r =>
       out(0) += 1
+      if (kept != null && out(0) <= share) kept += r.copy()
       out(1) += (r match {
         case u: UnsafeRow => u.getSizeInBytes.toLong
         case _            => 8L * (r.numFields + 1)
@@ -198,7 +239,7 @@ object Materialize {
         }
       }
     }
-    out
+    (out, if (kept == null || out(0) > share) null else kept.result())
   }
 
   /** Exchanges of the physical plan `df` ran, query stages included. */

@@ -3,10 +3,15 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.Materialize
+
 /** The reference pipeline (`/root/reference/task.ts:90-159`) re-expressed as
-  * DataFrame stages, each a pure `DataFrame => DataFrame`; the folder join
-  * is an explicit broadcast (the dimension is tiny by construction, exactly
-  * like the reference's in-memory `Map`, `task.ts:90`).
+  * DataFrame stages, each a `DataFrame => DataFrame`. The folder lookup
+  * is the reference's in-memory `folders` Map (`task.ts:90`) made literal:
+  * the dimension is measured once, while the query is built (the one
+  * stage that runs a job), and a small one with unique ids becomes a map
+  * literal the projection reads, so a map tick plans no join and no
+  * exchange ([[folderLookup]]).
   *
   * Every per-feature rule (A7 callsign, A8 remarks, A9 style casts, A11
   * archived, A12 point type and marker colour, A13 path) is defined ONCE,
@@ -14,8 +19,8 @@ import org.apache.spark.sql.functions._
   * operators ([[projectNest]], [[enrichProperties]], [[pointEnrich]],
   * [[folderJoin]]) nest those columns into the `properties` struct the
   * reference builds; [[flagship]] selects the same columns flat, in one
-  * projection over the main flow joined to the folder dimension, so its
-  * plan carries no struct rewrites for the optimizer to inline and unpick.
+  * projection over the main flow, so its plan carries no struct rewrites
+  * for the optimizer to inline and unpick.
   *
   * Divergences from the reference, all documented per SURVEY.md §7.4:
   *  - JS `undefined` vs `null`: parquet can't express absent-vs-null, so
@@ -304,16 +309,54 @@ object CalTopo {
   private def path(ftitle: Column): Column =
     when(ftitle.isNotNull, concat(lit("/"), ftitle))
 
-  /** A13 — folder→path broadcast join (`task.ts:142-152`): LEFT join of
-    * features against the folder dimension on [[folderMatch]], then
-    * [[path]]. Explicit `broadcast()` — the dim side is one row per folder;
-    * at 100 TB the fact side never shuffles for this.
+  /** Folder dimensions of at most this many rows, with unique usable ids,
+    * resolve A13's path from a map literal; larger ones take a broadcast
+    * join. The literal travels with every task of the plan, so the cap
+    * keeps it to a few hundred KB.
     */
-  def folderJoin(df: DataFrame, folders: DataFrame): DataFrame =
-    df.join(broadcast(folders),
-        folderMatch(nested("folder_id"), folders("fid")), "left")
-      .withColumn("path", path(col("ftitle")))
-      .drop("fid", "ftitle")
+  val FolderLiteralCap = 4096
+
+  /** A13's lookup of `folderId` in the folder dimension `folders` (fid,
+    * ftitle): the frame to select from and its `path` column.
+    *
+    * The dimension is measured by one [[Materialize.bounded]] job, which
+    * brings it to the driver when it holds at most [[FolderLiteralCap]]
+    * rows. When its usable ids (non-null, non-`""`: the only ones
+    * [[folderMatch]] can match) are also unique, the lookup is
+    * `try_element_at` of a map literal from id to title: `df` itself,
+    * with no join. A dangling,
+    * null or `""` id finds no key and gets a null path, as the left join
+    * gives. Otherwise — over the cap, or a duplicate id, where the left
+    * join duplicates the feature row — `df` is left-joined to the
+    * broadcast stored dimension, as the reference's semantics require.
+    * The choice is logged as the call's `folders=literal|broadcast` route.
+    */
+  private def folderLookup(df: DataFrame, folderId: Column,
+      folders: DataFrame, site: String): (DataFrame, Column) = {
+    val dim = Materialize.bounded(folders.select("fid", "ftitle"), site, FolderLiteralCap)
+    val usable = dim.local.map(_.filter(r => !r.isNullAt(0) && r.getString(0).nonEmpty))
+    usable.filter(rs => rs.map(_.getString(0)).distinct.size == rs.size) match {
+      case Some(rs) =>
+        dim.route("folders", "literal")
+        val titles = typedLit(rs.map(r => r.getString(0) -> r.getString(1)).toMap)
+        (df, path(try_element_at(titles, folderId)))
+      case None =>
+        dim.route("folders", "broadcast")
+        val f = dim.df
+        (df.join(broadcast(f), folderMatch(folderId, f("fid")), "left"), path(f("ftitle")))
+    }
+  }
+
+  /** A13 — folder→path lookup (`task.ts:142-152`) of every feature's
+    * folderId in the folder dimension, through [[folderLookup]]: a map
+    * literal when the dimension is small and its ids unique, else a LEFT
+    * broadcast join. Measures `folders` while it is built.
+    */
+  def folderJoin(df: DataFrame, folders: DataFrame): DataFrame = {
+    val (from, p) = folderLookup(df, nested("folder_id"), folders,
+      "CalTopo.folderJoin folders")
+    from.withColumn("path", p).drop("fid", "ftitle")
+  }
 
   /** First coordinate position of the geometry, as array<double> —
     * dispatched on the geometry type's coordinate rank; null for types
@@ -355,8 +398,7 @@ object CalTopo {
   /** The whole reference pipeline A1→A13 fused (the flagship), flattened to
     * scalar columns for oracle comparison.
     *
-    * ONE projection: [[mainFlow]] left-joined to the broadcast
-    * [[folderDim]] on [[folderMatch]], each output column taken from the
+    * ONE projection over [[mainFlow]], each output column taken from the
     * same rule definition the staged operators nest into `properties`
     * (A7–A13 above). The staged chain (projectNest → enrichProperties →
     * coordTruncate → pointEnrich → folderJoin, then a flattening select)
@@ -364,6 +406,14 @@ object CalTopo {
     * the struct and unpicking it again cost the analyzer one pass per
     * rewrite and the optimizer a few hundred nested expression nodes per
     * map tick, before the first job.
+    *
+    * `path` comes from [[folderLookup]]: building the flagship runs one
+    * job that measures [[folderDim]] over the whole scan (every document
+    * of a multi-document read), and a dimension of at most
+    * [[FolderLiteralCap]] rows with unique usable ids becomes a map
+    * literal, so the returned plan is that one projection with no join.
+    * Otherwise the projection reads the main flow left-joined to the
+    * broadcast dimension.
     *
     * `x`/`y`/`z` are the first three components of [[firstPosition]] over
     * the decoded coordinates: A10 truncation keeps the first three
@@ -373,18 +423,18 @@ object CalTopo {
     * is null (a 2-component position has no `z`).
     *
     * UNORDERED: rows come out in scan order, and the plan carries no
-    * exchange on the feature side (the folder dimension is broadcast), so
-    * each fetch unit of the scan stays one partition and
-    * [[graft.sources.FeatureCollectionSink]] delivers it as one
-    * FeatureCollection — the reference's one POST per map, in input order
-    * (`task.ts:92-159` never sorts). The total order the oracle compares
-    * on lives in the declared `flagship` query
+    * exchange on the feature side, so each fetch unit of the scan stays
+    * one partition and [[graft.sources.FeatureCollectionSink]] delivers it
+    * as one FeatureCollection — the reference's one POST per map, in input
+    * order (`task.ts:92-159` never sorts). The total order the oracle
+    * compares on lives in the declared `flagship` query
     * ([[graft.queries.CalTopoQueries]]), not here: a sort on the delivery
     * path would cost a range-partitioning shuffle plus its sampling job
     * per tick, and at scale a full sort of the fact table.
     */
   def flagship(features: DataFrame): DataFrame = {
-    val folders = folderDim(features)
+    val (main, folderPath) = folderLookup(mainFlow(features), col("folder_id"),
+      folderDim(features), "CalTopo.flagship folders")
     val gt = col("geometry.type")
     val mc = col("marker_color")
     val pos = firstPosition(col("geometry"))
@@ -400,9 +450,7 @@ object CalTopo {
         try_element_at(pos, lit(1)).as("x"),
         try_element_at(pos, lit(2)).as("y"),
         try_element_at(pos, lit(3)).as("z"),
-        path(folders("ftitle")).as("path"))
-    mainFlow(features)
-      .join(broadcast(folders), folderMatch(col("folder_id"), folders("fid")), "left")
-      .select(columns: _*)
+        folderPath.as("path"))
+    main.select(columns: _*)
   }
 }

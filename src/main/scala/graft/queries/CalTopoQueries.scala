@@ -227,7 +227,9 @@ FROM features WHERE $mainWhere ORDER BY id""") { (s, d) =>
         .orderBy("id")
     },
 
-    // A13 — broadcast folder→path join on truthy folderId.
+    // A13 — folder→path lookup on truthy folderId: the folder dimension
+    // is measured while the query is built and read as a map literal
+    // (CalTopo.folderJoin; a broadcast left join past its cap).
     Q("folder_join",
       s"""WITH $featuresCte,
 main AS (SELECT * FROM features WHERE $mainWhere),

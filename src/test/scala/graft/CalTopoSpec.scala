@@ -257,25 +257,46 @@ class CalTopoSpec extends SparkSpec {
     assert(a.sameElements(b))
   }
 
-  test("fused flagship equals the staged stage chain on the generated features") {
-    val features = CalTopoFeatures.build(spark, sfDir)
+  /** The flagship and the staged chain over `features`, and the folder
+    * routes their builds logged.
+    */
+  private def bothForms(features: DataFrame): (Seq[Row], Seq[Row], Seq[String]) = {
+    Materialize.drain()
     val fused = CalTopo.flagship(features).collect().toSeq
-    assert(fused.nonEmpty)
-    assert(multiset(fused) == multiset(stagedFlagship(features).collect().toSeq))
+    val staged = stagedFlagship(features).collect().toSeq
+    val routes = Materialize.drain().filter(_.site.startsWith("CalTopo.")).map(_.route)
+    (fused, staged, routes.distinct)
   }
 
-  /** One map tick's decoded features: a written GeoJSON document read
-    * through `GeoJsonSource` and [[CalTopoSpec.decode]]. It holds every
-    * geometry type (GeometryCollection takes the truncation's fallback
-    * arm), 2/3/4-component first positions, null and "" text, "" and
-    * absent marker-color, resolving/dangling/missing/"" folder ids, null
-    * and absent geometry, and a folder with a geometry.
-    */
-  private def edgeTick: DataFrame = {
-    def feat(id: String, props: String, geom: String) =
-      s"""{"id":"$id","type":"Feature","properties":{$props}""" +
-        (if (geom == null) "}" else s""","geometry":$geom}""")
-    def g(t: String, cs: String) = s"""{"type":"$t","coordinates":$cs}"""
+  test("fused flagship equals the staged stage chain on the generated features") {
+    val features = CalTopoFeatures.build(spark, sfDir)
+    val (literal, literalStaged, literalRoutes) = bothForms(features)
+    assert(literal.nonEmpty)
+    assert(literalRoutes == Seq("folders=literal"))
+    assert(multiset(literal) == multiset(literalStaged))
+    // as many unreferenced folders again as the cap admits force the
+    // broadcast join, and change no row
+    val padded = features.unionByName(spark.range(0L, CalTopo.FolderLiteralCap, 1L, 1)
+      .select(features.schema.fields.toSeq.map(f => f.name match {
+        case "id"    => concat(lit("pad-"), col("id").cast("string")).as("id")
+        case "class" => lit("Folder").as("class")
+        case name    => lit(null).cast(f.dataType).as(name)
+      }): _*))
+    val (joined, joinedStaged, joinedRoutes) = bothForms(padded)
+    assert(joinedRoutes == Seq("folders=broadcast"))
+    assert(multiset(joined) == multiset(joinedStaged))
+    assert(multiset(joined) == multiset(literal))
+  }
+
+  private def feat(id: String, props: String, geom: String) =
+    s"""{"id":"$id","type":"Feature","properties":{$props}""" +
+      (if (geom == null) "}" else s""","geometry":$geom}""")
+  private def g(t: String, cs: String) = s"""{"type":"$t","coordinates":$cs}"""
+
+  private def edgeTick: DataFrame = edgeTick(Nil)
+
+  /** [[edgeTick]]'s document with the `extra` features appended. */
+  private def edgeTick(extra: Seq[String]): DataFrame = {
     val feats = Seq(
       feat("F1", """"class":"Folder","title":"One"""", null),
       feat("F2", """"class":"Folder","title":"Two"""", g("Point", "[0.0,0.0]")),
@@ -299,7 +320,7 @@ class CalTopoSpec extends SparkSpec {
         g("GeometryCollection",
           """[{"type":"Point","coordinates":[1.0,2.0,3.0,4.0]},{"type":"LineString","coordinates":[[5.0,6.0,7.0,8.0],[9.0,10.0,11.0,12.0]]}]""")),
       feat("nogeom", """"class":"Marker","title":"n","folder_id":"F1"""", "null"),
-      feat("absent", """"class":"Marker","title":"a"""", null))
+      feat("absent", """"class":"Marker","title":"a"""", null)) ++ extra
     val doc = Files.createTempDirectory("graft-flagship-doc").resolve("map.json")
     Files.writeString(doc,
       feats.mkString("""{"type":"FeatureCollection","features":[""", ",", "]}"))
@@ -326,6 +347,42 @@ class CalTopoSpec extends SparkSpec {
       get("pg", "metadata_marker_color") == Some("00FF00"))
     assert(Seq("pt4", "pt2", "pt3", "ln", "pg", "gc").map(get(_, "path")) ==
       Seq(Some("/One"), None, None, None, Some("/Two"), Some("/Two")))
+  }
+
+  test("both folder routes give the staged chain's rows: literal at the cap, over it, duplicate id") {
+    // a null-title folder, folders with "" and null ids (never matched:
+    // a folderId must be truthy), and a feature in the null-title folder;
+    // edgeTick already holds dangling, "" and absent folder ids
+    val extra = Seq(
+      feat("F3", """"class":"Folder","title":null""", null),
+      feat("", """"class":"Folder","title":"Empty id"""", null),
+      """{"id":null,"type":"Feature","properties":{"class":"Folder","title":"Null id"}}""",
+      feat("nt", """"class":"Marker","title":"nt","folder_id":"F3"""", g("Point", "[1.0,2.0]")))
+    // unreferenced folders fill the dimension to the cap, then one past it
+    def padded(n: Int) = (0 until n).map(i =>
+      feat(s"pad-$i", s""""class":"Folder","title":"Pad $i"""", null))
+    val features = edgeTick(extra ++ padded(CalTopo.FolderLiteralCap - 5))
+    assert(CalTopo.folderDim(features).count() == CalTopo.FolderLiteralCap)
+    val (literal, literalStaged, literalRoutes) = bothForms(features)
+    assert(literalRoutes == Seq("folders=literal"))
+    assert(multiset(literal) == multiset(literalStaged))
+    val (over, overStaged, overRoutes) =
+      bothForms(edgeTick(extra ++ padded(CalTopo.FolderLiteralCap - 4)))
+    assert(overRoutes == Seq("folders=broadcast"))
+    assert(multiset(over) == multiset(overStaged))
+    assert(multiset(over) == multiset(literal))
+    val paths = literal.map(r => r.getString(0) -> Option(r.getAs[String]("path"))).toMap
+    assert(Seq("pt4", "pt2", "pt3", "ln", "pg", "nt").map(paths) ==
+      Seq(Some("/One"), None, None, None, Some("/Two"), None))
+    // a second F1 folder: the left join gives F1's features one row per
+    // folder, and the literal route must not be taken
+    val dup = edgeTick(extra :+ feat("F1", """"class":"Folder","title":"Uno"""", null))
+    val (dupRows, dupStaged, dupRoutes) = bothForms(dup)
+    assert(dupRoutes == Seq("folders=broadcast"))
+    assert(multiset(dupRows) == multiset(dupStaged))
+    assert(dupRows.filter(_.getString(0) == "pt4").map(_.getAs[String]("path")).sorted ==
+      Seq("/One", "/Uno"))
+    assert(dupRows.size == literal.size + 2) // pt4 and mls sit in F1
   }
 
   test("truncated scalars read 2-, 3- and 4-component positions under ANSI mode") {

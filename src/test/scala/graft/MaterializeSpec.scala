@@ -122,6 +122,37 @@ class MaterializeSpec extends SparkSpec {
       c.site == "Dedup.clusters pairs" && c.route == "cc=distributed"))
   }
 
+  test("a bounded call sends at most cap + P rows to the driver, whatever the frame's stats claim") {
+    // 3 000 stored rows over 8 partitions, claimed as 10
+    val ck = spark.range(0L, 3000L, 1L, 8).toDF("id").localCheckpoint(true)
+    GraftSqlBridge.checkpointRdd(ck).setName(Materialize.Measured + "forged bounded")
+    val lying = GraftSqlBridge.restated(ck, ck, Some((10L, 80L)))
+    assert(Materialize.knownRows(lying).contains(10L))
+    val cap = 100
+    val over = Materialize.bounded(lying, "MaterializeSpec bounded lying", cap,
+      Materialize.sum("id"))
+    assert(over.rows == 3000L && over.sum(0) == 2999L * 3000L / 2)
+    assert(over.local.isEmpty)
+    assert(over.call.collected >= 0L && over.call.collected <= cap + 8L,
+      s"${over.call.collected} rows reached the driver past a cap of $cap")
+    assert(over.df.count() == 3000L)
+    // 100 rows over 8 partitions sit within each share of ⌈101 / 8⌉ = 13
+    val fits = Materialize.bounded(frame(100L, 8), "MaterializeSpec bounded fits", cap)
+    assert(fits.local.map(_.map(_.getLong(0)).sorted) == Some((0L until 100L).toSeq))
+    assert(fits.local.get.head.schema == frame(1L, 1).schema)
+    // 104 rows, 13 in each partition: every partition within its share,
+    // the frame over the cap
+    val just = Materialize.bounded(frame(104L, 8), "MaterializeSpec bounded just over", cap)
+    assert(just.local.isEmpty && just.call.collected == 104L)
+    // 50 rows in one of 8 partitions: under the cap, over that partition's share
+    val skewed = Materialize.bounded(frame(50L, 1).repartition(8, lit(0)),
+      "MaterializeSpec bounded skewed", cap)
+    assert(skewed.rows == 50L && skewed.local.isEmpty && skewed.call.collected == 0L)
+    // an empty frame fits any cap
+    assert(Materialize.bounded(frame(0L, 1), "MaterializeSpec bounded empty", 0)
+      .local.contains(Nil))
+  }
+
   test("an over-cap side is not broadcast") {
     val small = Materialize(frame(5000L, 4), "MaterializeSpec side")
     val big = spark.range(0L, 20000L, 1L, 4).toDF("id")

@@ -7,7 +7,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, Exchange}
+import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
 import graft.operators.CalTopo
@@ -114,26 +114,29 @@ class SourceSinkSpec extends SparkSpec {
     assert(multiset(op) == multiset(declaredFlagship))
   }
 
-  test("map tick delivery: 2 jobs, a broadcast the only exchange, one document per fetch unit") {
+  test("map tick: a build job, an exchange-free write job, one document per fetch unit") {
     val Seq(doc) = writeFeatureDocs(Files.createTempDirectory("graft-tick-in"),
       Seq(_ => true))
     val out = Files.createTempDirectory("graft-tick-out")
-    val tick = CalTopo.flagship(decode(
-      spark.read.format("graft.sources.GeoJsonSource").load(doc)))
-    // the GeoJSON path computes the declared query's rows
-    assert(multiset(tick.collect().toSeq) == multiset(declaredFlagship))
-    val (jobs, plans) = traced(FeatureCollectionSink.write(tick, out.toString))
-    // one broadcast job for the folder dimension, one write job
-    assert(jobs == 2, s"jobs: $jobs")
+    var tick: org.apache.spark.sql.DataFrame = null
+    Materialize.drain()
+    // building the tick measures the folder dimension in one job
+    val (buildJobs, _) = traced {
+      tick = CalTopo.flagship(decode(
+        spark.read.format("graft.sources.GeoJsonSource").load(doc)))
+    }
+    assert(Materialize.drain().map(_.route) == Seq("folders=literal"))
+    val (writeJobs, plans) = traced(FeatureCollectionSink.write(tick, out.toString))
+    assert(buildJobs == 1 && writeJobs == 1, s"jobs: build $buildJobs, write $writeJobs")
     val Seq(plan) = plans
-    val exchanges = planNodes(plan).collect { case e: Exchange => e }
-    assert(exchanges.size == 1 && exchanges.head.isInstanceOf[BroadcastExchangeExec],
-      plan.toString)
+    assert(planNodes(plan).collect { case e: Exchange => e }.isEmpty, plan.toString)
     assert(!plan.toString.toLowerCase.contains("rangepartitioning"), plan.toString)
     val docs = deliveredIds(out)
     assert(docs.size == 1)
     assert(docs.flatten.toSet == declaredFlagship.map(_.getString(0)).toSet)
     assert(docs.flatten.size == declaredFlagship.size)
+    // the GeoJSON path computes the declared query's rows
+    assert(multiset(tick.collect().toSeq) == multiset(declaredFlagship))
   }
 
   test("a 2-document paths read delivers 2 documents holding every id") {
