@@ -43,8 +43,8 @@ import org.apache.spark.sql.types._
   *
   * Every call is logged ([[drain]]) with its site, rows, bytes, fold
   * values, the exchanges of the plan it ran and the choice each of the
-  * caller's gates made from it (`graft.Profile` prints the log). Each
-  * call's jobs carry the description `materialize <site>`.
+  * caller's gates made from it ([[Trace]] gives each phase its calls).
+  * Each call's jobs carry the description `materialize <site>`.
   *
   * Storage is `localCheckpoint`'s: executor block storage, memory and
   * disk, with no lineage. A lost executor loses the frame, as it did at
@@ -111,10 +111,10 @@ object Materialize {
   }
 
   /** The cell cap of every measured broadcast gate (Ntile's bounds,
-    * Percentiles' internal joins, the kNN reps, buckets and cands sides):
-    * a side whose measured rows × cells per row stay under it is hinted
-    * as a broadcast, past it AQE picks the side. It admits sides past the
-    * 10 MB auto-broadcast threshold.
+    * Percentiles' internal joins, the kNN reps, buckets and cands sides,
+    * CalTopo's folders): a side whose measured rows × cells per row stay
+    * under it is hinted as a broadcast, past it AQE picks the side. It
+    * admits sides past the 10 MB auto-broadcast threshold.
     */
   val BroadcastCells = 2000000L
 
@@ -178,8 +178,8 @@ object Materialize {
     }
     val collected = if (cap.isEmpty) -1L else kept.filter(_ != null).map(_.length.toLong).sum
     new Materialized(GraftSqlBridge.restated(ck, df, Some((rows, bytes))),
-      log(new Call(site, rows, bytes, folds.zip(values), exchanges(df), "stored",
-        collected)), local)
+      log(new Call(site, rows, bytes, folds.zip(values),
+        exchanges(df.queryExecution.executedPlan), "stored", collected)), local)
   }
 
   /** A local checkpoint that its first consumer stores; no job of its own
@@ -187,7 +187,7 @@ object Materialize {
     */
   def deferred(df: DataFrame, site: String): DataFrame = described(df, site) {
     val ck = df.localCheckpoint(false)
-    log(new Call(site, -1L, -1L, Nil, exchanges(df), "deferred"))
+    log(new Call(site, -1L, -1L, Nil, exchanges(df.queryExecution.executedPlan), "deferred"))
     GraftSqlBridge.restated(ck, df, None)
   }
 
@@ -242,14 +242,16 @@ object Materialize {
     (out, if (kept == null || out(0) > share) null else kept.result())
   }
 
-  /** Exchanges of the physical plan `df` ran, query stages included. */
-  private def exchanges(df: DataFrame): Int = {
+  /** Exchanges of a physical plan, query stages included: the one plan
+    * walk that [[Call]] and [[Trace]] count with.
+    */
+  def exchanges(plan: SparkPlan): Int = {
     def walk(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
       case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
       case s: QueryStageExec        => Seq(s.plan)
       case other                    => other.children ++ other.subqueries
     }).flatMap(walk)
-    walk(df.queryExecution.executedPlan).count(_.isInstanceOf[Exchange])
+    walk(plan).count(_.isInstanceOf[Exchange])
   }
 
   private def described[T](df: DataFrame, site: String)(body: => T): T = {

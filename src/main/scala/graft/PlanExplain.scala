@@ -1,21 +1,21 @@
 package graft
 
-/** Dump `.explain("formatted")` for a comma-separated list of declared
-  * queries (measurement tooling for the optimization rounds — guide §1.1:
-  * capture the plan shape before and after every change). Usage:
+/** The repository's one plan dumper: `.explain("formatted")` for a
+  * comma-separated list of declared queries (measurement tooling for the
+  * optimization rounds — guide §1.1: capture the plan shape before and
+  * after every change). Usage:
   *
   *   SPARK_GRAFT_ONLY=q_dedup_minhash,q_dedup_clusters \
   *   SPARK_GRAFT_PLAN_SUFFIX=before \
-  *   SPARK_GRAFT_PLAN_DIR=plans/r14 \
+  *   SPARK_GRAFT_PLAN_DIR=plans/r15 \
   *   sbt "runMain graft.PlanExplain"
   *
-  * Writes <dir>/<query>_<suffix>.txt. The query list is the same
-  * `SPARK_GRAFT_ONLY` variable Bench and Profile read. The session is Bench's
-  * ([[Session.build]]), so the dumped plans match what the bench runs.
-  * NOTE: iterative operators (Dedup.clusters, Percentiles.exact) execute
-  * their driver-synced jobs at BUILD time; their dumped plan is the final
-  * returned query, starting from checkpointed RDD scans — same caveat as
-  * PLANS.md.
+  * Writes <dir>/<query>_<suffix>.txt (dir default `target/plans`). The
+  * session is Bench's ([[Session.build]]), so the dumped plans match what
+  * the bench runs. Frames stored through [[Materialize]] (dedup, kNN,
+  * quantile and CalTopo folder builds, oracle flags) are computed while
+  * the query is BUILT, so the dumped plan reads them as `Scan
+  * ExistingRDD` or literals; `graft.Profile` prints the build itself.
   */
 object PlanExplain {
   def main(args: Array[String]): Unit = {
@@ -25,7 +25,7 @@ object PlanExplain {
       .split(",").map(_.trim).filter(_.nonEmpty).toSeq
     val suffix = sys.env.getOrElse("SPARK_GRAFT_PLAN_SUFFIX", "before")
     val dir = java.nio.file.Paths.get(
-      sys.env.getOrElse("SPARK_GRAFT_PLAN_DIR", "plans/r14"))
+      sys.env.getOrElse("SPARK_GRAFT_PLAN_DIR", "target/plans"))
     java.nio.file.Files.createDirectories(dir)
     val spark = Session.build(sfDir, cpus)
     names.foreach { n =>

@@ -3,9 +3,10 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The one session recipe. Bench times the queries under it, Verify
-  * checks their answers under it, PLANS.md is dumped under it, and
-  * Profile, PlanExplain, StreamRunner, the specs and the test-scope
-  * probes build through it — so a config change lands everywhere at once.
+  * checks their answers under it, and Profile, PlanExplain, StreamRunner,
+  * the specs and the test-scope probes build through it — so a config
+  * change lands everywhere at once. It registers no listener: a caller
+  * that wants the per-query record attaches [[Trace]] itself.
   */
 object Session {
 

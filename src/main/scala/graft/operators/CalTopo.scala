@@ -310,8 +310,8 @@ object CalTopo {
     when(ftitle.isNotNull, concat(lit("/"), ftitle))
 
   /** Folder dimensions of at most this many rows, with unique usable ids,
-    * resolve A13's path from a map literal; larger ones take a broadcast
-    * join. The literal travels with every task of the plan, so the cap
+    * resolve A13's path from a map literal; larger ones take a join. The
+    * literal travels with every task of the plan, so the cap
     * keeps it to a few hundred KB.
     */
   val FolderLiteralCap = 4096
@@ -327,9 +327,10 @@ object CalTopo {
     * with no join. A dangling,
     * null or `""` id finds no key and gets a null path, as the left join
     * gives. Otherwise — over the cap, or a duplicate id, where the left
-    * join duplicates the feature row — `df` is left-joined to the
-    * broadcast stored dimension, as the reference's semantics require.
-    * The choice is logged as the call's `folders=literal|broadcast` route.
+    * join duplicates the feature row — `df` is left-joined to the stored
+    * dimension, as the reference's semantics require: a broadcast while
+    * its rows × 2 cells fit [[Materialize.BroadcastCells]], else a
+    * shuffled join. The route is logged as `folders=literal|broadcast|shuffle`.
     */
   private def folderLookup(df: DataFrame, folderId: Column,
       folders: DataFrame, site: String): (DataFrame, Column) = {
@@ -341,16 +342,15 @@ object CalTopo {
         val titles = typedLit(rs.map(r => r.getString(0) -> r.getString(1)).toMap)
         (df, path(try_element_at(titles, folderId)))
       case None =>
-        dim.route("folders", "broadcast")
-        val f = dim.df
-        (df.join(broadcast(f), folderMatch(folderId, f("fid")), "left"), path(f("ftitle")))
+        val f = dim.broadcastIf("folders", dim.rows * 2 <= Materialize.BroadcastCells)(dim.df)
+        (df.join(f, folderMatch(folderId, f("fid")), "left"), path(f("ftitle")))
     }
   }
 
   /** A13 — folder→path lookup (`task.ts:142-152`) of every feature's
     * folderId in the folder dimension, through [[folderLookup]]: a map
     * literal when the dimension is small and its ids unique, else a LEFT
-    * broadcast join. Measures `folders` while it is built.
+    * join. Measures `folders` while it is built.
     */
   def folderJoin(df: DataFrame, folders: DataFrame): DataFrame = {
     val (from, p) = folderLookup(df, nested("folder_id"), folders,
@@ -413,7 +413,8 @@ object CalTopo {
     * [[FolderLiteralCap]] rows with unique usable ids becomes a map
     * literal, so the returned plan is that one projection with no join.
     * Otherwise the projection reads the main flow left-joined to the
-    * broadcast dimension.
+    * dimension (past the broadcast cell cap, a shuffled join that no
+    * longer keeps a fetch unit in one partition).
     *
     * `x`/`y`/`z` are the first three components of [[firstPosition]] over
     * the decoded coordinates: A10 truncation keeps the first three

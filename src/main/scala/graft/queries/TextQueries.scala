@@ -578,7 +578,8 @@ FROM r WHERE rank <= 50 ORDER BY rank""") { (s, d) =>
       // Σcnt ≡ total token count; computing it as sum(size(split))
       // over documents is a shuffle-free scalar agg on a pruned scan,
       // instead of a second consumption of the word-count aggregate
-      // (self-consumed subplans recompute per side — see PLANS.md).
+      // (a self-consumed subplan recomputes per side: column pruning
+      // specializes each side past ReuseExchange, as in q_text_tfidf).
       val total = Tables.documents(s, d)
         .agg(sum(size(split(col("text"), " ")).cast("long")).as("total"))
       val top = f.orderBy(col("cnt").desc, col("word")).limit(50)

@@ -61,8 +61,6 @@ class FeatureCollectionSink extends TableProvider {
           sys.props("java.io.tmpdir") +
             s"/graft-fc-spool-${sc.applicationId}-${sc.startTime}"
         } else path),
-      Option(properties.get("deliver.maxAttempts")).map(_.toInt).getOrElse(3),
-      Option(properties.get("deliver.backoffMs")).map(_.toLong).getOrElse(100L),
       // the submit-side `verbose: DEBUG` pass-through (task.ts:158);
       // Config.sinkOptions renders it from Config.debug
       Option(properties.get("verbose")).exists(_.toBoolean))
@@ -86,7 +84,6 @@ object FeatureCollectionSink {
 }
 
 class FcSinkTable(dir: String, prefix: String, val spool: String,
-    deliverMaxAttempts: Int = 3, deliverBackoffMs: Long = 100L,
     verbose: Boolean = false)
     extends Table with SupportsWrite {
   override def name(): String = s"featurecollection-sink($dir)"
@@ -101,14 +98,12 @@ class FcSinkTable(dir: String, prefix: String, val spool: String,
     new WriteBuilder {
       override def build(): Write = new Write {
         override def toBatch: BatchWrite =
-          new FcBatchWrite(dir, prefix, spool, deliverMaxAttempts,
-            deliverBackoffMs, verbose)
+          new FcBatchWrite(dir, prefix, spool, verbose)
         // streaming epochs scope the document names by micro-batch id, so
         // successive epochs never collide and a replayed epoch (failure
         // recovery) overwrites its own documents idempotently
         override def toStreaming: streaming.StreamingWrite =
-          new FcStreamingWrite(dir, prefix, spool,
-            deliverMaxAttempts, deliverBackoffMs, verbose)
+          new FcStreamingWrite(dir, prefix, spool, verbose)
       }
     }
   }
@@ -119,11 +114,9 @@ class FcSinkTable(dir: String, prefix: String, val spool: String,
   * re-runs renames onto the same names).
   */
 class FcStreamingWrite(dir: String, prefix: String, spool: String,
-    deliverMaxAttempts: Int = 3, deliverBackoffMs: Long = 100L,
     verbose: Boolean = false)
     extends streaming.StreamingWrite {
-  private def batch = new FcBatchWrite(dir, prefix, spool,
-    deliverMaxAttempts, deliverBackoffMs, verbose)
+  private def batch = new FcBatchWrite(dir, prefix, spool, verbose)
   override def createStreamingWriterFactory(
       info: PhysicalWriteInfo): streaming.StreamingDataWriterFactory =
     new FcStreamingWriterFactory(spool, prefix)
@@ -140,7 +133,6 @@ case class FcCommit(tempPath: String, finalName: String)
   extends WriterCommitMessage
 
 class FcBatchWrite(dir: String, prefix: String, spool: String,
-    deliverMaxAttempts: Int = 3, deliverBackoffMs: Long = 100L,
     verbose: Boolean = false)
     extends BatchWrite {
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
@@ -170,11 +162,9 @@ class FcBatchWrite(dir: String, prefix: String, spool: String,
     messages.foreach {
       case FcCommit(null, _) => () // empty partition: nothing written
       case FcCommit(tmp, fin) =>
-        // retry policy rides the writer options (`deliver.maxAttempts` /
-        // `deliver.backoffMs`), mirroring the GET side's `fetch.*` knobs;
-        // `verbose` gates per-delivery logging (the reference's submit
-        // `verbose: DEBUG`, task.ts:158)
-        Fetch.withRetry(deliverMaxAttempts, deliverBackoffMs, verbose) {
+        // the GET side's retry policy; `verbose` gates per-delivery
+        // logging (the reference's submit `verbose: DEBUG`, task.ts:158)
+        Fetch.withRetry(Fetch.MaxAttempts, Fetch.BackoffMs, verbose) {
           HttpTransport.deliver(s"$base/$fin", Paths.get(tmp), verbose)
         }
         TransportLog(verbose)(s"delivered $fin")

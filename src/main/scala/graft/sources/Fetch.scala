@@ -18,6 +18,12 @@ package graft.sources
   */
 object Fetch {
 
+  /** Both transports' retry policy (attempts, first backoff); a read's
+    * `fetch.maxAttempts` / `fetch.backoffMs` options override it.
+    */
+  val MaxAttempts = 3
+  val BackoffMs = 100L
+
   /** True for failure classes worth retrying in place. Jackson's parse
     * errors extend IOException but mean a MALFORMED document — retrying
     * re-parses the same bad bytes, so they are explicitly permanent.

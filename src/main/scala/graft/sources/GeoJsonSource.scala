@@ -86,8 +86,8 @@ class GeoJsonTable(paths: Seq[String]) extends Table with SupportsRead {
     // fetch retry policy + incremental cursor ride the per-read options
     // (`.option("fetch.maxAttempts", ...)`, `.option("since", t)`)
     () => new GeoJsonScan(paths,
-      options.getInt("fetch.maxAttempts", 3),
-      options.getLong("fetch.backoffMs", 100L),
+      options.getInt("fetch.maxAttempts", Fetch.MaxAttempts),
+      options.getLong("fetch.backoffMs", Fetch.BackoffMs),
       options.getLong("since", -500L),
       // the reference's `verbose: DEBUG` fetch pass-through (task.ts:87);
       // Config.scanOptions renders it from Config.debug
@@ -109,8 +109,8 @@ class GeoJsonScan(paths: Seq[String], maxAttempts: Int, backoffMs: Long,
     }
 }
 
-case class GeoJsonPartition(path: String, maxAttempts: Int = 3,
-    backoffMs: Long = 100L, since: Long = -500L, verbose: Boolean = false)
+case class GeoJsonPartition(path: String, maxAttempts: Int, backoffMs: Long,
+    since: Long, verbose: Boolean)
   extends InputPartition
 
 /** Reads one fetch unit's FeatureCollection document into feature rows.
@@ -126,8 +126,8 @@ case class GeoJsonPartition(path: String, maxAttempts: Int = 3,
   * task.ts:87). The document's bytes are read and tokenized inside the
   * retry, so a malformed one fails there, before any row is emitted.
   */
-class GeoJsonReader(path: String, maxAttempts: Int = 3, backoffMs: Long = 100L,
-    since: Long = -500L, verbose: Boolean = false)
+class GeoJsonReader(path: String, maxAttempts: Int = Fetch.MaxAttempts,
+    backoffMs: Long = Fetch.BackoffMs, since: Long = -500L, verbose: Boolean = false)
   extends PartitionReader[InternalRow] {
   private val rows: Iterator[InternalRow] =
     Fetch.withRetry(maxAttempts, backoffMs, verbose) {

@@ -1,9 +1,8 @@
 package org.apache.spark
 
-/** Bridge to the package-private listener bus: whatever tallies or
-  * prints per-query listener events (graft.Profile, JobCountProbe,
-  * JobBudgetSpec) must drain the ASYNC listener bus between queries or
-  * events bleed across boundaries. Same minimal-shim discipline as
+/** Bridge to the package-private listener bus: graft.Trace, which every
+  * per-query job count and profile reads, drains the ASYNC listener bus
+  * at each phase boundary, or events would bleed across phases. Same minimal-shim discipline as
   * [[org.apache.spark.sql.GraftSqlBridge]] — one forwarding call, no
   * behavior.
   */

@@ -268,6 +268,15 @@ class CalTopoSpec extends SparkSpec {
     (fused, staged, routes.distinct)
   }
 
+  /** `features` plus `n` unreferenced folders with null titles. */
+  private def withFolders(features: DataFrame, n: Long): DataFrame =
+    features.unionByName(spark.range(0L, n, 1L, 1)
+      .select(features.schema.fields.toSeq.map(f => f.name match {
+        case "id"    => concat(lit("pad-"), col("id").cast("string")).as("id")
+        case "class" => lit("Folder").as("class")
+        case name    => lit(null).cast(f.dataType).as(name)
+      }): _*))
+
   test("fused flagship equals the staged stage chain on the generated features") {
     val features = CalTopoFeatures.build(spark, sfDir)
     val (literal, literalStaged, literalRoutes) = bothForms(features)
@@ -276,16 +285,27 @@ class CalTopoSpec extends SparkSpec {
     assert(multiset(literal) == multiset(literalStaged))
     // as many unreferenced folders again as the cap admits force the
     // broadcast join, and change no row
-    val padded = features.unionByName(spark.range(0L, CalTopo.FolderLiteralCap, 1L, 1)
-      .select(features.schema.fields.toSeq.map(f => f.name match {
-        case "id"    => concat(lit("pad-"), col("id").cast("string")).as("id")
-        case "class" => lit("Folder").as("class")
-        case name    => lit(null).cast(f.dataType).as(name)
-      }): _*))
-    val (joined, joinedStaged, joinedRoutes) = bothForms(padded)
+    val (joined, joinedStaged, joinedRoutes) =
+      bothForms(withFolders(features, CalTopo.FolderLiteralCap))
     assert(joinedRoutes == Seq("folders=broadcast"))
     assert(multiset(joined) == multiset(joinedStaged))
     assert(multiset(joined) == multiset(literal))
+  }
+
+  test("a folder dimension past the broadcast cell cap takes a shuffled join with the staged chain's rows") {
+    // (fid, ftitle) rows: one past 2 cells a row within BroadcastCells
+    val (features, dim) = (CalTopoFeatures.build(spark, sfDir), 1000001L)
+    val padded = withFolders(features, dim - CalTopo.folderDim(features).count())
+    Materialize.drain()
+    val fused = CalTopo.flagship(padded)
+    val rows = fused.collect().toSeq
+    val staged = stagedFlagship(padded).collect().toSeq
+    assert(Materialize.drain().filter(_.site.startsWith("CalTopo.")).map(c => (c.rows, c.route)) ==
+      Seq.fill(2)((dim, "folders=shuffle")))
+    // the final adaptive plan: AQE may not turn the join into a broadcast
+    val plan = fused.queryExecution.executedPlan.toString
+    assert(plan.contains("isFinalPlan=true") && !plan.contains("BroadcastExchange"), plan)
+    assert(rows.nonEmpty && multiset(rows) == multiset(staged))
   }
 
   private def feat(id: String, props: String, geom: String) =

@@ -288,18 +288,12 @@ class DedupSpec extends SparkSpec {
         .map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(got == expected, s"driverCap=$cap")
     }
-    val counter = new JobCountProbe.JobCounter
-    spark.sparkContext.addSparkListener(counter)
-    try {
-      Materialize.drain()
-      Dedup.clusters(pairs.df)
-      org.apache.spark.GraftListenerBridge.waitUntilListenerBusEmpty(spark.sparkContext)
-      assert(counter.snapshot == 1L, s"driver route ran ${counter.snapshot} jobs " +
-        "(want the bounded collect only)")
-      val call = Materialize.drain().find(_.site == "Dedup.clusters pairs")
-      assert(call.exists(c => c.how == "known" && c.route == "cc=driver"),
-        s"pair frame call: $call")
-    } finally spark.sparkContext.removeSparkListener(counter)
+    val (_, driver) = Trace(spark)(_.phase(Dedup.clusters(pairs.df)))
+    assert(driver.jobs.size == 1, s"driver route ran ${driver.jobs.size} jobs " +
+      "(want the bounded collect only)")
+    val call = driver.calls.find(_.site == "Dedup.clusters pairs")
+    assert(call.exists(c => c.how == "known" && c.route == "cc=driver"),
+      s"pair frame call: $call")
   }
 
   test("agreement flag: measured truth and LocalRelation gates equal the measured-census form") {

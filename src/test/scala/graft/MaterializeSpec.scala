@@ -47,16 +47,13 @@ class MaterializeSpec extends SparkSpec {
 
   test("a known count is not stored again and a deferred call runs no job") {
     val m = Materialize(frame(100L, 2), "MaterializeSpec once")
-    val counter = new JobCountProbe.JobCounter
-    spark.sparkContext.addSparkListener(counter)
-    try {
-      val again = Materialize(m.df.select(col("id"), col("b")), "MaterializeSpec again")
-      val deferred = Materialize.deferred(frame(100L, 2), "MaterializeSpec deferred")
-      org.apache.spark.GraftListenerBridge.waitUntilListenerBusEmpty(spark.sparkContext)
-      assert(counter.snapshot == 0L, s"${counter.snapshot} jobs")
-      assert(again.rows == 100L && again.call.how == "known")
-      assert(deferred.count() == 100L)
-    } finally spark.sparkContext.removeSparkListener(counter)
+    val ((again, deferred), calls) = Trace(spark)(_.phase {
+      (Materialize(m.df.select(col("id"), col("b")), "MaterializeSpec again"),
+        Materialize.deferred(frame(100L, 2), "MaterializeSpec deferred"))
+    })
+    assert(calls.jobs.isEmpty, s"${calls.jobs.size} jobs")
+    assert(again.rows == 100L && again.call.how == "known")
+    assert(deferred.count() == 100L)
   }
 
   test("a repartition(dst) input keeps its hash partitioning") {
@@ -79,8 +76,6 @@ class MaterializeSpec extends SparkSpec {
     // whose statistics lie (10 rows claimed, 3 000 stored) sends at most
     // driverCap + 1 rows to the driver and takes the distributed loop
     import spark.implicits._
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
-      SparkListenerTaskEnd}
     val ck = (0 until 1000).flatMap { c =>
         val b = c * 10L
         Seq((b, b + 1), (b + 1, b + 2), (b + 5, b + 6))
@@ -92,33 +87,13 @@ class MaterializeSpec extends SparkSpec {
       val b = c * 10L
       Seq(b -> b, (b + 1) -> b, (b + 2) -> b, (b + 5) -> (b + 5), (b + 6) -> (b + 5))
     }.toMap
-    final class Reads extends SparkListener {
-      val stageJob = new java.util.concurrent.ConcurrentHashMap[Int, Int]
-      val jobs = new java.util.concurrent.ConcurrentLinkedQueue[Int]
-      val records = new java.util.concurrent.ConcurrentHashMap[Int, Long]
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        jobs.add(e.jobId); e.stageIds.foreach(stageJob.put(_, e.jobId))
-      }
-      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
-        Option(e.taskMetrics).foreach { m =>
-          records.merge(stageJob.getOrDefault(e.stageId, -1),
-            m.inputMetrics.recordsRead, (a: Long, b: Long) => a + b)
-        }
-    }
-    val reads = new Reads
-    spark.sparkContext.addSparkListener(reads)
-    val got = try {
-      Materialize.drain()
-      val labels = Dedup.clusters(lying, driverCap = 100L).collect()
-        .map(row => row.getLong(0) -> row.getLong(1)).toMap
-      org.apache.spark.GraftListenerBridge.waitUntilListenerBusEmpty(spark.sparkContext)
-      labels
-    } finally spark.sparkContext.removeSparkListener(reads)
+    val (got, run) = Trace(spark)(_.phase(Dedup.clusters(lying, driverCap = 100L)
+      .collect().map(row => row.getLong(0) -> row.getLong(1)).toMap))
     assert(got == expected, "labels under a lying row count")
-    val firstRead = reads.records.getOrDefault(reads.jobs.peek(), 0L)
+    val firstRead = run.jobs.head.recordsRead
     assert(firstRead > 0 && firstRead <= 101,
       s"the driver route read $firstRead pair rows past a cap of 100")
-    assert(Materialize.drain().exists(c =>
+    assert(run.calls.exists(c =>
       c.site == "Dedup.clusters pairs" && c.route == "cc=distributed"))
   }
 

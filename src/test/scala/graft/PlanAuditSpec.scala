@@ -1,7 +1,5 @@
 package graft
 
-import graft.queries.Registry
-
 /** Whole-registry plan audit: no query may plan a cartesian product, and
   * nested-loop joins are allowed only where they are the intended
   * single-broadcast-row probe (KNN queries broadcasting one query vector).
@@ -24,18 +22,16 @@ class PlanAuditSpec extends SparkSpec {
       "q_text_vocab")     // broadcasts the single-row total token count
 
   test("no registered query plans a CartesianProduct") {
-    Registry.all.foreach { q =>
-      val plan = q.build(spark, sfDir).queryExecution.executedPlan.toString
-      assert(!plan.contains("CartesianProduct"),
+    BuiltQueries.all.foreach { q =>
+      assert(!q.plan.contains("CartesianProduct"),
         s"${q.name} plans a cartesian product")
     }
   }
 
   test("nested-loop joins appear only as single-row broadcast probes") {
-    Registry.all.foreach { q =>
-      val plan = q.build(spark, sfDir).queryExecution.executedPlan.toString
+    BuiltQueries.all.foreach { q =>
       if (!singleRowBroadcastOk(q.name)) {
-        assert(!plan.contains("BroadcastNestedLoopJoin"),
+        assert(!q.plan.contains("BroadcastNestedLoopJoin"),
           s"${q.name} has an unexpected nested-loop join")
       }
     }
@@ -63,8 +59,8 @@ class PlanAuditSpec extends SparkSpec {
   test("no explicit broadcast hint covers an unbounded fact-table scan") {
     import org.apache.spark.sql.catalyst.expressions.{EqualTo, Literal}
     import org.apache.spark.sql.catalyst.plans.logical._
-    Registry.all.foreach { q =>
-      val analyzed = q.build(spark, sfDir).queryExecution.analyzed
+    BuiltQueries.all.foreach { q =>
+      val analyzed = q.df.queryExecution.analyzed
       analyzed.foreach {
         case h: ResolvedHint if h.hints.strategy.contains(BROADCAST) =>
           // shapes that bound the broadcast size regardless of table

@@ -9,9 +9,7 @@ import graft.queries.Registry
   */
 class PlanSpec extends SparkSpec {
 
-  private def plan(name: String): String =
-    Registry.all.find(_.name == name).get
-      .build(spark, sfDir).queryExecution.executedPlan.toString
+  private def plan(name: String): String = BuiltQueries(name).plan
 
   test("folder_join joins nothing; q_join_broadcast uses a broadcast hash join") {
     // the folder dimension is measured while folder_join is built, and
@@ -141,8 +139,8 @@ class PlanSpec extends SparkSpec {
     // physical tree hides inside the AQE wrapper where collect() does not
     // descend
     import org.apache.spark.sql.catalyst.plans.logical.{Window => LWindow}
-    val partitionless = Registry.all.flatMap { q =>
-      q.build(spark, sfDir).queryExecution.optimizedPlan.collect {
+    val partitionless = BuiltQueries.all.flatMap { q =>
+      q.df.queryExecution.optimizedPlan.collect {
         case w: LWindow if w.partitionSpec.isEmpty => q.name
       }
     }
@@ -168,8 +166,7 @@ class PlanSpec extends SparkSpec {
       "q_dedup_pipeline_exact_first" -> "pipeline_exact_first_ok",
       "q_percentile_approx" -> "within_accuracy")
     val notLiteral = flags.flatMap { case (name, flag) =>
-      val analyzed = Registry.all.find(_.name == name).get
-        .build(spark, sfDir).queryExecution.analyzed
+      val analyzed = BuiltQueries(name).df.queryExecution.analyzed
       val out = analyzed.output.find(_.name == flag)
       assert(out.isDefined, s"$name declares no $flag column")
       // the expressions that define the flag column, wherever they are

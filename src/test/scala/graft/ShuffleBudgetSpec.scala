@@ -1,7 +1,5 @@
 package graft
 
-import graft.queries.Registry
-
 /** Shuffle-budget regression pin: every registry query's physical plan
   * carries at most its recorded number of Exchange nodes. A future edit
   * that silently adds a shuffle (a lost partitioning reuse, an
@@ -12,26 +10,11 @@ import graft.queries.Registry
   */
 class ShuffleBudgetSpec extends SparkSpec {
 
-  // r14 re-record (+1 Exchange per small-scan consumer on most entries,
-  // more where a table is scanned several times in one plan): the
-  // scale-adaptive Tables.spreadSmall repartition parallelizes kernel-heavy
-  // single-row-group scans at bench SFs (one task -> cores) and vanishes at
-  // scale; identical repartition subtrees dedup at runtime via
-  // ReuseExchange, so a plan's +N Exchange nodes execute one extra
-  // hash-on-natural-key pass (hash, NOT round-robin — no
-  // sort-before-repartition). Per-query before/after seconds in
-  // OPTIMIZATION_r14.md. r15 re-record: the five driver-regressed spread
-  // sites reverted (q_text_repetition, q_pivot, q_cube, q_dedup_simhash,
-  // q_dedup_ngram_jaccard — VERDICT r14 item 2), each -1 Exchange.
-  // Materialize re-record (tightened, twelve entries): a stored frame now
-  // reports the partitioning of the plan that produced it and its
-  // measured size, so scans of stored frames plan without the re-shuffle
-  // or sort exchange they needed, and the recall/pipeline flags are
-  // literals (no flag aggregate or broadcast in the returned plan).
-  // Literal-flag re-record (tightened, five entries): the kNN recall flags
-  // and the cluster-agreement flags are measured while the query is built
-  // as well, so no flag join, window or cross join is left in the returned
-  // plan; BuildExchangeBudgetSpec pins their build + returned-plan totals.
+  // Most entries count one hash exchange per kernel-heavy small-scan
+  // consumer: Tables.spreadSmall's repartition, which spreads a
+  // single-row-group scan over the cores at bench SFs and vanishes at
+  // scale. Per-entry comments give a plan's shape where it is not
+  // obvious; CHANGES.md and BASELINE.md record each re-record's cause.
   private val budget: Map[String, Int] = Map(
     "coalesce_default" -> 1,
     "coord_truncate" -> 2,
@@ -204,15 +187,8 @@ class ShuffleBudgetSpec extends SparkSpec {
     "typed_decode" -> 2)
 
   test("no registry query plans more Exchanges than its recorded budget") {
-    val over = Registry.all.flatMap { q =>
-      val n = "Exchange".r.findAllIn(
-        q.build(spark, sfDir).queryExecution.executedPlan.toString).size
-      budget.get(q.name) match {
-        case Some(b) if n > b => Some(s"${q.name}: $n > budget $b")
-        case None             => Some(s"${q.name}: no recorded budget (add it: $n)")
-        case _                => None
-      }
-    }
-    assert(over.isEmpty, over.mkString("; "))
+    val unpinned = BuiltQueries.all.map(_.name).filterNot(budget.contains)
+    assert(unpinned.isEmpty, s"no recorded budget (add it): ${unpinned.mkString(", ")}")
+    BuiltQueries.assertPins(budget, "Exchanges")(q => "Exchange".r.findAllIn(q.plan).size)
   }
 }

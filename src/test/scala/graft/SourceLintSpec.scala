@@ -1,30 +1,39 @@
 package graft
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
 /** Source rules no compiler checks. Every intermediate frame is stored
   * through [[Materialize]], which measures it in the same job and logs the
   * call; a hand-written `localCheckpoint` elsewhere in the main sources
-  * would bring back the unmeasured checkpoint plus census pattern.
+  * would bring back the unmeasured checkpoint plus census pattern. Every
+  * listener is [[Trace]]'s, attached only by the callers that read it; a
+  * listener registered elsewhere would count jobs a second way, or run
+  * in sessions that no one traces.
   */
 class SourceLintSpec extends org.scalatest.funsuite.AnyFunSuite {
 
-  private def mainSources: Seq[Path] = {
+  /** Main-source lines outside `owner` that contain any of `calls`. */
+  private def outside(owner: String, calls: String*): Seq[String] = {
     val s = Files.walk(Paths.get("src/main/scala"))
-    try s.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
-    finally s.close()
+    val sources = try s.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      finally s.close()
+    assert(sources.exists(_.endsWith(Paths.get("graft", owner))),
+      "run from the repository root")
+    for {
+      p <- sources if !p.endsWith(Paths.get("graft", owner))
+      (line, i) <- Files.readAllLines(p).asScala.zipWithIndex
+      if calls.exists(line.contains)
+    } yield s"$p:${i + 1}: ${line.trim}"
   }
 
   test("localCheckpoint( appears in src/main only inside graft.Materialize") {
-    val sources = mainSources
-    assert(sources.exists(_.endsWith(Paths.get("graft", "Materialize.scala"))),
-      "run from the repository root")
-    val hits = for {
-      p <- sources if !p.endsWith(Paths.get("graft", "Materialize.scala"))
-      (line, i) <- Files.readAllLines(p).asScala.zipWithIndex
-      if line.contains("localCheckpoint(")
-    } yield s"$p:${i + 1}: ${line.trim}"
+    val hits = outside("Materialize.scala", "localCheckpoint(")
+    assert(hits.isEmpty, hits.mkString("\n"))
+  }
+
+  test("listeners are registered in src/main only inside graft.Trace") {
+    val hits = outside("Trace.scala", "addSparkListener", "listenerManager.register")
     assert(hits.isEmpty, hits.mkString("\n"))
   }
 }

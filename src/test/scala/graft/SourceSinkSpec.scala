@@ -5,11 +5,7 @@ import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.Row
-import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.util.QueryExecutionListener
 import graft.operators.CalTopo
 import graft.queries.Registry
 import graft.sources.{CalTopoFeatures, FeatureCollectionSink, Tables}
@@ -61,40 +57,6 @@ class SourceSinkSpec extends SparkSpec {
     }
   }
 
-  private def planNodes(p: SparkPlan): Seq[SparkPlan] = {
-    val kids = p match {
-      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
-      case q: QueryStageExec => Seq(q.plan)
-      case other => other.children ++ other.subqueries
-    }
-    p +: kids.flatMap(planNodes)
-  }
-
-  /** Runs `body` and returns the jobs it launched and the executed plans
-    * of the writes it made.
-    */
-  private def traced(body: => Unit): (Long, Seq[SparkPlan]) = {
-    val jobs = new JobCountProbe.JobCounter
-    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
-    val qel = new QueryExecutionListener {
-      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
-        plans.add(qe.executedPlan)
-      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
-    }
-    val sc = spark.sparkContext
-    org.apache.spark.GraftListenerBridge.waitUntilListenerBusEmpty(sc)
-    sc.addSparkListener(jobs)
-    spark.listenerManager.register(qel)
-    try {
-      body
-      org.apache.spark.GraftListenerBridge.waitUntilListenerBusEmpty(sc)
-      (jobs.snapshot, plans.asScala.toSeq)
-    } finally {
-      sc.removeSparkListener(jobs)
-      spark.listenerManager.unregister(qel)
-    }
-  }
-
   /** Delivered documents under `out`: each one's feature ids. */
   private def deliveredIds(out: java.nio.file.Path): Seq[Seq[String]] = {
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
@@ -118,25 +80,24 @@ class SourceSinkSpec extends SparkSpec {
     val Seq(doc) = writeFeatureDocs(Files.createTempDirectory("graft-tick-in"),
       Seq(_ => true))
     val out = Files.createTempDirectory("graft-tick-out")
-    var tick: org.apache.spark.sql.DataFrame = null
-    Materialize.drain()
     // building the tick measures the folder dimension in one job
-    val (buildJobs, _) = traced {
-      tick = CalTopo.flagship(decode(
-        spark.read.format("graft.sources.GeoJsonSource").load(doc)))
+    val (built, written) = Trace(spark) { t =>
+      val built = t.build(CalTopo.flagship(decode(
+        spark.read.format("graft.sources.GeoJsonSource").load(doc))))
+      (built, t.phase(FeatureCollectionSink.write(built.df, out.toString))._2)
     }
-    assert(Materialize.drain().map(_.route) == Seq("folders=literal"))
-    val (writeJobs, plans) = traced(FeatureCollectionSink.write(tick, out.toString))
-    assert(buildJobs == 1 && writeJobs == 1, s"jobs: build $buildJobs, write $writeJobs")
-    val Seq(plan) = plans
-    assert(planNodes(plan).collect { case e: Exchange => e }.isEmpty, plan.toString)
-    assert(!plan.toString.toLowerCase.contains("rangepartitioning"), plan.toString)
+    assert(built.phase.calls.map(_.route) == Seq("folders=literal"))
+    assert(built.phase.jobs.size == 1 && written.jobs.size == 1,
+      s"jobs: build ${built.phase.jobs.size}, write ${written.jobs.size}")
+    val Seq(write) = written.executions
+    assert(write.exchanges == 0, write.plan.toString)
+    assert(!write.plan.toString.toLowerCase.contains("rangepartitioning"), write.plan.toString)
     val docs = deliveredIds(out)
     assert(docs.size == 1)
     assert(docs.flatten.toSet == declaredFlagship.map(_.getString(0)).toSet)
     assert(docs.flatten.size == declaredFlagship.size)
     // the GeoJSON path computes the declared query's rows
-    assert(multiset(tick.collect().toSeq) == multiset(declaredFlagship))
+    assert(multiset(built.df.collect().toSeq) == multiset(declaredFlagship))
   }
 
   test("a 2-document paths read delivers 2 documents holding every id") {
