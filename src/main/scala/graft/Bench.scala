@@ -1,35 +1,7 @@
 package graft
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import scala.util.control.NonFatal
 object Bench {
-
-  /** JSON string literal with quotes/backslashes escaped and control
-    * characters flattened to spaces — failure messages pass through here
-    * before landing in bench_full.json.
-    */
-  private[graft] def jsonString(s: String): String =
-    "\"" + s.flatMap {
-      case '"'            => "\\\""
-      case '\\'           => "\\\\"
-      case c if c < ' '   => " "
-      case c              => c.toString
-    } + "\""
-
-  /** Compact head of a bench-run failure: exception class + the first
-    * line of the ROOT cause's message (VERDICT r4 item 3: one r4 run died
-    * with a DAGScheduler stack that best-of-N silently absorbed — a
-    * recurring transient needs a name in the artifact, not just a
-    * truncated stderr tail).
-    */
-  private[graft] def errorHead(e: Throwable): String = {
-    var root = e
-    while (root.getCause != null && (root.getCause ne root)) root = root.getCause
-    val rootMsg = Option(root.getMessage).getOrElse("")
-      .linesIterator.take(1).mkString.take(240)
-    val cls = e.getClass.getSimpleName +
-      (if (root ne e) s" <- ${root.getClass.getSimpleName}" else "")
-    s"$cls: $rootMsg"
-  }
 
   /** Deny-filter for the one benign ERROR stack that kept polluting the
     * driver artifact's 2000-char stdout tail (VERDICT r11 item 3,
@@ -56,7 +28,7 @@ object Bench {
     * starts with the literal prefix, bumps `counter`, and stays NEUTRAL
     * for everything else — a genuine DAGScheduler failure still logs, and
     * still reaches the artifact through the thrown exception's
-    * [[errorHead]] anyway. main() prints one summary line to stderr at
+    * [[Session.errorHead]] anyway. main() prints one summary line to stderr at
     * the end, so the artifact records THAT suppression happened without
     * 12-line stacks eating the tail window.
     *
@@ -151,7 +123,7 @@ object Bench {
     s"""{"metric":"total","value":${fmt(total)},"unit":"sec","nq":$nq,""" +
       // sfDir is environment input — escape it, or a quote/backslash in
       // the path breaks the very line that must always stay parseable
-      s""""sf":${jsonString(sf)}}"""
+      s""""sf":${Session.jsonString(sf)}}"""
 
   /** Character budget for the per-query stdout line: compact line (~85,
     * bounded 140 by spec) + this + sbt's "[success] Total time ..." tail
@@ -169,7 +141,7 @@ object Bench {
   private[graft] def detailLine(total: Double, cells: Seq[(String, Double)],
       sf: String): String = {
     val prefix = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","nq":${cells.size},"queries":{"""
-    def suffix(omitted: Int) = s"""},"omitted":$omitted,"sf":${jsonString(sf)}}"""
+    def suffix(omitted: Int) = s"""},"omitted":$omitted,"sf":${Session.jsonString(sf)}}"""
     val entries = cells.sortBy { case (_, v) => (v >= 0, -v) }
       .map { case (k, v) => "\"" + k + "\":" + fmt2(v) }
     // the widest omitted count is reserved, so the final line fits too
@@ -186,36 +158,27 @@ object Bench {
   private[graft] def measuredTotal(cells: Seq[(String, Double)]): Double =
     cells.collect { case (_, v) if v >= 0 => v }.sum
 
-  type Query = (SparkSession, String) => DataFrame
-
   /** Best-of-2 cell per query, in the given order. One execution is a
     * noop write, which forces FULL execution of every output column
     * (`.count()` let Catalyst prune unreferenced projections, so map-only
     * queries measured little more than scan+count — VERDICT r1 §wrong.6).
     * Two runs because single runs swing ±40% on a virtualized host; the
     * minimum of repeated runs of deterministic work is the standard
-    * low-noise estimator. A run that throws a NonFatal error is logged,
-    * its head recorded in the returned failures, and skipped; a query
-    * whose runs all failed gets -1, which never masquerades as a fast
-    * timing. Fatal errors (OOM, interrupt, linkage) propagate and end
-    * the run.
+    * low-noise estimator. Each run is [[Session.guarded]]: a failed run's
+    * head is recorded in the returned failures, and a query whose runs
+    * all failed gets -1, which never masquerades as a fast timing.
     */
   private[graft] def measure(spark: SparkSession, sfDir: String,
-      selected: Seq[(String, Query)]): (Seq[(String, Double)], Seq[(String, String)]) = {
+      selected: Seq[(String, Session.Query)]): (Seq[(String, Double)], Seq[(String, String)]) = {
     val failures = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-    def timeOnce(name: String, fn: Query): Option[Double] = {
-      val t0 = System.nanoTime()
-      try {
-        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        Some((System.nanoTime() - t0) / 1e9)
-      } catch { case NonFatal(e) =>
-        System.err.println(s"[bench] $name failed: ${e.getMessage}")
-        failures += name -> errorHead(e)
-        None
-      }
-    }
     val cells = selected.map { case (name, fn) =>
-      val ok = (1 to 2).flatMap(_ => timeOnce(name, fn))
+      val runs = (1 to 2).map(_ => Session.guarded("bench", name) {
+        val t0 = System.nanoTime()
+        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+        (System.nanoTime() - t0) / 1e9
+      })
+      failures ++= runs.collect { case Left(head) => name -> head }
+      val ok = runs.collect { case Right(s) => s }
       // release this query's localCheckpoint blocks: the ContextCleaner
       // frees them only after the driver-side RDD references are GC'd,
       // and accumulated blocks from earlier queries otherwise build heap
@@ -227,77 +190,24 @@ object Bench {
     (cells, failures.toSeq)
   }
 
-  /** Times every declared query (or `SPARK_GRAFT_ONLY`'s comma-separated
-    * names, in the given order) against `SPARK_GRAFT_SF_DIR` on
-    * `local[SPARK_GRAFT_CPUS]`, and prints two JSON lines on stdout; full
-    * detail goes to target/bench_full.json. Host noise is not adjudicated
+  /** Times the queries of [[Session.env]] (every declared query, or
+    * `SPARK_GRAFT_ONLY`'s names in their order) against
+    * `SPARK_GRAFT_SF_DIR` on `local[SPARK_GRAFT_CPUS]`, after
+    * [[Session.warm]], and prints two JSON lines on stdout; full detail
+    * goes to target/bench_full.json. Host noise is not adjudicated
     * here: `python3 layerbench/run.py` does that with host-invariant
     * counters.
     */
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
-    val spark = Session.build(sfDir, cpus)
+    val env = Session.env()
+    val (sfDir, queries) = (env.sfDir, env.queries)
+    val spark = Session.build(sfDir, env.cpus)
     // benign late-accumulator ERROR stacks must not eat the stdout tail
     // (VERDICT r11 item 3; doc at [[installLateAccumFilter]])
     val lateAccumSuppressed = new java.util.concurrent.atomic.AtomicLong
     installLateAccumFilter(lateAccumSuppressed)
-    // Warm the session before timing: parquet footers/IO cache + the
-    // scan codepaths, so the first measured query doesn't absorb one-time
-    // session startup. The measured queries themselves run cold.
-    graft.sources.Tables.warm(spark, sfDir)
-    // warm the execution machinery itself (Janino/codegen, window exec,
-    // generators, hash aggregation, sort) on a tiny synthetic plan, so the
-    // first measured query that touches each operator class doesn't absorb
-    // its one-time compile cost
-    try {
-      import org.apache.spark.sql.functions._
-      import org.apache.spark.sql.expressions.Window
-      spark.range(1000)
-        .withColumn("k", pmod(col("id"), lit(7)))
-        .withColumn("arr", sequence(lit(0), pmod(col("id"), lit(3))))
-        .withColumn("x", explode(col("arr")))
-        .withColumn("rn", org.apache.spark.sql.functions.row_number()
-          .over(Window.partitionBy("k").orderBy("id")))
-        .groupBy("k").agg(count(lit(1)), sum(col("x")), min(col("rn")))
-        .orderBy("k")
-        .count()
-      // operator classes the first plan doesn't touch, each of which costs
-      // seconds of one-time Janino/codegen for whichever measured query
-      // hits it first (r1: q_stream_session 13.4s vs 1.4s in isolation —
-      // pure first-touch compile): session windows, pivot, broadcast
-      // join, typed flatMap ser/de, JSON codecs, collect aggregates
-      val tiny = spark.range(100)
-        .withColumn("k", pmod(col("id"), lit(5)))
-        .withColumn("ts", timestamp_micros(col("id") * 1000000L))
-      tiny.groupBy(col("k"), session_window(col("ts"), "10 seconds"))
-        .agg(count(lit(1))).count()
-      tiny.groupBy(col("k"), window(col("ts"), "30 seconds", "10 seconds"))
-        .agg(count(lit(1))).count()
-      tiny.groupBy("k").pivot("k", Seq("0", "1")).agg(sum("id")).count()
-      tiny.join(broadcast(tiny.select(col("k").as("k2")).limit(3)),
-        col("k") === col("k2")).count()
-      tiny.select(to_json(struct(col("id"), col("k"))).as("j"))
-        .select(from_json(col("j"), "id BIGINT, k BIGINT",
-          java.util.Collections.emptyMap[String, String]())).count()
-      tiny.groupBy("k").agg(collect_list("id"), collect_set("id")).count()
-      locally {
-        import spark.implicits._
-        tiny.select(col("id"), col("k")).as[(Long, Long)]
-          .flatMap(t => Seq(t, t)).count()
-      }
-    } catch { case NonFatal(e) =>
-      System.err.println(s"[bench] codegen warm-up skipped: ${errorHead(e)}") }
-    // Optional comma-separated query-name filter, for re-measuring single
-    // cells (e.g. SPARK_GRAFT_ONLY=q_dedup_clusters,q_text_tfidf); the
-    // queries run in the GIVEN order
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-    val selected: Seq[(String, Query)] = only match {
-      case Some(names) => names.flatMap(n => SparkEntry.queries.get(n).map(n -> _))
-      case None        => SparkEntry.queries.toSeq
-    }
-    val (results, failures) = measure(spark, sfDir, selected)
+    Session.warm(spark, sfDir)
+    val (results, failures) = measure(spark, sfDir, queries)
     val total = measuredTotal(results)
     // Full per-query detail — too long for the driver's 2000-char stdout
     // tail window (the r2 one-liner with all 89 queries at full precision
@@ -307,11 +217,11 @@ object Bench {
     val fullJson = results.map { case (k, v) => "\"" + k + "\":" + fmt(v) }
       .mkString("{", ",", "}")
     val failuresJson = failures.map { case (n, h) =>
-      s"""{"q":${jsonString(n)},"error":${jsonString(h)}}"""
+      s"""{"q":${Session.jsonString(n)},"error":${Session.jsonString(h)}}"""
     }.mkString("[", ",", "]")
     try java.nio.file.Files.write(
       java.nio.file.Paths.get("target/bench_full.json"),
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","nq":${results.size},"queries":$fullJson,"failures":$failuresJson,"sf":${jsonString(sfDir)}}"""
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","nq":${results.size},"queries":$fullJson,"failures":$failuresJson,"sf":${Session.jsonString(sfDir)}}"""
         .getBytes("UTF-8"))
     catch { case NonFatal(e) => System.err.println(s"[bench] full dump: $e") }
     // one auditable line instead of N 12-line stacks (stderr — it must

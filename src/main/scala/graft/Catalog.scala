@@ -11,35 +11,19 @@ import graft.sources.{CalTopoFeatures, Tables}
   */
 object Catalog {
 
-  val tableNames: Seq[String] = Seq("region", "nation", "customer",
-    "supplier", "part", "orders", "lineitem", "events", "documents",
-    "embeddings")
-
-  /** The table exactly as the query surface sees it: `events` goes through
-    * the same nanos→TIMESTAMP normalization `Sql.register` applies, so the
-    * introspection surface never disagrees with the queryable surface
-    * (ADVICE r1: raw-load reported `ts BIGINT` while queries saw
-    * `ts TIMESTAMP`).
-    */
-  private def queryable(spark: SparkSession, dir: String, table: String) =
-    table match {
-      case "events" => Tables.events(spark, dir)
-      case t        => Tables.load(spark, dir, t)
-    }
-
   /** Schema of a driver table as Spark's JSON schema encoding. */
   def schemaJson(spark: SparkSession, dir: String, table: String): String =
-    queryable(spark, dir, table).schema.json
+    Tables.load(spark, dir, table).schema.json
 
   /** Schema of a driver table as DDL (`col TYPE, ...`). */
   def schemaDdl(spark: SparkSession, dir: String, table: String): String =
-    queryable(spark, dir, table).schema.toDDL
+    Tables.load(spark, dir, table).schema.toDDL
 
   /** The strict feature-record schema (the engine's "Output" type). */
   def featureSchemaJson: String = CalTopoFeatures.featureSchema.json
 
   /** All schemas, keyed by table — the `schema()` capability catalog. */
   def describe(spark: SparkSession, dir: String): Map[String, String] =
-    tableNames.map(t => t -> schemaDdl(spark, dir, t)).toMap +
+    Tables.names.map(t => t -> schemaDdl(spark, dir, t)).toMap +
       ("caltopo_features" -> CalTopoFeatures.featureSchema.toDDL)
 }

@@ -1,16 +1,16 @@
 package graft
 
-/** Engine configuration (SURVEY.md §2 A3): the reference validates its env
-  * against a typed schema with defaults (`ShareId: string`, `DEBUG` boolean
-  * defaulting false; `/root/reference/task.ts:8-16,63-66`) and aborts on a missing
-  * required key. Same contract here: typed fields, declared defaults,
-  * fail-fast on absent required keys.
+/** The reference task's own configuration (SURVEY.md §2 A3): the
+  * reference validates its env against a typed schema with defaults
+  * (`ShareId: string`, `DEBUG` boolean defaulting false; the
+  * reference's `task.ts:8-16,63-66`) and aborts on a missing required
+  * key. Same contract here: typed fields, declared defaults, fail-fast on
+  * absent required keys. The engine's run environment (`SPARK_GRAFT_*`)
+  * is [[Session.env]]'s.
   */
 final case class Config(
     shareId: String,
     debug: Boolean = false,
-    sfDir: String = "/root/testdata/sf0.001",
-    cpus: Int = 4,
     /** A9 strict-fidelity arm: replicate the reference's JS coercion of
       * present-but-null style values (`String(null)`="null",
       * `Number(null)`=0, `task.ts:116-120`) instead of the engine's
@@ -52,7 +52,7 @@ final case class Config(
 
 object Config {
   /** Parse from an env-style map; missing required key => IllegalArgument
-    * (the reference's schema-validation abort), bad boolean/int => same.
+    * (the reference's schema-validation abort), bad boolean/long => same.
     */
   def fromEnv(env: Map[String, String]): Config = {
     val shareId = env.getOrElse("SHARE_ID",
@@ -64,12 +64,6 @@ object Config {
       case Some(v) =>
         throw new IllegalArgumentException(s"$k must be true/false, got '$v'")
     }
-    def int(k: String, dflt: Int) = env.get(k).map { v =>
-      try v.toInt catch {
-        case _: NumberFormatException =>
-          throw new IllegalArgumentException(s"$k must be an int, got '$v'")
-      }
-    }.getOrElse(dflt)
     def long(k: String, dflt: Long) = env.get(k).map { v =>
       try v.toLong catch {
         case _: NumberFormatException =>
@@ -79,8 +73,6 @@ object Config {
     Config(
       shareId = shareId,
       debug = bool("DEBUG", dflt = false),
-      sfDir = env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001"),
-      cpus = int("SPARK_GRAFT_CPUS", 4),
       strictJsSemantics = bool("GRAFT_STRICT_JS", dflt = false),
       since = long("GRAFT_SINCE", -500L))
   }

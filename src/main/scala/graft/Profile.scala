@@ -1,7 +1,8 @@
 package graft
 
-/** Prints the [[Trace]] of declared queries under Bench's session
-  * ([[Session.build]]), warmed as Bench warms it. Usage:
+/** Prints the [[Trace]] of the queries of [[Session.env]] under Bench's
+  * session ([[Session.build]]), warmed as Bench warms it
+  * ([[Session.warm]]). Usage:
   *
   *   SPARK_GRAFT_ONLY=q_dedup_minhash SPARK_GRAFT_CPUS=32 \
   *   sbt "runMain graft.Profile"
@@ -14,45 +15,41 @@ package graft
   * counter line; then a `[materialize]` line per [[Materialize]] call of
   * the build (site, stored / deferred / known, rows, bytes, exchanges,
   * folds, routes); then its total. Unset, every declared query runs,
-  * with no per-run lines. Either way Profile ends with each run's build
-  * and exec job counts, sorted by total — job round-trips, not data, make
-  * most of the small-SF suite's time — and writes them to
-  * `target/jobcount.json`.
+  * with no per-run lines. Each run is [[Session.guarded]], so a failed
+  * query is logged and left out of the table. Either way Profile ends
+  * with each run's build and exec job counts, sorted by total — job
+  * round-trips, not data, make most of the small-SF suite's time — and
+  * writes them to `target/jobcount.json`.
   */
 object Profile {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
-    val names = sys.env.getOrElse("SPARK_GRAFT_ONLY", "")
-      .split(",").map(_.trim).filter(_.nonEmpty).toSeq
-    val runs = sys.env.getOrElse("SPARK_GRAFT_RUNS", "1").toInt.max(1)
-    val spark = Session.build(sfDir, cpus)
-    // same warm-up as Bench so first-touch costs don't land on one query
-    graft.sources.Tables.warm(spark, sfDir)
-    val selected = if (names.nonEmpty) names else SparkEntry.queries.keys.toSeq.sorted
+    val env = Session.env()
+    val queries = env.queries
+    val perRun = env.only.nonEmpty
+    val spark = Session.build(env.sfDir, env.cpus)
+    Session.warm(spark, env.sfDir)
     val rows = Trace(spark) { trace =>
       for {
-        n <- selected
-        fn <- SparkEntry.queries.get(n).orElse {
-          System.err.println(s"[profile] unknown query: $n"); None }.toSeq
-        r <- 1 to runs
-      } yield {
-        val built = trace.build(fn(spark, sfDir))
-        val (build, exec) = (built.phase, trace.execute(built.df))
-        System.gc()
-        val wall = (build.wallNs + exec.wallNs) / 1e9
-        if (names.nonEmpty) {
-          println(s"---- $n run $r ----")
-          printPhase("build", build)
-          printPhase("exec", exec)
-          build.calls.foreach(c => println(s"[materialize] $c"))
-          println(f"---- $n run $r total $wall%.3f s (build ${build.wallNs / 1e6}%.1f ms," +
-            s" returned plan ${built.exchanges} exchanges) ----")
-        }
-        (n, build.jobs.size, exec.jobs.size, wall, build.wallNs / 1e9)
-      }
+        (n, fn) <- queries
+        r <- 1 to env.runs
+        row <- Session.guarded("profile", n) {
+          val built = trace.build(fn(spark, env.sfDir))
+          val (build, exec) = (built.phase, trace.execute(built.df))
+          System.gc()
+          val wall = (build.wallNs + exec.wallNs) / 1e9
+          if (perRun) {
+            println(s"---- $n run $r ----")
+            printPhase("build", build)
+            printPhase("exec", exec)
+            build.calls.foreach(c => println(s"[materialize] $c"))
+            println(f"---- $n run $r total $wall%.3f s (build ${build.wallNs / 1e6}%.1f ms," +
+              s" returned plan ${built.exchanges} exchanges) ----")
+          }
+          (n, build.jobs.size, exec.jobs.size, wall, build.wallNs / 1e9)
+        }.toOption
+      } yield row
     }
-    table(rows, sfDir)
+    table(rows, env.sfDir)
     spark.stop()
   }
 
@@ -71,10 +68,12 @@ object Profile {
       s" shuffle_write=${p.shuffleWrite} B shuffle_read=${p.shuffleRead} B spill=${p.spill} B")
   }
 
-  /** The per-query job table, sorted by total jobs, and its JSON copy. */
+  /** The per-query job table, sorted by total jobs then name, and its
+    * JSON copy.
+    */
   private def table(rows: Seq[(String, Int, Int, Double, Double)], sfDir: String): Unit = {
     println(f"${"query"}%-34s ${"build"}%5s ${"exec"}%5s ${"total"}%5s ${"wall"}%7s ${"buildWall"}%9s")
-    rows.sortBy { case (_, b, e, _, _) => -(b + e) }.foreach {
+    rows.sortBy { case (name, b, e, _, _) => (-(b + e), name) }.foreach {
       case (name, b, e, w, tb) =>
         println(f"$name%-34s $b%5d $e%5d ${b + e}%5d $w%7.2f s $tb%7.2f s")
     }

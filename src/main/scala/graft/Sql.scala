@@ -12,9 +12,7 @@ object Sql {
 
   /** Register all tables for `dir` as temp views; returns the session. */
   def register(spark: SparkSession, dir: String): SparkSession = {
-    Catalog.tableNames.foreach {
-      // events goes through the nanos->micros timestamp normalization
-      case "events" => Tables.events(spark, dir).createOrReplaceTempView("events")
+    Tables.names.foreach {
       // the lineitem view carries the scale-adaptive small-scan spread
       // (r14, doc at Tables.spreadSmall): a single-row-group sub-128 MB
       // file otherwise runs every SQL query's scan-side work (decimal

@@ -1,38 +1,24 @@
 package graft
 import java.nio.file.{Files, Paths}
-import scala.util.control.NonFatal
 /** Correctness dump: each SparkEntry.queries result → parquet, plus
   * oracle_sql.json, for the DuckDB compare (scripts/selfcheck.py). The
   * session is the one Bench times, so answers are checked under the
-  * timed config. A query that throws a NonFatal error is logged and
-  * skipped; a fatal one ends the run with a nonzero exit. */
+  * timed config. Each query is [[Session.guarded]]: a NonFatal error is
+  * logged and the dump goes on; a fatal one ends the run with a nonzero
+  * exit. Usage: runMain graft.Verify <sfDir> <outDir>
+  */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
-    val spark = Session.build(sfDir, cpus)
+    val spark = Session.build(sfDir, Session.env().cpus)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case NonFatal(e) =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
+      Session.guarded("verify", name)(
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name"))
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    val json = SparkEntry.oracleSql.map { case (k, v) =>
+      s"${Session.jsonString(k)}: ${Session.jsonString(v)}"
+    }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

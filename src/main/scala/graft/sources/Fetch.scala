@@ -18,8 +18,8 @@ package graft.sources
   */
 object Fetch {
 
-  /** Both transports' retry policy (attempts, first backoff); a read's
-    * `fetch.maxAttempts` / `fetch.backoffMs` options override it.
+  /** The retry policy (attempts, first backoff) of the GeoJSON scan's
+    * fetch and the FeatureCollection sink's POST.
     */
   val MaxAttempts = 3
   val BackoffMs = 100L

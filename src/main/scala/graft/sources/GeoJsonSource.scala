@@ -83,34 +83,29 @@ class GeoJsonTable(paths: Seq[String]) extends Table with SupportsRead {
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(TableCapability.BATCH_READ)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    // fetch retry policy + incremental cursor ride the per-read options
-    // (`.option("fetch.maxAttempts", ...)`, `.option("since", t)`)
+    // the incremental cursor rides the per-read options
+    // (`.option("since", t)`); the retry policy is Fetch's
     () => new GeoJsonScan(paths,
-      options.getInt("fetch.maxAttempts", Fetch.MaxAttempts),
-      options.getLong("fetch.backoffMs", Fetch.BackoffMs),
       options.getLong("since", -500L),
       // the reference's `verbose: DEBUG` fetch pass-through (task.ts:87);
       // Config.scanOptions renders it from Config.debug
       options.getBoolean("verbose", false))
 }
 
-class GeoJsonScan(paths: Seq[String], maxAttempts: Int, backoffMs: Long,
-    since: Long, verbose: Boolean = false) extends Scan with Batch {
+class GeoJsonScan(paths: Seq[String], since: Long, verbose: Boolean = false)
+    extends Scan with Batch {
   override def readSchema(): StructType = GeoJsonSource.schema
   override def toBatch: Batch = this
   override def planInputPartitions(): Array[InputPartition] =
-    paths.map(p =>
-      GeoJsonPartition(p, maxAttempts, backoffMs, since, verbose): InputPartition)
-      .toArray
+    paths.map(p => GeoJsonPartition(p, since, verbose): InputPartition).toArray
   override def createReaderFactory(): PartitionReaderFactory =
     (partition: InputPartition) => {
       val p = partition.asInstanceOf[GeoJsonPartition]
-      new GeoJsonReader(p.path, p.maxAttempts, p.backoffMs, p.since, p.verbose)
+      new GeoJsonReader(p.path, p.since, p.verbose)
     }
 }
 
-case class GeoJsonPartition(path: String, maxAttempts: Int, backoffMs: Long,
-    since: Long, verbose: Boolean)
+case class GeoJsonPartition(path: String, since: Long, verbose: Boolean)
   extends InputPartition
 
 /** Reads one fetch unit's FeatureCollection document into feature rows.
@@ -119,18 +114,18 @@ case class GeoJsonPartition(path: String, maxAttempts: Int, backoffMs: Long,
   *
   * The fetch: transport picked by scheme (file, or live HTTP GET for
   * http(s):// fetch units — reference task.ts:70); transient faults (I/O,
-  * 5xx) retry in place ([[Fetch.withRetry]]), permanent faults (4xx,
+  * 5xx) retry in place ([[Fetch.withRetry]] with [[Fetch.MaxAttempts]]
+  * and [[Fetch.BackoffMs]]), permanent faults (4xx,
   * malformed document) abort the task — reference fetch().typed()
   * semantics split across transport, retry, and decode layers; `verbose`
   * gates per-exchange logging (the reference's `verbose: DEBUG`,
   * task.ts:87). The document's bytes are read and tokenized inside the
   * retry, so a malformed one fails there, before any row is emitted.
   */
-class GeoJsonReader(path: String, maxAttempts: Int = Fetch.MaxAttempts,
-    backoffMs: Long = Fetch.BackoffMs, since: Long = -500L, verbose: Boolean = false)
+class GeoJsonReader(path: String, since: Long = -500L, verbose: Boolean = false)
   extends PartitionReader[InternalRow] {
   private val rows: Iterator[InternalRow] =
-    Fetch.withRetry(maxAttempts, backoffMs, verbose) {
+    Fetch.withRetry(Fetch.MaxAttempts, Fetch.BackoffMs, verbose) {
       val in = DocTransport.forTarget(path).open(path, verbose)
       val doc = try in.readAllBytes() finally in.close()
       GeoJsonReader.features(doc, since)

@@ -37,12 +37,18 @@ object Tables {
 
   def invalidate(): Unit = { cache.clear(); sizeCache.clear() }
 
+  /** The table `name` of `dir` as every consumer sees it: `events` goes
+    * through [[normalizeTs]], so the query, SQL and introspection
+    * surfaces never disagree on its `ts` type (ADVICE r1: a raw load
+    * reported `ts BIGINT` while queries saw `ts TIMESTAMP`).
+    */
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
     // drop entries of stopped sessions (their cached plans pin the old
     // SparkContext; a fresh session must re-resolve)
     cache.keySet.removeIf(_._1.sparkContext.isStopped)
-    cache.computeIfAbsent((spark, s"$dir/$name.parquet"),
+    val df = cache.computeIfAbsent((spark, s"$dir/$name.parquet"),
       key => key._1.read.parquet(key._2))
+    if (name == "events") normalizeTs(df) else df
   }
 
   /** The events file's `ts` physical type has varied across driver data
@@ -56,7 +62,7 @@ object Tables {
     * micros by pure local-datetime arithmetic (timestampdiff over NTZ
     * operands never consults the session zone — a plain
     * cast(ts as timestamp) would shift instants under any non-UTC
-    * session). Shared by the batch loaders and
+    * session). Shared by [[load]] and
     * [[graft.streaming.StreamRunner.eventsStream]] so the two paths
     * cannot drift across data generations.
     */
@@ -147,9 +153,7 @@ object Tables {
     * projections — regressed those cells 2–4×).
     */
   def spreadSmall(s: SparkSession, d: String, name: String): DataFrame = {
-    // route through the same public loaders so events keeps its
-    // nanos->micros ts normalization
-    val df = if (name == "events") events(s, d) else load(s, d, name)
+    val df = load(s, d, name)
     val cores = s.sparkContext.defaultParallelism
     val openCost = s.sessionState.conf.filesOpenCostInBytes
     val (bytes, files) = tableStats(s, d, name)
@@ -169,47 +173,11 @@ object Tables {
     else df
   }
 
-  /** Every test-data table (TESTDATA.md), in warm-up order. */
+  /** Every test-data table (TESTDATA.md), in warm-up order
+    * ([[graft.Session.warmTables]]).
+    */
   val names: Seq[String] = Seq("region", "nation", "customer", "supplier",
     "part", "orders", "lineitem", "events", "documents", "embeddings")
-
-  /** Warm a session before anything is measured: load and count every
-    * table of [[names]] present in `dir` (parquet footers, IO cache, the
-    * scan codepaths, and this object's relation cache), so the first
-    * measured query doesn't absorb one-time session start-up. Returns the
-    * tables warmed, in order.
-    *
-    * Per-table scale dirs (`tools/sfcut.sh`, ScaleGen subsets) hold only
-    * the tables a measurement needs, so existence is probed first: a
-    * blind load of a missing table makes Spark's FileStreamSink WARN log
-    * a full stack trace per table. The probe goes through the Hadoop FS
-    * layer, not java.nio, so it sees every path Spark itself can read
-    * (hdfs://, s3a://, file:// URIs); an unprobeable path is left for the
-    * load to try. Absent tables and failed loads are logged by name on
-    * stderr. NonFatal only: a fatal error (OOM, interrupt) propagates
-    * rather than pass as a silent skip.
-    */
-  def warm(spark: SparkSession, dir: String): Seq[String] = {
-    val (present, absent) = names.partition { t =>
-      try {
-        val p = new org.apache.hadoop.fs.Path(dir, s"$t.parquet")
-        p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-      } catch { case scala.util.control.NonFatal(e) =>
-        System.err.println(s"[tables] warm-up probe $t: $e")
-        true
-      }
-    }
-    if (absent.nonEmpty)
-      System.err.println(
-        s"[tables] warm-up skips tables absent from $dir: ${absent.mkString(", ")}")
-    present.filter { t =>
-      try { load(spark, dir, t).count(); true }
-      catch { case scala.util.control.NonFatal(e) =>
-        System.err.println(s"[tables] warm-up skip $t: ${graft.Bench.errorHead(e)}")
-        false
-      }
-    }
-  }
 
   def region(s: SparkSession, d: String): DataFrame    = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = load(s, d, "nation")
@@ -218,7 +186,7 @@ object Tables {
   def part(s: SparkSession, d: String): DataFrame      = load(s, d, "part")
   def orders(s: SparkSession, d: String): DataFrame    = load(s, d, "orders")
   def lineitem(s: SparkSession, d: String): DataFrame  = load(s, d, "lineitem")
-  def events(s: SparkSession, d: String): DataFrame    = normalizeTs(load(s, d, "events"))
+  def events(s: SparkSession, d: String): DataFrame    = load(s, d, "events")
   def documents(s: SparkSession, d: String): DataFrame = load(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = load(s, d, "embeddings")
 }

@@ -19,26 +19,25 @@ import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 object StreamRunner {
 
   /** The events parquet table as a bounded file stream with the batch
-    * schema. maxFilesPerTrigger=1 keeps multi-file dirs incremental
-    * (micro-batches). Handles both physical layouts the data generators
-    * produce: a single `events.parquet` FILE (driver testdata — stream
+    * schema, `maxFilesPerTrigger` files per micro-batch (the default 1
+    * keeps multi-file dirs fully incremental). Handles both physical
+    * layouts the data generators produce: a single `events.parquet` FILE (driver testdata — stream
     * the sf dir with a glob selecting just that file) and an
     * `events.parquet` DIRECTORY of part files (ScaleGen output — stream
     * the directory itself; a file-glob on the parent would match nothing
     * and silently stream zero rows, the r6 sf100 measurement bug).
     */
-  def eventsStream(spark: SparkSession, sfDir: String): DataFrame = {
+  def eventsStream(spark: SparkSession, sfDir: String,
+      maxFilesPerTrigger: Int = 1): DataFrame = {
     val batchSchema = spark.read.parquet(s"$sfDir/events.parquet").schema
-    // files-per-micro-batch knob (default 1 = fully incremental). A
-    // multi-file table is NOT time-ordered across part files, so a
+    // A multi-file table is NOT time-ordered across part files, so a
     // 1-file replay legitimately watermark-drops most rows as late; the
     // at-scale state-store measurement sets this high enough to replay
     // in one batch, where the watermark cannot drop anything and the
     // result is batch-equivalent (the StreamingSpec semantic).
     val reader = spark.readStream
       .schema(batchSchema)
-      .option("maxFilesPerTrigger",
-        sys.env.getOrElse("SPARK_GRAFT_STREAM_MAX_FILES", "1"))
+      .option("maxFilesPerTrigger", maxFilesPerTrigger.toLong)
     val raw =
       if (new java.io.File(s"$sfDir/events.parquet").isDirectory)
         reader.parquet(s"$sfDir/events.parquet")
@@ -314,12 +313,14 @@ object StreamRunner {
     * the REAL streaming path (file source -> state store -> memory sink)
     * and print per-agg wall time — the at-scale evidence for the state
     * store posture (VERDICT r5 item 6). SPARK_GRAFT_CPUS sizes the local
-    * master (default 4, the spec posture).
+    * master, SPARK_GRAFT_STREAM_MAX_FILES (default 1) is the timed
+    * streams' `maxFilesPerTrigger` and SPARK_GRAFT_STATE_STORE picks the
+    * state store, all read through [[graft.Session.env]].
     * Usage: runMain graft.streaming.StreamRunner <sfDir>
     */
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val env = graft.Session.env()
     // SPARK_GRAFT_STATE_STORE=rocksdb swaps the streaming state store to
     // the RocksDB provider (VERDICT r6 item 1): the default HDFS-backed
     // store holds ALL state on the executor heap, and the session
@@ -330,22 +331,15 @@ object StreamRunner {
     // RocksDB completes sf300 in 260 s and at sf1000 is bounded by local
     // DISK, not RAM — the resource that scales with executor count.
     // Stream ≡ batch results are provider-independent (StreamingSpec
-    // pins both).
-    val provider = sys.env.getOrElse("SPARK_GRAFT_STATE_STORE", "hdfs")
-    // unrecognized values fail LOUDLY: a typo ("rocks") silently falling
-    // back to the heap store while the log prints the raw value would
-    // corrupt exactly the provider-crossover measurements this knob exists
-    // for — a cell believed to be RocksDB would have measured the heap
-    val extra = provider.toLowerCase match {
-      case "rocksdb" => Map(
+    // pins both). Session.env rejects any other value.
+    val provider = env.stateStore
+    val extra =
+      if (provider == "rocksdb") Map(
         "spark.sql.streaming.stateStore.providerClass" ->
           ("org.apache.spark.sql.execution.streaming.state." +
             "RocksDBStateStoreProvider"))
-      case "hdfs" => Map.empty[String, String]
-      case other => sys.error(
-        s"SPARK_GRAFT_STATE_STORE=$other is not a provider; use hdfs|rocksdb")
-    }
-    val spark = graft.Session.build(sfDir, cpus, extra)
+      else Map.empty[String, String]
+    val spark = graft.Session.build(sfDir, env.cpus, extra)
     println(s"[streambench] state store provider: $provider")
     def timed[A](what: String)(body: => A): A = {
       val t0 = System.nanoTime()
@@ -366,16 +360,17 @@ object StreamRunner {
         .start()
       q.awaitTermination()
     }
+    def events() = eventsStream(spark, sfDir, env.streamMaxFiles)
     timed("tumbling (1h windows, 10m watermark)") {
-      drainNoop(tumblingAgg(eventsStream(spark, sfDir)), "complete")
+      drainNoop(tumblingAgg(events()), "complete")
     }
     timed("session (per-user 10m gap, 10m watermark)") {
-      drainNoop(sessionAgg(eventsStream(spark, sfDir)), "complete")
+      drainNoop(sessionAgg(events()), "complete")
     }
     // small-dir sanity: row counts via the memory sink (the demo shape)
     if (!new java.io.File(s"$sfDir/events.parquet").isDirectory) {
-      val tumbling = runToMemory(spark, tumblingAgg(eventsStream(spark, sfDir)), "t")
-      val sessions = runToMemory(spark, sessionAgg(eventsStream(spark, sfDir)), "s")
+      val tumbling = runToMemory(spark, tumblingAgg(events()), "t")
+      val sessions = runToMemory(spark, sessionAgg(events()), "s")
       println(s"tumbling windows: ${tumbling.count()}, sessions: ${sessions.count()}")
     }
     spark.stop()

@@ -3,7 +3,8 @@ package graft
 /** Bench's artifact emitters and measurement loop (VERDICT r4 item 3): a
   * bench run that dies must leave a named, JSON-safe exception head in
   * bench_full.json, even when best-of-2 absorbs the failure, and both
-  * stdout JSON lines must fit a 2000-char stdout tail window.
+  * stdout JSON lines must fit a 2000-char stdout tail window. The loop's
+  * runs go through the shared guard, [[Session.guarded]].
   */
 class BenchJsonSpec extends SparkSpec {
 
@@ -13,21 +14,21 @@ class BenchJsonSpec extends SparkSpec {
     val root = new IllegalStateException(
       "Task 3 in stage 7 failed\n  long stack line two\n  line three")
     val e = new RuntimeException("Job aborted", root)
-    val head = Bench.errorHead(e)
+    val head = Session.errorHead(e)
     assert(head.startsWith("RuntimeException <- IllegalStateException: "))
     assert(head.contains("Task 3 in stage 7 failed"))
     assert(!head.contains("line two"), s"must keep only the first line: $head")
     // uncaused exceptions keep a single class name
-    assert(Bench.errorHead(new RuntimeException("plain"))
+    assert(Session.errorHead(new RuntimeException("plain"))
       == "RuntimeException: plain")
     // null messages must not NPE
-    assert(Bench.errorHead(new RuntimeException(null: String))
+    assert(Session.errorHead(new RuntimeException(null: String))
       == "RuntimeException: ")
   }
 
   test("jsonString escapes quotes, backslashes, and control characters") {
     val hostile = "he said \"boom\\crash\"\nnext\tline"
-    val out = Bench.jsonString(hostile)
+    val out = Session.jsonString(hostile)
     assert(out.head == '"' && out.last == '"')
     val body = out.substring(1, out.length - 1)
     // no raw quote, backslash-escaping intact, no control chars survive
@@ -35,13 +36,13 @@ class BenchJsonSpec extends SparkSpec {
     assert(!body.exists(_ < ' '))
     // and the composed failures entry still parses as a flat JSON object
     // shape (balanced quotes — a proxy for validity without a parser dep)
-    val entry = s"""{"q":${Bench.jsonString("q_x")},"error":$out}"""
+    val entry = s"""{"q":${Session.jsonString("q_x")},"error":$out}"""
     assert(entry.count(_ == '"') % 2 == 0)
   }
 
   test("a failure's head is bounded even for enormous messages") {
     val huge = new RuntimeException("x" * 10000)
-    assert(Bench.errorHead(huge).length < 300)
+    assert(Session.errorHead(huge).length < 300)
   }
 
   test("compact stdout line is short, parseable-shaped, and fits the tail window with the detail line") {
@@ -97,10 +98,10 @@ class BenchJsonSpec extends SparkSpec {
       assert(detail.contains(k), s"missing $k")
   }
 
-  private val ok: Bench.Query = (s, _) => s.range(10).toDF()
+  private val ok: Session.Query = (s, _) => s.range(10).toDF()
 
   test("a query that throws NonFatal is recorded as failed and the loop goes on") {
-    val bad: Bench.Query = (_, _) => throw new IllegalStateException("boom")
+    val bad: Session.Query = (_, _) => throw new IllegalStateException("boom")
     val (cells, failures) =
       Bench.measure(spark, sfDir, Seq("q_bad" -> bad, "q_ok" -> ok))
     assert(cells.map(_._1) == Seq("q_bad", "q_ok"))
@@ -120,7 +121,7 @@ class BenchJsonSpec extends SparkSpec {
   }
 
   test("a fatal error in a query propagates out of the measurement loop") {
-    val fatal: Bench.Query = (_, _) => throw new LinkageError("fatal")
+    val fatal: Session.Query = (_, _) => throw new LinkageError("fatal")
     intercept[LinkageError] {
       Bench.measure(spark, sfDir, Seq("q_fatal" -> fatal, "q_ok" -> ok))
     }

@@ -26,7 +26,7 @@ object BuiltQueries {
   }
 
   private lazy val spark = {
-    graft.sources.Tables.warm(SparkSpec.session, SparkSpec.sfDir)
+    Session.warmTables(SparkSpec.session, SparkSpec.sfDir)
     SparkSpec.session
   }
   private val records = scala.collection.mutable.Map.empty[String, Record]

@@ -190,7 +190,7 @@ class GeoJsonReaderSpec extends SparkSpec {
     try {
       val url = s"http://127.0.0.1:${server.getAddress.getPort}/map"
       intercept[JsonProcessingException](
-        new GeoJsonReader(url, maxAttempts = 5, backoffMs = 1L).next())
+        new GeoJsonReader(url).next())
       assert(hits.get() == 1)
     } finally server.stop(0)
   }

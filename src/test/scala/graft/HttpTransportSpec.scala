@@ -74,7 +74,6 @@ class HttpTransportSpec extends SparkSpec {
       else respond(ex, 200, doc.getBytes(StandardCharsets.UTF_8))
     }) { base =>
       val rows = spark.read.format("graft.sources.GeoJsonSource")
-        .option("fetch.backoffMs", "1")
         .option("path", s"$base/map")
         .load()
         .select(col("id")).collect().map(_.getString(0)).sorted
@@ -108,16 +107,14 @@ class HttpTransportSpec extends SparkSpec {
     }) { base =>
       intercept[org.apache.spark.SparkException] {
         spark.read.format("graft.sources.GeoJsonSource")
-          .option("fetch.maxAttempts", "5")
-          .option("fetch.backoffMs", "1")
           .option("path", s"$base/gone")
           .load().count()
       }
-      // permanent: every in-place attempt would re-fetch the same
-      // rejection, so exactly one request per Spark task attempt
-      assert(hits.get() <= spark.sparkContext.getConf
-        .getInt("spark.task.maxFailures", 4))
-      assert(hits.get() >= 1)
+      // permanent: an in-place retry would re-fetch the same rejection
+      // Fetch.MaxAttempts times. local[n] gives the one task one attempt,
+      // so a 404 that is not retried is exactly one request.
+      assert(graft.sources.Fetch.MaxAttempts > 1)
+      assert(hits.get() == 1)
     }
   }
 

@@ -9,7 +9,9 @@ import scala.jdk.CollectionConverters._
   * would bring back the unmeasured checkpoint plus census pattern. Every
   * listener is [[Trace]]'s, attached only by the callers that read it; a
   * listener registered elsewhere would count jobs a second way, or run
-  * in sessions that no one traces.
+  * in sessions that no one traces. The process environment is parsed once,
+  * by [[Session.env]]; a read anywhere else would be one more unchecked
+  * copy of the same variable.
   */
 class SourceLintSpec extends org.scalatest.funsuite.AnyFunSuite {
 
@@ -34,6 +36,11 @@ class SourceLintSpec extends org.scalatest.funsuite.AnyFunSuite {
 
   test("listeners are registered in src/main only inside graft.Trace") {
     val hits = outside("Trace.scala", "addSparkListener", "listenerManager.register")
+    assert(hits.isEmpty, hits.mkString("\n"))
+  }
+
+  test("the process environment is read in src/main only by graft.Session") {
+    val hits = outside("Session.scala", "sys.env", "System.getenv")
     assert(hits.isEmpty, hits.mkString("\n"))
   }
 }

@@ -122,8 +122,8 @@ class SourceSinkSpec extends SparkSpec {
     val dir = Files.createTempDirectory("graft-warm").toString
     Tables.region(spark, sfDir).write.parquet(s"$dir/region.parquet")
     Tables.nation(spark, sfDir).write.parquet(s"$dir/nation.parquet")
-    assert(Tables.warm(spark, dir) == Seq("region", "nation"))
-    assert(Tables.warm(spark, sfDir) == Tables.names)
+    assert(Session.warmTables(spark, dir) == Seq("region", "nation"))
+    assert(Session.warmTables(spark, sfDir) == Tables.names)
   }
 
   test("normalizeTs recovers NTZ micros independent of session timezone") {
@@ -347,24 +347,24 @@ class SourceSinkSpec extends SparkSpec {
     assert(exhausted.getMessage == "still down 3" && calls == 3)
   }
 
-  test("fetch retry options plumb through the DSv2 scan") {
+  test("the DSv2 scan fetches with Fetch's retry policy") {
     val path = writeFixture("/tmp/graft-geojson-retry")
     val n = spark.read.format("graft.sources.GeoJsonSource")
-      .option("fetch.maxAttempts", "5")
-      .option("fetch.backoffMs", "1")
       .option("path", path)
       .load()
       .count()
     assert(n == 3)
-    // a permanently-missing fetch unit aborts the read (after retries) —
-    // never a silently-empty partition
+    // a permanently-missing fetch unit aborts the read after
+    // Fetch.MaxAttempts attempts and their linear backoff — never a
+    // silently-empty partition
+    val t0 = System.nanoTime()
     intercept[org.apache.spark.SparkException] {
       spark.read.format("graft.sources.GeoJsonSource")
-        .option("fetch.maxAttempts", "2")
-        .option("fetch.backoffMs", "1")
         .option("path", "/tmp/graft-geojson-retry/absent.json")
         .load()
         .count()
     }
+    val backoffMs = (1 until graft.sources.Fetch.MaxAttempts).map(_ * graft.sources.Fetch.BackoffMs).sum
+    assert((System.nanoTime() - t0) / 1000000L >= backoffMs)
   }
 }

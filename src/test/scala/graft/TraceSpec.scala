@@ -73,22 +73,38 @@ class TraceSpec extends SparkSpec {
     assert(differ.isEmpty, s"traced != counted: ${differ.mkString(", ")}")
   }
 
-  test("Profile.main prints job, plan and materialize lines for one query") {
-    // its own JVM: Profile stops the session it builds
+  /** `graft.Profile` in its own JVM (it stops the session it builds),
+    * with `SPARK_GRAFT_ONLY=only`: its exit code and output lines.
+    */
+  private def profile(only: String): (Int, Seq[String]) = {
     val jvm = java.lang.management.ManagementFactory.getRuntimeMXBean
       .getInputArguments.asScala.filter(_.startsWith("--add-opens"))
     val log = java.nio.file.Files.createTempFile("graft-profile", ".log")
     val pb = new ProcessBuilder((Seq(s"${sys.props("java.home")}/bin/java") ++ jvm ++
       Seq("-Xmx1g", "-cp", sys.props("java.class.path"), "graft.Profile")).asJava)
       .redirectErrorStream(true).redirectOutput(log.toFile)
-    pb.environment().putAll(Map("SPARK_GRAFT_ONLY" -> "flagship",
+    pb.environment().putAll(Map("SPARK_GRAFT_ONLY" -> only,
       "SPARK_GRAFT_SF_DIR" -> sfDir, "SPARK_GRAFT_CPUS" -> "2").asJava)
     val p = pb.start()
     val exited = p.waitFor(300, TimeUnit.SECONDS)
     if (!exited) p.destroyForcibly()
-    val printed = java.nio.file.Files.readAllLines(log).asScala.filter(_.startsWith("["))
-    assert(exited && p.exitValue == 0, printed.mkString("\n"))
+    val lines = java.nio.file.Files.readAllLines(log).asScala.toSeq
+    assert(exited, lines.mkString("\n"))
+    (p.exitValue, lines)
+  }
+
+  test("Profile.main prints job, plan and materialize lines for one query") {
+    val (exit, lines) = profile("flagship")
+    val printed = lines.filter(_.startsWith("["))
+    assert(exit == 0, printed.mkString("\n"))
     for (tag <- Seq("[job]", "[plan]", "[materialize] CalTopo.flagship folders stored"))
       assert(printed.exists(_.startsWith(tag)), s"no $tag line in:\n${printed.mkString("\n")}")
+  }
+
+  test("Profile.main rejects an unknown SPARK_GRAFT_ONLY name before it builds a session") {
+    val (exit, lines) = profile("flagship,q_nope")
+    assert(exit != 0 && lines.exists(_.contains("q_nope")), lines.mkString("\n"))
+    // a session start logs Spark's version line; a rejected env logs none
+    assert(!lines.exists(_.contains("Running Spark version")), lines.mkString("\n"))
   }
 }
