@@ -19,9 +19,6 @@ object Catalog {
   def schemaDdl(spark: SparkSession, dir: String, table: String): String =
     Tables.load(spark, dir, table).schema.toDDL
 
-  /** The strict feature-record schema (the engine's "Output" type). */
-  def featureSchemaJson: String = CalTopoFeatures.featureSchema.json
-
   /** All schemas, keyed by table — the `schema()` capability catalog. */
   def describe(spark: SparkSession, dir: String): Map[String, String] =
     Tables.names.map(t => t -> schemaDdl(spark, dir, t)).toMap +

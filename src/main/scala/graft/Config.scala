@@ -28,12 +28,6 @@ final case class Config(
       */
     since: Long = -500L) {
 
-  /** The reference's map-state URL for this config (`task.ts:68`) — the
-    * fetch unit a production read would hand to GeoJsonSource.
-    */
-  def stateUrl: String =
-    s"https://caltopo.com/api/v1/map/$shareId/since/$since"
-
   /** Read options for [[graft.sources.GeoJsonSource]] rendered from this
     * config: the incremental cursor plus the fetch-side `verbose: DEBUG`
     * pass-through (`task.ts:87` — the reference hands `env.DEBUG` to its

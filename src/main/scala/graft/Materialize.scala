@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, GraftSqlBridge, Row}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.UnsafeRow
-import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan, Project}
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan, Project, Repartition}
 import org.apache.spark.sql.execution.{LogicalRDD, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.Exchange
@@ -27,9 +27,13 @@ import org.apache.spark.sql.types._
   * a second execution: a shuffle-map job plus a result job, where
   * [[apply]] is one job.
   *
-  * [[bounded]] is [[apply]] for a frame that is small by construction:
-  * the same one job also sends the frame's rows to the driver, within a
-  * cap enforced per partition, so the caller can turn them into a literal.
+  * [[bounded]] is [[apply]] for a frame that may be small: the same one
+  * job also sends the frame's rows to the driver, within a cap enforced
+  * per partition, so the caller can turn them into a literal or a
+  * driver-side computation. It is the one way rows reach the driver in
+  * the main sources (SourceLintSpec): CalTopo's folder lookup turns the
+  * folder dimension into a map literal, and `Dedup.clusters` runs
+  * union-find over the pairs.
   *
   * [[deferred]] is the other form, for a frame whose count nobody reads:
   * the checkpoint is only marked, and its first consumer stores it. Under
@@ -192,7 +196,8 @@ object Materialize {
   }
 
   /** The exact row count of `df` when the driver already has it: a local
-    * relation, or a frame [[apply]] measured, under any projection.
+    * relation, or a frame [[apply]] measured, under any projection or
+    * repartition.
     */
   def knownRows(df: DataFrame): Option[Long] = {
     def of(p: LogicalPlan): Option[Long] = p match {
@@ -200,6 +205,7 @@ object Materialize {
       case r: LogicalRDD if Option(r.rdd.name).exists(_.startsWith(Measured)) =>
         r.computeStats().rowCount.map(_.toLong)
       case Project(_, child) => of(child)
+      case Repartition(_, _, child) => of(child)
       case _ => None
     }
     of(df.queryExecution.analyzed)

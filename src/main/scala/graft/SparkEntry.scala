@@ -20,8 +20,8 @@ object SparkEntry {
     Registry.all.map(q => q.name -> q.build).toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omitted only for non-SQL-expressible ops.
+    * the same parquet tables.
     */
   def oracleSql: Map[String, String] =
-    Registry.all.flatMap(q => q.oracle.map(q.name -> _)).toMap
+    Registry.all.map(q => q.name -> q.oracle).toMap
 }

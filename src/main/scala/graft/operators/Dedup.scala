@@ -34,6 +34,23 @@ object Dedup {
   private def shr(e: Column, n: Column): Column =
     call_function("shiftright", e, n)
 
+  /** MinHash permutations per signature. */
+  private val NumPerm = 64
+  /** Signature slots per LSH band: 16 bands of 4. */
+  private val BandRows = 4
+  /** Bound on [[clusters]]' pointer-jumping rounds: 64 rounds cover chains
+    * 2^64 deep, so it is a pathology guard, never a truncation.
+    */
+  private val MaxRounds = 64
+  /** [[survivorsExactFirst]]' keep-side broadcast cap: 2^22 bare long ids,
+    * about 32 MB.
+    */
+  private val KeepBroadcastRows = 1L << 22
+  /** [[clustersExactFirst]]' expansion-side broadcast cap: 2^17 (text,
+    * cluster) rows, 100–300 MB at typical document sizes.
+    */
+  private val ExpandBroadcastRows = 1L << 17
+
   /** Max-tracking accumulator (LongAccumulator only sums). */
   final class MaxAccumulator
       extends org.apache.spark.util.AccumulatorV2[Long, Long] {
@@ -389,9 +406,9 @@ object Dedup {
     * the two largest generated classes of a dedup query. Docs with no
     * grams (null or whitespace-only text) have no row.
     */
-  def minhashSignatures(docs: DataFrame, numPerm: Int = 64): DataFrame =
+  def minhashSignatures(docs: DataFrame): DataFrame =
     signatureRows(docs, graft.functions.TextExprs.minhash(
-      graft.functions.TextExprs.gramHashes(col("text")), numPerm), "mh")
+      graft.functions.TextExprs.gramHashes(col("text")), NumPerm), "mh")
 
   /** [[minhashSignatures]] from a caller-supplied gram-array frame (the
     * [[gramHashSets]] shape): the same kernel over `g`, so the signatures
@@ -399,18 +416,18 @@ object Dedup {
     * truth frame (r14 — see [[exactJaccardWindowPairs]]). Rows with an
     * empty `g` have no signature row.
     */
-  def minhashSignaturesArr(arr: DataFrame, numPerm: Int = 64): DataFrame =
-    signatureRows(arr, graft.functions.TextExprs.minhash(col("g"), numPerm), "mh")
+  def minhashSignaturesArr(arr: DataFrame): DataFrame =
+    signatureRows(arr, graft.functions.TextExprs.minhash(col("g"), NumPerm), "mh")
 
-  /** LSH band keys: split the signature into bands of `rows` values and hash
-    * each band; a shared (band index, band hash) pair => candidate pair.
-    * The band hash feeds the `rows` longs to xxhash64 directly — no
+  /** LSH band keys: split the signature into bands of `BandRows` values
+    * and hash each band; a shared (band index, band hash) pair => candidate
+    * pair. The band hash feeds the band's longs to xxhash64 directly — no
     * string materialization per band.
     */
-  def bandKeys(mh: Column, rows: Int = 4): Column =
-    transform(sequence(lit(0), (size(mh) / lit(rows)).cast("int") - 1),
+  def bandKeys(mh: Column): Column =
+    transform(sequence(lit(0), (size(mh) / lit(BandRows)).cast("int") - 1),
       b => struct(b.as("band"),
-        xxhash64((1 to rows).map(i => element_at(mh, b * rows + i)): _*).as("bh")))
+        xxhash64((1 to BandRows).map(i => element_at(mh, b * BandRows + i)): _*).as("bh")))
 
   /** Candidate near-dup pairs (id_a < id_b) whose estimated Jaccard (equal
     * minhash fraction) is >= threshold. `docs` must have (id, text).
@@ -430,11 +447,10 @@ object Dedup {
     * named accumulators still surface in the Spark UI / listeners).
     */
   def minhashPairs(docs: DataFrame, threshold: Double = 0.5,
-      numPerm: Int = 64, bandRows: Int = 4, maxBucket: Int = 256,
-      stats: Option[DropStats] = None): DataFrame =
+      maxBucket: Int = 256, stats: Option[DropStats] = None): DataFrame =
     bucketPairs(
-      minhashSignatures(docs, numPerm)
-        .select(col("id"), col("mh"), explode(bandKeys(col("mh"), bandRows)).as("bk")),
+      minhashSignatures(docs)
+        .select(col("id"), col("mh"), explode(bandKeys(col("mh"))).as("bk")),
       "bk", "mh", stats.getOrElse(dropStats(docs.sparkSession, "minhash")), maxBucket,
       // signature agreement via the native EqualSlots kernel — the HOF
       // zip_with/aggregate fold paid ~64 interpreted lambda dispatches
@@ -442,7 +458,7 @@ object Dedup {
       // once duplication inflates pair counts (same count, same cast,
       // bitwise-equal est_jaccard)
       "est_jaccard", (a, b) =>
-        graft.functions.VectorExprs.equalSlots(a, b).cast("double") / numPerm,
+        graft.functions.VectorExprs.equalSlots(a, b).cast("double") / NumPerm,
       _ >= threshold)
 
   /** In-bucket candidate pairs: group `keyed` (id, `sig`, `key`) by `key`,
@@ -486,10 +502,11 @@ object Dedup {
 
   /** Min-id components of collected (id_a, id_b) long pairs by driver-side
     * union-find (path-halving, then a min-id relabel) — [[clusters]]'
-    * driver route.
+    * driver route. The labels are one partition, so a sort or an
+    * aggregate over them plans no exchange.
     */
   private def driverComponents(spark: org.apache.spark.sql.SparkSession,
-      rows: Array[org.apache.spark.sql.Row]): DataFrame = {
+      rows: Seq[org.apache.spark.sql.Row]): DataFrame = {
     import spark.implicits._
     val parent = scala.collection.mutable.LongMap.empty[Long]
     def find(x: Long): Long = {
@@ -511,7 +528,7 @@ object Dedup {
       val r = find(id)
       minOf(r) = math.min(minOf.getOrElse(r, id), id)
     }
-    parent.keys.toSeq.map(id => (id, minOf(find(id)))).toDF("id", "cluster")
+    parent.keys.toSeq.map(id => (id, minOf(find(id)))).toDF("id", "cluster").coalesce(1)
   }
 
   /** Connected components over a near-dup pair list (id_a < id_b): each
@@ -519,65 +536,49 @@ object Dedup {
     * doc per near-dup CLUSTER" step after pair generation. Iterative
     * min-label propagation: O(cluster diameter) joins, each a shuffled
     * equi-join on id; near-dup clusters are shallow (dups of dups of one
-    * original), so few iterations in practice; maxIter bounds pathology.
+    * original), so few iterations in practice; `MaxRounds` bounds
+    * pathology.
     *
     * ADAPTIVE ROUTING (r7, same census discipline as [[Ntile.exact]]):
     * the distributed loop costs ~0.6 s/round in driver-synced job
     * overhead REGARDLESS of graph size — profiled 1.7 s on a 256-edge
     * graph, pure fixed cost across the 4 dedup-family bench queries.
-    * The pair frame is materialized before the loop anyway, and the same
-    * job counts it ([[graft.Materialize]]): at or under `driverCap` pairs
-    * (default 2^20 — a ≤16 MB collect, the same order Spark itself moves
-    * for a broadcast join) and long-typed ids, the components come from
-    * driver-side union-find (path-halving + min-id relabel, microseconds
-    * at that size) straight over the undirected pairs — the bidirectional
-    * explode, distinct and dst repartition are built only on the
-    * distributed route (r14); larger graphs — the 100 TB case — take the
-    * unchanged pointer-jumping loop. Identical labels by construction
-    * (both compute min-id-per-component; DedupSpec pins the two routes
-    * equal on the same graph). `driverCap = 0` forces the distributed
-    * loop.
+    * The pair frame is stored before the loop anyway, in one
+    * [[graft.Materialize.bounded]] job that also counts it and hands the
+    * driver its pairs when at most `driverCap` exist (default 2^20 — at
+    * most 2^20 + P long pairs, about 16 MB, the same order Spark itself
+    * moves for a broadcast join). With long-typed ids those pairs go
+    * straight to driver-side union-find (path-halving + min-id relabel,
+    * microseconds at that size); the bidirectional explode, distinct and
+    * dst repartition are built only on the distributed route (r14).
+    * Larger graphs — the 100 TB case — take the unchanged pointer-jumping
+    * loop. Identical labels by construction (both compute
+    * min-id-per-component; DedupSpec pins the two routes equal on the same
+    * graph). `driverCap = 0` forces the distributed loop.
     *
-    * A `pairs` frame the caller already materialized (or a local
-    * relation) is not stored again: its measured count routes the call
-    * with no job of its own.
+    * `driverCap` bounds RAW PAIRS as passed: the contract allows duplicate
+    * pairs, so a duplicate-heavy input can exceed the cap and take the
+    * distributed loop even when its DISTINCT graph would fit (perf-only,
+    * ADVICE r14).
+    *
+    * A `pairs` frame whose count the driver already has over the cap (a
+    * frame the caller materialized, or a local relation) is not stored
+    * again: its count routes the call to the loop with no job of its own.
     */
-  def clusters(pairs: DataFrame, maxIter: Int = 64,
-      driverCap: Long = 1L << 20): DataFrame = {
-    // The PAIR frame is what's materialized once (r14): the pair-
-    // generation subplan (minhashPairs' signature/bucket pipeline, or a
-    // truth construct) is the expensive input, and the route needs only
-    // the pair count. Undirected pairs are ALL the driver union-find needs
-    // (duplicates are idempotent, both endpoints register), so the
-    // bidirectional explode, the distinct (one shuffle) and the dst
-    // repartition (another) are built — and paid — ONLY on the
-    // distributed route that requires them. driverCap bounds RAW PAIRS as
-    // passed — the operator contract allows duplicate pairs, so the count
-    // includes them (a duplicate-heavy input can exceed the cap and take
-    // the distributed loop even when its DISTINCT graph would fit:
-    // perf-only — ADVICE r14). For deduplicated inputs, pairs ≤ edges ≤
-    // 2·pairs, so the same 2^20 cap keeps the collect ≤ 16 MB of bare
-    // long pairs.
-    val pairsM = Materialize(pairs.select(col("id_a"), col("id_b")),
-      "Dedup.clusters pairs")
-    val pairsCk = pairsM.df
-
+  def clusters(pairs: DataFrame, driverCap: Long = 1L << 20): DataFrame = {
+    val ab = pairs.select(col("id_a"), col("id_b"))
     val longIds = Seq("id_a", "id_b").forall(c =>
-      pairsCk.schema(c).dataType == org.apache.spark.sql.types.LongType)
-    if (driverCap > 0 && longIds && pairsM.rows <= driverCap) {
-      // The collect enforces the cap itself (ADVICE r15): at most
-      // driverCap + 1 rows reach the driver, whatever the count said.
-      // coalesce(1) keeps the bounded take ONE job: a CollectLimit over
-      // several partitions takes incrementally, one job per scale-up
-      // step. The one task reads the materialized pair frame, ≤ 16 MB.
-      val rows = pairsCk.coalesce(1)
-        .limit(math.min(driverCap, Int.MaxValue - 1L).toInt + 1).collect()
-      if (rows.length <= driverCap) {
-        pairsM.route("cc", "driver")
-        return driverComponents(pairs.sparkSession, rows)
-      }
+      ab.schema(c).dataType == org.apache.spark.sql.types.LongType)
+    val pairsM =
+      if (driverCap > 0 && longIds && !Materialize.knownRows(ab).exists(_ > driverCap))
+        Materialize.bounded(ab, "Dedup.clusters pairs", math.min(driverCap, Int.MaxValue).toInt)
+      else Materialize(ab, "Dedup.clusters pairs")
+    if (pairsM.local.nonEmpty) {
+      pairsM.route("cc", "driver")
+      return driverComponents(pairs.sparkSession, pairsM.local.get)
     }
     pairsM.route("cc", "distributed")
+    val pairsCk = pairsM.df
 
     // ---- distributed route (the 100 TB path) -------------------------
     // Both edge directions explode from the materialized pair frame (one
@@ -589,7 +590,7 @@ object Dedup {
     // Pointer-jumping propagation: each round takes (a) the min over
     // 1-hop neighbors AND (b) the label OF the current label (path
     // compression) — chains collapse in O(log diameter) rounds, so
-    // `maxIter` rounds cover chains up to ~2^maxIter deep.
+    // `MaxRounds` rounds cover chains up to ~2^MaxRounds deep.
     // Materializing each round truncates the lineage (without it round
     // N's plan embeds all previous rounds and both Catalyst analysis and
     // re-execution blow up — measured). Round-cost design
@@ -621,7 +622,7 @@ object Dedup {
     var iter = 0
     var done = false
     // run TO CONVERGENCE — the per-row `changed` flag is the exit, and
-    // maxIter is a loud pathology bound, never a silent truncation: at 8
+    // MaxRounds is a loud pathology bound, never a silent truncation: at 8
     // rounds a >2^8-deep chain would have returned multi-label components
     // and quietly broken the "identical labels by construction" contract
     // with the driver route. 64 rounds cover 2^64-deep chains (more nodes
@@ -629,8 +630,8 @@ object Dedup {
     // converged graphs still exit at their own round count, so the
     // common-case cost is unchanged.
     while (!done) {
-      require(iter < maxIter,
-        s"connected components did not converge in $maxIter rounds")
+      require(iter < MaxRounds,
+        s"connected components did not converge in $MaxRounds rounds")
       val nbrMin = edgesCk
         .join(labels.select(col("id").as("dst_id"), col("cluster").as("dst_cluster")),
           col("dst") === col("dst_id"))
@@ -698,8 +699,7 @@ object Dedup {
     * DROPPED pairs — so exact-first recall is strictly ≥ plain, never
     * below.
     */
-  def survivorsExactFirst(docs: DataFrame, threshold: Double = 0.5,
-      broadcastCap: Long = 1L << 22): DataFrame = {
+  def survivorsExactFirst(docs: DataFrame, threshold: Double = 0.5): DataFrame = {
     // shingle-less texts can never pair in plain survivors — they ALL
     // survive there, so they must not be collapsed to a representative
     val degenerate = trim(coalesce(col("text"), lit(""))) === ""
@@ -719,7 +719,7 @@ object Dedup {
     // 10 MB auto-broadcast threshold. 2^22 ids ≈ 32 MB broadcast.
     val keepIds = Materialize(survivors(reps, threshold).select(col("id")),
       "Dedup.survivorsExactFirst keep")
-    val keep = keepIds.broadcastIf("keep", keepIds.rows <= broadcastCap)(keepIds.df)
+    val keep = keepIds.broadcastIf("keep", keepIds.rows <= KeepBroadcastRows)(keepIds.df)
     docs.filter(!degenerate).join(keep, Seq("id"), "left_semi")
       .unionByName(docs.filter(degenerate))
   }
@@ -764,8 +764,7 @@ object Dedup {
     * (same trade as the tfidf df-branch — the collapse is d× cheaper than
     * the sort it replaces).
     */
-  def clustersExactFirst(docs: DataFrame, threshold: Double = 0.5,
-      broadcastCap: Long = 1L << 17): DataFrame = {
+  def clustersExactFirst(docs: DataFrame, threshold: Double = 0.5): DataFrame = {
     val nonDegenerate = docs.select(col("id"), col("text"))
       .filter(trim(coalesce(col("text"), lit(""))) =!= "")
     // Materialized: [[clusters]] stores its pair frame in its own job, so
@@ -798,7 +797,7 @@ object Dedup {
     // a comfortable broadcast; above it (a mostly-unique corpus where
     // near-dup clusters rival the corpus) the sort-merge join is the
     // honest plan and stays.
-    val expand = labeled.broadcastIf("expand", labeled.rows <= broadcastCap)(labeled.df)
+    val expand = labeled.broadcastIf("expand", labeled.rows <= ExpandBroadcastRows)(labeled.df)
     nonDegenerate.join(expand, Seq("text"))
       .select(col("id"), col("cluster"))
   }

@@ -2,9 +2,9 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** One declared engine capability: a named DataFrame builder plus (where
-  * SQL-expressible) the equivalent DuckDB oracle SQL over the same parquet
-  * tables. Determinism contract (SURVEY.md §5.2): every query has an explicit
+/** One declared engine capability: a named DataFrame builder plus the
+  * equivalent DuckDB oracle SQL over the same parquet tables. Determinism
+  * contract (SURVEY.md §5.2): every query has an explicit
   * total ORDER BY in both forms, never outputs raw timestamps or
   * engine-ordered float aggregates (money math goes through exact DECIMAL),
   * and aliases every computed column identically in both forms (the driver's
@@ -17,13 +17,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 final case class Q(
     name: String,
     build: (SparkSession, String) => DataFrame,
-    oracle: Option[String])
+    oracle: String)
 
 object Q {
   def apply(name: String, oracle: String)(
       build: (SparkSession, String) => DataFrame): Q =
-    Q(name, build, Some(oracle))
-
-  def noOracle(name: String)(build: (SparkSession, String) => DataFrame): Q =
-    Q(name, build, None)
+    Q(name, build, oracle)
 }

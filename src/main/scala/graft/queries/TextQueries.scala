@@ -417,8 +417,8 @@ ORDER BY doc_id, score DESC, word""") { (s, d) =>
       val docs = Tables.documents(s, d)
         .select(col("doc_id").as("id"), col("text"))
       // ONE truth materialization feeds the CC operator AND the flag; its
-      // measured count routes the CC call (clusters stores nothing again)
-      // and bounds the flag's tids broadcast. The flag's driver-routed
+      // measured count routes the CC call and bounds the flag's tids
+      // broadcast. The flag's driver-routed
       // minhash assignment is a LocalRelation, so it needs no count job.
       val truth = Materialize(windowTruth(s, d), "q_dedup_clusters truth").df
       val declared = Dedup.clusters(truth)

@@ -44,8 +44,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * features whose `properties.updated >= T` (features without a numeric
   * `updated` stamp cannot prove recency and are excluded, matching a
   * post-hoc `updated >= T` filter's NULL semantics — SourceSinkSpec pins
-  * the equivalence). [[graft.Config.stateUrl]] renders the reference URL
-  * from the same cursor.
+  * the equivalence).
   *
   * Usage: spark.read.format("graft.sources.GeoJsonSource").load(path)
   *   [.option("since", t)].

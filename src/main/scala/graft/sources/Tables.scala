@@ -25,17 +25,15 @@ object Tables {
     * prunes columns and pushes filters per consumer exactly as before
     * (PlanSpec's ReadSchema/PushedFilters pins are unchanged).
     *
-    * CAVEAT: the file listing snapshots at first load — a caller that
-    * appends files to a cached path in the same JVM must [[invalidate]]
-    * it (static testdata and per-round scale dirs never do; the slice
-    * probes write to their own dirs with direct `spark.read`).
+    * CAVEAT: the file listing snapshots at first load, so files appended
+    * to a cached path in the same JVM are not seen (static testdata and
+    * per-round scale dirs never do that; the slice probes write to their
+    * own dirs with direct `spark.read`).
     * Session-keyed so a restarted session re-lists; entries for stopped
     * sessions are dropped on the next cache touch.
     */
   private val cache =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-
-  def invalidate(): Unit = { cache.clear(); sizeCache.clear() }
 
   /** The table `name` of `dir` as every consumer sees it: `events` goes
     * through [[normalizeTs]], so the query, SQL and introspection

@@ -271,11 +271,32 @@ class DedupSpec extends SparkSpec {
     assert(Dedup.clusterAgreementFlag(emptyTruth, good, 0.7, "ok"))
   }
 
+  test("clusters: an unmeasured pair frame under the cap is stored, counted and collected in one job") {
+    // a 41-node chain over 4 partitions whose count no one has measured
+    val chain = spark.range(0L, 40L, 1L, 4)
+      .select(col("id").as("id_a"), (col("id") + 1L).as("id_b"))
+    assert(Materialize.knownRows(chain).isEmpty)
+    val (labels, run) = Trace(spark)(_.phase(Dedup.clusters(chain)))
+    assert(run.jobs.size == 1, s"the driver route ran ${run.jobs.size} jobs (want one)")
+    val call = run.calls.find(_.site == "Dedup.clusters pairs")
+    assert(call.exists(c => c.how == "stored" && c.rows == 40L && c.collected == 40L &&
+      c.route == "cc=driver"), s"pair frame call: $call")
+    assert(labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ==
+      (0L to 40L).map(_ -> 0L).toMap)
+    // the driver-route labels are one partition: a sort over them plans
+    // no range exchange
+    val sorted = labels.orderBy("id")
+    sorted.collect()
+    assert(Materialize.exchanges(sorted.queryExecution.executedPlan) == 0,
+      sorted.queryExecution.executedPlan.toString)
+  }
+
   test("clusters: a materialized pair frame routes on its measured count, same labels") {
-    // a caller that already materialized its pair frame passes it as is:
-    // clusters() reads the measured count and stores nothing again.
-    // Labels must be identical on BOTH routes, and the driver route's only
-    // job is the bounded collect.
+    // a caller that already materialized its pair frame passes it as is.
+    // Under the cap the one bounded job stores it again and hands its
+    // rows to the driver; over the cap its measured count routes the call
+    // to the distributed loop with no job of its own. Labels must be
+    // identical on BOTH routes.
     import spark.implicits._
     val plain = Seq((1L, 2L), (2L, 3L), (10L, 11L), (3L, 7L)).toDF("id_a", "id_b")
     val pairs = Materialize(plain, "DedupSpec pairs")
@@ -290,10 +311,16 @@ class DedupSpec extends SparkSpec {
     }
     val (_, driver) = Trace(spark)(_.phase(Dedup.clusters(pairs.df)))
     assert(driver.jobs.size == 1, s"driver route ran ${driver.jobs.size} jobs " +
-      "(want the bounded collect only)")
+      "(want the one bounded job)")
     val call = driver.calls.find(_.site == "Dedup.clusters pairs")
-    assert(call.exists(c => c.how == "known" && c.route == "cc=driver"),
+    assert(call.exists(c => c.how == "stored" && c.collected == 4L && c.route == "cc=driver"),
       s"pair frame call: $call")
+    val (_, over) = Trace(spark)(_.phase(Dedup.clusters(pairs.df, driverCap = 3L)))
+    val overCall = over.calls.find(_.site == "Dedup.clusters pairs")
+    assert(overCall.exists(c => c.how == "known" && c.route == "cc=distributed"),
+      s"over-cap pair frame call: $overCall")
+    assert(!over.jobs.exists(_.what.contains("Dedup.clusters pairs")),
+      over.jobs.map(_.what).mkString("\n"))
   }
 
   test("agreement flag: measured truth and LocalRelation gates equal the measured-census form") {

@@ -70,11 +70,12 @@ class MaterializeSpec extends SparkSpec {
     }
   }
 
-  test("an over-cap pair frame reaches the driver as at most driverCap + 1 rows, whatever its stats claim") {
-    // clusters() routes on a materialized frame's measured count without a
-    // job; its driver collect still enforces the cap in code, so a frame
-    // whose statistics lie (10 rows claimed, 3 000 stored) sends at most
-    // driverCap + 1 rows to the driver and takes the distributed loop
+  test("an over-cap pair frame reaches the driver as at most driverCap + P rows, whatever its stats claim") {
+    // clusters() hands a frame whose known count is under the cap to
+    // Materialize.bounded, whose per-partition share enforces the cap in
+    // code, so a frame whose statistics lie (10 rows claimed, 3 000 stored
+    // over 8 partitions) sends at most driverCap + 8 rows to the driver and
+    // takes the distributed loop
     import spark.implicits._
     val ck = (0 until 1000).flatMap { c =>
         val b = c * 10L
@@ -90,11 +91,10 @@ class MaterializeSpec extends SparkSpec {
     val (got, run) = Trace(spark)(_.phase(Dedup.clusters(lying, driverCap = 100L)
       .collect().map(row => row.getLong(0) -> row.getLong(1)).toMap))
     assert(got == expected, "labels under a lying row count")
-    val firstRead = run.jobs.head.recordsRead
-    assert(firstRead > 0 && firstRead <= 101,
-      s"the driver route read $firstRead pair rows past a cap of 100")
-    assert(run.calls.exists(c =>
-      c.site == "Dedup.clusters pairs" && c.route == "cc=distributed"))
+    val call = run.calls.find(_.site == "Dedup.clusters pairs")
+    assert(call.exists(c => c.rows == 3000L && c.route == "cc=distributed"), s"$call")
+    assert(call.exists(c => c.collected >= 0L && c.collected <= 100L + 8L),
+      s"${call.map(_.collected)} pair rows reached the driver past a cap of 100")
   }
 
   test("a bounded call sends at most cap + P rows to the driver, whatever the frame's stats claim") {

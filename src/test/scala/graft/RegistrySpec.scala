@@ -31,8 +31,7 @@ class RegistrySpec extends AnyFunSuite {
     // + co-clustering/two-arm agreement flags of the real minhash
     // compositions). DedupRecallProbe/KnnRecallProbe back every bound;
     // DedupSpec/KnnSpec keep the raw operator pins.
-    assert(all.count(_.oracle.isDefined) == 111,
-      s"oracle-paired count drifted: ${all.count(_.oracle.isDefined)}")
-    assert(all.filter(_.oracle.isEmpty).isEmpty)
+    assert(all.count(_.oracle.nonEmpty) == 111,
+      s"oracle-paired count drifted: ${all.count(_.oracle.nonEmpty)}")
   }
 }

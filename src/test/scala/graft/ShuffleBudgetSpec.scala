@@ -37,13 +37,15 @@ class ShuffleBudgetSpec extends SparkSpec {
     "q_array_funcs" -> 1,
     "q_cube" -> 2, // r15: spread reverted (driver 0.78×), -1 Exchange
     "q_date_funcs" -> 2,
-    // the declared CC labels over the truth edges plus the output sort;
-    // the CC rounds and the agreement flag run while the query is built
-    // (literal-flag re-record 5 -> 1)
-    "q_dedup_clusters" -> 1,
+    // the declared CC labels over the truth edges are one partition, so
+    // the output sort needs no exchange; the CC rounds and the agreement
+    // flag run while the query is built (literal-flag re-record 5 -> 1,
+    // one-partition labels 1 -> 0)
+    "q_dedup_clusters" -> 0,
     // the same declared rows; the exact-first composition the flag
-    // measures runs while the query is built (literal-flag re-record 5 -> 1)
-    "q_dedup_clusters_exact_first" -> 1,
+    // measures runs while the query is built (literal-flag re-record 5 -> 1,
+    // one-partition labels 1 -> 0)
+    "q_dedup_clusters_exact_first" -> 0,
     "q_dedup_embedding" -> 2,
     "q_dedup_exact" -> 2,
     // the oracle-paired form's returned plan reads the stored

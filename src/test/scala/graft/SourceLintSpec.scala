@@ -11,7 +11,9 @@ import scala.jdk.CollectionConverters._
   * listener registered elsewhere would count jobs a second way, or run
   * in sessions that no one traces. The process environment is parsed once,
   * by [[Session.env]]; a read anywhere else would be one more unchecked
-  * copy of the same variable.
+  * copy of the same variable. Rows reach the driver only through
+  * [[Materialize.bounded]], whose per-partition share enforces its cap; a
+  * collect elsewhere would be a second job with a bound of its own.
   */
 class SourceLintSpec extends org.scalatest.funsuite.AnyFunSuite {
 
@@ -41,6 +43,12 @@ class SourceLintSpec extends org.scalatest.funsuite.AnyFunSuite {
 
   test("the process environment is read in src/main only by graft.Session") {
     val hits = outside("Session.scala", "sys.env", "System.getenv")
+    assert(hits.isEmpty, hits.mkString("\n"))
+  }
+
+  test("rows reach the driver in src/main only inside graft.Materialize") {
+    val hits = outside("Materialize.scala",
+      ".collect()", ".collectAsList(", ".toLocalIterator(", ".head()", ".first()")
     assert(hits.isEmpty, hits.mkString("\n"))
   }
 }
