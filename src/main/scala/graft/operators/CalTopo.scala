@@ -24,11 +24,9 @@ import graft.Materialize
   *
   * Divergences from the reference, all documented per SURVEY.md §7.4:
   *  - JS `undefined` vs `null`: parquet can't express absent-vs-null, so
-  *    "copy if present" (`task.ts:116-120`) becomes "copy if non-null" in
-  *    the default arm. The strict-fidelity arm ([[styleCastsStrictJs]],
-  *    selected by `Config.strictJsSemantics`) restores reference-exact
-  *    presence gating + JS `String(null)`/`Number(null)` coercion over
-  *    the raw wire JSON, where key presence is still observable.
+  *    "copy if present" (`task.ts:116-120`) becomes "copy if non-null": a
+  *    present-but-null A9 style value is null, not JS `String(null)` =
+  *    "null" or `Number(null)` = 0 — corrupt style data no consumer wants.
   *  - `metadata.ico`/`metadata.icon` (`task.ts:121`) reads fields the Output
   *    schema never declares — dead code for schema-valid inputs, so the
   *    flagship (which runs on decoded, schema-valid columns) never fires
@@ -80,23 +78,20 @@ object CalTopo {
     when(m("description").isNull || m("description") === "", lit(""))
       .otherwise(m("description").cast("string"))
 
-  /** The five A9 style fields and their output types, in output order. */
-  private val styleTypes = Seq("fill" -> "string", "fill_opacity" -> "double",
-    "stroke" -> "string", "stroke_opacity" -> "double", "stroke_width" -> "double")
-
-  /** A9 — conditional style copies with numeric casts (`task.ts:116-120`),
-    * the default arm: a null field stays null. `(field, value)` pairs.
+  /** A9 — conditional style copies with numeric casts (`task.ts:116-120`):
+    * a null field stays null. `(field, value)` pairs in output order.
     */
   private def styleCasts(m: String => Column): Seq[(String, Column)] =
-    styleTypes.map { case (f, t) => f -> m(f).cast(t) }
+    Seq("fill" -> "string", "fill_opacity" -> "double", "stroke" -> "string",
+      "stroke_opacity" -> "double", "stroke_width" -> "double")
+      .map { case (f, t) => f -> m(f).cast(t) }
 
   /** A11 — constant `archived = true` (`task.ts:128`). */
   private def archived: Column = lit(true)
 
   /** A7/A8/A9/A11 as named `properties` fields, in output order. */
-  private def enrichedFields(m: String => Column,
-      style: Seq[(String, Column)]): Seq[(String, Column)] =
-    Seq("callsign" -> callsign(m), "remarks" -> remarks(m)) ++ style :+
+  private def enrichedFields(m: String => Column): Seq[(String, Column)] =
+    Seq("callsign" -> callsign(m), "remarks" -> remarks(m)) ++ styleCasts(m) :+
       ("archived" -> archived)
 
   private def withFields(df: DataFrame, fields: Seq[(String, Column)]): DataFrame =
@@ -108,7 +103,7 @@ object CalTopo {
     * to `properties`.
     */
   def enrichProperties(df: DataFrame): DataFrame =
-    withFields(df, enrichedFields(nested, styleCasts(nested)))
+    withFields(df, enrichedFields(nested))
 
   /** Generic any-rank coordinate walk (A10's escape hatch, and the
     * fallback arm of [[truncateGeometry]] for geometry types outside the
@@ -237,65 +232,6 @@ object CalTopo {
         .when(element_at(m, "icon").isNull, lit("null"))   // String(null)
         .otherwise(element_at(m, "icon")))                 // String(<string>)
   }
-
-  /** JS `Number()` coercion of a wire string value (the strict-fidelity
-    * arm's numeric cast): `Number(null)` = 0, `Number('')` = 0 (whitespace
-    * -only too — JS trims before parsing), numeric strings parse, anything
-    * else is `NaN`. Exotic literal forms (`'0x10'`, `'Infinity'`) follow
-    * Spark's cast and come out NaN; schema-valid wire data never carries
-    * them and the default arm is the supported path anyway.
-    */
-  private def jsNumber(v: Column): Column =
-    when(v.isNull || trim(v) === "", lit(0.0))
-      .otherwise(coalesce(v.try_cast("double"), lit(Double.NaN)))
-
-  /** A9 STRICT-JS arm (`Config.strictJsSemantics`): the reference copies
-    * each style field with `if (metadata[k] !== undefined) out[k] =
-    * String/Number(metadata[k])` (`task.ts:116-120`) — gated on key
-    * PRESENCE, so a present-but-null value still copies, through JS
-    * coercion: `String(null)` = `"null"`, `Number(null)` = 0. The
-    * engine's default arm deliberately nullifies instead (divergence
-    * note above; CalTopoSpec pins it); this arm restores reference-exact
-    * behavior for bit-for-bit migrations, reading key presence off the
-    * RAW wire JSON exactly like [[icoIconQuirk]] — typed absent==null
-    * columns cannot carry the distinction. Wire keys are the reference's
-    * hyphenated forms; output fields are the engine's underscored ones.
-    * Returns the 5-field style struct (each field null when its key is
-    * absent — the "no copy" case both arms share).
-    */
-  def styleCastsStrictJs(rawProps: Column): Column = {
-    val m = from_json(rawProps, "map<string,string>", Map.empty[String, String])
-    def str(k: String) = when(map_contains_key(m, k),
-      when(element_at(m, k).isNull, lit("null"))      // String(null)
-        .otherwise(element_at(m, k)))                 // String(<string>)
-    def num(k: String) = when(map_contains_key(m, k),
-      jsNumber(element_at(m, k)))                     // Number(<anything>)
-    struct(
-      str("fill").as("fill"),
-      num("fill-opacity").as("fill_opacity"),
-      str("stroke").as("stroke"),
-      num("stroke-opacity").as("stroke_opacity"),
-      num("stroke-width").as("stroke_width"))
-  }
-
-  /** [[enrichProperties]] dispatched on [[graft.Config.strictJsSemantics]]:
-    * the default arm keeps the engine's nullify semantics; the strict arm
-    * swaps ONLY the five A9 style copies for [[styleCastsStrictJs]] over
-    * the raw properties JSON riding with the row (e.g.
-    * [[graft.sources.GeoJsonSource]]'s `properties_json`). Callsign,
-    * remarks, and `archived` are identical in both arms — the reference's
-    * `String(title)` runs on a schema-required field and its remarks
-    * branch is falsy-gated, so null coercion never reaches them on
-    * decodable input.
-    */
-  def enrichProperties(df: DataFrame, cfg: graft.Config,
-      rawProps: Column): DataFrame =
-    if (!cfg.strictJsSemantics) enrichProperties(df)
-    else {
-      val s = styleCastsStrictJs(rawProps)
-      withFields(df,
-        enrichedFields(nested, styleTypes.map { case (f, _) => f -> s.getField(f) }))
-    }
 
   /** A13 — a feature joins its folder on a *truthy* folderId
     * (`task.ts:142-149`).

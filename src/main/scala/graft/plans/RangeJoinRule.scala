@@ -12,10 +12,9 @@ import org.apache.spark.sql.types.LongType
   * A join whose only cross-side predicate is a time-range band —
   * `b.t > a.t AND b.t <= a.t + W` with no equality conjunct — has no hash
   * key, so Spark plans a BroadcastNestedLoopJoin: O(|a|·|b|), dead at
-  * 100 TB. [[graft.operators.RangeJoin.innerBinned]] is the manual
-  * workaround; this rule applies the same rewrite automatically, so a user
-  * can write the natural theta-join and still get the scalable plan (the
-  * rewrite open-source Spark lacks):
+  * 100 TB. This rule rewrites it, so a user can write the natural
+  * theta-join and still get the scalable plan (the rewrite open-source
+  * Spark lacks):
   *
   *   - the reference-point side gains bucket `floor(t / W)` and explodes
   *     its two candidate buckets {b, b+1} (band width == bucket width, so

@@ -61,8 +61,7 @@ class FeatureCollectionSink extends TableProvider {
           sys.props("java.io.tmpdir") +
             s"/graft-fc-spool-${sc.applicationId}-${sc.startTime}"
         } else path),
-      // the submit-side `verbose: DEBUG` pass-through (task.ts:158);
-      // Config.sinkOptions renders it from Config.debug
+      // the submit-side `verbose: DEBUG` pass-through (task.ts:158)
       Option(properties.get("verbose")).exists(_.toBoolean))
   }
 }
@@ -75,11 +74,10 @@ object FeatureCollectionSink {
     * JSON and write one FeatureCollection per partition into `outDir`
     * under the connector's commit protocol.
     */
-  def write(df: DataFrame, outDir: String,
-      prefix: String = "featurecollection"): Unit =
+  def write(df: DataFrame, outDir: String): Unit =
     df.select(to_json(struct(df.columns.map(col).toSeq: _*)).as("feature"))
       .write.format("graft.sources.FeatureCollectionSink")
-      .option("path", outDir).option("prefix", prefix)
+      .option("path", outDir)
       .mode("append").save()
 }
 

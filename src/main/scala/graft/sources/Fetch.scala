@@ -19,10 +19,13 @@ package graft.sources
 object Fetch {
 
   /** The retry policy (attempts, first backoff) of the GeoJSON scan's
-    * fetch and the FeatureCollection sink's POST.
+    * fetch and the FeatureCollection sink's POST, and the deadline of one
+    * whole HTTP exchange ([[HttpTransport]]): a timed-out exchange is an
+    * I/O failure, so it is retried in place like any other.
     */
   val MaxAttempts = 3
   val BackoffMs = 100L
+  val ExchangeTimeoutSec = 60L
 
   /** True for failure classes worth retrying in place. Jackson's parse
     * errors extend IOException but mean a MALFORMED document — retrying

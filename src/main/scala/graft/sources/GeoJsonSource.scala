@@ -86,8 +86,7 @@ class GeoJsonTable(paths: Seq[String]) extends Table with SupportsRead {
     // (`.option("since", t)`); the retry policy is Fetch's
     () => new GeoJsonScan(paths,
       options.getLong("since", -500L),
-      // the reference's `verbose: DEBUG` fetch pass-through (task.ts:87);
-      // Config.scanOptions renders it from Config.debug
+      // the reference's `verbose: DEBUG` fetch pass-through (task.ts:87)
       options.getBoolean("verbose", false))
 }
 

@@ -122,13 +122,6 @@ object HttpTransport extends DocTransport {
     .followRedirects(HttpClient.Redirect.NEVER)
     .build()
 
-  // Whole-exchange deadline; tunable (JVM-wide) for legitimately slow or
-  // large transfers — a hardcoded 60 s would make a ~100 s document fetch
-  // permanently unfetchable (every in-place retry AND Spark task retry
-  // hits the same deterministic timeout).
-  private def exchangeTimeout: Duration = Duration.ofSeconds(
-    sys.props.get("graft.http.exchangeTimeoutSec").map(_.toLong).getOrElse(60L))
-
   /** Complete the WHOLE exchange — headers and body — within the
     * deadline. `HttpRequest.timeout` only bounds response-header arrival,
     * so a server stalling mid-body would hang the Spark task forever with
@@ -139,13 +132,13 @@ object HttpTransport extends DocTransport {
   private def exchange[A](client: HttpClient, req: HttpRequest,
       handler: HttpResponse.BodyHandler[A]): HttpResponse[A] = {
     val fut = client.sendAsync(req, handler)
-    try fut.get(exchangeTimeout.toMillis,
-      java.util.concurrent.TimeUnit.MILLISECONDS)
+    try fut.get(Fetch.ExchangeTimeoutSec,
+      java.util.concurrent.TimeUnit.SECONDS)
     catch {
       case e: java.util.concurrent.TimeoutException =>
         fut.cancel(true)
         throw new IOException(
-          s"HTTP exchange exceeded ${exchangeTimeout.getSeconds}s: ${req.uri()}", e)
+          s"HTTP exchange exceeded ${Fetch.ExchangeTimeoutSec}s: ${req.uri()}", e)
       case e: InterruptedException =>
         // Spark task kill / speculation: cancel the in-flight exchange so
         // the client's background threads stop downloading and release

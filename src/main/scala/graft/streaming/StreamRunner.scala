@@ -290,25 +290,6 @@ object StreamRunner {
     spark.table(name)
   }
 
-  /** Stream -> batch-sink bridge: deliver each micro-batch through the
-    * FeatureCollection sink's commit protocol (`foreachBatch` hands the
-    * sink a normal DataFrame, so ANY batch writer becomes a streaming sink
-    * — the Spark idiom for sinks without a native streaming connector,
-    * like the reference's HTTP submit). The batch id prefixes the
-    * documents, so successive micro-batches never collide on partition
-    * ids.
-    */
-  def streamToFeatureSink(stream: DataFrame, outDir: String): Unit = {
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.sources.FeatureCollectionSink.write(batch, outDir,
-          prefix = s"batch-$batchId")
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
-
   /** Demo/measurement main: run both streaming aggs over a sf dir through
     * the REAL streaming path (file source -> state store -> memory sink)
     * and print per-agg wall time — the at-scale evidence for the state

@@ -151,60 +151,6 @@ class CalTopoSpec extends SparkSpec {
     }
   }
 
-  test("A9 strict-JS arm: presence-gated String(null)/Number(null) coercion over raw wire JSON") {
-    // The other side of the pinned divergence above (VERDICT r4 item 7):
-    // with Config.strictJsSemantics the reference's task.ts:116-120
-    // behavior is reproduced exactly — a PRESENT key always copies,
-    // coercing null to "null" (String fields) / 0 (Number fields), JS
-    // Number('')=0, non-numeric -> NaN; an ABSENT key still yields null.
-    import spark.implicits._
-    val raw = Seq(
-      ("a", """{"fill":"#f00","fill-opacity":"0.5"}"""),  // plain values
-      ("b", """{"fill":null,"fill-opacity":null}"""),     // present-null
-      ("c", """{"stroke-width":""}"""),                   // Number('') = 0
-      ("d", """{"stroke-opacity":"abc"}"""),              // Number junk = NaN
-      ("e", """{}""")).toDF("id", "props")                // absent = no copy
-    val s = CalTopo.styleCastsStrictJs(col("props"))
-    val got = raw.select(col("id"),
-        s.getField("fill").as("fill"),
-        s.getField("fill_opacity").as("fo"),
-        s.getField("stroke_opacity").as("so"),
-        s.getField("stroke_width").as("sw"))
-      .collect().map(r => r.getString(0) -> r).toMap
-    assert(got("a").getString(1) == "#f00" && got("a").getDouble(2) == 0.5)
-    assert(got("b").getString(1) == "null", "String(null) must be 'null'")
-    assert(got("b").getDouble(2) == 0.0, "Number(null) must be 0")
-    assert(got("c").getDouble(4) == 0.0, "Number('') must be 0")
-    assert(got("d").getDouble(3).isNaN, "Number(junk) must be NaN")
-    (1 to 4).foreach(i => assert(got("e").isNullAt(i), "absent key: no copy"))
-  }
-
-  test("A9 dispatch: strictJsSemantics selects the JS arm, default keeps nullify (both pinned)") {
-    // s1's typed fill/opacities are all null; its wire JSON says the keys
-    // were PRESENT (value null). The two config arms must disagree in
-    // exactly the reference-documented way.
-    val rawJson = lit("""{"fill":null,"fill-opacity":null,"stroke":null,"stroke-opacity":null,"stroke-width":null}""")
-    val base = CalTopo.projectNest(CalTopo.mainFlow(handRows))
-      .filter(col("id") === "s1")
-    def styleRow(cfg: graft.Config) =
-      CalTopo.enrichProperties(base, cfg, rawJson)
-        .select(col("properties.fill"), col("properties.fill_opacity"),
-          col("properties.stroke"), col("properties.stroke_opacity"),
-          col("properties.stroke_width"))
-        .collect().head
-    val strict = styleRow(graft.Config("x", strictJsSemantics = true))
-    assert(strict.getString(0) == "null" && strict.getString(2) == "null")
-    assert(strict.getDouble(1) == 0.0 && strict.getDouble(3) == 0.0 &&
-      strict.getDouble(4) == 0.0)
-    val dflt = styleRow(graft.Config("x"))
-    (0 until 5).foreach(i => assert(dflt.isNullAt(i),
-      "default arm must keep the engine's nullify semantics"))
-    // and the flag parses from env like every other config knob
-    assert(Config.fromEnv(Map("SHARE_ID" -> "x", "GRAFT_STRICT_JS" -> "true"))
-      .strictJsSemantics)
-    assert(!Config.fromEnv(Map("SHARE_ID" -> "x")).strictJsSemantics)
-  }
-
   test("ico/icon quirk (task.ts:121): presence-gated JS String() coercion over raw wire JSON") {
     // `if (metadata.ico !== undefined) icon = String(metadata.icon)` —
     // the one reference behavior typed columns can't carry (absent==null

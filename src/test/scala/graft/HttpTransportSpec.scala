@@ -306,9 +306,9 @@ class HttpTransportSpec extends SparkSpec {
     import graft.sources.TransportLog
     import spark.implicits._
     // the reference hands `env.DEBUG` to fetch and submit as `verbose`
-    // (task.ts:87,158); Config.scanOptions/sinkOptions render the same
-    // flag onto the DSv2 read/write options and the transports log each
-    // exchange through TransportLog only when it is set
+    // (task.ts:87,158); here it is the DSv2 read/write `verbose` option,
+    // and the transports log each exchange through TransportLog only when
+    // it is set
     val lines = java.util.Collections.synchronizedList(
       new java.util.ArrayList[String]())
     val old = TransportLog.sink
@@ -321,28 +321,26 @@ class HttpTransportSpec extends SparkSpec {
           respond(ex, 200, Array.emptyByteArray)
         }
       ) { base =>
-        def fetchWith(cfg: Config): Unit =
+        def fetchWith(debug: Boolean): Unit =
           spark.read.format("graft.sources.GeoJsonSource")
-            .options(cfg.scanOptions)
+            .option("verbose", debug.toString)
             .option("path", s"$base/map").load().count()
-        def submitWith(cfg: Config): Unit = {
+        def submitWith(debug: Boolean): Unit = {
           val spool = java.nio.file.Files.createTempDirectory("graft-dbg-spool")
           Seq(("a", "A")).toDF("id", "title")
             .select(to_json(struct(col("id"), col("title"))).as("feature"))
             .write.format("graft.sources.FeatureCollectionSink")
             .option("path", s"$base/submit")
-            .options(cfg.sinkOptions)
+            .option("verbose", debug.toString)
             .option("spoolDir", spool.toString)
             .mode("append").save()
         }
         // DEBUG off (the reference default, task.ts:15): fully silent
-        val off = Config(shareId = "s")
-        fetchWith(off); submitWith(off)
+        fetchWith(false); submitWith(false)
         assert(lines.isEmpty,
           s"transport logged without DEBUG: ${lines}")
         // DEBUG on: both exchanges and the delivery confirmation logged
-        val on = Config(shareId = "s", debug = true)
-        fetchWith(on); submitWith(on)
+        fetchWith(true); submitWith(true)
         import scala.jdk.CollectionConverters._
         val got = lines.asScala.toList
         assert(got.exists(l => l.contains("GET") && l.contains("/map")), got)

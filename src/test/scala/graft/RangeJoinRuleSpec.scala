@@ -108,6 +108,17 @@ class RangeJoinRuleSpec extends SparkSpec {
 
   test("randomized equivalence: rewritten plan matches driver-side brute force") {
     import spark.implicits._
+    // probe t=-3, width 10: the band (-3, 7] catches build t=-1 and t=5.
+    // Truncate-toward-zero bucketing would put -3 in bucket 0 (floor: -1)
+    // and miss the build row in bucket -1.
+    val (got0, plan0) = withRule {
+      val df = Seq((1L, -3L)).toDF("a_id", "a_ts").join(
+        Seq((10L, -4L), (11L, -1L), (12L, 5L), (13L, 8L)).toDF("b_id", "b_ts"),
+        col("b_ts") > col("a_ts") && col("b_ts") <= col("a_ts") + 10L)
+      (pairs(df), df.queryExecution.executedPlan.toString)
+    }
+    assert(got0 == Set((1L, 11L), (1L, 12L)))
+    assert(!plan0.contains("NestedLoop") && !plan0.contains("Cartesian"), plan0)
     val rnd = new scala.util.Random(20260812L) // fixed seed: deterministic
     for (trial <- 1 to 3) {
       val width = Seq(7L, 100L, 1000L)(trial - 1)

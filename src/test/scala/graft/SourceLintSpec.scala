@@ -11,9 +11,11 @@ import scala.jdk.CollectionConverters._
   * listener registered elsewhere would count jobs a second way, or run
   * in sessions that no one traces. The process environment is parsed once,
   * by [[Session.env]]; a read anywhere else would be one more unchecked
-  * copy of the same variable. Rows reach the driver only through
-  * [[Materialize.bounded]], whose per-partition share enforces its cap; a
-  * collect elsewhere would be a second job with a bound of its own.
+  * copy of the same variable. No `graft.*` JVM system property is read
+  * outside it either: a setting belongs in that parse or is a constant.
+  * Rows reach the driver only through [[Materialize.bounded]], whose
+  * per-partition share enforces its cap; a collect elsewhere would be a
+  * second job with a bound of its own.
   */
 class SourceLintSpec extends org.scalatest.funsuite.AnyFunSuite {
 
@@ -43,6 +45,12 @@ class SourceLintSpec extends org.scalatest.funsuite.AnyFunSuite {
 
   test("the process environment is read in src/main only by graft.Session") {
     val hits = outside("Session.scala", "sys.env", "System.getenv")
+    assert(hits.isEmpty, hits.mkString("\n"))
+  }
+
+  test("no graft.* system property is read in src/main") {
+    val hits = outside("Session.scala", "props.get(\"graft.", "props(\"graft.",
+      "props.getOrElse(\"graft.", "getProperty(\"graft.")
     assert(hits.isEmpty, hits.mkString("\n"))
   }
 

@@ -205,19 +205,19 @@ class SourceSinkSpec extends SparkSpec {
     assert(classes.toSet == Set("Marker", "Folder", "Shape"))
   }
 
-  test("streaming foreachBatch delivers micro-batches through the feature sink") {
-    val out = "/tmp/graft-stream-sink-out"
-    val p = java.nio.file.Paths.get(out)
-    if (java.nio.file.Files.exists(p)) {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-        .foreach(f => java.nio.file.Files.deleteIfExists(f))
-    }
-    val stream = graft.streaming.StreamRunner.eventsStream(spark, sfDir)
-      .select(col("event_id"), col("event_type"), col("value"))
-    graft.streaming.StreamRunner.streamToFeatureSink(stream, out)
+  test("streaming writeStream delivers micro-batches through the feature sink") {
+    val base = Files.createTempDirectory("graft-stream-sink")
+    val out = base.resolve("out")
+    graft.streaming.StreamRunner.eventsStream(spark, sfDir)
+      .select(to_json(struct(col("event_id"), col("event_type"), col("value")))
+        .as("feature"))
+      .writeStream.format("graft.sources.FeatureCollectionSink")
+      .option("path", out.toString)
+      .option("checkpointLocation", base.resolve("ckpt").toString)
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start().awaitTermination()
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val files = p.toFile.listFiles.filter(_.getName.endsWith(".json"))
+    val files = out.toFile.listFiles.filter(_.getName.endsWith(".json"))
     assert(files.nonEmpty)
     val total = files.map(f => mapper.readTree(f).path("features").size()).sum
     assert(total == graft.sources.Tables.events(spark, sfDir).count())
