@@ -7,9 +7,9 @@ import graft.functions.VectorExprs
 
 /** SparkSessionExtensions entry point: registers the engine's native
   * expressions as SQL functions, so `spark.sql("... dot_product(a, b) ...")`
-  * reaches the codegen'd kernels. Production wiring:
-  * `spark.sql.extensions=graft.GraftExtensions`; existing sessions can call
-  * [[GraftExtensions.registerFunctions]] directly.
+  * reaches the codegen'd kernels. [[Session.build]] sets
+  * `spark.sql.extensions=graft.GraftExtensions`, so every session the
+  * engine builds has them.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -31,7 +31,7 @@ object GraftExtensions {
       else throw new IllegalArgumentException(
         s"$name expects $n arguments, got ${args.length}")
 
-  val injections: Seq[(String, ExpressionInfo, Builder)] = Seq(
+  private val injections: Seq[(String, ExpressionInfo, Builder)] = Seq(
     ("dot_product",
       new ExpressionInfo(classOf[VectorExprs.DotProduct].getName, "dot_product"),
       expect(2, "dot_product")(a => VectorExprs.DotProduct(a(0), a(1)))),
@@ -39,11 +39,4 @@ object GraftExtensions {
       new ExpressionInfo(classOf[VectorExprs.L2Norm].getName, "l2_norm"),
       expect(1, "l2_norm")(a => VectorExprs.L2Norm(a.head)))
   )
-
-  /** Register on an already-built session (tests, REPLs). */
-  def registerFunctions(spark: org.apache.spark.sql.SparkSession): Unit =
-    injections.foreach { case (name, info, builder) =>
-      org.apache.spark.sql.GraftSqlBridge
-        .registerFunction(spark, FunctionIdentifier(name), info, builder)
-    }
 }

@@ -51,14 +51,11 @@ object AudioCodec {
 
   // ---------------------------------------------------------------- decode
 
-  /** Header walk: RIFF/WAVE signature, then chunk list to `fmt ` and
-    * `data`. None for non-WAV, truncated, or non-PCM-16 payloads (the
-    * quarantine posture — corrupt rows stay visible, never throw).
+  /** Header walk (RIFF/WAVE signature, then the chunk list to `fmt ` and
+    * `data`) plus the exact PCM samples (interleaved LE i16). None for
+    * non-WAV, truncated, or non-PCM-16 payloads (the quarantine posture —
+    * corrupt rows stay visible, never throw).
     */
-  def decodeHeader(bytes: Array[Byte]): Option[WavInfo] =
-    walk(bytes).map(_._1)
-
-  /** Full decode: header plus the exact PCM samples (interleaved LE i16). */
   def decodeWavPcm16(bytes: Array[Byte]): Option[(WavInfo, Array[Short])] =
     walk(bytes).map { case (info, dataOff, dataLen) =>
       val n = dataLen / 2

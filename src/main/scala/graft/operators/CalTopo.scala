@@ -30,8 +30,7 @@ import graft.Materialize
   *  - `metadata.ico`/`metadata.icon` (`task.ts:121`) reads fields the Output
   *    schema never declares — dead code for schema-valid inputs, so the
   *    flagship (which runs on decoded, schema-valid columns) never fires
-  *    it; the behavior itself IS modeled by [[icoIconQuirk]] over the raw
-  *    wire JSON, where key presence is still observable.
+  *    it, and it is not modelled.
   *  - `delete metadata['marker-color']` (`task.ts:134`) becomes nullify.
   *  - JS falsy semantics (`''` is falsy: `task.ts:114,132,144`) are encoded
   *    explicitly as `isNull || === ""` checks.
@@ -206,31 +205,6 @@ object CalTopo {
       "marker_opacity" -> markerOpacity(gt, mc),
       "metadata" -> col("properties.metadata")
         .withField("marker_color", metadataMarkerColor(gt, mc))))
-  }
-
-  /** The `ico`/`icon` quirk (`task.ts:121`): `if (metadata.ico !==
-    * undefined) feat.properties.icon = String(metadata.icon)` — gated on
-    * the PRESENCE of the `ico` key (a present-but-null `ico` still fires:
-    * JS `null !== undefined`), and the value is JS `String()` coercion of
-    * `icon`, which may itself be absent (`String(undefined)` =
-    * `"undefined"`) or null (`String(null)` = `"null"`).
-    *
-    * Neither key exists in the reference's TypeBox schema, so the typed
-    * flagship columns cannot carry the distinction — but the RAW wire
-    * JSON can: a map-typed decode preserves key presence
-    * (`map_contains_key`), which absent==null typed columns do not (see
-    * the divergence note above). Returns the `icon` output column (null
-    * when the quirk does not fire); plugs in alongside
-    * [[enrichProperties]] wherever the raw properties JSON rides with the
-    * row (e.g. straight off [[graft.sources.GeoJsonSource]]'s
-    * `properties_json`).
-    */
-  def icoIconQuirk(rawProps: Column): Column = {
-    val m = from_json(rawProps, "map<string,string>", Map.empty[String, String])
-    when(map_contains_key(m, "ico"),
-      when(!map_contains_key(m, "icon"), lit("undefined")) // String(undefined)
-        .when(element_at(m, "icon").isNull, lit("null"))   // String(null)
-        .otherwise(element_at(m, "icon")))                 // String(<string>)
   }
 
   /** A13 — a feature joins its folder on a *truthy* folderId

@@ -4,19 +4,17 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Multimodal columns (SURVEY.md §2 B23): media travels as an opaque
-  * `BINARY` payload column next to a typed metadata struct; decode /
-  * feature-extract / frame-sample run as partition-local batch operators
+  * `BINARY` payload column next to a typed metadata struct; decode and
+  * frame sampling run as partition-local batch operators
   * (`Dataset.mapPartitions` — the Scala analog of `mapInPandas`: one
   * iterator of rows per partition, vectorizable per batch, no shuffle).
   *
-  * The image decode step is REAL as of r5: [[ImageCodec]] is a pure-JDK
-  * grayscale-PNG codec (encode + full inflate/un-filter decode) with
-  * JPEG/GIF/BMP dimension header parsing — see [[imageTable]] /
-  * [[decodeImages]], oracle-checked end to end. [[FakeDecoder]] remains as
-  * the FEATURE-EXTRACTION stand-in (byte-histogram moments in place of a
-  * learned embedding model, which no container ships): schema,
-  * partitioning, and batch shape are the production ones; swapping in a
-  * real model changes one function.
+  * The decode steps are real: [[ImageCodec]] is a pure-JDK grayscale-PNG
+  * codec (encode + full inflate/un-filter decode) with JPEG/GIF/BMP
+  * dimension header parsing, and [[AudioCodec]] a PCM-16 WAV codec — see
+  * [[decodeImages]] / [[decodeAudio]], both oracle-checked end to end.
+  * Learned-embedding feature extraction and resizing are not modelled: no
+  * container ships a model.
   *
   * At 100 TB: payloads stay columnar parquet binary; decode is
   * embarrassingly parallel (no shuffle), so throughput scales linearly with
@@ -24,34 +22,6 @@ import org.apache.spark.sql.functions._
   * repartition-after-explode is the one knob to watch.
   */
 object Multimodal {
-
-  /** A decoded media record: fixed-dim feature vector + per-frame count.
-    * (What a real image decoder would emit after resize + pooling.)
-    */
-  final case class MediaFeatures(
-      id: Long, n_bytes: Int, n_frames: Int, features: Array[Float])
-
-  /** STUB decoder — deterministic stand-in for an image/audio decode.
-    * Real implementation would parse `payload` with an imaging/audio lib;
-    * here: 8-dim byte-histogram moments, stable across runs/partitions.
-    */
-  object FakeDecoder {
-    val featureDim = 8
-    def decode(id: Long, payload: Array[Byte]): MediaFeatures = {
-      val hist = new Array[Long](featureDim)
-      var i = 0
-      while (i < payload.length) {
-        hist((payload(i) & 0xFF) % featureDim) += 1
-        i += 1
-      }
-      val n = math.max(payload.length, 1)
-      MediaFeatures(id, payload.length, frameCount(payload),
-        hist.map(h => h.toFloat / n))
-    }
-    /** "Frames" = fixed 256-byte chunks (a video decoder's frame count). */
-    def frameCount(payload: Array[Byte]): Int =
-      math.max((payload.length + 255) / 256, 1)
-  }
 
   /** Release `scratch`'s native codec streams when the partition finishes:
     * on the task-completion listener when a TaskContext exists (the
@@ -90,46 +60,10 @@ object Multimodal {
         col("source").as("origin"),
         col("lang").as("tag")).as("metadata"))
 
-  /** Partition-local batch decode: binary -> feature vectors. No shuffle;
-    * the iterator shape lets a real decoder amortize per-batch setup
-    * (model load, codec init) exactly like mapInPandas batches.
-    */
-  def decodeFeatures(spark: SparkSession, media: DataFrame): Dataset[MediaFeatures] = {
-    import spark.implicits._
-    media.select(col("media_id"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { rows =>
-        // per-partition setup would go here (decoder/model init, once)
-        rows.map { case (id, payload) => FakeDecoder.decode(id, payload) }
-      }
-  }
-
-  /** "Resize": deterministic payload decimation — keep every `factor`-th
-    * byte (stand-in for an image downscale; a real implementation decodes,
-    * scales, re-encodes in the same partition-local batch shape). Output
-    * schema mirrors the input so resized media flows through the same
-    * downstream operators.
-    */
-  def resize(media: DataFrame, factor: Int = 4): Dataset[(Long, Array[Byte])] = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.select(col("media_id"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { rows =>
-        rows.map { case (id, payload) =>
-          val out = new Array[Byte]((payload.length + factor - 1) / factor)
-          var i = 0
-          while (i < out.length) { out(i) = payload(i * factor); i += 1 }
-          (id, out)
-        }
-      }
-  }
-
   /** A decoded image record: container metadata + pixel digest. `format`
     * is "png"/"jpeg"/"gif"/"bmp" from the header walk, or "unknown" for
     * unrecognized bytes (width/height/n_pixels 0, null digest) — a media
-    * sweep keeps corrupt rows visible rather than dropping them, the same
-    * quarantine posture as the PERMISSIVE decode arm (A2).
+    * sweep keeps corrupt rows visible rather than dropping them.
     */
   final case class DecodedImage(
       media_id: Long, format: String, width: Int, height: Int,

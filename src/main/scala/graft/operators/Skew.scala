@@ -3,14 +3,13 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Skew mitigation (SURVEY.md §8): AQE's runtime skew-join split is the
-  * first line of defense; these are the explicit-salting forms for the
-  * cases AQE can't fix — a skewed AGGREGATION key (AQE only splits join
-  * partitions) and a skewed join where the hot key is known up front.
+/** Skew mitigation (SURVEY.md §8): AQE's runtime skew-join split handles
+  * skewed joins; this is the explicit-salting form for the case AQE can't
+  * fix — a skewed AGGREGATION key (AQE only splits join partitions).
   * Results are salt-invariant by construction: the salt only routes rows
-  * to reducers (sums are associative over salts; the join replicates the
-  * dim across every salt value), so ANY salt assignment — including a
-  * retried task picking different values — produces identical output.
+  * to reducers and sums are associative over salts, so ANY salt
+  * assignment — including a retried task picking different values —
+  * produces identical output.
   */
 object Skew {
 
@@ -30,23 +29,5 @@ object Skew {
       .agg(sum(col("v")).as("partial"))
       .groupBy(col("k"))
       .agg(sum(col("partial")).as("total"))
-  }
-
-  /** Skewed fact ⋈ small-but-not-broadcastable dim: salt the fact side
-    * with a deterministic per-row salt, replicate the dim side across all
-    * `salts` values, and join on (key, salt) — each hot key now spreads
-    * over `salts` reducers. Row multiplicity is preserved exactly (each
-    * fact row joins its single replicated partner).
-    */
-  def saltedJoin(fact: DataFrame, dim: DataFrame, factKey: String,
-      dimKey: String, salts: Int = 16): DataFrame = {
-    val saltedFact = fact.withColumn("_salt",
-      pmod(xxhash64(monotonically_increasing_id()), lit(salts)))
-    val replicatedDim = dim.withColumn("_salt",
-      explode(sequence(lit(0L), lit(salts - 1L))))
-    saltedFact.join(replicatedDim,
-        saltedFact(factKey) === replicatedDim(dimKey) &&
-          saltedFact("_salt") === replicatedDim("_salt"))
-      .drop("_salt")
   }
 }

@@ -184,12 +184,10 @@ FROM islands GROUP BY user_id, sid ORDER BY user_id, session_start_us""") { (s, 
         .orderBy("user_id", "session_start_us")
     },
 
-    // B19d — dedup-by-key, batch form (streaming form:
-    // [[graft.streaming.StreamRunner.dedupByKey]]). The batch semantics
-    // are made deterministic — first row per (user_id, event_type) by
-    // (ts, event_id) — because streaming first-ARRIVAL depends on replay
-    // order; StreamingSpec bridges the two by key set. One shuffle
-    // (window partition), filter rn=1 — at 100 TB this is the standard
+    // B19d — dedup-by-key, batch form, made deterministic: the first row
+    // per (user_id, event_type) by (ts, event_id), where a streaming
+    // first-ARRIVAL would depend on replay order. One shuffle (window
+    // partition), filter rn=1 — at 100 TB this is the standard
     // keep-one-per-key repair after an at-least-once ingest.
     Q("q_stream_dedup",
       """WITH r AS (
@@ -321,11 +319,10 @@ ORDER BY event_type, bucket""") { (s, d) =>
         .orderBy("event_type", "bucket")
     },
 
-    // Batch form of StreamRunner.purchaseAfterErrorJoin (stream-stream
-    // interval join, B19): purchases within 10 minutes after a same-user
-    // error. The user_id equality makes this a plain hash/SMJ join with
-    // the time interval as a residual predicate (the binned-range rewrite
-    // is for joins with NO equi-conjunct); timestamps compare as integer
+    // Interval join, batch form (B19): purchases within 10 minutes after
+    // a same-user error. The user_id equality makes this a plain hash/SMJ
+    // join with the time interval as a residual predicate (the binned-range
+    // rewrite is for joins with NO equi-conjunct); timestamps compare as integer
     // micros in both engines regardless of the file's physical type —
     // Tables.normalizeTs maps both known generations (nanos BIGINT and
     // micros-NTZ) to the same micros instants.

@@ -174,20 +174,4 @@ object CalTopoFeatures {
       from_json(col("json"), featureSchema, Map("mode" -> "FAILFAST")).as("f"))
       .select(col("f.*"))
   }
-
-  /** PERMISSIVE decode with quarantine: rows that fail the schema keep
-    * their raw document in `_corrupt_record` instead of aborting the run —
-    * the production posture for 100 TB ingest (a single bad feature must
-    * not kill the job; corrupt rows route to a quarantine sink). The
-    * reference's abort-on-decode-failure behavior is [[jsonRoundTrip]].
-    */
-  def decodePermissive(jsonDocs: DataFrame, jsonCol: String = "json"): DataFrame = {
-    val withCorrupt = StructType(
-      featureSchema.fields :+ StructField("_corrupt_record", StringType))
-    jsonDocs.select(
-      from_json(col(jsonCol), withCorrupt,
-        Map("mode" -> "PERMISSIVE",
-          "columnNameOfCorruptRecord" -> "_corrupt_record")).as("f"))
-      .select(col("f.*"))
-  }
 }

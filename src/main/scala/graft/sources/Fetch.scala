@@ -12,9 +12,9 @@ package graft.sources
   *    immediately; Spark's own task-retry / job-abort policy then decides,
   *    which is exactly the scheduled-rerun semantic of the reference.
   *
-  * The decode layer stays downstream (FAILFAST `from_json` = abort;
-  * PERMISSIVE = quarantine — CalTopoFeatures), so retry policy and decode
-  * policy compose independently, like `fetch()` vs `.typed()`.
+  * The decode layer stays downstream (FAILFAST `from_json` = abort, in
+  * CalTopoFeatures), so retry policy and decode policy compose
+  * independently, like `fetch()` vs `.typed()`.
   */
 object Fetch {
 

@@ -180,7 +180,6 @@ object Tables {
   def region(s: SparkSession, d: String): DataFrame    = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = load(s, d, "nation")
   def customer(s: SparkSession, d: String): DataFrame  = load(s, d, "customer")
-  def supplier(s: SparkSession, d: String): DataFrame  = load(s, d, "supplier")
   def part(s: SparkSession, d: String): DataFrame      = load(s, d, "part")
   def orders(s: SparkSession, d: String): DataFrame    = load(s, d, "orders")
   def lineitem(s: SparkSession, d: String): DataFrame  = load(s, d, "lineitem")

@@ -54,16 +54,4 @@ object GraftSqlBridge {
     classic.Dataset.ofRows(session, LogicalRDD(lr.output, lr.rdd, partitioning,
       plan.outputOrdering, lr.isStreaming)(session, Some(stats), Some(lr.constraints)))
   }
-
-  /** Register a builtin-style function on an existing session (the
-    * SparkSessionExtensions path only applies at session construction).
-    */
-  def registerFunction(
-      spark: SparkSession,
-      name: org.apache.spark.sql.catalyst.FunctionIdentifier,
-      info: org.apache.spark.sql.catalyst.expressions.ExpressionInfo,
-      builder: Seq[Expression] => Expression): Unit =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry
-      .registerFunction(name, info, builder)
 }

@@ -10,19 +10,7 @@ import graft.sources.{Layout, Tables}
 class BucketingSpec extends SparkSpec {
 
   test("bucketed-by-key tables join without a shuffle") {
-    // warehouse dir is a static conf, set in SparkSpec's builder; the
-    // in-memory catalog forgets tables across JVMs but their directories
-    // persist, so clean both layers
-    spark.sql("DROP TABLE IF EXISTS orders_b")
-    spark.sql("DROP TABLE IF EXISTS lineitem_b")
-    Seq("orders_b", "lineitem_b").foreach { t =>
-      val dir = java.nio.file.Paths.get("/tmp/graft-warehouse", t)
-      if (java.nio.file.Files.exists(dir)) {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(dir).iterator().asScala.toSeq.reverse
-          .foreach(p => java.nio.file.Files.deleteIfExists(p))
-      }
-    }
+    // the tables land in SparkSpec's warehouse, a new directory per JVM
     Tables.orders(spark, sfDir)
       .write.bucketBy(8, "o_orderkey").sortBy("o_orderkey")
       .mode("overwrite").saveAsTable("orders_b")

@@ -151,31 +151,6 @@ class CalTopoSpec extends SparkSpec {
     }
   }
 
-  test("ico/icon quirk (task.ts:121): presence-gated JS String() coercion over raw wire JSON") {
-    // `if (metadata.ico !== undefined) icon = String(metadata.icon)` —
-    // the one reference behavior typed columns can't carry (absent==null
-    // in parquet); the map-typed decode of the RAW properties JSON keeps
-    // key presence observable, so the quirk is modeled and pinned here,
-    // JS coercions included (VERDICT r3 §missing.3).
-    import spark.implicits._
-    val raw = Seq(
-      ("a", """{"ico":"x","icon":"pin"}"""), // both present -> icon value
-      ("b", """{"ico":"x","icon":null}"""),  // icon null -> String(null)
-      ("c", """{"ico":"x"}"""),              // icon absent -> String(undefined)
-      ("d", """{"icon":"pin"}"""),           // no ico -> quirk does not fire
-      ("e", """{"ico":null,"icon":"pin"}"""),// null ico is still DEFINED in JS
-      ("f", """{}""")).toDF("id", "props")
-    val got = raw
-      .select(col("id"), CalTopo.icoIconQuirk(col("props")).as("icon_out"))
-      .collect().map(r => r.getString(0) -> Option(r.getString(1))).toMap
-    assert(got("a") == Some("pin"))
-    assert(got("b") == Some("null"))
-    assert(got("c") == Some("undefined"))
-    assert(got("d") == None)
-    assert(got("e") == Some("pin"))
-    assert(got("f") == None)
-  }
-
   test("falsy description coalesces to empty remarks") {
     val df = CalTopo.enrichProperties(
       CalTopo.projectNest(CalTopo.mainFlow(handRows)))
@@ -287,7 +262,7 @@ class CalTopoSpec extends SparkSpec {
           """[{"type":"Point","coordinates":[1.0,2.0,3.0,4.0]},{"type":"LineString","coordinates":[[5.0,6.0,7.0,8.0],[9.0,10.0,11.0,12.0]]}]""")),
       feat("nogeom", """"class":"Marker","title":"n","folder_id":"F1"""", "null"),
       feat("absent", """"class":"Marker","title":"a"""", null)) ++ extra
-    val doc = Files.createTempDirectory("graft-flagship-doc").resolve("map.json")
+    val doc = scratchDir("graft-flagship-doc").resolve("map.json")
     Files.writeString(doc,
       feats.mkString("""{"type":"FeatureCollection","features":[""", ",", "]}"))
     decode(spark.read.format("graft.sources.GeoJsonSource").load(doc.toString))

@@ -3,33 +3,10 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.sources.CalTopoFeatures
 
-/** Typed-decode failure modes: FAILFAST aborts (the reference's
-  * `res.typed()` behavior), PERMISSIVE quarantines bad rows into
-  * `_corrupt_record` without killing the job.
+/** Typed-decode failure mode: FAILFAST aborts, the reference's
+  * `res.typed()` behavior.
   */
 class DecodeSpec extends SparkSpec {
-
-  private def docs = {
-    import spark.implicits._
-    Seq(
-      """{"id":"ok1","class":"Marker","title":"A","updated":5}""",
-      """{"id":"bad1","class":"Marker","updated":"not-a-number"}""",
-      """not json at all"""
-    ).toDF("json")
-  }
-
-  test("permissive decode keeps good rows and quarantines bad ones") {
-    val out = CalTopoFeatures.decodePermissive(docs)
-    val good = out.filter(col("_corrupt_record").isNull)
-    val bad = out.filter(col("_corrupt_record").isNotNull)
-    assert(good.count() == 1)
-    assert(good.select("id").first().getString(0) == "ok1")
-    assert(bad.count() == 2)
-    // quarantined rows carry the raw document for a quarantine sink
-    val raws = bad.select("_corrupt_record").collect().map(_.getString(0))
-    assert(raws.exists(_.contains("not-a-number")))
-    assert(raws.contains("not json at all"))
-  }
 
   test("failfast decode aborts on a corrupt document") {
     import spark.implicits._

@@ -1,12 +1,12 @@
 package graft
 
-/** The native kernels are reachable from SQL via function registration
-  * (SparkSessionExtensions in production; direct registry here).
+/** The native kernels are reachable from SQL on every engine session:
+  * [[Session.build]] installs [[GraftExtensions]], so the spec session
+  * resolves them with no registration call.
   */
 class ExtensionsSpec extends SparkSpec {
 
   test("dot_product and l2_norm are callable from SQL and match the Column API") {
-    GraftExtensions.registerFunctions(spark)
     Sql.register(spark, sfDir)
     val viaSql = spark.sql(
       """SELECT vec_id, dot_product(embedding, embedding) AS d, l2_norm(embedding) AS n
@@ -21,9 +21,11 @@ class ExtensionsSpec extends SparkSpec {
   }
 
   test("arity errors are rejected") {
-    GraftExtensions.registerFunctions(spark)
-    intercept[Exception] {
+    // the registered builder's own message: an unregistered l2_norm fails
+    // too, but as an unresolved routine, which names no arity
+    val e = intercept[Exception] {
       spark.sql("SELECT l2_norm()").collect()
     }
+    assert(e.getMessage.contains("l2_norm expects 1 arguments, got 0"), e.getMessage)
   }
 }

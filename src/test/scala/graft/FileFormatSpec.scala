@@ -22,7 +22,7 @@ class FileFormatSpec extends SparkSpec {
       col("n_regionkey").cast("int"))
 
   test("CSV round-trip with explicit schema matches the parquet source") {
-    val dir = "/tmp/graft-fmt-csv"
+    val dir = scratchDir("graft-fmt-csv").toString
     nation.write.mode("overwrite")
       .option("header", "true").csv(dir)
     val back = spark.read.schema(nationSchema)
@@ -32,7 +32,7 @@ class FileFormatSpec extends SparkSpec {
   }
 
   test("JSONL round-trip with explicit schema matches the parquet source") {
-    val dir = "/tmp/graft-fmt-jsonl"
+    val dir = scratchDir("graft-fmt-jsonl").toString
     nation.write.mode("overwrite").json(dir)
     val back = spark.read.schema(nationSchema).json(dir)
     assert(back.orderBy("n_nationkey").collect()
@@ -40,7 +40,7 @@ class FileFormatSpec extends SparkSpec {
   }
 
   test("ORC round-trip matches the parquet source and pushes filters into the scan") {
-    val dir = "/tmp/graft-fmt-orc"
+    val dir = scratchDir("graft-fmt-orc").toString
     nation.write.mode("overwrite").orc(dir)
     val back = spark.read.schema(nationSchema).orc(dir)
     assert(back.orderBy("n_nationkey").collect()
@@ -53,9 +53,7 @@ class FileFormatSpec extends SparkSpec {
   }
 
   test("gzip JSONL reads transparently; non-splittable, so one task per file") {
-    val dir = "/tmp/graft-fmt-gz"
-    val d = new java.io.File(dir); d.mkdirs()
-    d.listFiles().foreach(_.delete())
+    val dir = scratchDir("graft-fmt-gz").toString
     val out = new java.util.zip.GZIPOutputStream(
       new java.io.FileOutputStream(s"$dir/rows.jsonl.gz"))
     out.write(
@@ -73,8 +71,7 @@ class FileFormatSpec extends SparkSpec {
   }
 
   test("malformed JSONL rows quarantine under PERMISSIVE, fail under FAILFAST") {
-    val dir = "/tmp/graft-fmt-bad"
-    val f = new java.io.File(dir); f.mkdirs()
+    val dir = scratchDir("graft-fmt-bad").toString
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(dir, "rows.jsonl"),
       """{"n_nationkey":1,"n_name":"A","n_regionkey":0}

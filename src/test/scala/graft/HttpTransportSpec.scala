@@ -127,7 +127,7 @@ class HttpTransportSpec extends SparkSpec {
       posted.put(ex.getRequestURI.getPath, body)
       respond(ex, 200, Array.emptyByteArray)
     }) { base =>
-      val spool = java.nio.file.Files.createTempDirectory("graft-http-spool")
+      val spool = scratchDir("graft-http-spool")
       val df = Seq(("a", "A"), ("b", "B"), ("c", "C"))
         .toDF("id", "title").repartition(2)
       df.select(to_json(struct(col("id"), col("title"))).as("feature"))
@@ -161,8 +161,8 @@ class HttpTransportSpec extends SparkSpec {
         new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8))
       respond(ex, 200, Array.emptyByteArray)
     }) { base =>
-      val spool = java.nio.file.Files.createTempDirectory("graft-http-stream-spool")
-      val ckpt = java.nio.file.Files.createTempDirectory("graft-http-stream-ckpt")
+      val spool = scratchDir("graft-http-stream-spool")
+      val ckpt = scratchDir("graft-http-stream-ckpt")
       val q = graft.streaming.StreamRunner.eventsStream(spark, sfDir)
         .select(to_json(struct(col("event_id"), col("user_id"))).as("feature"))
         .writeStream
@@ -210,7 +210,7 @@ class HttpTransportSpec extends SparkSpec {
     //    cross-delivery hazard); in per-app spools they cannot, and both
     //    apps' documents arrive intact at the shared target.
     def row(s: String) = new GenericInternalRow(Array[Any](UTF8String.fromString(s)))
-    val shared = java.nio.file.Files.createTempDirectory("graft-shared-spool").toString
+    val shared = scratchDir("graft-shared-spool").toString
     val sharedA = new FcWriter(shared, "doc", 0, 7L)
     val sharedB = new FcWriter(shared, "doc", 0, 7L)
     sharedA.write(row("""{"id":"a"}"""))
@@ -224,8 +224,8 @@ class HttpTransportSpec extends SparkSpec {
       received.add(new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8))
       respond(ex, 200, Array.emptyByteArray)
     }) { base =>
-      val spoolA = java.nio.file.Files.createTempDirectory("graft-app-a").toString
-      val spoolB = java.nio.file.Files.createTempDirectory("graft-app-b").toString
+      val spoolA = scratchDir("graft-app-a").toString
+      val spoolB = scratchDir("graft-app-b").toString
       val appA = new FcWriter(spoolA, "doc", 0, 7L)
       val appB = new FcWriter(spoolB, "doc", 0, 7L)
       appA.write(row("""{"id":"a"}"""))
@@ -284,7 +284,7 @@ class HttpTransportSpec extends SparkSpec {
       posts.incrementAndGet()
       respond(ex, 400, Array.emptyByteArray) // permanent rejection
     }) { base =>
-      val spool = java.nio.file.Files.createTempDirectory("graft-http-spool-rej")
+      val spool = scratchDir("graft-http-spool-rej")
       val e = intercept[Exception] {
         Seq(("a", "A")).toDF("id", "title")
           .select(to_json(struct(col("id"), col("title"))).as("feature"))
@@ -326,7 +326,7 @@ class HttpTransportSpec extends SparkSpec {
             .option("verbose", debug.toString)
             .option("path", s"$base/map").load().count()
         def submitWith(debug: Boolean): Unit = {
-          val spool = java.nio.file.Files.createTempDirectory("graft-dbg-spool")
+          val spool = scratchDir("graft-dbg-spool")
           Seq(("a", "A")).toDF("id", "title")
             .select(to_json(struct(col("id"), col("title"))).as("feature"))
             .write.format("graft.sources.FeatureCollectionSink")

@@ -14,13 +14,7 @@ import graft.sources.Tables
 class IncrementalStreamSpec extends SparkSpec {
 
   test("multi-micro-batch tumbling aggregation equals the batch result") {
-    val dir = "/tmp/graft-stream-multi"
-    val p = Paths.get(dir)
-    if (Files.exists(p)) {
-      import scala.jdk.CollectionConverters._
-      Files.walk(p).iterator().asScala.toSeq.reverse
-        .foreach(f => Files.deleteIfExists(f))
-    }
+    val dir = scratchDir("graft-stream-multi").toString
     // three files, split by event_id ranges (arrival order != time order
     // within a batch is fine; watermark only drops data later than the
     // 10-minute lateness bound, and ranges keep time roughly monotonic)
@@ -68,16 +62,8 @@ class IncrementalStreamSpec extends SparkSpec {
 
   test("checkpointed append-mode runs resume incrementally without duplicates") {
     import org.apache.spark.sql.streaming.Trigger
-    val base = "/tmp/graft-stream-ckpt"
-    Seq("in", "out", "ckpt").foreach { s =>
-      val p = Paths.get(base, s)
-      if (Files.exists(p)) {
-        import scala.jdk.CollectionConverters._
-        Files.walk(p).iterator().asScala.toSeq.reverse
-          .foreach(f => Files.deleteIfExists(f))
-      }
-      Files.createDirectories(p)
-    }
+    val base = scratchDir("graft-stream-ckpt").toString
+    Seq("in", "out", "ckpt").foreach(s => Files.createDirectories(Paths.get(base, s)))
     val ev = Tables.events(spark, sfDir).orderBy("ts")
     val n = ev.count()
     def writeSplit(df: org.apache.spark.sql.DataFrame, name: String): Unit = {

@@ -4,8 +4,8 @@ import org.apache.spark.sql.functions._
 import graft.operators.Multimodal
 import graft.sources.Tables
 
-/** Binary-payload plumbing: schema, deterministic stub decode, frame
-  * sampling shape (q_multimodal_decode is rows-only in the oracle check).
+/** Binary-payload plumbing: media schema, the PNG and WAV codecs, decode
+  * quarantine and frame sampling shape.
   */
 class MultimodalSpec extends SparkSpec {
 
@@ -16,55 +16,6 @@ class MultimodalSpec extends SparkSpec {
     assert(schema("payload").dataType.typeName == "binary")
     val meta = schema("metadata").dataType.asInstanceOf[org.apache.spark.sql.types.StructType]
     assert(meta.fieldNames.toSeq == Seq("mime", "n_bytes", "origin", "tag"))
-  }
-
-  test("stub decode: features deterministic, normalized, n_bytes correct") {
-    val feats = Multimodal.decodeFeatures(spark, media)
-    val rows = feats.collect()
-    assert(rows.length == media.count())
-    rows.foreach { f =>
-      assert(f.features.length == Multimodal.FakeDecoder.featureDim)
-      val s = f.features.map(_.toDouble).sum
-      assert(math.abs(s - 1.0) < 1e-3) // histogram fractions sum to ~1
-    }
-    // deterministic across runs
-    val again = Multimodal.decodeFeatures(spark, media).collect()
-    assert(rows.sortBy(_.id).zip(again.sortBy(_.id)).forall {
-      case (a, b) => a.id == b.id && a.features.sameElements(b.features)
-    })
-  }
-
-  test("decode matches driver-side recompute for one row") {
-    val (id, payload) = media.select("media_id", "payload")
-      .orderBy("media_id").first() match {
-        case r => (r.getLong(0), r.getAs[Array[Byte]](1))
-      }
-    val expected = Multimodal.FakeDecoder.decode(id, payload)
-    val got = Multimodal.decodeFeatures(spark, media)
-      .filter(col("id") === id).first()
-    assert(got.n_bytes == expected.n_bytes)
-    assert(got.n_frames == expected.n_frames)
-    assert(got.features.sameElements(expected.features))
-  }
-
-  test("resize: byte decimation by factor, deterministic, schema-stable") {
-    val resized = Multimodal.resize(media, factor = 4).toDF("media_id", "payload")
-    val sizes = media.select(col("media_id"), octet_length(col("payload")).as("n"))
-      .join(resized.select(col("media_id"),
-        octet_length(col("payload")).as("rn")), "media_id")
-      .collect()
-    assert(sizes.nonEmpty)
-    sizes.foreach { r =>
-      val (n, rn) = (r.getInt(1), r.getInt(2))
-      assert(rn == (n + 3) / 4, s"media ${r.getLong(0)}: $n -> $rn")
-    }
-    // resized media feeds the same decode operator
-    val feats = Multimodal.decodeFeatures(spark,
-      resized.withColumn("metadata",
-        struct(lit("application/octet-stream").as("mime"),
-          octet_length(col("payload")).as("n_bytes"),
-          lit("resized").as("origin"), lit("x").as("tag"))))
-    assert(feats.count() == media.count())
   }
 
   test("PNG codec round-trip: all five scanline filters recover exact pixels") {
@@ -244,11 +195,11 @@ class MultimodalSpec extends SparkSpec {
     val Some((info, s)) = AudioCodec.decodeWavPcm16(spliced)
     assert(info.nFrames == 3 && s.sameElements(Array[Short](1, 2, 3)))
     // quarantine: junk, truncation, non-PCM codec byte
-    assert(AudioCodec.decodeHeader("RIFFnope".getBytes).isEmpty)
-    assert(AudioCodec.decodeHeader(base.take(30)).isEmpty)
+    assert(AudioCodec.decodeWavPcm16("RIFFnope".getBytes).isEmpty)
+    assert(AudioCodec.decodeWavPcm16(base.take(30)).isEmpty)
     val mulaw = base.clone(); mulaw(20) = 7 // format tag != 1 (PCM)
-    assert(AudioCodec.decodeHeader(mulaw).isEmpty)
-    assert(AudioCodec.decodeHeader(null).isEmpty)
+    assert(AudioCodec.decodeWavPcm16(mulaw).isEmpty)
+    assert(AudioCodec.decodeWavPcm16(null).isEmpty)
   }
 
   test("decodeAudio: oracle-exact integer fields and unknown-payload quarantine") {

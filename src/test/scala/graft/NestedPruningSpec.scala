@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.{Files, Paths}
-
 import org.apache.spark.sql.functions._
 import graft.operators.CalTopo
 import graft.sources.CalTopoFeatures
@@ -14,13 +12,7 @@ import graft.sources.CalTopoFeatures
 class NestedPruningSpec extends SparkSpec {
 
   test("selecting one nested field prunes the parquet ReadSchema to it") {
-    val dir = "/tmp/graft-nested-features"
-    val p = Paths.get(dir)
-    if (Files.exists(p)) {
-      import scala.jdk.CollectionConverters._
-      Files.walk(p).iterator().asScala.toSeq.reverse
-        .foreach(f => Files.deleteIfExists(f))
-    }
+    val dir = scratchDir("graft-nested").resolve("features").toString
     CalTopo.projectNest(CalTopo.mainFlow(CalTopoFeatures.build(spark, sfDir)))
       .write.parquet(dir)
 

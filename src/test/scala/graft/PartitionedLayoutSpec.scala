@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.{Files, Paths}
-
 import org.apache.spark.sql.functions._
 import graft.sources.Tables
 
@@ -13,13 +11,7 @@ import graft.sources.Tables
 class PartitionedLayoutSpec extends SparkSpec {
 
   test("partitionBy layout prunes directories for partition-key predicates") {
-    val dir = "/tmp/graft-partitioned-events"
-    val p = Paths.get(dir)
-    if (Files.exists(p)) {
-      import scala.jdk.CollectionConverters._
-      Files.walk(p).iterator().asScala.toSeq.reverse
-        .foreach(f => Files.deleteIfExists(f))
-    }
+    val dir = scratchDir("graft-partitioned").resolve("events").toString
     Tables.events(spark, sfDir)
       .write.partitionBy("event_type").parquet(dir)
 

@@ -20,7 +20,7 @@ class SessionSpec extends SparkSpec {
     assert(c.get("spark.sql.extensions") == "graft.GraftExtensions")
     assert(c.get("spark.ui.enabled") == "false")
     // the one per-caller extra the specs add
-    assert(c.get("spark.sql.warehouse.dir").endsWith("/tmp/graft-warehouse"))
+    assert(c.get("spark.sql.warehouse.dir").endsWith(SparkSpec.warehouse.toString))
   }
 
   test("env: defaults, a rejected SPARK_GRAFT_CPUS, and ONLY's order, trimming and empty entries") {

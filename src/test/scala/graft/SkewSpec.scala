@@ -2,10 +2,9 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.operators.Skew
-import graft.sources.Tables
 
-/** Salting correctness: salted forms must equal their unsalted plans
-  * exactly, on data with a deliberately hot key.
+/** Salting correctness: the salted aggregation must equal its unsalted
+  * plan exactly, on data with a deliberately hot key.
   */
 class SkewSpec extends SparkSpec {
 
@@ -21,22 +20,6 @@ class SkewSpec extends SparkSpec {
       .orderBy("k").collect().map(r => (r.getLong(0), r.getDouble(1)))
     val plain = skewed.groupBy(col("k")).agg(sum(col("v")).as("total"))
       .orderBy("k").collect().map(r => (r.getLong(0), r.getDouble(1)))
-    assert(salted.sameElements(plain))
-  }
-
-  test("salted join equals plain join on a skewed fact table") {
-    val dim = Tables.region(spark, sfDir)
-      .select(col("r_regionkey").cast("long").as("rk"), col("r_name"))
-    import spark.implicits._
-    val fact = (1 to 5000).map(i => (i.toLong % 2, i))  // keys 0,1 only: hot
-      .toDF("fk", "payload")
-    val salted = Skew.saltedJoin(fact, dim, "fk", "rk", salts = 8)
-      .select("fk", "payload", "r_name")
-      .orderBy("payload").collect()
-    val plain = fact.join(dim, col("fk") === col("rk"))
-      .select("fk", "payload", "r_name")
-      .orderBy("payload").collect()
-    assert(salted.length == plain.length)
     assert(salted.sameElements(plain))
   }
 }

@@ -16,7 +16,7 @@ import CalTopoSpec.{decode, multiset}
   */
 class SourceSinkSpec extends SparkSpec {
 
-  private def writeFixture(dir: String): String = {
+  private def writeFixture(): String = {
     val doc =
       """{"status":"ok","result":{"state":{"type":"FeatureCollection","features":[
         |{"id":"f1","type":"Feature","properties":{"title":"A","class":"Marker"},
@@ -25,8 +25,7 @@ class SourceSinkSpec extends SparkSpec {
         |{"id":"f3","type":"Feature","properties":{"title":"C","class":"Shape"},
         | "geometry":{"type":"LineString","coordinates":[[0,0],[1,1]]}}
         |]}}}""".stripMargin.replace("\n", "")
-    val p = Paths.get(dir, "map.json")
-    Files.createDirectories(p.getParent)
+    val p = scratchDir("graft-geojson").resolve("map.json")
     Files.writeString(p, doc)
     p.toString
   }
@@ -77,9 +76,9 @@ class SourceSinkSpec extends SparkSpec {
   }
 
   test("map tick: a build job, an exchange-free write job, one document per fetch unit") {
-    val Seq(doc) = writeFeatureDocs(Files.createTempDirectory("graft-tick-in"),
+    val Seq(doc) = writeFeatureDocs(scratchDir("graft-tick-in"),
       Seq(_ => true))
-    val out = Files.createTempDirectory("graft-tick-out")
+    val out = scratchDir("graft-tick-out")
     // building the tick measures the folder dimension in one job
     val (built, written) = Trace(spark) { t =>
       val built = t.build(CalTopo.flagship(decode(
@@ -104,9 +103,9 @@ class SourceSinkSpec extends SparkSpec {
     // folders sit in the first document only: the folder dimension is
     // read from the whole scan, so the second document's paths resolve too
     val first = (id: String) => id.startsWith("F") || id.hashCode % 2 == 0
-    val docs = writeFeatureDocs(Files.createTempDirectory("graft-tick2-in"),
+    val docs = writeFeatureDocs(scratchDir("graft-tick2-in"),
       Seq(first, !first(_)))
-    val out = Files.createTempDirectory("graft-tick2-out")
+    val out = scratchDir("graft-tick2-out")
     val tick = CalTopo.flagship(decode(
       spark.read.format("graft.sources.GeoJsonSource")
         .option("paths", docs.map("\"" + _ + "\"").mkString("[", ",", "]"))
@@ -119,7 +118,7 @@ class SourceSinkSpec extends SparkSpec {
   }
 
   test("table warm-up loads the tables present and skips the absent ones") {
-    val dir = Files.createTempDirectory("graft-warm").toString
+    val dir = scratchDir("graft-warm").toString
     Tables.region(spark, sfDir).write.parquet(s"$dir/region.parquet")
     Tables.nation(spark, sfDir).write.parquet(s"$dir/nation.parquet")
     assert(Session.warmTables(spark, dir) == Seq("region", "nation"))
@@ -157,8 +156,7 @@ class SourceSinkSpec extends SparkSpec {
         |{"id":"c","type":"Feature","properties":{"title":"C","updated":300}},
         |{"id":"d","type":"Feature","properties":{"title":"D"}}
         |]}""".stripMargin.replace("\n", "")
-    val p = Paths.get("/tmp/graft-geojson-since", "map.json")
-    Files.createDirectories(p.getParent)
+    val p = scratchDir("graft-geojson-since").resolve("map.json")
     Files.writeString(p, doc)
     def read(opts: Map[String, String]) = {
       val r = spark.read.format("graft.sources.GeoJsonSource")
@@ -179,7 +177,7 @@ class SourceSinkSpec extends SparkSpec {
   }
 
   test("geojson source reads envelope documents into feature rows") {
-    val path = writeFixture("/tmp/graft-geojson-src")
+    val path = writeFixture()
     val df = spark.read.format("graft.sources.GeoJsonSource").load(path)
     val rows = df.orderBy("id").collect()
     assert(rows.length == 3)
@@ -195,7 +193,7 @@ class SourceSinkSpec extends SparkSpec {
   }
 
   test("source rows feed the typed decode (A2) downstream") {
-    val path = writeFixture("/tmp/graft-geojson-src2")
+    val path = writeFixture()
     val df = spark.read.format("graft.sources.GeoJsonSource").load(path)
     val decoded = df.select(col("id"),
       from_json(col("properties_json"),
@@ -206,7 +204,7 @@ class SourceSinkSpec extends SparkSpec {
   }
 
   test("streaming writeStream delivers micro-batches through the feature sink") {
-    val base = Files.createTempDirectory("graft-stream-sink")
+    val base = scratchDir("graft-stream-sink")
     val out = base.resolve("out")
     graft.streaming.StreamRunner.eventsStream(spark, sfDir)
       .select(to_json(struct(col("event_id"), col("event_type"), col("value")))
@@ -224,11 +222,7 @@ class SourceSinkSpec extends SparkSpec {
   }
 
   test("feature sink writes one FeatureCollection per partition, all rows present") {
-    val out = "/tmp/graft-sink-out"
-    Paths.get(out).toFile.listFiles match {
-      case null => ()
-      case fs => fs.foreach(_.delete())
-    }
+    val out = scratchDir("graft-sink-out").toString
     val flagship = CalTopo.flagship(CalTopoFeatures.build(spark, sfDir))
     val n = flagship.count()
     FeatureCollectionSink.write(flagship.repartition(3), out)
@@ -245,9 +239,8 @@ class SourceSinkSpec extends SparkSpec {
 
   test("DSv2 sink round-trips through the DSv2 source under the commit protocol") {
     import spark.implicits._
-    val out = "/tmp/graft-dsv2-sink"
+    val out = scratchDir("graft-dsv2-sink").toString
     val dirFile = Paths.get(out).toFile
-    if (dirFile.exists()) dirFile.listFiles().foreach(_.delete())
     val df = Seq(
       ("a", "Feature", """{"title":"A"}""", "Point", "[1.5,2.5]"),
       ("b", "Feature", """{"title":"B"}""", "Point", "[3.5,4.5]"),
@@ -275,12 +268,9 @@ class SourceSinkSpec extends SparkSpec {
   }
 
   test("failed commit restores previously delivered documents it had replaced") {
-    import java.nio.file.{Files, Paths}
     import java.nio.charset.StandardCharsets
-    val dir = "/tmp/graft-rollback-sink"
-    val d = Paths.get(dir)
-    if (d.toFile.exists()) d.toFile.listFiles().foreach(_.delete())
-    Files.createDirectories(d)
+    val d = scratchDir("graft-rollback-sink")
+    val dir = d.toString
     // an EARLIER delivery already sits at the final name (re-run of a
     // batch job into the same dir / replayed streaming epoch)
     val target = d.resolve("doc-00000.json")
@@ -348,7 +338,7 @@ class SourceSinkSpec extends SparkSpec {
   }
 
   test("the DSv2 scan fetches with Fetch's retry policy") {
-    val path = writeFixture("/tmp/graft-geojson-retry")
+    val path = writeFixture()
     val n = spark.read.format("graft.sources.GeoJsonSource")
       .option("path", path)
       .load()
@@ -360,7 +350,7 @@ class SourceSinkSpec extends SparkSpec {
     val t0 = System.nanoTime()
     intercept[org.apache.spark.SparkException] {
       spark.read.format("graft.sources.GeoJsonSource")
-        .option("path", "/tmp/graft-geojson-retry/absent.json")
+        .option("path", Paths.get(path).resolveSibling("absent.json").toString)
         .load()
         .count()
     }
