@@ -63,9 +63,9 @@ import graft.Materialize
   * sketch/probe/bisection jobs EAGERLY (the driver loop must execute to
   * know the answer) — the returned DataFrame is the small per-group
   * result, already materialized behind checkpoints. Plan-only consumers
-  * (.explain, plan audits) therefore pay the computation; budget tests
-  * pin only the visible post-operator plan (ShuffleBudgetSpec notes
-  * this).
+  * (.explain, plan audits) therefore pay the computation; the budget
+  * specs pin the visible post-operator plan and the build's exchanges and
+  * jobs apart.
   *
   * Scale notes: passes 1–2 scan the full data (two-phase aggs, one
   * shuffle each on the group key). The bisection loop scans only the

@@ -9,15 +9,19 @@ import java.time.Duration
 /** Pluggable document transport for the engine's two process boundaries
   * (SURVEY.md §2 A1/A14). The reference's boundaries are live HTTPS calls —
   * a GET of one map's state (`/root/reference/task.ts:70`) and a POST of the
-  * transformed FeatureCollection (`task.ts:154`). The engine keeps those
-  * boundaries behind one seam:
+  * transformed FeatureCollection (`task.ts:154`). The engine's fetch goes
+  * through one seam, picked by the target's scheme:
   *
-  *  - [[FileTransport]] (default): fetch = open a local file, deliver =
-  *    atomic rename — the sandbox/test protocol, and also the right protocol
-  *    for staging through a shared filesystem.
-  *  - [[HttpTransport]]: fetch = GET, deliver = POST, over `java.net.http`
-  *    (JDK built-in, no extra dependency). Selected automatically when the
-  *    target is an `http://`/`https://` URL.
+  *  - [[FileTransport]] (default): fetch = open a local file — the
+  *    sandbox/test protocol, and also the right protocol for staging
+  *    through a shared filesystem.
+  *  - [[HttpTransport]]: fetch = GET, over `java.net.http` (JDK built-in,
+  *    no extra dependency). Selected automatically when the target is an
+  *    `http://`/`https://` URL.
+  *
+  * The submit side is the sink's: [[FcBatchWrite.commit]] picks the
+  * protocol by [[DocTransport.isHttp]], renaming with `Files.move` for
+  * files and POSTing through [[HttpTransport.deliver]] for URLs.
   *
   * Failure classification is part of the transport contract and feeds
   * [[Fetch.isTransient]] unchanged: transient faults (connect/read errors,
@@ -35,14 +39,6 @@ trait DocTransport extends Serializable {
     * [[TransportLog]].
     */
   def open(target: String, verbose: Boolean = false): InputStream
-
-  /** Deliver the finished document `body` to `target` (the A14 submit).
-    * File protocol: atomic rename (the caller owns set-aside/rollback).
-    * HTTP protocol: POST — NOT atomic across documents; see
-    * [[FcBatchWrite.commit]] for the at-least-once contract. `verbose` is
-    * the submit-side `verbose: DEBUG` (`task.ts:158`).
-    */
-  def deliver(target: String, body: Path, verbose: Boolean = false): Unit
 }
 
 /** Debug-gated transport logging — the engine's rendering of the
@@ -77,12 +73,6 @@ object FileTransport extends DocTransport {
   override def open(target: String, verbose: Boolean): InputStream = {
     TransportLog(verbose)(s"open file $target")
     new FileInputStream(target) // FileNotFoundException => transient (Fetch)
-  }
-
-  override def deliver(target: String, body: Path, verbose: Boolean): Unit = {
-    TransportLog(verbose)(s"deliver (rename) $body -> $target")
-    java.nio.file.Files.move(body, java.nio.file.Paths.get(target),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
   }
 }
 
@@ -168,7 +158,12 @@ object HttpTransport extends DocTransport {
     else HttpStatusException.raise(resp.statusCode(), target)
   }
 
-  override def deliver(target: String, body: Path, verbose: Boolean): Unit = {
+  /** POSTs the finished document `body` to `target` (the A14 submit) —
+    * NOT atomic across documents; see [[FcBatchWrite.commit]] for the
+    * at-least-once contract. `verbose` is the submit-side `verbose: DEBUG`
+    * (`task.ts:158`).
+    */
+  def deliver(target: String, body: Path, verbose: Boolean = false): Unit = {
     // Method-preserving redirects (307/308) are followed MANUALLY with the
     // body re-sent — the JDK's Redirect.NORMAL would also "follow"
     // 301/302/303 by re-issuing a bodyless GET (silent delivery loss), so

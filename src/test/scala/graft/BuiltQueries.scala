@@ -1,5 +1,9 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicLong
+
+import org.apache.spark.GraftListenerBridge
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import graft.queries.Registry
 
@@ -16,39 +20,52 @@ object BuiltQueries {
     * is the noop write of its frame, traced once: a deferred checkpoint is
     * stored by its first consumer, so a second write could run fewer jobs.
     */
-  final class Record private[BuiltQueries] (val name: String, built: Trace.Built) {
+  final class Record private[BuiltQueries] (val name: String, built: Trace.Built,
+      buildStarts: Long) {
     def df: DataFrame = built.df
     def build: Trace.Phase = built.phase
     val plan: String = df.queryExecution.executedPlan.toString
-    lazy val exec: Trace.Phase = Trace(df.sparkSession)(_.execute(df))
-    /** Jobs from the start of the build through the noop write. */
-    def jobs: Int = build.jobs.size + exec.jobs.size
+    private lazy val written = counted(Trace(df.sparkSession)(_.execute(df)))
+    def exec: Trace.Phase = written._1
+    /** Job starts a bare listener counted over the build and the noop
+      * write: the reference for the trace's job counts.
+      */
+    def startedJobs: Long = buildStarts + written._2
+  }
+
+  /** Counts job starts and nothing else. */
+  private object started extends SparkListener {
+    val jobs = new AtomicLong
+    override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
   }
 
   private lazy val spark = {
     Session.warmTables(SparkSpec.session, SparkSpec.sfDir)
+    SparkSpec.session.sparkContext.addSparkListener(started)
     SparkSpec.session
   }
+
+  /** `body`'s result and the jobs started while it ran. */
+  private def counted[A](body: => A): (A, Long) = {
+    def drained() = {
+      GraftListenerBridge.waitUntilListenerBusEmpty(spark.sparkContext)
+      started.jobs.get
+    }
+    val j0 = drained()
+    val a = body
+    (a, drained() - j0)
+  }
+
   private val records = scala.collection.mutable.Map.empty[String, Record]
 
   def apply(name: String): Record = synchronized {
-    records.getOrElseUpdate(name,
-      new Record(name, Trace(spark)(_.build(SparkEntry.queries(name)(spark, SparkSpec.sfDir)))))
+    records.getOrElseUpdate(name, {
+      val (built, jobs) =
+        counted(Trace(spark)(_.build(SparkEntry.queries(name)(spark, SparkSpec.sfDir))))
+      new Record(name, built, jobs)
+    })
   }
 
   /** Every registry query, in registry order. */
   def all: Seq[Record] = Registry.all.map(q => apply(q.name))
-
-  /** Fails naming each pinned query whose `measure` exceeds its pin plus
-    * `slack`, and lists every count.
-    */
-  def assertPins(pins: Map[String, Int], what: String, slack: Int = 0)(
-      measure: Record => Int): Unit = {
-    val got = pins.toSeq.sorted.map { case (n, b) => (n, measure(apply(n)), b) }
-    val over = got.collect { case (n, v, b) if v > b + slack =>
-      s"$n: $v $what > budget $b + slack $slack" }
-    org.scalatest.Assertions.assert(over.isEmpty,
-      s"""$what budgets exceeded: ${over.mkString("; ")}
-         |all counts: ${got.map { case (n, v, _) => s"$n=$v" }.mkString(", ")}""".stripMargin)
-  }
 }

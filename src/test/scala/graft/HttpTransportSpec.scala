@@ -264,7 +264,7 @@ class HttpTransportSpec extends SparkSpec {
           StandardCharsets.UTF_8))
         respond(ex, 200, Array.emptyByteArray)
       }) { base =>
-      val doc = java.nio.file.Files.createTempFile("graft-redirect", ".json")
+      val doc = scratchDir("graft-redirect").resolve("doc.json")
       java.nio.file.Files.writeString(doc, """{"type":"FeatureCollection"}""")
       // 308: POST re-issued WITH body at the redirect target
       HttpTransport.deliver(s"$base/moved308", doc)

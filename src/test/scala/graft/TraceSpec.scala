@@ -1,12 +1,9 @@
 package graft
 
 import java.util.concurrent.TimeUnit
-import java.util.concurrent.atomic.AtomicLong
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.GraftListenerBridge
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -50,26 +47,10 @@ class TraceSpec extends SparkSpec {
     }
   }
 
-  test("on JobBudgetSpec's queries the trace's job totals equal a bare listener's count") {
-    // the reference: a listener that only counts job starts
-    val started = new AtomicLong
-    val bare = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = started.incrementAndGet()
-    }
-    def drained(): Long = {
-      GraftListenerBridge.waitUntilListenerBusEmpty(spark.sparkContext)
-      started.get
-    }
-    spark.sparkContext.addSparkListener(bare)
-    val counts = try Trace(spark) { t =>
-      JobBudgetSpec.budget.keys.toSeq.sorted.map { name =>
-        val j0 = drained()
-        val built = t.build(SparkEntry.queries(name)(spark, sfDir))
-        val exec = t.execute(built.df)
-        (name, built.phase.jobs.size + exec.jobs.size, drained() - j0)
-      }
-    } finally spark.sparkContext.removeSparkListener(bare)
-    val differ = counts.filter { case (_, traced, counted) => traced != counted }
+  test("every registry query's traced job total equals a bare listener's count") {
+    val differ = BuiltQueries.all
+      .map(q => (q.name, q.build.jobs.size + q.exec.jobs.size, q.startedJobs))
+      .filter { case (_, traced, counted) => traced != counted }
     assert(differ.isEmpty, s"traced != counted: ${differ.mkString(", ")}")
   }
 
@@ -79,7 +60,7 @@ class TraceSpec extends SparkSpec {
   private def profile(only: String): (Int, Seq[String]) = {
     val jvm = java.lang.management.ManagementFactory.getRuntimeMXBean
       .getInputArguments.asScala.filter(_.startsWith("--add-opens"))
-    val log = java.nio.file.Files.createTempFile("graft-profile", ".log")
+    val log = scratchDir("graft-profile").resolve("profile.log")
     val pb = new ProcessBuilder((Seq(s"${sys.props("java.home")}/bin/java") ++ jvm ++
       Seq("-Xmx1g", "-cp", sys.props("java.class.path"), "graft.Profile")).asJava)
       .redirectErrorStream(true).redirectOutput(log.toFile)
