@@ -12,17 +12,17 @@ object Bench {
     *   accumulator N  (+ ~10 frames of DAGScheduler.updateAccumulators →
     *   handleTaskCompletion → EventLoop, repeated once per accumulator)
     *
-    * Root cause, distinct from the r10 DropStats class (that one is fixed
-    * at the source by the strong-retention ring, `Dedup.retained`): tasks
-    * of an already-finished job — a limit-short-circuited `isEmpty`/
-    * census count, or a cancelled AQE stage — drain their completion
-    * events AFTER the query returned, while the inter-query `System.gc()`
-    * (load-bearing: it releases each query's localCheckpoint blocks, the
-    * q_percentile 4 s→22 s fix) has already collected SPARK'S OWN
-    * per-plan SQL-metric and per-stage task-metric accumulators, which
-    * AccumulatorContext only holds weakly. Those are Spark internals — no
-    * graft-side strong ref can reach the per-stage ones — and the lost
-    * update is metrics-only (correctness paths never read accumulators),
+    * Root cause: tasks of an already-finished job — a
+    * limit-short-circuited one, or a cancelled AQE stage — drain their
+    * completion events AFTER the query returned, while the inter-query
+    * `System.gc()` (load-bearing: it releases each query's
+    * localCheckpoint blocks, the q_percentile 4 s→22 s fix) has already
+    * collected SPARK'S OWN per-plan SQL-metric and per-stage task-metric
+    * accumulators, which AccumulatorContext only holds weakly. graft
+    * creates no accumulator of its own (every run-time count is a
+    * [[Materialize]] fold), so these are the only ones; no graft-side
+    * strong ref can reach the per-stage ones, and the lost update is
+    * metrics-only (nothing in graft reads accumulators),
     * so the honest treatment is to suppress exactly this message and
     * COUNT the suppressions: the filter denies log events whose message
     * starts with the literal prefix, bumps `counter`, and stays NEUTRAL

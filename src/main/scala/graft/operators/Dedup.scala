@@ -50,103 +50,10 @@ object Dedup {
     * cluster) rows, 100–300 MB at typical document sizes.
     */
   private val ExpandBroadcastRows = 1L << 17
-
-  /** Max-tracking accumulator (LongAccumulator only sums). */
-  final class MaxAccumulator
-      extends org.apache.spark.util.AccumulatorV2[Long, Long] {
-    private var _max = 0L
-    override def isZero: Boolean = _max == 0L
-    override def copy(): MaxAccumulator = {
-      val c = new MaxAccumulator; c._max = _max; c
-    }
-    override def reset(): Unit = _max = 0L
-    override def add(v: Long): Unit = _max = math.max(_max, v)
-    override def merge(o: org.apache.spark.util.AccumulatorV2[Long, Long]): Unit =
-      _max = math.max(_max, o.value)
-    override def value: Long = _max
-  }
-
-  /** Live counters for the `maxBucket` recall trade of [[minhashPairs]] /
-    * [[simhashPairs]] — named accumulators, so they surface in the Spark
-    * UI / listener events automatically and survive AQE's plan cloning
-    * (a CollectMetrics/observe() node was measured losing its values or
-    * vanishing entirely under AQE re-optimization). Values are
-    * best-effort upper bounds under task retries/speculation — the same
-    * caveat as Spark's own SQL metrics.
-    *
-    * CONTRACT (ADVICE r3): counts are valid for exactly ONE evaluation of
-    * the returned DataFrame. The bumping UDF lives in the plan, so every
-    * additional action on the result — or a downstream plan that
-    * re-executes the branch (an uncached self-join, a recomputed
-    * subplan) — adds another full pass to every counter. Callers that
-    * need counts alongside multiple actions must checkpoint/cache the
-    * returned frame first, or re-create fresh counters per action via
-    * [[dropStats]]. Correctness paths never read these counters.
+  /** [[bucketPairs]]' bucket cap: a larger LSH bucket is dropped, not
+    * paired (the recall trade of [[minhashPairs]] and [[simhashPairs]]).
     */
-  final class DropStats(
-      val droppedBuckets: org.apache.spark.util.LongAccumulator,
-      val droppedMembers: org.apache.spark.util.LongAccumulator,
-      val largestBucket: MaxAccumulator) extends Serializable
-
-  /** Strong references to the most recent drop-counter sets.
-    * AccumulatorContext only holds registered accumulators WEAKLY, so once
-    * a caller releases its plan and the driver GCs (Bench runs System.gc()
-    * between queries), a LATE task-completion event — cancelled tasks of a
-    * limit-short-circuited or retried job draining after the query
-    * returned — can find its accumulator already collected, and the
-    * DAGScheduler event loop logs a full garbage-collected-accumulator
-    * stack (VERDICT r10 item 3: that stack polluted the driver bench
-    * artifact's 2000-char stdout tail under contention). Retaining the
-    * last `RetainStats` sets keeps the ids resolvable until any straggler
-    * event drains — the update lands harmlessly — while the ring bounds
-    * memory for long-lived sessions (3 tiny accumulators per entry; 4096
-    * queries of slack is far beyond any in-flight event window).
-    */
-  private val RetainStats = 4096
-  private val retained = new java.util.ArrayDeque[DropStats](16)
-
-  /** Fresh named drop counters registered on `spark`'s context. */
-  def dropStats(spark: org.apache.spark.sql.SparkSession,
-      label: String): DropStats = {
-    val sc = spark.sparkContext
-    val lb = new MaxAccumulator
-    sc.register(lb, s"graft.dedup.$label.largest_bucket")
-    val st = new DropStats(
-      sc.longAccumulator(s"graft.dedup.$label.dropped_buckets"),
-      sc.longAccumulator(s"graft.dedup.$label.dropped_members"),
-      lb)
-    retained.synchronized {
-      retained.addLast(st)
-      if (retained.size > RetainStats) retained.removeFirst()
-    }
-    st
-  }
-
-  /** Filter `buckets` to sizes in [2, maxBucket], bumping the drop
-    * counters once per evaluated bucket. The counting UDF is materialized
-    * in its own projection and the filter references the ATTRIBUTE —
-    * `countingUdf(...).between(lo, hi)` would expand the UDF into both
-    * conjuncts and (being nondeterministic, hence excluded from
-    * subexpression elimination) execute the side effect twice per bucket,
-    * doubling every reported count. Nondeterminism also stops the
-    * optimizer collapsing the projection into the filter. A scalar UDF
-    * off the codegen path — but it runs once per BUCKET (post-aggregation;
-    * |buckets| rows, not |corpus|), so the hot path is untouched.
-    */
-  private def filterCounting(buckets: DataFrame, st: DropStats,
-      maxBucket: Int): DataFrame = {
-    // close over the accumulators directly — they serialize into tasks
-    val (db, dm, lb) = (st.droppedBuckets, st.droppedMembers, st.largestBucket)
-    val mb = maxBucket
-    val f = udf((n: Int) => {
-      if (n > mb) { db.add(1L); dm.add(n.toLong) }
-      lb.add(n.toLong)
-      n
-    }).asNondeterministic()
-    buckets.withColumn("_sz", f(size(col("members"))))
-      .filter(col("_sz").between(2, maxBucket))
-      .drop("_sz")
-  }
+  val MaxBucket = 256
 
   /** Lowercased, whitespace-split, empty-dropped words of a text column. */
   def words(text: Column): Column =
@@ -435,23 +342,23 @@ object Dedup {
     * Shape: one signature pass, explode band keys, group by band key, and
     * emit in-bucket pairs from the collected member list — the signature
     * subplan runs ONCE (a band-key self-join recomputed it per side,
-    * measured ~2x the total cost). Buckets larger than `maxBucket` are
+    * measured ~2x the total cost). Buckets larger than [[MaxBucket]] are
     * dropped: a mega-bucket means hundreds of near-identical docs, and
     * the quadratic pair blowup inside it is exactly what kills the job
     * at 100 TB. NOTE this is a deliberate recall trade: a pair whose
-    * every shared band lands in a >maxBucket bucket is LOST — run exact
+    * every shared band lands in a >MaxBucket bucket is LOST — run exact
     * dedup first (it collapses identical text, the main mega-bucket
-    * source) or raise `maxBucket` where completeness matters more than
-    * the worst-case blowup. The trade is never silent: drops bump the
-    * [[DropStats]] counters (pass `stats` for handles; by default fresh
-    * named accumulators still surface in the Spark UI / listeners).
+    * source) where completeness matters more than the worst-case blowup.
+    * The trade is never silent: the declared queries measure its recall
+    * against an exact truth frame ([[withPairRecallFlag]],
+    * [[clusterAgreementFlag]]), each flag a [[graft.Materialize]] fold
+    * whose route is in the trace.
     */
-  def minhashPairs(docs: DataFrame, threshold: Double = 0.5,
-      maxBucket: Int = 256, stats: Option[DropStats] = None): DataFrame =
+  def minhashPairs(docs: DataFrame, threshold: Double = 0.5): DataFrame =
     bucketPairs(
       minhashSignatures(docs)
         .select(col("id"), col("mh"), explode(bandKeys(col("mh"))).as("bk")),
-      "bk", "mh", stats.getOrElse(dropStats(docs.sparkSession, "minhash")), maxBucket,
+      "bk", "mh",
       // signature agreement via the native EqualSlots kernel — the HOF
       // zip_with/aggregate fold paid ~64 interpreted lambda dispatches
       // plus an intermediate array PER CANDIDATE PAIR, which dominates
@@ -462,19 +369,18 @@ object Dedup {
       _ >= threshold)
 
   /** In-bucket candidate pairs: group `keyed` (id, `sig`, `key`) by `key`,
-    * drop buckets outside [2, maxBucket] ([[filterCounting]]), and emit
-    * every (id_a < id_b) pair of a bucket's members with `score` computed
-    * from the two signatures, keeping those that pass `keep`. A pair that
-    * shares several buckets is emitted once.
+    * drop buckets outside [2, [[MaxBucket]]], and emit every (id_a < id_b)
+    * pair of a bucket's members with `score` computed from the two
+    * signatures, keeping those that pass `keep`. A pair that shares
+    * several buckets is emitted once.
     */
   private def bucketPairs(keyed: DataFrame, key: String, sig: String,
-      st: DropStats, maxBucket: Int, score: String,
-      scoreOf: (Column, Column) => Column, keep: Column => Column): DataFrame = {
+      score: String, scoreOf: (Column, Column) => Column,
+      keep: Column => Column): DataFrame = {
     val m = col("members")
-    filterCounting(
-      keyed.groupBy(col(key))
-        .agg(collect_list(struct(col("id"), col(sig))).as("members")),
-      st, maxBucket)
+    keyed.groupBy(col(key))
+      .agg(collect_list(struct(col("id"), col(sig))).as("members"))
+      .filter(size(m).between(2, MaxBucket))
       .select(explode(flatten(
         transform(m, (a, i) =>
           transform(slice(m, i + 2, size(m)), b =>
@@ -685,7 +591,7 @@ object Dedup {
     * whole pipeline returns to unique-corpus cost.
     *
     * RESULT-IDENTICAL to [[survivors]] whenever no bucket tripped the
-    * `maxBucket` cap (DedupSpec pins equality on a replicated corpus):
+    * [[MaxBucket]] cap (DedupSpec pins equality on a replicated corpus):
     * a representative is its identical-group's min id, identical texts
     * yield identical shingle sets (est. Jaccard 1 ≥ any threshold), so
     * plain survivors puts a group's members in their rep's cluster and
@@ -734,7 +640,7 @@ object Dedup {
     * rep labels expand back over the membership map.
     *
     * RESULT-IDENTICAL to plain [[clusters]]([[minhashPairs]](docs))
-    * whenever no bucket tripped `maxBucket` (DedupSpec pins equality on a
+    * whenever no bucket tripped [[MaxBucket]] (DedupSpec pins equality on a
     * replicated corpus), by the same argument as [[survivorsExactFirst]]:
     *  - a rep is its identical-group's min id, so group minima ARE rep
     *    ids, and every member of a dup group connects to every other
@@ -750,7 +656,7 @@ object Dedup {
     *    and get no label in plain clusters — so they are excluded here
     *    rather than collapsed.
     * Where the corpora CAN differ is the cap: collapsed buckets stay
-    * under `maxBucket` where the duplicated corpus overflowed and
+    * under [[MaxBucket]] where the duplicated corpus overflowed and
     * silently dropped pairs — exact-first labels are a superset, never
     * fewer.
     *
@@ -830,20 +736,20 @@ object Dedup {
     * collected member list — the previous band-key SELF-JOIN executed the
     * signature pass once per side (exchange reuse did not fire; then a
     * 64-sum aggregate, measured as most of the query's cost, VERDICT r1
-    * §wrong.2). Buckets larger than `maxBucket` are dropped for the same
+    * §wrong.2). Buckets larger than [[MaxBucket]] are dropped for the same
     * reason — and with the same recall caveat — as in [[minhashPairs]]:
     * the distance<=3 completeness guarantee holds only for pairs whose
-    * shared chunk bucket is under `maxBucket`; run exact dedup first or
-    * raise the cap where completeness matters more.
+    * shared chunk bucket is within the cap; run exact dedup first where
+    * completeness matters more. The trade is never silent, as in
+    * [[minhashPairs]]: [[withPairRecallFlag]] and [[clusterAgreementFlag]]
+    * measure its recall.
     */
-  def simhashPairs(docs: DataFrame, maxDist: Int = 3,
-      maxBucket: Int = 256, stats: Option[DropStats] = None): DataFrame =
+  def simhashPairs(docs: DataFrame, maxDist: Int = 3): DataFrame =
     bucketPairs(
       simhashSignatures(docs)
         .select(col("id"), col("sh"),
           explode(transform(sequence(lit(0), lit(3)),
             c => struct(c.as("ci"),
               shr(col("sh"), c * 16).bitwiseAND(0xFFFFL).as("cv")))).as("chunk")),
-      "chunk", "sh", stats.getOrElse(dropStats(docs.sparkSession, "simhash")), maxBucket,
-      "hamming", (a, b) => bit_count(a.bitwiseXOR(b)), _ <= maxDist)
+      "chunk", "sh", "hamming", (a, b) => bit_count(a.bitwiseXOR(b)), _ <= maxDist)
 }

@@ -61,16 +61,10 @@ object ImageCodec {
     * Scanline filters rotate per row (`rowIdx % 5`: None, Sub, Up, Average,
     * Paeth) so a decoder must implement ALL of them to round-trip — the
     * oracle's pixel_md5 comparison then genuinely exercises the un-filter
-    * path, not just the container walk.
-    */
-  def encodePng(width: Int, height: Int, gray: Array[Byte]): Array[Byte] = {
-    val s = new Scratch
-    try encodePng(width, height, gray, s) finally s.close()
-  }
-
-  /** Scratch-reusing arm: the per-partition hot path ([[Multimodal.imageTable]]).
-    * Identical output bytes; zero per-row Deflater/buffer allocation
-    * beyond the returned PNG itself.
+    * path, not just the container walk. `s` is reused per partition
+    * ([[Multimodal.imageTable]]): the output bytes do not depend on what
+    * it held, and no per-row Deflater or buffer is allocated beyond the
+    * returned PNG itself.
     */
   def encodePng(width: Int, height: Int, gray: Array[Byte],
       s: Scratch): Array[Byte] = {
@@ -232,17 +226,11 @@ object ImageCodec {
   /** Full grayscale-PNG pixel decode: chunk walk (concatenating multiple
     * IDATs), zlib inflate, per-scanline UN-filter of all five RFC 2083
     * filter types. None for non-PNG input or any unsupported shape
-    * (non-grayscale color type, bit depth != 8, interlaced).
-    */
-  def decodePngGray(bytes: Array[Byte]): Option[(Int, Int, Array[Byte])] = {
-    val s = new Scratch
-    try decodePngGray(bytes, s) finally s.close()
-  }
-
-  /** Scratch-reusing arm (the [[Multimodal.decodeImages]] hot path): the
-    * single-IDAT common case feeds the inflater straight from `bytes`
-    * (zero copy) and inflates directly into the scratch scanline buffer —
-    * the only per-row allocation left is the returned pixel array.
+    * (non-grayscale color type, bit depth != 8, interlaced). `s` is
+    * reused per partition ([[Multimodal.decodeImages]]): the single-IDAT
+    * common case feeds the inflater straight from `bytes` (zero copy) and
+    * inflates directly into the scratch scanline buffer — the only
+    * per-row allocation left is the returned pixel array.
     */
   def decodePngGray(bytes: Array[Byte],
       s: Scratch): Option[(Int, Int, Array[Byte])] = {

@@ -162,7 +162,7 @@ class FcBatchWrite(dir: String, prefix: String, spool: String,
       case FcCommit(tmp, fin) =>
         // the GET side's retry policy; `verbose` gates per-delivery
         // logging (the reference's submit `verbose: DEBUG`, task.ts:158)
-        Fetch.withRetry(Fetch.MaxAttempts, Fetch.BackoffMs, verbose) {
+        Fetch.withRetry(verbose) {
           HttpTransport.deliver(s"$base/$fin", Paths.get(tmp), verbose)
         }
         TransportLog(verbose)(s"delivered $fin")

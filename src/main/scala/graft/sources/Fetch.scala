@@ -38,25 +38,24 @@ object Fetch {
     case _                                => false
   }
 
-  /** Run `open`, retrying transient failures up to `maxAttempts` total
-    * attempts with linear backoff (`backoffMs`, 2x, 3x, ...). Permanent
+  /** Run `open`, retrying transient failures up to [[MaxAttempts]] total
+    * attempts with linear backoff ([[BackoffMs]], 2x, 3x, ...). Permanent
     * failures and exhausted retries propagate — aborting the Spark task is
     * the contract, never a silently-empty partition. `verbose` is the
     * reference's `verbose: DEBUG` pass-through (`task.ts:87,158`): each
     * in-place retry is logged through [[TransportLog]] so transport
     * debugging sees the attempts, not just the final outcome.
     */
-  def withRetry[A](maxAttempts: Int, backoffMs: Long,
-      verbose: Boolean = false)(open: => A): A = {
+  def withRetry[A](verbose: Boolean = false)(open: => A): A = {
     var attempt = 1
     while (true) {
       try return open
       catch {
-        case t: Throwable if isTransient(t) && attempt < maxAttempts =>
+        case t: Throwable if isTransient(t) && attempt < MaxAttempts =>
           TransportLog(verbose)(
-            s"transient failure (attempt $attempt/$maxAttempts), " +
-              s"retrying in ${backoffMs * attempt} ms: $t")
-          Thread.sleep(backoffMs * attempt)
+            s"transient failure (attempt $attempt/$MaxAttempts), " +
+              s"retrying in ${BackoffMs * attempt} ms: $t")
+          Thread.sleep(BackoffMs * attempt)
           attempt += 1
       }
     }

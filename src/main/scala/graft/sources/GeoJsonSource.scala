@@ -123,7 +123,7 @@ case class GeoJsonPartition(path: String, since: Long, verbose: Boolean)
 class GeoJsonReader(path: String, since: Long = -500L, verbose: Boolean = false)
   extends PartitionReader[InternalRow] {
   private val rows: Iterator[InternalRow] =
-    Fetch.withRetry(Fetch.MaxAttempts, Fetch.BackoffMs, verbose) {
+    Fetch.withRetry(verbose) {
       val in = DocTransport.forTarget(path).open(path, verbose)
       val doc = try in.readAllBytes() finally in.close()
       GeoJsonReader.features(doc, since)

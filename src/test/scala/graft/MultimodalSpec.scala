@@ -11,6 +11,12 @@ class MultimodalSpec extends SparkSpec {
 
   private lazy val media = Multimodal.mediaTable(Tables.documents(spark, sfDir))
 
+  /** `f` applied to a new codec Scratch, closed afterwards. */
+  private def fresh[A](f: graft.operators.ImageCodec.Scratch => A): A = {
+    val s = new graft.operators.ImageCodec.Scratch
+    try f(s) finally s.close()
+  }
+
   test("media table: payload is binary, metadata struct is typed") {
     val schema = media.schema
     assert(schema("payload").dataType.typeName == "binary")
@@ -23,11 +29,11 @@ class MultimodalSpec extends SparkSpec {
     // height 7 > 5 rotates through every filter type (None/Sub/Up/Avg/Paeth)
     val (w, h) = (13, 7)
     val px = Array.tabulate(w * h)(i => ((i * 37 + 11) % 256).toByte)
-    val png = ImageCodec.encodePng(w, h, px)
+    val png = fresh(ImageCodec.encodePng(w, h, px, _))
     // container is recognized by the header walk
     assert(ImageCodec.decodeDims(png).contains(ImageCodec.ImageInfo("png", w, h)))
     // and the full decode recovers the exact buffer
-    val Some((dw, dh, dpx)) = ImageCodec.decodePngGray(png)
+    val Some((dw, dh, dpx)) = fresh(ImageCodec.decodePngGray(png, _))
     assert(dw == w && dh == h)
     assert(dpx.sameElements(px), "un-filter must recover every pixel byte")
   }
@@ -36,20 +42,21 @@ class MultimodalSpec extends SparkSpec {
     import graft.operators.ImageCodec
     val s = new ImageCodec.Scratch
     // one Scratch across many sizes: growth + stale-content reuse must
-    // never leak into the output (the per-partition hot-path contract)
+    // never leak into the output (the per-partition hot-path contract),
+    // so the reused Scratch gives the same bytes as a fresh one
     val sizes = Seq((8, 8), (31, 23), (9, 21), (31, 23), (8, 8))
     sizes.zipWithIndex.foreach { case ((w, h), k) =>
       val px = Array.tabulate(w * h)(i => ((i * 53 + k * 17) % 256).toByte)
       val viaScratch = ImageCodec.encodePng(w, h, px, s)
-      assert(viaScratch.sameElements(ImageCodec.encodePng(w, h, px)),
-        s"scratch encode must be byte-identical (cell $k)")
+      assert(viaScratch.sameElements(fresh(ImageCodec.encodePng(w, h, px, _))),
+        s"reused-scratch encode must be byte-identical to a fresh one (cell $k)")
       val Some((_, _, back)) = ImageCodec.decodePngGray(viaScratch, s)
       assert(back.sameElements(px), s"scratch decode round-trip (cell $k)")
     }
     // multi-IDAT: split our single IDAT into two chunks — the concat path
     val (w, h) = (13, 7)
     val px = Array.tabulate(w * h)(i => ((i * 37 + 11) % 256).toByte)
-    val png = ImageCodec.encodePng(w, h, px)
+    val png = ImageCodec.encodePng(w, h, px, s)
     val idatLen = java.nio.ByteBuffer.wrap(png, 33, 4).getInt
     val data = png.slice(41, 41 + idatLen)
     def chunk(typ: String, d: Array[Byte]): Array[Byte] = {
@@ -95,10 +102,10 @@ class MultimodalSpec extends SparkSpec {
     val theirPng = bos.toByteArray
     assert(ImageCodec.decodeDims(theirPng)
       .contains(ImageCodec.ImageInfo("png", w, h)))
-    val Some((_, _, got)) = ImageCodec.decodePngGray(theirPng)
+    val Some((_, _, got)) = fresh(ImageCodec.decodePngGray(theirPng, _))
     assert(got.sameElements(px), "must decode an ImageIO-written PNG exactly")
     // and the reverse: ImageIO reads OUR container
-    val ours = ImageCodec.encodePng(w, h, px)
+    val ours = fresh(ImageCodec.encodePng(w, h, px, _))
     val back = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(ours))
     assert(back != null && back.getWidth == w && back.getHeight == h)
     val theirs = new Array[Byte](w * h)
@@ -139,7 +146,7 @@ class MultimodalSpec extends SparkSpec {
     import graft.operators.Multimodal
     import spark.implicits._
     val rows = Seq(
-      (1L, graft.operators.ImageCodec.encodePng(9, 9, Array.fill(81)(7.toByte))),
+      (1L, fresh(graft.operators.ImageCodec.encodePng(9, 9, Array.fill(81)(7.toByte), _))),
       (2L, "definitely not an image".getBytes)).toDS()
     val out = Multimodal.decodeImages(spark, rows).collect()
       .map(r => r.media_id -> r).toMap

@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
 /** Source rules no compiler checks. Every intermediate frame is stored
@@ -18,22 +18,35 @@ import scala.jdk.CollectionConverters._
   * second job with a bound of its own. Every public definition has a user
   * outside the tests: a `def` or `object` that only specs call is a second
   * surface to keep working that no query, main, SQL function or source
-  * reaches.
+  * reaches. No accumulator is created in the main sources: every run-time
+  * count is a [[Materialize]] fold, summed from one job's task results,
+  * so a retried task is counted once and the count is in the trace; an
+  * accumulator bumped inside a transformation counts a retried task
+  * again.
   */
 class SourceLintSpec extends org.scalatest.funsuite.AnyFunSuite {
 
-  /** Main-source lines outside `owner` that contain any of `calls`. */
-  private def outside(owner: String, calls: String*): Seq[String] = {
-    val s = Files.walk(Paths.get("src/main/scala"))
-    val sources = try s.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+  private def scalaFiles(dir: String): List[Path] = {
+    val s = Files.walk(Paths.get(dir))
+    try s.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
       finally s.close()
-    assert(sources.exists(_.endsWith(Paths.get("graft", owner))),
-      "run from the repository root")
+  }
+
+  private lazy val mainSources = scalaFiles("src/main/scala")
+
+  /** Lines of `sources` that contain any of `calls`. */
+  private def containing(sources: Seq[Path], calls: Seq[String]): Seq[String] =
     for {
-      p <- sources if !p.endsWith(Paths.get("graft", owner))
+      p <- sources
       (line, i) <- Files.readAllLines(p).asScala.zipWithIndex
       if calls.exists(line.contains)
     } yield s"$p:${i + 1}: ${line.trim}"
+
+  /** Main-source lines outside `owner` that contain any of `calls`. */
+  private def outside(owner: String, calls: String*): Seq[String] = {
+    val own = Paths.get("graft", owner)
+    assert(mainSources.exists(_.endsWith(own)), "run from the repository root")
+    containing(mainSources.filterNot(_.endsWith(own)), calls)
   }
 
   test("localCheckpoint( appears in src/main only inside graft.Materialize") {
@@ -60,6 +73,13 @@ class SourceLintSpec extends org.scalatest.funsuite.AnyFunSuite {
   test("rows reach the driver in src/main only inside graft.Materialize") {
     val hits = outside("Materialize.scala",
       ".collect()", ".collectAsList(", ".toLocalIterator(", ".head()", ".first()")
+    assert(hits.isEmpty, hits.mkString("\n"))
+  }
+
+  test("no accumulator is created in src/main") {
+    assert(mainSources.nonEmpty, "run from the repository root")
+    val hits = containing(mainSources, Seq("longAccumulator(", "doubleAccumulator(",
+      "collectionAccumulator(", "AccumulatorV2"))
     assert(hits.isEmpty, hits.mkString("\n"))
   }
 
@@ -134,12 +154,7 @@ class SourceLintSpec extends org.scalatest.funsuite.AnyFunSuite {
     "Dedup.minhashSignaturesArr")  // DedupSpec's reference; layerbench's Probes reads it
 
   test("every public def and object in src/main is named outside its definition") {
-    def scalaFiles(dir: String): List[java.nio.file.Path] = {
-      val s = Files.walk(Paths.get(dir))
-      try s.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
-        finally s.close()
-    }
-    val main = scalaFiles("src/main/scala").map(p => p -> code(Files.readString(p)))
+    val main = mainSources.map(p => p -> code(Files.readString(p)))
     val bench = scalaFiles("layerbench/src").map(p => code(Files.readString(p)))
     assert(main.nonEmpty && bench.nonEmpty, "run from the repository root")
     val word = "[A-Za-z_][A-Za-z0-9_]*".r

@@ -297,19 +297,23 @@ class SourceSinkSpec extends SparkSpec {
   }
 
   test("fetch retry: transient failures retry with backoff, then succeed") {
+    import graft.sources.Fetch
     var calls = 0
-    val got = graft.sources.Fetch.withRetry(maxAttempts = 3, backoffMs = 1) {
+    // transient on every attempt but the last one the policy allows
+    val got = Fetch.withRetry() {
       calls += 1
-      if (calls < 3) throw new java.io.IOException(s"transient $calls")
+      if (calls < Fetch.MaxAttempts) throw new java.io.IOException(s"transient $calls")
       "ok"
     }
-    assert(got == "ok" && calls == 3)
+    assert(got == "ok" && calls == Fetch.MaxAttempts)
   }
 
   test("fetch retry: permanent failures abort immediately, exhausted retries abort with last error") {
+    import graft.sources.Fetch
+    assert(Fetch.MaxAttempts > 1, "a policy of one attempt would not tell abort from retry")
     var calls = 0
     val perm = intercept[IllegalArgumentException] {
-      graft.sources.Fetch.withRetry(maxAttempts = 3, backoffMs = 1) {
+      Fetch.withRetry() {
         calls += 1
         throw new IllegalArgumentException("malformed") // not transient
       }
@@ -317,11 +321,11 @@ class SourceSinkSpec extends SparkSpec {
     assert(perm.getMessage == "malformed" && calls == 1)
     // Jackson parse errors extend IOException but mean a malformed
     // document — they must classify as PERMANENT (no pointless re-parse)
-    assert(!graft.sources.Fetch.isTransient(
+    assert(!Fetch.isTransient(
       new com.fasterxml.jackson.core.JsonParseException(null, "bad doc")))
     calls = 0
     val malformed = intercept[com.fasterxml.jackson.core.JsonParseException] {
-      graft.sources.Fetch.withRetry(maxAttempts = 5, backoffMs = 1) {
+      Fetch.withRetry() {
         calls += 1
         throw new com.fasterxml.jackson.core.JsonParseException(null, "bad doc")
       }
@@ -329,12 +333,13 @@ class SourceSinkSpec extends SparkSpec {
     assert(malformed.getMessage.contains("bad doc") && calls == 1)
     calls = 0
     val exhausted = intercept[java.io.IOException] {
-      graft.sources.Fetch.withRetry(maxAttempts = 3, backoffMs = 1) {
+      Fetch.withRetry() {
         calls += 1
         throw new java.io.IOException(s"still down $calls")
       }
     }
-    assert(exhausted.getMessage == "still down 3" && calls == 3)
+    assert(exhausted.getMessage == s"still down ${Fetch.MaxAttempts}" &&
+      calls == Fetch.MaxAttempts)
   }
 
   test("the DSv2 scan fetches with Fetch's retry policy") {
